@@ -53,18 +53,13 @@ def entry(spark: SparkSession) -> DataFrame:
     from llm_aided_ocr_spark.config import PipelineConfig
     from llm_aided_ocr_spark.plans.pipeline import run_pipeline
 
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     pages = _docs_as_pages(spark, "/root/testdata/sf0.001")
     result = run_pipeline(pages, PipelineConfig(provider="heuristic"), strategy="auto")
-    return carry_pins(
-        result,
-        result.select(
-            "url",
-            "n_chunks",
-            F.length("corrected_text").alias("corrected_len"),
-            F.length("raw_text").alias("raw_len"),
-        ),
+    return result.select(
+        "url",
+        "n_chunks",
+        F.length("corrected_text").alias("corrected_len"),
+        F.length("raw_text").alias("raw_len"),
     )
 
 
@@ -177,11 +172,9 @@ def _q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llm_aided_ocr_spark.config import PipelineConfig
     from llm_aided_ocr_spark.plans.pipeline import run_pipeline
 
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     pages = _docs_as_pages(spark, sf_dir)
     result = run_pipeline(pages, PipelineConfig(provider="heuristic"), strategy="auto")
-    return carry_pins(result, result.select("url", "n_chunks"))
+    return result.select("url", "n_chunks")
 
 
 # Deterministic multi-paragraph/multi-sentence document constructed from the
@@ -223,12 +216,10 @@ def _q_pipeline_chunky(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llm_aided_ocr_spark.config import PipelineConfig
     from llm_aided_ocr_spark.plans.pipeline import run_pipeline
 
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     pages = _synth_structured_pages(spark, sf_dir)
     cfg = PipelineConfig(provider="heuristic", chunk_size_chars=_CHUNKY_SIZE)
     result = run_pipeline(pages, cfg, strategy="auto")
-    return carry_pins(result, result.select("url", "n_chunks"))
+    return result.select("url", "n_chunks")
 
 
 def _q_chunk_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -924,10 +915,9 @@ def _q_word_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-order-division arithmetic makes the DuckDB mirror
     deterministic (no transcendentals, no float-sum order)."""
     from llm_aided_ocr_spark.operators.textstats import word_commonness
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     out = word_commonness(_docs(spark, sf_dir, spread=True))
-    return carry_pins(out, out.withColumnRenamed("id", "doc_id"))
+    return out.withColumnRenamed("id", "doc_id")
 
 
 def _build_word_commonness_sql() -> str:
@@ -982,12 +972,7 @@ def _q_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = hash_split(
         survivors, {"train": 0.9, "val": 0.05, "test": 0.05}, id_col="doc_id", seed=1
     )
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
-    # near_dedup pins its component-labels checkpoint on `survivors`;
-    # hash_split/select return NEW DataFrames, so carry the pin to the
-    # returned object or the blocks leak until ContextCleaner GC
-    return carry_pins(survivors, out.select("doc_id", "quality_score", "split"))
+    return out.select("doc_id", "quality_score", "split")
 
 
 def _build_curation_sql(quality_min: int = 40, threshold: float = 0.5) -> str:
@@ -1191,10 +1176,9 @@ def _q_canonical_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id", url.alias("url"), "text"
     )
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     out = canonical_url_keepers(d)
-    return carry_pins(out, out.withColumnRenamed("id", "doc_id"))
+    return out.withColumnRenamed("id", "doc_id")
 
 
 _CANONICAL_DEDUP_SQL = f"""
@@ -1522,14 +1506,9 @@ def _q_pipeline_raw_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llm_aided_ocr_spark.config import PipelineConfig
     from llm_aided_ocr_spark.plans.pipeline import run_pipeline
 
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     pages = _docs_as_pages(spark, sf_dir)
     result = run_pipeline(pages, PipelineConfig(provider="heuristic"), strategy="auto")
-    return carry_pins(
-        result,
-        result.select("url", "raw_text", F.length("raw_text").alias("raw_len")),
-    )
+    return result.select("url", "raw_text", F.length("raw_text").alias("raw_len"))
 
 
 def _q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1669,7 +1648,7 @@ def _q_countmin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import pin
+    from llm_aided_ocr_spark.operators.util import persist
 
     occ = (
         _docs(spark, sf_dir, spread=True)
@@ -1681,10 +1660,9 @@ def _q_countmin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab-sized no-op) AND the exact-count side of the audit join;
     # unpersisted, each consumer re-exploded every document (two
     # identical Generate chains in the plan). The cache is vocab-sized.
-    wf = (
-        occ.groupBy("key")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("true_count"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    wf = persist(
+        occ.groupBy("key").agg(F.count(F.lit(1)).cast("bigint").alias("true_count")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     sketch = countmin_build(
         wf, key_col="key", weight_col="true_count", depth=3, width=64, seed=7
@@ -1696,14 +1674,9 @@ def _q_countmin_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         "key string",
     )
     est = countmin_estimate(sketch, probes, depth=3, width=64, seed=7)
-    return pin(
-        est.join(wf, "key", "left").select(
-            "key", "estimate",
-            F.coalesce("true_count", F.lit(0)).cast("bigint").alias(
-                "true_count"
-            ),
-        ),
-        wf,
+    return est.join(wf, "key", "left").select(
+        "key", "estimate",
+        F.coalesce("true_count", F.lit(0)).cast("bigint").alias("true_count"),
     )
 
 
@@ -2035,12 +2008,10 @@ def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate exactly."""
     from llm_aided_ocr_spark.operators.dedup import minhash_dedup_pairs
 
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     out = minhash_dedup_pairs(_docs(spark, sf_dir), threshold=0.5)
-    return carry_pins(out, out.select(
+    return out.select(
         "id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard_r")
-    ))
+    )
 
 
 def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2061,14 +2032,10 @@ def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes == Jaccard over distinct shingles barring 64-bit collisions)."""
     from llm_aided_ocr_spark.operators.dedup import ngram_jaccard_pairs
 
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     out = ngram_jaccard_pairs(
         _docs(spark, sf_dir), n=3, threshold=0.8, max_shingle_df=1000
     )
-    return carry_pins(
-        out, out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard_r"))
-    )
+    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard_r"))
 
 
 def _q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2080,7 +2047,6 @@ def _q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair; the oracle replays the same construction and the quadratic
     containment spec over shingle strings."""
     from llm_aided_ocr_spark.operators.dedup import containment_pairs
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     d = _docs(spark, sf_dir).select(
         "doc_id", F.coalesce("text", F.lit("")).alias("text")
@@ -2096,13 +2062,10 @@ def _q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = containment_pairs(
         d.unionByName(wrapped), n=3, threshold=0.9, max_shingle_df=1000
     )
-    return carry_pins(
-        out,
-        out.select(
-            "id_sub",
-            "id_sup",
-            F.round("containment", 6).alias("containment_r"),
-        ),
+    return out.select(
+        "id_sub",
+        "id_sup",
+        F.round("containment", 6).alias("containment_r"),
     )
 
 
@@ -2655,14 +2618,11 @@ def _q_ann_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         "vec_id", "embedding"
     )
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     out = embedding_near_dup_pairs(
         emb, dim=64, threshold=0.35, num_planes=6, seed=7, max_bucket_size=200
     )
-    return carry_pins(
-        out, out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine_r"))
-    )
+    return out.select("id_a", "id_b", F.round("cosine", 6).alias("cosine_r"))
 
 
 def _q_pdf_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3023,11 +2983,11 @@ def _q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         _unit_hash_col,
         dsir_log_weights,
     )
-    from llm_aided_ocr_spark.operators.util import carry_pins, pin
+    from llm_aided_ocr_spark.operators.util import persist
 
     d = _docs(spark, sf_dir)
     target = d.filter(F.col("source") == "src0")
-    w = dsir_log_weights(d, target).cache()
+    w = persist(dsir_log_weights(d, target))
     u = F.greatest(_unit_hash_col(F.col("id"), 3), F.lit(1e-300))
     key = F.col("log_weight") - F.log(-F.log(u))
     top = (
@@ -3036,15 +2996,11 @@ def _q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(50)
         .select("id", F.lit(1).alias("_sel"))
     )
-    out = (
-        w.join(F.broadcast(top), on="id", how="left")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.round("log_weight", 6).alias("log_weight_r"),
-            F.coalesce("_sel", F.lit(0)).cast("int").alias("selected"),
-        )
+    return w.join(F.broadcast(top), on="id", how="left").select(
+        F.col("id").alias("doc_id"),
+        F.round("log_weight", 6).alias("log_weight_r"),
+        F.coalesce("_sel", F.lit(0)).cast("int").alias("selected"),
     )
-    return pin(carry_pins(w, out), w)
 
 
 def _build_dsir_sql(
@@ -3423,10 +3379,9 @@ def _q_bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer tf/df, one shared avgdl, ln over identical inputs, fixed
     summation order — 6dp-stable across engines."""
     from llm_aided_ocr_spark.operators.search import bm25_scores
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     out = bm25_scores(_docs(spark, sf_dir, spread=True), _BM25_TERMS)
-    return carry_pins(out, out.select(F.col("id").alias("doc_id"), "dl", "n_matched", "score_r"))
+    return out.select(F.col("id").alias("doc_id"), "dl", "n_matched", "score_r")
 
 
 def _build_bm25_sql(
@@ -3479,7 +3434,6 @@ def _q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from llm_aided_ocr_spark.operators.search import bm25_scores, rrf_fuse
     from llm_aided_ocr_spark.operators.similarity import quantized_topk
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     bm = bm25_scores(_docs(spark, sf_dir, spread=True), _BM25_TERMS)
     # bounded-by-construction window: ranks the 50 surviving rows only
@@ -3502,8 +3456,7 @@ def _q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     den = quantized_topk(emb, q0, k=50).select(
         F.col("vec_id").alias("id"), F.lit("cosine").alias("source"), "rank"
     )
-    out = rrf_fuse(lex.unionByName(den), k=60)
-    return carry_pins(bm, out)
+    return rrf_fuse(lex.unionByName(den), k=60)
 
 
 def _build_hybrid_rrf_sql(
@@ -3558,12 +3511,11 @@ def _q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     barring 64-bit collisions, with a string/hashed parity test pinning
     equality (tests/test_lm_domain_cap.py)."""
     from llm_aided_ocr_spark.operators.lm import lm_score
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     d = _docs(spark, sf_dir, spread=True)
     ref = d.filter(F.col("doc_id") % 10 == 0)
     out = lm_score(d, ref_df=ref)
-    return carry_pins(out, out.withColumnRenamed("id", "doc_id"))
+    return out.withColumnRenamed("id", "doc_id")
 
 
 _LM_SCORE_LAM = 0.9
@@ -3632,12 +3584,11 @@ def _q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``lm_score``; the oracle nests the lm_score replay as a CTE and
     re-derives the integer-exact cut."""
     from llm_aided_ocr_spark.operators.lm import ccnet_buckets
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     d = _docs(spark, sf_dir, spread=True)
     ref = d.filter(F.col("doc_id") % 10 == 0)
     out = ccnet_buckets(d, ref_df=ref)
-    return carry_pins(out, out.withColumnRenamed("id", "doc_id"))
+    return out.withColumnRenamed("id", "doc_id")
 
 
 def _build_ccnet_buckets_sql(lam: float = _LM_SCORE_LAM) -> str:
@@ -4084,7 +4035,6 @@ def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_signatures,
         near_dedup_incremental,
     )
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     d = _docs(spark, sf_dir)
     t = F.coalesce(F.col("text"), F.lit(""))
@@ -4109,24 +4059,19 @@ def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import pin
+    from llm_aided_ocr_spark.operators.util import persist
 
     # The operator's contract input is a PERSISTED signature table (a
     # production increment reads materialized parquet); the adapter
     # synthesizes it, so persist the synthesized relation — otherwise
     # every operator-side reference (bucket build + agreement join)
     # re-runs the signature MapInPandas over the index slice.
-    idx_sig = minhash_signatures(idx_docs, hash_family="md5_52").persist(
-        StorageLevel.MEMORY_AND_DISK
+    idx_sig = persist(
+        minhash_signatures(idx_docs, hash_family="md5_52"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     kept = near_dedup_incremental(new_docs, idx_sig, threshold=0.5)
-    return pin(
-        carry_pins(
-            kept,
-            kept.select("doc_id", F.length("text").alias("text_len")),
-        ),
-        idx_sig,
-    )
+    return kept.select("doc_id", F.length("text").alias("text_len"))
 
 
 def _build_incremental_dedup_sql(
@@ -4364,17 +4309,13 @@ def _q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     report. Oracle extends the merge-learning CTE chain with a
     (lang, w, n) relation and the same exact-integer-sum ratios."""
     from llm_aided_ocr_spark.operators.bpe import bpe_fertility, bpe_learn
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     docs = _docs(spark, sf_dir)
     out = bpe_fertility(docs, bpe_learn(docs, num_merges=6))
-    return carry_pins(
-        out,
-        out.select(
-            "lang", "n_words", "n_chars", "n_bpe_tokens",
-            F.round("fertility", 6).alias("fertility_r"),
-            F.round("chars_per_token", 6).alias("chars_per_token_r"),
-        ),
+    return out.select(
+        "lang", "n_words", "n_chars", "n_bpe_tokens",
+        F.round("fertility", 6).alias("fertility_r"),
+        F.round("chars_per_token", 6).alias("chars_per_token_r"),
     )
 
 
@@ -7433,7 +7374,6 @@ def _q_bitext_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the margins, rankings, and mutual-best selection — replay exactly
     in SQL."""
     from llm_aided_ocr_spark.operators.similarity import mine_bitext
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -7444,10 +7384,7 @@ def _q_bitext_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=4,
         threshold=1.02,
     )
-    return carry_pins(
-        out,
-        out.select("x_id", "y_id", F.round("margin", 6).alias("margin_r")),
-    )
+    return out.select("x_id", "y_id", F.round("margin", 6).alias("margin_r"))
 
 
 _BITEXT_PAIRS_SQL = """
@@ -7507,7 +7444,6 @@ def _q_capture_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     say 'changed'. The oracle replays the construction and the shingle
     set algebra over word-3-gram strings."""
     from llm_aided_ocr_spark.operators.snapshots import capture_novelty
-    from llm_aided_ocr_spark.operators.util import carry_pins
 
     d = _docs(spark, sf_dir).select(
         "doc_id", F.coalesce("text", F.lit("")).alias("text")

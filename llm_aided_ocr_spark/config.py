@@ -37,17 +37,6 @@ class PipelineConfig:
     # --- scale knobs (north rule) ---
     salt: int = 0x5ABE                   # partition salt for url hashing
     num_partitions: int | None = None    # None → spark.sql.shuffle.partitions
-    # Document-branch salted spread policy: "auto" applies the salted
-    # repartition only when the input would otherwise scan on too few
-    # partitions (toy tables, single row-groups); a size-uniform
-    # splittable corpus scan skips the full-corpus shuffle (guide §2.4 —
-    # measured ~27% of pipeline wall at the bench tier, identical
-    # output). "always" restores the unconditional round-5 shuffle,
-    # "never" disables it. The STAGED chunk path always salts on
-    # (url, chunk_ix) — spreading a mega-document's chunks is the whole
-    # point there, and chunking changes row sizes so scan uniformity
-    # says nothing about it.
-    salted_spread: str = "auto"          # auto | always | never
     mega_doc_chars: int = 4_000_000      # docs above this processed page-granular
     arrow_max_records_per_batch: int = 512
     # --- checkpointing ---

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.operators.dedup import _word_hash_col
-from llm_aided_ocr_spark.operators.util import corpus_scaled
+from llm_aided_ocr_spark.operators.util import corpus_scaled, persist
 
 
 def _lines_col(text_col: str) -> F.Column:
@@ -101,7 +101,6 @@ def line_dedup(
     out_col = out_col or text_col
     lines = _lines_col(text_col)
     blank_hash = _line_hash(F.lit(""), hash_family)
-    _pinned_hashes = None
     if strategy == "join":
         # ONE tokenize+hash pass feeds BOTH the frequency count and the
         # per-position explode: persist the per-doc hash ARRAYS (8
@@ -112,13 +111,12 @@ def line_dedup(
         # the trimmed-non-blank lines the filter-then-hash form counted.
         from pyspark import StorageLevel
 
-        hrel = df.select(
+        hrel = persist(df.select(
             F.col(id_col).alias("_ld_id"),
             F.transform(
                 lines, lambda l: _line_hash(l, hash_family)
             ).alias("_lh"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _pinned_hashes = hrel
+        ), StorageLevel.MEMORY_AND_DISK)
         dup = (
             hrel.select(
                 F.explode(
@@ -182,15 +180,12 @@ def line_dedup(
                 "\n",
             ),
         )
-        from llm_aided_ocr_spark.operators.util import pin
-
-        return pin(
+        return (
             df.join(
                 corpus_scaled(kept_pos), df[id_col] == kept_pos["_ld_id"], "left"
             )
             .withColumn(out_col, rebuilt)
-            .drop("_ld_id", "_kept_pos"),
-            _pinned_hashes,
+            .drop("_ld_id", "_kept_pos")
         )
     raise ValueError(f"unknown strategy {strategy!r}")
 
@@ -207,13 +202,11 @@ def line_dedup_stats(
     :func:`line_dedup`: per-document line counts before/after plus the
     length and md5 of the cleaned text (md5 is engine-portable, so the
     driver oracle verifies the rebuilt BYTES, not just counts)."""
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     cleaned = line_dedup(
         df, text_col=text_col, id_col=id_col, min_doc_freq=min_doc_freq,
         hash_family=hash_family, out_col="_clean", strategy=strategy,
     )
-    return carry_pins(cleaned, cleaned.select(
+    return cleaned.select(
         F.col(id_col).alias("id"),
         F.size(_lines_col(text_col)).alias("n_lines"),
         F.size(F.split(F.col("_clean"), "\n")).alias("n_kept_raw"),
@@ -223,7 +216,7 @@ def line_dedup_stats(
         # split('') yields [''] — an all-boilerplate doc has 0 kept lines
         "n_kept",
         F.when(F.col("clean_len") == 0, F.lit(0)).otherwise(F.col("n_kept_raw")),
-    ).drop("n_kept_raw"))
+    ).drop("n_kept_raw")
 
 
 # ---------------------------------------------------------------------------

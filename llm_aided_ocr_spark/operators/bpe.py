@@ -35,6 +35,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from llm_aided_ocr_spark.operators.util import (
+    local_checkpoint,
+    persist,
+    release_local_checkpoint,
+)
+
 
 def _merge_word(syms: List[str], a: str, b: str) -> List[str]:
     """Left-to-right non-overlapping application of merge (a, b) -> ab —
@@ -171,8 +177,6 @@ def bpe_learn(
     ``local_vocab_cap`` rows — a BOUNDED collect by construction
     (2M words ≈ tens of MB), never an O(corpus) one."""
     from llm_aided_ocr_spark.operators.dedup import _words_col
-    from llm_aided_ocr_spark.operators.util import release_local_checkpoint
-
     if strategy not in ("auto", "local", "distributed"):
         raise ValueError(f"unknown strategy: {strategy!r}")
 
@@ -186,7 +190,7 @@ def bpe_learn(
         words = words.filter(F.col("n") >= min_word_freq)
 
     if strategy != "distributed":
-        word_table = words.localCheckpoint(eager=True)
+        word_table = local_checkpoint(words)
         try:
             if (
                 strategy == "local"
@@ -199,9 +203,9 @@ def bpe_learn(
         finally:
             release_local_checkpoint(word_table)
 
-    vocab = words.select(
-        "n", F.split(F.col("w"), "").alias("syms")
-    ).localCheckpoint(eager=True)
+    vocab = local_checkpoint(
+        words.select("n", F.split(F.col("w"), "").alias("syms"))
+    )
 
     merges: List[Tuple[int, str, str, int]] = []
     for t in range(num_merges):
@@ -235,9 +239,9 @@ def bpe_learn(
                 ]
                 yield pdf
 
-        new_vocab = vocab.mapInPandas(
-            _apply, schema="n bigint, syms array<string>"
-        ).localCheckpoint(eager=True)
+        new_vocab = local_checkpoint(
+            vocab.mapInPandas(_apply, schema="n bigint, syms array<string>")
+        )
         release_local_checkpoint(vocab)
         vocab = new_vocab
     release_local_checkpoint(vocab)
@@ -295,7 +299,6 @@ def bpe_token_counts(
     from llm_aided_ocr_spark.operators.util import (
         corpus_scaled,
         ensure_min_parallelism,
-        pin,
     )
 
     pairs = [
@@ -304,12 +307,12 @@ def bpe_token_counts(
     base = ensure_min_parallelism(df).select(
         F.col(id_col).alias("id"), _words_col(text_col).alias("ws")
     )
-    occ = (
+    # feeds the vocab distinct AND the join side
+    occ = persist(
         base.select("id", F.explode("ws").alias("w"))
         .filter(F.col("w") != "")
         .groupBy("id", "w")
         .agg(F.count(F.lit(1)).alias("n"))
-        .cache()  # feeds the vocab distinct AND the join side; pinned
     )
     vocab = occ.select("w").distinct()
 
@@ -337,13 +340,10 @@ def bpe_token_counts(
         )
     )
     all_ids = df.select(F.col(id_col).alias("id"))
-    return pin(
-        all_ids.join(corpus_scaled(per_doc), "id", "left").select(
-            "id",
-            F.coalesce("n_words", F.lit(0)).alias("n_words"),
-            F.coalesce("n_bpe_tokens", F.lit(0)).alias("n_bpe_tokens"),
-        ),
-        occ,
+    return all_ids.join(corpus_scaled(per_doc), "id", "left").select(
+        "id",
+        F.coalesce("n_words", F.lit(0)).alias("n_words"),
+        F.coalesce("n_bpe_tokens", F.lit(0)).alias("n_bpe_tokens"),
     )
 
 
@@ -465,7 +465,7 @@ def bpe_fertility(
     joins back on ``w``. Ratios are single IEEE divisions of exact
     integer sums — engine-exact."""
     from llm_aided_ocr_spark.operators.dedup import _words_col
-    from llm_aided_ocr_spark.operators.util import ensure_min_parallelism, pin
+    from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
 
     pairs = [
         (m[1], m[2]) if len(m) >= 3 else (m[0], m[1]) for m in merges
@@ -474,12 +474,11 @@ def bpe_fertility(
         F.coalesce(F.col(lang_col), F.lit("")).alias("lang"),
         _words_col(text_col).alias("ws"),
     )
-    occ = (
+    occ = persist(
         base.select("lang", F.explode("ws").alias("w"))
         .filter(F.col("w") != "")
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).alias("n"))
-        .cache()
     )
     vocab = occ.select("w").distinct()
 
@@ -496,7 +495,7 @@ def bpe_fertility(
             yield pd.DataFrame({"w": pdf["w"], "n_syms": counts})
 
     vocab_tok = vocab.mapInPandas(_tokenize, schema="w string, n_syms int")
-    out = (
+    return (
         occ.join(vocab_tok, "w")
         .groupBy("lang")
         .agg(
@@ -520,4 +519,3 @@ def bpe_fertility(
             ).alias("chars_per_token"),
         )
     )
-    return pin(out, occ)

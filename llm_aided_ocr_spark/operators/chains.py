@@ -56,7 +56,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from llm_aided_ocr_spark.operators.util import pin, release_local_checkpoint
+from llm_aided_ocr_spark.operators.util import local_checkpoint, release_local_checkpoint
 
 
 class ChainCycleError(RuntimeError):
@@ -126,9 +126,9 @@ def chain_assembly(
             ).first()
         )
         if n_ids == n_hashes:
-            idmap = raw_ids.select(
-                "id", F.xxhash64("id").alias("h")
-            ).localCheckpoint(eager=False)
+            idmap = local_checkpoint(
+                raw_ids.select("id", F.xxhash64("id").alias("h")), eager=False
+            )
             hashed_nodes = idmap.select(F.col("h").alias(id_col))
             hashed_edges = edges_df.select(
                 F.xxhash64(F.col(src_col)).alias(src_col),
@@ -143,7 +143,7 @@ def chain_assembly(
             hd = idmap.select(
                 F.col("h").alias("chain_head"), F.col("id").alias("_hd")
             )
-            out = (
+            return (
                 labeled.join(me, "id")
                 .join(hd, "chain_head")
                 .select(
@@ -152,10 +152,6 @@ def chain_assembly(
                     "page_ix", "chain_len",
                 )
             )
-            from llm_aided_ocr_spark.operators.util import carry_pins
-
-            out = pin(out, idmap)
-            return carry_pins(labeled, out)
         # hash collision among node ids: fall through to the raw-id path
     ids = nodes_df.select(F.col(id_col).alias("id")).distinct()
     e = _dedupe_edges(edges_df, src_col, dst_col, on_conflict)
@@ -170,14 +166,13 @@ def chain_assembly(
     # action that materializes them, so each round costs ONE job, not
     # two — at small inputs the rounds are pure scheduler overhead and
     # this halves it; at 10^12 rows it merely avoids a second pass.
-    state = (
-        ids.join(e, ids["id"] == e["dst"], "left")
-        .select(
+    state = local_checkpoint(
+        ids.join(e, ids["id"] == e["dst"], "left").select(
             "id",
             F.coalesce(e["src"], ids["id"]).alias("anc"),
             F.when(e["src"].isNull(), F.lit(0)).otherwise(F.lit(1)).alias("d"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     rounds = max(1, math.ceil(math.log2(max(2, max_len))))
     prev_total = state.agg(F.coalesce(F.sum("d"), F.lit(0))).first()[0]
@@ -189,14 +184,13 @@ def chain_assembly(
             F.col("id").alias("a_id"), F.col("anc").alias("a_anc"),
             F.col("d").alias("a_d"),
         )
-        new_state = (
-            state.join(hop, state["anc"] == hop["a_id"])
-            .select(
+        new_state = local_checkpoint(
+            state.join(hop, state["anc"] == hop["a_id"]).select(
                 "id",
                 F.col("a_anc").alias("anc"),
                 (F.col("d") + F.col("a_d")).alias("d"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         total = new_state.agg(F.coalesce(F.sum("d"), F.lit(0))).first()[0]
         release_local_checkpoint(state)
@@ -217,27 +211,21 @@ def chain_assembly(
         )
         if check != prev_total:
             release_local_checkpoint(state)
-            release_local_checkpoint(e)
             raise ChainCycleError(
                 f"pointer doubling did not converge in {rounds} rounds "
                 f"(cycle in the successor relation, or a chain longer "
                 f"than max_len={max_len})"
             )
     lens = state.groupBy("anc").agg((F.max("d") + 1).alias("chain_len"))
-    out = (
-        state.join(lens, "anc")
-        .select(
-            "id",
-            F.col("anc").alias("chain_head"),
-            F.col("d").alias("page_ix"),
-            "chain_len",
-        )
-    )
-    release_local_checkpoint(e)
     # the returned plan reads the final round's checkpoint (twice — state
     # and lens); the CALLER releases it via release_pinned after its
     # terminal action
-    return pin(out, state)
+    return state.join(lens, "anc").select(
+        "id",
+        F.col("anc").alias("chain_head"),
+        F.col("d").alias("page_ix"),
+        "chain_len",
+    )
 
 
 def pagination_chains(
@@ -315,13 +303,12 @@ def redirect_resolve(
                  F.col("s.location").alias("location"))
     else:
         raise ValueError(f"on_conflict must be 'error' or 'min', got {on_conflict!r}")
-    hop = (
+    hop = local_checkpoint(
         f.where(
             (F.col("status") >= 300) & (F.col("status") < 400)
             & F.col("location").isNotNull() & (F.col("location") != "")
-        )
-        .select(F.col("url").alias("h_url"), F.col("location").alias("h_dst"))
-        .localCheckpoint(eager=False)
+        ).select(F.col("url").alias("h_url"), F.col("location").alias("h_dst")),
+        eager=False,
     )
     is_redirect = (
         (F.col("status") >= 300) & (F.col("status") < 400)
@@ -329,12 +316,15 @@ def redirect_resolve(
     )
     # lazy checkpoints, materialized by the per-hop moving-count — one
     # job per hop (see chain_assembly's round discipline)
-    state = f.select(
-        "url",
-        F.col("url").alias("cur"),
-        F.lit(0).alias("hops"),
-        (~is_redirect).alias("done"),
-    ).localCheckpoint(eager=False)
+    state = local_checkpoint(
+        f.select(
+            "url",
+            F.col("url").alias("cur"),
+            F.lit(0).alias("hops"),
+            (~is_redirect).alias("done"),
+        ),
+        eager=False,
+    )
     moving = state.where(~F.col("done")).limit(1).count()
     for _ in range(max_hops):
         if not moving:
@@ -352,23 +342,22 @@ def redirect_resolve(
         )
         # a hop landing on a url that is itself a redirect keeps moving;
         # landing anywhere else (non-3xx fetch, or outside the set) is done
-        new_state = (
+        new_state = local_checkpoint(
             stepped.join(hop.select(F.col("h_url").alias("n_url")),
                          stepped["cur"] == F.col("n_url"), "left")
             .select(
                 "url", "cur", "hops",
                 (F.col("done") | F.col("n_url").isNull()).alias("done"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         moving = new_state.where(~F.col("done")).limit(1).count()
         release_local_checkpoint(state)
         state = new_state
-    out = state.select(
+    release_local_checkpoint(hop)
+    return state.select(
         "url",
         F.col("cur").alias("final_url"),
         "hops",
         F.col("done").alias("terminal"),
     )
-    release_local_checkpoint(hop)
-    return pin(out, state)

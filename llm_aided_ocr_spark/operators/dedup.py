@@ -26,7 +26,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from llm_aided_ocr_spark.operators.util import corpus_scaled
+from llm_aided_ocr_spark.operators.util import (
+    cache_mark,
+    corpus_scaled,
+    local_checkpoint,
+    persist,
+    release_between,
+    release_local_checkpoint,
+)
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -95,12 +102,9 @@ def canonical_url_keepers(
     unique urls make it O(corpus) — never a broadcast build side).
     Materialize survivors with a left-semi join on the kept ids against
     an id-bucketed table, exactly like :func:`exact_keeper_ids`."""
-    from llm_aided_ocr_spark.operators.textstats import canonical_url_col
-    from llm_aided_ocr_spark.operators.util import corpus_scaled
-
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import pin
+    from llm_aided_ocr_spark.operators.textstats import canonical_url_col
 
     # ``base`` is persisted: it feeds BOTH the keeper aggregation and
     # the join-back, and without the persist each consumer re-scanned
@@ -112,13 +116,13 @@ def canonical_url_keepers(
     # exchange sharing instead of a cache does not work here because
     # column pruning drops ``sz`` from the join-back side, making the
     # two exchange subtrees non-identical for ReuseExchange.
-    base = df.select(
+    base = persist(df.select(
         F.col(id_col).alias("id"),
         canonical_url_col(F.col(url_col)).alias("canon_url"),
         F.octet_length(F.coalesce(F.col(text_col), F.lit("")))
         .cast("bigint")
         .alias("sz"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ), StorageLevel.MEMORY_AND_DISK)
     # min over (-sz, id): longest text first, then smallest id — one
     # struct-min aggregate instead of a row_number window (no per-group
     # sort buffer; plain map-side-combinable min)
@@ -130,12 +134,11 @@ def canonical_url_keepers(
         .agg(F.min(keep_key).alias("k"))
         .select("canon_url", F.col("k.id").alias("_keeper_id"))
     )
-    out = base.join(corpus_scaled(keepers), "canon_url").select(
+    return base.join(corpus_scaled(keepers), "canon_url").select(
         "id",
         "canon_url",
         (F.col("id") == F.col("_keeper_id")).alias("keep"),
     )
-    return pin(out, base)
 
 
 def exact_dup_groups(
@@ -406,8 +409,6 @@ def ngram_jaccard_pairs(
     re-checks ``id_a < id_b``, and verifies true Jaccard on exact
     arrays. The full shingle arrays cross an Exchange exactly once per
     SURVIVING candidate pair."""
-    from llm_aided_ocr_spark.operators.util import pin
-
     t = float(threshold)
     sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
@@ -421,7 +422,7 @@ def ngram_jaccard_pairs(
         return F.ceil(F.lit(t) * sz - F.lit(1e-9))
 
     # inner join = semi-join (dfreq is keyed by shingle) + df attachment
-    per_doc = (
+    per_doc = persist(
         sh.join(dfreq, "shingle")
         .groupBy("id")
         .agg(F.array_sort(F.collect_list(F.struct("df", "shingle"))).alias("s"))
@@ -438,7 +439,6 @@ def ngram_jaccard_pairs(
                 (F.col("sz") - _ceil_t(F.col("sz")) + F.lit(prefix_c)).cast("int"),
             ),
         )
-        .cache()
     )
     prefix = per_doc.select(
         "id", "h", F.explode(F.slice("arr", F.lit(1), F.col("plen"))).alias("shingle")
@@ -486,7 +486,7 @@ def ngram_jaccard_pairs(
         .drop("h_a", "h_b")
     )
     arrs = per_doc.select("id", "arr")
-    out = (
+    return (
         cand.join(arrs.select(F.col("id").alias("id_a"), F.col("arr").alias("arr_a")), "id_a")
         .join(arrs.select(F.col("id").alias("id_b"), F.col("arr").alias("arr_b")), "id_b")
         .withColumn("inter", F.size(F.array_intersect("arr_a", "arr_b")))
@@ -497,7 +497,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return pin(out, per_doc)
 
 
 def containment_pairs(
@@ -541,14 +540,12 @@ def containment_pairs(
     pair keys (collisions only ADD candidates), and every survivor is
     verified with a native ``array_intersect`` over the full (capped)
     shingle arrays — the reported containment is exact."""
-    from llm_aided_ocr_spark.operators.util import pin
-
     t = float(threshold)
     sh = word_shingles(df, n=n, text_col=text_col, id_col=id_col)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     if max_shingle_df is not None:
         dfreq = dfreq.filter(F.col("df") <= max_shingle_df)
-    per_doc = (
+    per_doc = persist(
         sh.join(dfreq, "shingle")
         .groupBy("id")
         .agg(
@@ -571,7 +568,6 @@ def containment_pairs(
                 ).cast("int"),
             ),
         )
-        .cache()
     )
     posts = per_doc.select("id", "h", F.explode("arr").alias("shingle"))
     prefix = per_doc.select(
@@ -591,7 +587,7 @@ def containment_pairs(
         .drop("_npref")
     )
     meta = per_doc.select("h", "id", "sz", "arr")
-    out = (
+    return (
         cand.join(
             meta.select(
                 F.col("h").alias("h_a"), F.col("id").alias("id_x"),
@@ -632,7 +628,6 @@ def containment_pairs(
         .filter(F.col("containment") >= threshold)
         .distinct()
     )
-    return pin(out, per_doc)
 
 
 # ---------------------------------------------------------------------------
@@ -804,10 +799,10 @@ def minhash_dedup_pairs(
     # participate in no near-dup pairs by definition; byte-identical empties
     # are exact_dedup's job. (sig[0] == p identifies the sentinel: the
     # universal family maps real shingles into [0, p).)
-    sigs = minhash_signatures(
+    sigs = persist(minhash_signatures(
         df, num_perm=num_perm, n=n, text_col=text_col, id_col=id_col,
         hash_family=hash_family,
-    ).filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P)).cache()
+    ).filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P)))
     cands = lsh_candidate_pairs(
         sigs, bands=bands, rows_per_band=rows_per_band,
         max_bucket_size=max_bucket_size,
@@ -819,15 +814,12 @@ def minhash_dedup_pairs(
             F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m
         )
     )
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
+    return (
         cands.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn("est_jaccard", agree / F.lit(num_perm))
         .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard"),
-        sigs,
+        .select("id_a", "id_b", "est_jaccard")
     )
 
 
@@ -898,9 +890,9 @@ def simhash_near_dup_pairs(
     pigeonhole), verified by exact hamming distance via bit_count(xor).
     ``max_bucket_size`` drops degenerate band buckets before the
     self-join (same rationale as :func:`lsh_candidate_pairs`)."""
-    sigs = simhash_signatures(
+    sigs = persist(simhash_signatures(
         df, text_col=text_col, id_col=id_col, hash_family=hash_family
-    ).cache()
+    ))
     band_bits = (SIMHASH_BITS if hash_family == "md5_52" else 64) // 4
     band_mask = (1 << band_bits) - 1
     bands = sigs.select(
@@ -930,9 +922,7 @@ def simhash_near_dup_pairs(
         bands = bands.join(small, on=["band", "key"], how="left_semi")
     a = bands.alias("a")
     b = bands.alias("b")
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
+    return (
         a.join(b, on=["band", "key"])
         .filter(F.col("a.id") < F.col("b.id"))
         .select(
@@ -943,8 +933,7 @@ def simhash_near_dup_pairs(
             ).alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming),
-        sigs,
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -975,8 +964,8 @@ def dedup_clusters(
     otherwise double per round); each superseded round's checkpoint
     blocks are released immediately (and the edge list's after the loop)
     so repeated ``near_dedup`` calls in a long session do not accumulate
-    executor storage, and the FINAL labels relation is pinned on the
-    result for the caller's ``release_pinned``. Convergence is detected
+    executor storage, and the FINAL labels checkpoint stays registered
+    for the caller's ``release_pinned``. Convergence is detected
     EXACTLY by
     counting changed labels against the previous round's checkpointed set
     — a join over the tiny (node, label) relation that works for ANY id
@@ -992,8 +981,6 @@ def dedup_clusters(
     already their own keeper). Input pairs may be duplicated/asymmetric;
     the edge set is symmetrized internally.
     """
-    from llm_aided_ocr_spark.operators.util import pin, release_local_checkpoint
-
     edges = pairs_df.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     )
@@ -1004,23 +991,21 @@ def dedup_clusters(
     # joins against it, and without this the full pairs_df lineage (for
     # near_dedup: the whole LSH candidate generation) would re-execute per
     # round
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
+    edges = local_checkpoint(edges)
+    labels = local_checkpoint(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     changed = 1
     for _ in range(max_iter):
         prop = edges.join(
             labels, edges["dst"] == labels["node"]
         ).select(F.col("src").alias("node"), F.col("label"))
-        new_labels = (
+        new_labels = local_checkpoint(
             labels.union(prop)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n")
@@ -1046,12 +1031,10 @@ def dedup_clusters(
             "large-star/small-star decomposition for adversarial graphs."
         )
     release_local_checkpoint(edges)
-    # the result still READS the final labels checkpoint lazily — pin it
-    # so the caller's release_pinned frees the blocks after its terminal
-    # action (the same lifecycle as every operator-internal cache)
-    return pin(
-        labels.select(F.col("node").alias("id"), F.col("label").alias("cluster_id")),
-        labels,
+    # the result still READS the final labels checkpoint lazily; it stays
+    # registered until the caller's release_pinned
+    return labels.select(
+        F.col("node").alias("id"), F.col("label").alias("cluster_id")
     )
 
 
@@ -1065,10 +1048,8 @@ def dedup_keep_list(
     representative. Materialize survivors with an anti-join of the corpus
     against ``filter(~keep)`` (16-byte rows; bucket the corpus on the id
     for an exchange-free join, see ``sources/io.py``)."""
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     c = dedup_clusters(pairs_df, id_a=id_a, id_b=id_b)
-    return carry_pins(c, c.withColumn("keep", F.col("id") == F.col("cluster_id")))
+    return c.withColumn("keep", F.col("id") == F.col("cluster_id"))
 
 
 def near_dedup(
@@ -1084,21 +1065,21 @@ def near_dedup(
     rows with their original schema. The anti-join's right side is the
     tiny ``(id)`` drop list (broadcast-eligible; at 100 TB bucket the
     corpus on the id for an exchange-free join, see ``sources/io.py``)."""
-    from llm_aided_ocr_spark.operators.util import carry_pins, release_pinned
-
+    start = cache_mark()
     pairs = minhash_dedup_pairs(
         df, threshold=threshold, text_col=text_col, id_col=id_col,
         **minhash_kwargs,
     )
+    stop = cache_mark()
     keep_list = dedup_keep_list(pairs)
     drops = keep_list.filter(~F.col("keep")).select(F.col("id").alias(id_col))
     # dedup_clusters ran eagerly (localCheckpoint rounds), so `drops` no
-    # longer depends on the pairs plan — the signature cache pinned inside
-    # minhash_dedup_pairs is dead; release it here instead of leaking it
-    # into the caller's session. The final labels checkpoint is still
-    # read by the anti-join: its pin rides the result for the caller.
-    release_pinned(pairs)
-    return carry_pins(keep_list, df.join(drops, on=id_col, how="left_anti"))
+    # longer depends on the pairs plan — the signature cache registered
+    # inside minhash_dedup_pairs is dead; release it here instead of
+    # leaking it into the caller's session. The final labels checkpoint
+    # (registered after `stop`) is still read by the anti-join and stays.
+    release_between(df.sparkSession, start, stop)
+    return df.join(drops, on=id_col, how="left_anti")
 
 
 def near_dedup_incremental(
@@ -1137,8 +1118,7 @@ def near_dedup_incremental(
 
     Returns surviving new rows with their original schema. To advance
     the index, append ``minhash_signatures(kept)`` (or reuse this run's
-    — the signature relation is pinned on the result; read it before
-    ``release_pinned``).
+    — the signature relation stays cached until ``release_pinned``).
 
     Scale shape: the index contributes ONLY 8-byte-keyed ``(id, band,
     bucket)`` rows — its text is never read — and those rows are
@@ -1150,12 +1130,10 @@ def near_dedup_incremental(
     batch this shuffles O(batch + matched-buckets) rows, not O(corpus):
     re-running batch :func:`near_dedup` over the whole corpus for each
     increment would re-shuffle every signature every time."""
-    from llm_aided_ocr_spark.operators.util import carry_pins, pin
-
-    new_sigs = minhash_signatures(
+    new_sigs = persist(minhash_signatures(
         new_df, num_perm=num_perm, n=n, seed=seed, text_col=text_col,
         id_col=id_col, hash_family=hash_family,
-    ).filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P)).cache()
+    ).filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P)))
     idx_sigs = index_sig_df.filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P))
 
     bn = _band_buckets(new_sigs, bands, rows_per_band)
@@ -1184,7 +1162,7 @@ def near_dedup_incremental(
             .select("band", "bucket")
         )
         u = u.join(small, on=["band", "bucket"], how="left_semi")
-    u = u.cache()
+    u = persist(u)
     un = u.filter(F.col("is_new")).drop("is_new")
     ui = u.filter(~F.col("is_new")).drop("is_new")
 
@@ -1222,7 +1200,7 @@ def near_dedup_incremental(
         .select(F.col("id_a").alias("id"))
         .distinct()
     )
-    cross_hit = cross_hit_plan.localCheckpoint(eager=True)
+    cross_hit = local_checkpoint(cross_hit_plan)
 
     within = (
         un.alias("a")
@@ -1248,13 +1226,10 @@ def near_dedup_incremental(
         "id", id_col
     )
     kept = new_df.join(drops, on=id_col, how="left_anti")
-    kept = carry_pins(clusters, kept)
-    kept = pin(pin(pin(kept, new_sigs), u), cross_hit)
     # Test probe: the candidate subtree now executes at the eager
     # checkpoint, so the index-never-shuffled plan property is no longer
     # visible in the RESULT's (truncated) plan — expose the logical
-    # candidate plan for plan-shape tests (same object-attribute pattern
-    # as pin()).
+    # candidate plan for plan-shape tests.
     kept._ocr_spark_index_probe = cross_hit_plan  # type: ignore[attr-defined]
     return kept
 
@@ -1292,8 +1267,6 @@ def apply_incremental_dedup(
     AFTER the output append but before the index append, leaving the two
     sinks inconsistent until replay. An unknown key now fails at call
     time, before anything is written."""
-    from llm_aided_ocr_spark.operators.util import release_pinned
-
     from pyspark.errors import AnalysisException
 
     sig_kwargs = dict(
@@ -1312,13 +1285,13 @@ def apply_incremental_dedup(
             batch_df, text_col=text_col, id_col=id_col, **sig_kwargs
         )
         idx = spark.createDataFrame([], sigs.schema)
-    kept = near_dedup_incremental(
+    start = cache_mark()
+    kept = persist(near_dedup_incremental(
         batch_df, idx, threshold=threshold,
         text_col=text_col, id_col=id_col,
         bands=bands, rows_per_band=rows_per_band,
         max_bucket_size=max_bucket_size, **sig_kwargs,
-    )
-    kept = kept.persist()
+    ))
     try:
         kept.write.mode("append").parquet(out_path)
         minhash_signatures(
@@ -1326,8 +1299,7 @@ def apply_incremental_dedup(
         ).write.mode("append").parquet(index_path)
         return kept.count()
     finally:
-        release_pinned(kept)
-        kept.unpersist()
+        release_between(spark, start)
 
 
 # ---------------------------------------------------------------------------
@@ -1515,7 +1487,6 @@ def dup_span_profile(
     either probe entirely (their stripped stream IS the normalized
     text, and the arrow form gates their token input NULL so they never
     cross into Python)."""
-    _pinned_gh = None
     if impl == "arrow":
         # The gram relation feeds BOTH the frequency count and the
         # duplicate-position probe; unpersisted, each side runs its own
@@ -1523,15 +1494,13 @@ def dup_span_profile(
         # the physical plan). Persist the per-doc hash ARRAYS (8
         # bytes/token, pre-explode — the narrowest form both sides can
         # derive from) so the corpus crosses the Python boundary once;
-        # MEMORY_AND_DISK, pinned on the result for deterministic
-        # release. The explodes stay JVM-side and cheap (guide §4: pay
+        # MEMORY_AND_DISK, registered for deterministic release. The explodes stay JVM-side and cheap (guide §4: pay
         # the Python boundary once).
         from pyspark import StorageLevel
 
-        gh_rel = gram_hashes_arrow(
+        gh_rel = persist(gram_hashes_arrow(
             df, n=n, text_col=text_col, id_col=id_col, hash_family=hash_family
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _pinned_gh = gh_rel
+        ), StorageLevel.MEMORY_AND_DISK)
         ex = gh_rel.select(
             F.col("id").alias("_ds_id"), F.posexplode("ghs").alias("pos", "gh")
         )
@@ -1658,12 +1627,7 @@ def dup_span_profile(
             .otherwise(let_(merged, _strip))
             .alias("stripped")
         )
-    res = out.select(*cols)
-    if _pinned_gh is not None:
-        from llm_aided_ocr_spark.operators.util import pin
-
-        res = pin(res, _pinned_gh)
-    return res
+    return out.select(*cols)
 
 
 # ---------------------------------------------------------------------------
@@ -1844,12 +1808,13 @@ def cluster_keepers(
             F.count(F.lit(1)).cast("bigint").alias("n_members"),
             F.max("_q").alias("best_quality"),
         ).select("cluster_id", "keeper_id", "n_members", "best_quality")
-    stats = j.groupBy("cluster_id").agg(
+    stats = j.groupBy(F.col("cluster_id").alias("_c")).agg(
         F.max("_q").alias("best_quality"),
         F.count(F.lit(1)).cast("bigint").alias("n_members"),
     )
     return (
-        j.join(stats, "cluster_id")
+        # null-safe: a NULL cluster_id is one group, as in the numeric path
+        j.join(stats, j["cluster_id"].eqNullSafe(stats["_c"]))
         .groupBy("cluster_id")
         .agg(
             F.min(

@@ -41,7 +41,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.operators.textstats import domain_col
-from llm_aided_ocr_spark.operators.util import let_
+from llm_aided_ocr_spark.operators.util import (
+    let_,
+    local_checkpoint,
+    persist,
+    release_local_checkpoint,
+)
 
 # href attribute anywhere inside an <a ...> open tag, either quote style
 # or bare; value = longest run without quote/space/>.
@@ -366,33 +371,29 @@ def pagerank(
     NOT DuckDB-oracled (the driver records a rows-only check); the unit
     tests pin it against an independent dense NumPy power iteration
     instead."""
-    from llm_aided_ocr_spark.operators.util import pin, release_local_checkpoint
-
     edges = graph.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("double").alias("w"),
     )
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    edges_n = (
+    edges_n = local_checkpoint(
         edges.join(out_w, "src")
         .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = local_checkpoint(
         edges.select(F.col("src").alias("host"))
         .union(edges.select(F.col("dst").alias("host")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     # hosts with no outlinks (pure sinks): their rank is the dangling mass
-    sinks = nodes.join(
-        out_w, nodes["host"] == out_w["src"], "left_anti"
-    ).localCheckpoint(eager=True)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
+    sinks = local_checkpoint(
+        nodes.join(out_w, nodes["host"] == out_w["src"], "left_anti")
+    )
+    ranks = local_checkpoint(nodes.withColumn("rank", F.lit(1.0 / n)))
     for _ in range(iters):
         dangling = (
             ranks.join(sinks, "host", "left_semi")
@@ -404,7 +405,7 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum(F.col("share") * F.col("rank")).alias("c"))
         )
-        new_ranks = (
+        new_ranks = local_checkpoint(
             nodes.join(contribs, nodes["host"] == contribs["dst"], "left")
             .select(
                 "host",
@@ -414,14 +415,13 @@ def pagerank(
                     * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling / n))
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
         release_local_checkpoint(ranks)
         ranks = new_ranks
     release_local_checkpoint(edges_n)
     release_local_checkpoint(sinks)
     release_local_checkpoint(nodes)
-    return pin(ranks.select("host", "rank"), ranks)
+    return ranks.select("host", "rank")
 
 
 def host_degrees(graph: DataFrame) -> DataFrame:
@@ -437,9 +437,7 @@ def host_degrees(graph: DataFrame) -> DataFrame:
     # relation is host-cardinality — narrow by construction.
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import pin
-
-    graph = graph.persist(StorageLevel.MEMORY_AND_DISK)
+    graph = persist(graph, StorageLevel.MEMORY_AND_DISK)
     out_d = graph.groupBy(F.col("src_host").alias("host")).agg(
         F.count(F.lit(1)).alias("out_hosts"),
         F.sum("n_links").alias("out_links"),
@@ -448,16 +446,12 @@ def host_degrees(graph: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("in_hosts"),
         F.sum("n_links").alias("in_links"),
     )
-    return pin(
-        out_d.join(in_d, "host", "full_outer")
-        .select(
-            "host",
-            F.coalesce("out_hosts", F.lit(0)).alias("out_hosts"),
-            F.coalesce("out_links", F.lit(0)).alias("out_links"),
-            F.coalesce("in_hosts", F.lit(0)).alias("in_hosts"),
-            F.coalesce("in_links", F.lit(0)).alias("in_links"),
-        ),
-        graph,
+    return out_d.join(in_d, "host", "full_outer").select(
+        "host",
+        F.coalesce("out_hosts", F.lit(0)).alias("out_hosts"),
+        F.coalesce("out_links", F.lit(0)).alias("out_links"),
+        F.coalesce("in_hosts", F.lit(0)).alias("in_hosts"),
+        F.coalesce("in_links", F.lit(0)).alias("in_links"),
     )
 
 
@@ -522,7 +516,7 @@ def anchor_corpus(
     # cache (guide §2.4).
     from pyspark import StorageLevel
 
-    a = a.persist(StorageLevel.MEMORY_AND_DISK)
+    a = persist(a, StorageLevel.MEMORY_AND_DISK)
     stats = a.groupBy("dst_host").agg(
         F.count(F.lit(1)).alias("n_anchors"),
         F.countDistinct("src_host").alias("n_src_hosts"),
@@ -540,9 +534,7 @@ def anchor_corpus(
             ).alias("anchors_cat")
         )
     )
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(stats.join(texts, "dst_host"), a)
+    return stats.join(texts, "dst_host")
 
 
 def trustrank(
@@ -589,46 +581,42 @@ def trustrank(
     eager checkpoint with immediate predecessor release, dangling mass
     as a bounded 1-row collect. ``|S|`` is a driver count: a trust seed
     list is curated and bounded by construction."""
-    from llm_aided_ocr_spark.operators.util import pin, release_local_checkpoint
-
     edges = graph.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("double").alias("w"),
     )
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    edges_n = (
+    edges_n = local_checkpoint(
         edges.join(out_w, "src")
         .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
-        .localCheckpoint(eager=True)
     )
     seed_nodes = seeds.select(F.col(seed_col).alias("host")).distinct()
-    nodes = (
+    nodes = local_checkpoint(
         edges.select(F.col("src").alias("host"))
         .union(edges.select(F.col("dst").alias("host")))
         .union(seed_nodes)
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    flagged = nodes.join(
+    flagged = local_checkpoint(nodes.join(
         seed_nodes.withColumn("_is_seed", F.lit(True)), "host", "left"
     ).select(
         "host", F.coalesce("_is_seed", F.lit(False)).alias("_is_seed")
-    ).localCheckpoint(eager=True)
-    nodes.unpersist()
+    ))
+    release_local_checkpoint(nodes)
     n_seeds = seed_nodes.count()
     if n_seeds == 0:
         raise ValueError("trustrank requires a non-empty seed set")
-    sinks = flagged.select("host").join(
+    sinks = local_checkpoint(flagged.select("host").join(
         out_w, flagged["host"] == out_w["src"], "left_anti"
-    ).localCheckpoint(eager=True)
+    ))
     tele = int((1.0 - damping) * scale) // n_seeds
-    ranks = flagged.withColumn(
+    ranks = local_checkpoint(flagged.withColumn(
         "itrust",
         F.when(F.col("_is_seed"), F.lit(scale // n_seeds)).otherwise(
             F.lit(0)
         ).cast("bigint"),
-    ).localCheckpoint(eager=True)
+    ))
     for _ in range(iters):
         dangling = int(
             ranks.join(sinks, "host", "left_semi")
@@ -644,7 +632,7 @@ def trustrank(
                 ).alias("c")
             )
         )
-        new_ranks = (
+        new_ranks = local_checkpoint(
             ranks.join(contribs, ranks["host"] == contribs["dst"], "left")
             .select(
                 "host", "_is_seed",
@@ -664,12 +652,10 @@ def trustrank(
                     )
                 ).alias("itrust"),
             )
-            .localCheckpoint(eager=True)
         )
         release_local_checkpoint(ranks)
         ranks = new_ranks
-    out = ranks.select("host", "itrust")
-    return pin(out, ranks)
+    return ranks.select("host", "itrust")
 
 
 def hits(
@@ -720,22 +706,19 @@ def hits(
     ``dedup_clusters`` lineage discipline. No windows, no skew pivot:
     a mega in-degree host is one groupBy key with map-side partial
     aggregation."""
-    from llm_aided_ocr_spark.operators.util import pin, release_local_checkpoint
-
-    edges = graph.select(
+    edges = local_checkpoint(graph.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("bigint").alias("w"),
-    ).localCheckpoint(eager=True)
-    nodes = (
+    ))
+    nodes = local_checkpoint(
         edges.select(F.col("src").alias("host"))
         .union(edges.select(F.col("dst").alias("host")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    hub = nodes.withColumn(
-        "hub", F.lit(int(scale)).cast("bigint")
-    ).localCheckpoint(eager=True)
+    hub = local_checkpoint(
+        nodes.withColumn("hub", F.lit(int(scale)).cast("bigint"))
+    )
     auth = None
     for _ in range(iters):
         a_raw = (
@@ -743,20 +726,20 @@ def hits(
             .groupBy("dst")
             .agg(F.sum(F.col("w") * F.col("hub")).alias("a_raw"))
         )
-        new_auth = nodes.join(
+        new_auth = local_checkpoint(nodes.join(
             a_raw, nodes["host"] == a_raw["dst"], "left"
         ).select(
             "host",
             F.coalesce("a_raw", F.lit(0)).cast("bigint").alias("auth"),
-        ).localCheckpoint(eager=True)
+        ))
         total_a = int(
             new_auth.agg(F.coalesce(F.sum("auth"), F.lit(0))).first()[0]
         )
         da = max(1, -(-total_a // int(scale)))
-        new_auth2 = new_auth.select(
+        new_auth2 = local_checkpoint(new_auth.select(
             "host",
             F.expr(f"auth div {da}").cast("bigint").alias("auth"),
-        ).localCheckpoint(eager=True)
+        ))
         release_local_checkpoint(new_auth)
         if auth is not None:
             release_local_checkpoint(auth)
@@ -766,27 +749,26 @@ def hits(
             .groupBy("src")
             .agg(F.sum(F.col("w") * F.col("auth")).alias("h_raw"))
         )
-        new_hub = nodes.join(
+        new_hub = local_checkpoint(nodes.join(
             h_raw, nodes["host"] == h_raw["src"], "left"
         ).select(
             "host",
             F.coalesce("h_raw", F.lit(0)).cast("bigint").alias("hub"),
-        ).localCheckpoint(eager=True)
+        ))
         total_h = int(
             new_hub.agg(F.coalesce(F.sum("hub"), F.lit(0))).first()[0]
         )
         dh = max(1, -(-total_h // int(scale)))
-        new_hub2 = new_hub.select(
+        new_hub2 = local_checkpoint(new_hub.select(
             "host",
             F.expr(f"hub div {dh}").cast("bigint").alias("hub"),
-        ).localCheckpoint(eager=True)
+        ))
         release_local_checkpoint(new_hub)
         release_local_checkpoint(hub)
         hub = new_hub2
     if auth is None:
         auth = nodes.withColumn("auth", F.lit(0).cast("bigint"))
-    out = hub.join(auth, "host").select("host", "hub", "auth")
-    return pin(out, hub)
+    return hub.join(auth, "host").select("host", "hub", "auth")
 
 
 def host_triangles(
@@ -818,14 +800,13 @@ def host_triangles(
 
     ``clustering = 2*T / (deg*(deg-1))`` (NULL for degree < 2) — left
     as an exact ratio of integers."""
-    e = (
+    e = local_checkpoint(
         graph.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("u"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("u").alias("host"))
@@ -846,7 +827,7 @@ def host_triangles(
         .otherwise(F.struct(F.col("v").alias("s"), F.col("u").alias("t")))
         .alias("x")
     ).select(F.col("x.s").alias("s"), F.col("x.t").alias("t"))
-    fwd = fwd.localCheckpoint(eager=True)
+    fwd = local_checkpoint(fwd)
     wedges = (
         fwd.alias("p")
         .join(fwd.alias("q"), F.col("p.s") == F.col("q.s"))

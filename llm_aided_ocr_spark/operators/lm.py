@@ -154,11 +154,10 @@ def lm_score(
     residue; no salting needed."""
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import corpus_scaled
+    from llm_aided_ocr_spark.operators.util import corpus_scaled, persist
 
     if (ref_df is None) == (model is None):
         raise ValueError("pass exactly one of ref_df or model")
-    trained_inline = model is None
     if model is None:
         model = train_bigram_lm(
             ref_df, text_col=text_col, id_col=id_col,
@@ -169,14 +168,14 @@ def lm_score(
         # reference slice from scratch (verified in the physical plan: 3
         # identical explode+agg subtrees). ``uni`` is vocabulary-sized —
         # reference-corpus-scaled, not corpus-scaled — so the cache is
-        # small by construction (guide §2.4); pinned on the result below
-        # for deterministic release. ``bi`` is persisted for the same
+        # small by construction (guide §2.4); registered for
+        # deterministic release. ``bi`` is persisted for the same
         # reason: it is distinct-reference-bigram-sized, and without the
         # persist every ACTION over the result (and every downstream
         # consumer, e.g. ccnet_buckets' quantile pass + bucket pass)
         # re-runs the reference tokenize+explode+aggregate from scratch.
-        model["uni"] = model["uni"].persist(StorageLevel.MEMORY_AND_DISK)
-        model["bi"] = model["bi"].persist(StorageLevel.MEMORY_AND_DISK)
+        model["uni"] = persist(model["uni"], StorageLevel.MEMORY_AND_DISK)
+        model["bi"] = persist(model["bi"], StorageLevel.MEMORY_AND_DISK)
     occ = _bigram_rel(df, text_col, id_col, hash_family, hashed)
     uni = model["uni"]
     c1 = uni.select(F.col("g").alias("g1"), F.col("c").alias("c1"))
@@ -223,7 +222,7 @@ def lm_score(
         ).alias("lm_score_r"),
     )
     all_ids = df.select(F.col(id_col).alias("id"))
-    out = all_ids.join(corpus_scaled(scored), "id", "left").select(
+    return all_ids.join(corpus_scaled(scored), "id", "left").select(
         "id",
         F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
         F.coalesce("oov_bigram_frac_r", F.lit(0.0)).alias(
@@ -231,11 +230,6 @@ def lm_score(
         ),
         F.coalesce("lm_score_r", F.lit(0.0)).alias("lm_score_r"),
     )
-    if trained_inline:
-        from llm_aided_ocr_spark.operators.util import pin
-
-        out = pin(pin(out, model["uni"]), model["bi"])
-    return out
 
 
 def ccnet_buckets(
@@ -275,20 +269,13 @@ def ccnet_buckets(
     assignment joins back on ``(lang, score)`` with the corpus side
     streaming; the tiny cut relation is left to AQE to broadcast. The
     doc relation is cached (it feeds the mass aggregation and the final
-    join) and pinned on the result for deterministic release."""
-    from llm_aided_ocr_spark.operators.util import (
-        carry_pins,
-        corpus_scaled,
-        pin,
-    )
+    join) and registered for deterministic release."""
+    from llm_aided_ocr_spark.operators.util import corpus_scaled, persist
 
-    scored_full = lm_score(
+    scored = lm_score(
         df, ref_df=ref_df, model=model, lam=lam, text_col=text_col,
         id_col=id_col, hash_family=hash_family, hashed=hashed,
-    )
-    scored = carry_pins(
-        scored_full, scored_full.select("id", "lm_score_r")
-    )
+    ).select("id", "lm_score_r")
     meta = df.select(
         F.col(id_col).alias("id"),
         F.col(lang_col).alias("lang"),
@@ -296,7 +283,7 @@ def ccnet_buckets(
             "bigint"
         ).alias("doc_bytes"),
     )
-    doc_rel = meta.join(corpus_scaled(scored), "id").cache()
+    doc_rel = persist(meta.join(corpus_scaled(scored), "id"))
     mass = doc_rel.groupBy("lang", "lm_score_r").agg(
         F.sum("doc_bytes").alias("m")
     )
@@ -325,7 +312,7 @@ def ccnet_buckets(
     # mass/cut aggregations, and a null-unsafe join would silently drop
     # those documents from the output
     d, c = doc_rel.alias("d"), cut.alias("c")
-    return carry_pins(scored, pin(
+    return (
         d.join(
             c,
             F.col("d.lang").eqNullSafe(F.col("c.lang"))
@@ -336,6 +323,5 @@ def ccnet_buckets(
             F.col("d.lm_score_r").alias("lm_score_r"),
             F.col("d.doc_bytes").alias("doc_bytes"),
             F.col("c.bucket").alias("bucket"),
-        ),
-        doc_rel,
-    ))
+        )
+    )

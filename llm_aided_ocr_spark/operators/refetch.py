@@ -132,7 +132,7 @@ def crawl_budget(
     10^12-page tier and this is precisely the shape the epoch_order
     audit flagged. Driver actions: two bounded collects (the weight
     total and the per-partition counts inside the rank)."""
-    from llm_aided_ocr_spark.operators.util import carry_pins, global_row_number
+    from llm_aided_ocr_spark.operators.util import global_row_number
 
     b = int(budget)
     if b < 0:
@@ -160,7 +160,7 @@ def crawl_budget(
     ranked, _n = global_row_number(
         quotas, [F.col("rem") * F.lit(-1), F.col("host")], rn_col="_rn"
     )
-    out = ranked.select(
+    return ranked.select(
         "host",
         "weight",
         (
@@ -170,7 +170,6 @@ def crawl_budget(
             )
         ).cast("bigint").alias("alloc"),
     )
-    return carry_pins(ranked, out)
 
 
 def politeness_schedule(

@@ -134,7 +134,9 @@ def dsir_log_weights(
     cross join (the repo's standard scalar pattern), never a driver
     collect."""
     a = float(smoothing)
-    docfeat = _feature_counts(df, text_col, id_col, hash_family).cache()
+    from llm_aided_ocr_spark.operators.util import persist
+
+    docfeat = persist(_feature_counts(df, text_col, id_col, hash_family))
     rawc = docfeat.groupBy("f").agg(F.sum("n").alias("c_r"))
     tgtc = (
         _feature_counts(target_df, text_col, id_col, hash_family)
@@ -160,13 +162,10 @@ def dsir_log_weights(
             - F.log((F.col("c_r") + a) / (F.col("t_r") + a * F.col("v")))
         ).alias("llr"),
     )
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
+    return (
         docfeat.join(F.broadcast(lr), on="f")
         .groupBy("id")
-        .agg(F.sum(F.col("n") * F.col("llr")).alias("log_weight")),
-        docfeat,
+        .agg(F.sum(F.col("n") * F.col("llr")).alias("log_weight"))
     )
 
 
@@ -195,13 +194,10 @@ def dsir_select(
     )
     u = F.greatest(_unit_hash_col(F.col("id"), seed), F.lit(1e-300))
     key = F.col("log_weight") - F.log(-F.log(u))
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
-    return carry_pins(
-        w,
+    return (
         w.withColumn("gumbel_key", key)
         .orderBy(F.desc("gumbel_key"), F.col("id"))
-        .limit(k),
+        .limit(k)
     )
 
 

@@ -36,6 +36,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from llm_aided_ocr_spark.operators.util import persist
+
 
 def bm25_scores(
     df: DataFrame,
@@ -63,7 +65,6 @@ def bm25_scores(
     import re
 
     from llm_aided_ocr_spark.operators.dedup import _words_col
-    from llm_aided_ocr_spark.operators.util import pin
 
     norm_terms = []
     for raw in query_terms:
@@ -88,11 +89,11 @@ def bm25_scores(
         # element INDEX as t (the F.trim trap, see boilerplate.c4_clean)
         return F.size(F.filter(words, lambda w: w == F.lit(term)))
 
-    base = df.select(
+    base = persist(df.select(
         F.col(id_col).alias("id"),
         F.size(words).alias("dl"),
         *[_tf(t).alias(f"_tf{i}") for i, t in enumerate(terms)],
-    ).cache()
+    ))
 
     stats = F.broadcast(
         base.agg(
@@ -127,13 +128,12 @@ def bm25_scores(
         ((F.col(f"_tf{i}") > 0).cast("int") for i in range(len(terms))),
         start=F.lit(0),
     )
-    out = base.crossJoin(stats).select(
+    return base.crossJoin(stats).select(
         "id",
         "dl",
         n_matched.alias("n_matched"),
         F.round(score, 6).alias("score_r"),
     )
-    return pin(out, base)
 
 
 def bm25_topk(
@@ -148,14 +148,10 @@ def bm25_topk(
     """The ``k`` best-scoring documents (ties broken by id for
     determinism) — a TakeOrdered over :func:`bm25_scores`, so the driver
     merge sees ``k`` rows per partition, never the corpus."""
-    from llm_aided_ocr_spark.operators.util import carry_pins
-
     scores = bm25_scores(
         df, query_terms, text_col=text_col, id_col=id_col, k1=k1, b=b
     )
-    return carry_pins(
-        scores, scores.orderBy(F.desc("score_r"), F.col("id")).limit(k)
-    )
+    return scores.orderBy(F.desc("score_r"), F.col("id")).limit(k)
 
 
 def postings(
@@ -181,9 +177,9 @@ def postings(
     Scale shape: explode → ``groupBy(term, id)`` — all tokens of a
     document sit in one input row, so map-side partial aggregation
     collapses to per-(doc, term) counts before the ONE data-bearing
-    exchange. The tf relation is persisted (MEMORY_AND_DISK, pinned for
-    :func:`~llm_aided_ocr_spark.operators.util.release_pinned`) before
-    the df stats derive from it: without the pin, Catalyst re-plans the
+    exchange. The tf relation is persisted (MEMORY_AND_DISK, registered
+    for :func:`~llm_aided_ocr_spark.operators.util.release_pinned`) before
+    the df stats derive from it: without the persist, Catalyst re-plans the
     stats subtree from the source and TOKENIZES THE CORPUS TWICE —
     verified in the physical plan — whereas tf is a ~30-byte-row
     relation that spills to disk cheaply. The stats agg is narrow
@@ -194,12 +190,11 @@ def postings(
     from pyspark import StorageLevel
 
     from llm_aided_ocr_spark.operators.dedup import _words_col
-    from llm_aided_ocr_spark.operators.util import pin
 
     words = F.filter(_words_col(text_col), lambda w: w != "")
     tok = df.select(F.col(id_col).alias("id"), F.explode(words).alias("term"))
     tf = tok.groupBy("term", "id").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
+    tf = persist(tf, StorageLevel.MEMORY_AND_DISK)
     stats = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     out = tf.join(stats, "term")
     if min_df:
@@ -209,7 +204,7 @@ def postings(
         out = out.crossJoin(F.broadcast(n)).filter(
             F.col("df") <= F.col("_n_docs") * F.lit(float(max_df_frac))
         ).drop("_n_docs")
-    return pin(out.select("term", "id", "tf", "df"), tf)
+    return out.select("term", "id", "tf", "df")
 
 
 def positional_postings(
@@ -322,14 +317,12 @@ def related_docs(
     consumers)."""
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import carry_pins, pin
-
     p = postings(
         df, text_col=text_col, id_col=id_col,
         min_df=min_df, max_df_frac=max_df_frac,
     )
     n = df.select(F.count(F.lit(1)).cast("bigint").alias("_n_docs"))
-    w = (
+    w = persist(
         p.crossJoin(F.broadcast(n))
         .select(
             "term", "id",
@@ -342,18 +335,17 @@ def related_docs(
                 * F.lit(float(quant))
             ).cast("bigint").alias("iw"),
         )
-        .filter(F.col("iw") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .filter(F.col("iw") > 0),
+        StorageLevel.MEMORY_AND_DISK,
     )
     # per-doc squared norms feed BOTH sides of the scored join (sa/sb);
     # without a persist each side re-runs the norm aggregation over the
     # cached w (two agg exchanges in the plan — static planning does
     # not reuse them). One (id, bigint) row per doc — the narrowest
     # relation in the operator.
-    ss = (
-        w.groupBy("id")
-        .agg(F.sum(F.col("iw") * F.col("iw")).alias("ssq"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    ss = persist(
+        w.groupBy("id").agg(F.sum(F.col("iw") * F.col("iw")).alias("ssq")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     a, b = w.alias("a"), w.alias("b")
     dots = (
@@ -377,7 +369,7 @@ def related_docs(
         )
     )
     win = Window.partitionBy("ida").orderBy(F.desc("cos"), F.col("idb"))
-    out = (
+    return (
         scored.withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= k)
         .select(
@@ -387,7 +379,6 @@ def related_docs(
             "rank",
         )
     )
-    return pin(pin(carry_pins(p, out), w), ss)
 
 
 def rrf_fuse(

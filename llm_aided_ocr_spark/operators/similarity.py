@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from llm_aided_ocr_spark.operators.util import cache_mark, persist, release_between
+
 
 def _dot(a, b) -> F.Column:
     return F.aggregate(
@@ -314,8 +316,7 @@ def embedding_near_dup_pairs(
         sk = hyperplane_sketch(vectors, dim, num_planes, seed, vec_col)
     # cache: the sketch feeds the bucket-size aggregation and both join
     # sides; uncached it would be recomputed per consumer
-    cached_sketch = sk.select(id_col, vec_col, "bucket").cache()
-    buckets = cached_sketch
+    buckets = persist(sk.select(id_col, vec_col, "bucket"))
     if max_bucket_size is not None:
         small = (
             buckets.groupBy("bucket")
@@ -355,15 +356,12 @@ def embedding_near_dup_pairs(
             yield out
 
     id_type = dict(cand.dtypes)["id_a"]
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
+    return (
         cand.mapInPandas(
             _score, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
         )
         .distinct()
-        .filter(F.col("cosine") >= threshold),
-        cached_sketch,
+        .filter(F.col("cosine") >= threshold)
     )
 
 
@@ -562,8 +560,7 @@ def semantic_dedup_pairs(
     verify is the same Arrow-vectorized pass as
     :func:`embedding_near_dup_pairs`."""
     assigned = ivf_assign(vectors, centroids, vec_col)
-    cached = assigned.select(id_col, vec_col, "cell").cache()
-    cells = cached
+    cells = persist(assigned.select(id_col, vec_col, "cell"))
     if max_cell_size is not None:
         small = (
             cells.groupBy("cell")
@@ -599,14 +596,9 @@ def semantic_dedup_pairs(
             yield out
 
     id_type = dict(cand.dtypes)["id_a"]
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
-        cand.mapInPandas(
-            _score, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
-        ).filter(F.col("cosine") >= tau),
-        cached,
-    )
+    return cand.mapInPandas(
+        _score, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
+    ).filter(F.col("cosine") >= tau)
 
 
 def semantic_dedup(
@@ -640,29 +632,28 @@ def semantic_dedup(
         dedup_clusters,
         dedup_keep_list,
     )
-    from llm_aided_ocr_spark.operators.util import carry_pins, release_pinned
-
     if keep not in ("min_id", "farthest"):
         raise ValueError(f"unknown keep policy: {keep!r}")
 
+    spark = vectors.sparkSession
+    start = cache_mark()
     pairs = semantic_dedup_pairs(
         vectors, centroids, tau=tau, id_col=id_col, vec_col=vec_col
     )
+    stop = cache_mark()
+    # dedup_clusters materializes eagerly (localCheckpoint rounds): after
+    # it the cell cache registered inside semantic_dedup_pairs is dead,
+    # while the final labels checkpoint (registered after `stop`) stays
     if keep == "min_id":
         keep_df = dedup_keep_list(pairs)
         drops = keep_df.filter(~F.col("keep")).select(
             F.col("id").alias(id_col)
         )
-        # dedup_clusters materialized eagerly (localCheckpoint rounds):
-        # the sketch/cell cache pinned inside semantic_dedup_pairs is
-        # dead here
-        release_pinned(pairs)
-        return carry_pins(
-            keep_df, vectors.join(drops, on=id_col, how="left_anti")
-        )
+        release_between(spark, start, stop)
+        return vectors.join(drops, on=id_col, how="left_anti")
 
     clusters = dedup_clusters(pairs)
-    release_pinned(pairs)
+    release_between(spark, start, stop)
     # cosine of each clustered member to ITS centroid (cells reuse the
     # same literal-centroid assignment; only cluster members pay)
     cents = F.array(
@@ -712,9 +703,7 @@ def semantic_dedup(
         )
         .select(F.col(id_col))
     )
-    return carry_pins(
-        clusters, vectors.join(drops, on=id_col, how="left_anti")
-    )
+    return vectors.join(drops, on=id_col, how="left_anti")
 
 
 def quantize_embeddings(
@@ -824,8 +813,6 @@ def mine_bitext(
     The k-NN windows partition by vector id (massively parallel, no
     global sort); everything after quantization is native columnar —
     zero Python rows."""
-    from llm_aided_ocr_spark.operators.util import pin
-
     # Norms are per-VECTOR, not per-pair: compute them once per side
     # (|X| + |Y| aggregates) instead of letting cosine_col re-run both
     # norm aggregates for every one of the |X|·|Y| candidate pairs
@@ -850,7 +837,7 @@ def mine_bitext(
     # lets all three reuse it (guide §2.4 — one exchange shared by every
     # same-keyed consumer; the window's shuffle it replaces was already
     # a full pass over the pair relation, so no new at-scale cost).
-    pairs = (
+    pairs = persist(
         qx.crossJoin(qy)
         .select(
             "x_id",
@@ -858,7 +845,6 @@ def mine_bitext(
             F.floor(cos * F.lit(float(scale))).cast("bigint").alias("qcos"),
         )
         .repartition("x_id")
-        .cache()
     )
     wx = Window.partitionBy("x_id").orderBy(F.desc("qcos"), F.col("y_id"))
     sx = (
@@ -894,7 +880,7 @@ def mine_bitext(
     )
     fwd = Window.partitionBy("x_id").orderBy(F.desc("margin"), F.col("y_id"))
     bwd = Window.partitionBy("y_id").orderBy(F.desc("margin"), F.col("x_id"))
-    out = (
+    return (
         m.withColumn("rf", F.row_number().over(fwd))
         .withColumn("rb", F.row_number().over(bwd))
         .filter(
@@ -904,7 +890,6 @@ def mine_bitext(
         )
         .select("x_id", "y_id", "margin")
     )
-    return pin(out, pairs)
 
 
 def sign_codes_col(vec_col, dim: int):

@@ -110,7 +110,7 @@ def cdx_cluster_index(
     the rank total (no per-block count aggregation). Both outputs read
     the ONE persisted ranked relation; release it with
     ``release_pinned(index)`` after both terminal actions."""
-    from llm_aided_ocr_spark.operators.util import carry_pins, global_row_number
+    from llm_aided_ocr_spark.operators.util import global_row_number
 
     recs = records.filter(F.col("surt_key").isNotNull())
     ranked, total = global_row_number(
@@ -131,7 +131,7 @@ def cdx_cluster_index(
             ).cast("bigint").alias("n_records"),
         )
     )
-    return blocked, carry_pins(ranked, index)
+    return blocked, index
 
 
 def cdx_prefix_blocks(index: DataFrame, prefix: str) -> DataFrame:
@@ -174,13 +174,13 @@ def cdx_prefix_scan(
     record-side join is on ``block_ix`` with the default strategy (AQE
     broadcasts it when the prefix is narrow, shuffles when someone asks
     for ``com,*``)."""
-    from llm_aided_ocr_spark.operators.util import carry_pins, pin
+    from llm_aided_ocr_spark.operators.util import persist
 
     # the candidate relation is consumed twice (record-side join +
     # final projection) and is O(matched / block_size) rows by
     # construction — cache it so the index range-intersection self-join
     # runs once (guide §2.4)
-    cand = cdx_prefix_blocks(index, prefix).cache()
+    cand = persist(cdx_prefix_blocks(index, prefix))
     stats = (
         blocked.join(cand.select("block_ix"), "block_ix")
         .groupBy("block_ix")
@@ -191,12 +191,7 @@ def cdx_prefix_scan(
             ).cast("bigint").alias("n_matched"),
         )
     )
-    return pin(
-        carry_pins(
-            index, cand.select("block_ix", "first_surt_key").join(stats, "block_ix")
-        ),
-        cand,
-    )
+    return cand.select("block_ix", "first_surt_key").join(stats, "block_ix")
 
 
 def revisit_records(

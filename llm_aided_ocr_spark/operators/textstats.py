@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.functions.text import word_count_col
+from llm_aided_ocr_spark.operators.util import persist
 
 # ---------------------------------------------------------------------------
 # Language ID — stopword-hit heuristic
@@ -639,10 +640,7 @@ def fingerprint_matches(
     # cache: the exploded index is consumed by the DF-cap aggregation AND
     # both sides of the pair join — without it the winnowing expression
     # recomputes per consumer
-    cached_index = fp.select(
-        F.col(id_col).alias("id"), F.explode("fps").alias("fp")
-    ).cache()
-    e = cached_index
+    e = persist(fp.select(F.col(id_col).alias("id"), F.explode("fps").alias("fp")))
     if max_fp_df is not None:
         rare = (
             e.groupBy("fp")
@@ -652,15 +650,12 @@ def fingerprint_matches(
         )
         e = e.join(rare, on="fp", how="left_semi")
     a, b = e.alias("a"), e.alias("b")
-    from llm_aided_ocr_spark.operators.util import pin
-
-    return pin(
+    return (
         a.join(b, on="fp")
         .filter(F.col("a.id") < F.col("b.id"))
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared),
-        cached_index,
+        .filter(F.col("shared_fps") >= min_shared)
     )
 
 
@@ -1591,8 +1586,8 @@ def word_commonness(
     # Pre-aggregate occurrences → (id, w, n): the only relation that ever
     # crosses an exchange. cache: it feeds the frequency aggregation AND
     # the join side — uncached, the normalize+explode+combine pass would
-    # run twice per action (pinned on the result; see release_pinned).
-    occ = words.groupBy("id", "w").agg(F.count(F.lit(1)).alias("n")).cache()
+    # run twice per action (registered; see release_pinned).
+    occ = persist(words.groupBy("id", "w").agg(F.count(F.lit(1)).alias("n")))
     freq = occ.groupBy("w").agg(F.sum("n").alias("c"))
     total = freq.agg(F.sum("c").alias("t"))
     per_doc = (
@@ -1613,16 +1608,13 @@ def word_commonness(
             6,
         ).alias("commonness_r"),
     )
-    from llm_aided_ocr_spark.operators.util import corpus_scaled, pin
+    from llm_aided_ocr_spark.operators.util import corpus_scaled
 
     all_ids = df.select(F.col(id_col).alias("id"))
-    return pin(
-        all_ids.join(corpus_scaled(scored), "id", "left").select(
-            "id",
-            F.coalesce("n_words", F.lit(0)).alias("n_words"),
-            F.coalesce("commonness_r", F.lit(0.0)).alias("commonness_r"),
-        ),
-        occ,
+    return all_ids.join(corpus_scaled(scored), "id", "left").select(
+        "id",
+        F.coalesce("n_words", F.lit(0)).alias("n_words"),
+        F.coalesce("commonness_r", F.lit(0.0)).alias("commonness_r"),
     )
 
 
@@ -1687,7 +1679,7 @@ def quality_classifier_score(
     empty documents score ``sigmoid(bias)`` with ``n_words = 0``.
     """
     from llm_aided_ocr_spark.operators.dedup import _word_hash_col, _words_col
-    from llm_aided_ocr_spark.operators.util import let_, pin
+    from llm_aided_ocr_spark.operators.util import let_
 
     words = F.filter(_words_col(text_col), lambda w: w != "")
     bucket_of = lambda w: F.pmod(_word_hash_col(w, "md5_52"), F.lit(dim))  # noqa: E731
@@ -1711,7 +1703,7 @@ def quality_classifier_score(
             F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6).alias("prob_r"),
         )
     # trained-weights shape: per-doc bucket counts x broadcast model
-    base = df.select(F.col(id_col).alias("id"), words.alias("ws")).cache()
+    base = persist(df.select(F.col(id_col).alias("id"), words.alias("ws")))
     buckets = base.select(
         "id", F.explode(F.transform("ws", bucket_of)).alias("bucket")
     )
@@ -1732,13 +1724,12 @@ def quality_classifier_score(
     empty = base.select("id").where(F.size("ws") == 0).withColumn(
         "n_words", F.lit(0).cast("bigint")
     ).withColumn("s", F.lit(0.0))
-    out = scored.unionByName(empty).select(
+    return scored.unionByName(empty).select(
         "id",
         "n_words",
         F.round(logit, 6).alias("logit_r"),
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6).alias("prob_r"),
     )
-    return pin(out, base)
 
 
 def script_profile(
@@ -1876,7 +1867,7 @@ def zipf_fit(
     SinglePartition exchange; the ranked relation is vocabulary-sized),
     then a single scalar aggregation."""
     from llm_aided_ocr_spark.operators.dedup import _words_col
-    from llm_aided_ocr_spark.operators.util import carry_pins, global_row_number
+    from llm_aided_ocr_spark.operators.util import global_row_number
 
     words = F.filter(_words_col(text_col), lambda w: w != "")
     tf = (
@@ -1915,13 +1906,12 @@ def zipf_fit(
     r2 = F.when(
         (varx_n != 0) & (vary_n != 0), cov_n * cov_n / (varx_n * vary_n)
     )
-    out = s.select(
+    return s.select(
         "n_terms",
         F.round(slope, 6).alias("slope_r"),
         F.round(intercept, 6).alias("intercept_r"),
         F.round(r2, 6).alias("r2_r"),
     )
-    return carry_pins(ranked, out)
 
 
 def corpus_divergence(
@@ -2044,15 +2034,13 @@ def quality_yield(
         raise ValueError("need step > 0 and max_score >= 0")
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.operators.util import pin
-
     spark = df.sparkSession
     # b feeds BOTH the grid theta-join and the totals aggregate; without
     # a persist each consumer re-runs the full corpus aggregation
     # (including whatever score projection the caller feeds in). b is at
     # most ``max_score + 1`` rows — the cheapest cache in the repo
     # (guide §2.4).
-    b = (
+    b = persist(
         df.select(
             F.greatest(
                 F.lit(0),
@@ -2064,8 +2052,8 @@ def quality_yield(
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.coalesce(F.sum("m"), F.lit(0)).cast("bigint").alias("mm"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     grid = spark.range(0, int(max_score) + 1, int(step)).select(
         F.col("id").cast("bigint").alias("threshold")
@@ -2086,21 +2074,18 @@ def quality_yield(
             ),
         )
     )
-    return pin(
-        kept.crossJoin(F.broadcast(tot)).select(
-            "threshold",
-            "n_docs_kept",
-            "mass_kept",
-            F.when(
-                F.col("tn") > 0,
-                F.col("n_docs_kept").cast("double") / F.col("tn").cast("double"),
-            ).alias("doc_frac"),
-            F.when(
-                F.col("tm") > 0,
-                F.col("mass_kept").cast("double") / F.col("tm").cast("double"),
-            ).alias("mass_frac"),
-        ),
-        b,
+    return kept.crossJoin(F.broadcast(tot)).select(
+        "threshold",
+        "n_docs_kept",
+        "mass_kept",
+        F.when(
+            F.col("tn") > 0,
+            F.col("n_docs_kept").cast("double") / F.col("tn").cast("double"),
+        ).alias("doc_frac"),
+        F.when(
+            F.col("tm") > 0,
+            F.col("mass_kept").cast("double") / F.col("tm").cast("double"),
+        ).alias("mass_frac"),
     )
 
 

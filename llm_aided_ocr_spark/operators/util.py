@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import itertools
 import os
+import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -201,58 +204,121 @@ def corpus_scaled(derived: DataFrame) -> DataFrame:
     return derived.hint("shuffle_hash")
 
 
-def pin(result: DataFrame, cached: DataFrame) -> DataFrame:
-    """Record that ``result``'s plan depends on the persisted ``cached``
-    relation, so callers can release it deterministically with
-    :func:`release_pinned` after their terminal action — instead of
-    leaning on ContextCleaner GC, which in a long-lived session pins
-    executor memory/disk until the plan object happens to be collected.
+# -- cache lifetime ---------------------------------------------------------
+#
+# One owner: a cache an operator leaves behind for its result is created
+# through persist() / local_checkpoint() below, which register it in a
+# lock-guarded registry on the SparkContext. release_pinned() frees every
+# registered cache after the caller's terminal action, whichever frame
+# derived from the result it is called on; marks (cache_mark /
+# release_between) free only what one dead sub-result registered. A
+# persisted relation is held as its DataFrame (CacheManager keeps it alive
+# until unpersisted anyway), a local checkpoint only as its RDD id, so
+# ContextCleaner still frees a checkpoint that nobody releases once its
+# plan is garbage-collected.
 
-    LIMITATION: the pin lives on the DataFrame OBJECT. Any further
-    transformation (``result.filter(...)``, ``.select(...)``) returns a
-    new object without it — either release the pin on ``result`` itself
-    after the terminal action, or move it with :func:`carry_pins` before
-    transforming. (Plan-level tracking would need a JVM-side hook; the
-    object-level handle plus this rule is the deliberate trade.)"""
-    pinned = list(getattr(result, "_ocr_spark_pinned", None) or [])
-    pinned.append(cached)
-    result._ocr_spark_pinned = pinned  # type: ignore[attr-defined]
-    return result
+_CACHE_LOCK = threading.Lock()
+_CACHE_SEQ = itertools.count(1)
 
 
-def carry_pins(src: DataFrame, dst: DataFrame) -> DataFrame:
-    """Move ``src``'s pinned relations onto ``dst`` (a derived DataFrame —
-    ``src.select(...)`` etc. returns a NEW object without the pin
-    attribute, which would orphan the cache)."""
-    for cached in getattr(src, "_ocr_spark_pinned", None) or []:
-        pin(dst, cached)
-    src._ocr_spark_pinned = []  # type: ignore[attr-defined]
-    return dst
+def _registered(spark) -> dict:
+    """The SparkContext's registry: registration number -> DataFrame
+    (persisted) or int (local-checkpoint RDD id). Caller holds the lock."""
+    sc = spark.sparkContext
+    if not hasattr(sc, "_ocr_spark_caches"):
+        sc._ocr_spark_caches = {}
+    return sc._ocr_spark_caches
 
 
-def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> bool:
-    """Free the executor storage blocks behind a
-    ``localCheckpoint(eager=True)`` relation. ``DataFrame.unpersist`` only
-    clears CacheManager entries; a local checkpoint's blocks belong to its
-    internal RDD, reachable through the plan's ``LogicalRDD`` node. That
-    is private API (pinned by test for this Spark version), so the access
-    is failure-safe: on any layout change the blocks simply remain until
-    ContextCleaner GC — the pre-helper behavior, a bounded leak, never an
-    error. Returns True when blocks were actually released."""
+def _register(spark, handle) -> None:
+    with _CACHE_LOCK:
+        _registered(spark)[next(_CACHE_SEQ)] = handle
+
+
+def persist(
+    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> DataFrame:
+    """``df.persist(level)`` (the default is ``df.cache()``'s level),
+    registered for :func:`release_pinned`."""
+    out = df.persist(level)
+    _register(df.sparkSession, out)
+    return out
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The internal RDD behind a ``localCheckpoint`` relation (its
+    ``LogicalRDD`` plan node; private API, pinned by test for this Spark
+    version) or None on any layout change."""
     try:
-        rdd = df._jdf.queryExecution().analyzed().rdd()
-        rdd.unpersist(blocking)
-        return True
+        return df._jdf.queryExecution().analyzed().rdd()
     except Exception:
-        return False
+        return None
+
+
+def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, registered for :func:`release_pinned`
+    by RDD id. ``DataFrame.unpersist`` cannot free a checkpoint's blocks —
+    they belong to the internal RDD. If the RDD cannot be reached the
+    checkpoint is left to ContextCleaner GC: a bounded leak, never an
+    error."""
+    out = df.localCheckpoint(eager=eager)
+    rdd = _checkpoint_rdd(out)
+    if rdd is not None:
+        _register(out.sparkSession, rdd.id())
+    return out
+
+
+def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> None:
+    """Free a dead ``local_checkpoint`` mid-operator (an iterative loop's
+    previous round) and drop it from the registry."""
+    rdd = _checkpoint_rdd(df)
+    if rdd is None:
+        return
+    rid = rdd.id()
+    with _CACHE_LOCK:
+        reg = _registered(df.sparkSession)
+        for k in [k for k, h in reg.items() if isinstance(h, int) and h == rid]:
+            del reg[k]
+    rdd.unpersist(blocking)
+
+
+def cache_mark() -> int:
+    """A position in the registry: caches registered after it compare
+    greater. Pass two marks to :func:`release_between`."""
+    return next(_CACHE_SEQ)
+
+
+def release_between(spark, start: int, stop=None, blocking: bool = True) -> int:
+    """Release the caches registered between marks ``start`` and ``stop``
+    (None: up to now), newest first so a cache built on another is
+    dropped before its input. Returns the number released."""
+    with _CACHE_LOCK:
+        reg = _registered(spark)
+        keys = sorted(
+            (k for k in reg if k > start and (stop is None or k < stop)),
+            reverse=True,
+        )
+        handles = [reg.pop(k) for k in keys]
+    live_rdds = None
+    for h in handles:
+        if isinstance(h, int):
+            if live_rdds is None:
+                live_rdds = spark.sparkContext._jsc.getPersistentRDDs()
+            jrdd = live_rdds.get(h)
+            if jrdd is not None:  # None: already freed by ContextCleaner
+                jrdd.unpersist(blocking)
+        else:
+            h.unpersist(blocking=blocking)
+    return len(handles)
 
 
 def release_pinned(result: DataFrame, blocking: bool = True) -> int:
-    """Unpersist every relation pinned on ``result`` (see :func:`pin`) —
-    both CacheManager caches and ``localCheckpoint`` relations (whose
-    blocks need :func:`release_local_checkpoint`). Safe on any DataFrame
-    (no-op when nothing is pinned), idempotent. Returns the number of
-    relations released.
+    """Free every cache registered on ``result``'s SparkContext and not yet
+    released — both persisted relations and local checkpoints. Call it
+    after the terminal action on ``result``: a relation derived from
+    ``result`` (or any other result of the session) recomputes, and a
+    local checkpoint is gone, after the release. Idempotent; returns the
+    number of caches released.
 
     ``blocking`` defaults to True (round 6): an async unpersist lets
     block eviction run concurrently with whatever the session does next
@@ -260,13 +326,7 @@ def release_pinned(result: DataFrame, blocking: bool = True) -> int:
     the next query's measured window; waiting costs the CALLER nothing
     measurable and keeps timings independent. Pass ``blocking=False``
     for fire-and-forget callers on a latency-sensitive path."""
-    pinned = getattr(result, "_ocr_spark_pinned", None) or []
-    for df in pinned:
-        df.unpersist(blocking=blocking)
-        release_local_checkpoint(df, blocking=blocking)
-    result._ocr_spark_pinned = []  # type: ignore[attr-defined]
-    return len(pinned)
-
+    return release_between(result.sparkSession, 0, blocking=blocking)
 
 
 def global_row_number(
@@ -287,14 +347,14 @@ def global_row_number(
 
     ``order_cols`` must be a deterministic total order (pass tiebreak
     columns) or ranks within a tie are layout-dependent. Returns
-    ``(ranked, total_rows)``; ``ranked`` carries a pinned persisted
+    ``(ranked, total_rows)``; ``ranked`` reads a registered persisted
     relation (the range sampler must not run twice against a recomputed
     input) — release with :func:`release_pinned` after the terminal
-    action, and :func:`carry_pins` across further transformations."""
+    action."""
     spark = df.sparkSession
     num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    local = (
+    local = persist(
         df.repartitionByRange(num_partitions, *[c.asc() for c in cols])
         .sortWithinPartitions(*[c.asc() for c in cols])
         .withColumn("_grn_mid", F.monotonically_increasing_id())
@@ -302,7 +362,6 @@ def global_row_number(
         .withColumn(
             "_grn_lix", F.col("_grn_mid").bitwiseAND(F.lit((1 << 33) - 1))
         )
-        .persist()
     )
     counts = sorted(
         (r["_grn_pid"], r["n"])
@@ -324,4 +383,4 @@ def global_row_number(
         )
         .drop("_grn_mid", "_grn_pid", "_grn_lix", "_grn_off")
     )
-    return pin(ranked, local), acc
+    return ranked, acc

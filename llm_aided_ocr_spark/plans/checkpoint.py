@@ -26,6 +26,8 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from llm_aided_ocr_spark.operators.util import persist
+
 
 @dataclass
 class CheckpointStore:
@@ -120,9 +122,12 @@ class CheckpointStore:
         if self.use_iceberg:
             # DataFrameWriterV2 commit: one Iceberg snapshot per increment.
             # The increment is persisted so the commit and the counter pass
-            # share one computation of the upstream plan.
+            # share one computation of the upstream plan. An increment
+            # handed back to the caller (return_committed=False) stays
+            # cached for the downstream stages, registered so that
+            # release_pinned frees it.
             table = self.iceberg_table(stage)
-            increment = df.persist()
+            increment = df.persist() if return_committed else persist(df)
             commit_name = f"iceberg_{self.run_id}_{time.time_ns()}"
             writer = increment.writeTo(table)
             if mode == "overwrite" or not spark.catalog.tableExists(table):
@@ -198,15 +203,8 @@ class CheckpointStore:
                 # is the ONLY writer of the keys table — called here and
                 # again defensively in remaining()
                 self._sync_keys(spark, stage)
-        if self.use_iceberg:
-            if return_committed:
-                increment.unpersist()
-            else:
-                # the caller keeps using the persisted increment — hand it
-                # the release handle instead of leaking until GC
-                from llm_aided_ocr_spark.operators.util import pin
-
-                pin(increment, increment)
+        if self.use_iceberg and return_committed:
+            increment.unpersist()
         return self.read(spark, stage) if return_committed else increment
 
     def _keys_marker(self, stage: str) -> str:

@@ -89,7 +89,7 @@ def curate(
     from llm_aided_ocr_spark.operators.dedup import exact_dedup, near_dedup
     from llm_aided_ocr_spark.operators.sampling import hash_split
     from llm_aided_ocr_spark.operators.textstats import quality_score_col
-    from llm_aided_ocr_spark.operators.util import carry_pins, pin
+    from llm_aided_ocr_spark.operators.util import persist
     from llm_aided_ocr_spark.plans.pipeline import run_pipeline
 
     if cfg.url_blocked_domains or cfg.url_blocked_keywords:
@@ -152,13 +152,6 @@ def curate(
         ck = canonical_url_keepers(pages_df, id_col="url")
         keep = ck.filter(F.col("keep")).select(F.col("id").alias("url"))
         pages_df = pages_df.join(corpus_scaled(keep), "url", "left_semi")
-        # the operator pins its narrow (id, canon, sz) cache on its
-        # result object; collect it for the plan-level pin list below
-        # (the object itself is replaced by the derivations above)
-        early_pins = list(getattr(ck, "_ocr_spark_pinned", None) or [])
-        ck._ocr_spark_pinned = []
-    else:
-        early_pins = []
 
     corrected = run_pipeline(
         pages_df, cfg.pipeline, store=store,
@@ -168,12 +161,11 @@ def curate(
     # correction is the expensive stage (potentially real LLM calls) and
     # the curation graph consumes it from several branches (quality join,
     # minhash signatures, the final anti-join, rewrite-stage count+rebuild
-    # branches) — persist it so it runs ONCE. Pinned on the result;
-    # callers release with release_pinned after materializing (with a
-    # checkpointing store the stage is already parquet-backed and this
-    # cache is just locality).
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    pins = [docs] + early_pins
+    # branches) — persist it so it runs ONCE. Like every cache the
+    # stages below register, callers free it with release_pinned after
+    # materializing (with a checkpointing store the stage is already
+    # parquet-backed and this cache is just locality).
+    docs = persist(docs, StorageLevel.MEMORY_AND_DISK)
 
     # Text-REWRITING stages run between correction and the gates, so
     # every downstream gate and every dedup key sees the FINAL bytes.
@@ -198,11 +190,6 @@ def curate(
             docs, text_col="corrected_text", id_col="url",
             min_doc_freq=cfg.line_dedup_min_df,
         )
-        # line_dedup pins its per-doc line-hash cache on the result;
-        # move it onto the plan-level pin list before the next stage
-        # replaces the DataFrame object (the pin lives on the object)
-        pins.extend(getattr(docs, "_ocr_spark_pinned", None) or [])
-        docs._ocr_spark_pinned = []
     if cfg.paragraph_dedup:
         from llm_aided_ocr_spark.operators.dedup import paragraph_dedup
 
@@ -221,8 +208,7 @@ def curate(
         # branches — persist the post-rewrite corpus too (the narrow
         # pii/c4 projections alone are cheap to recompute and don't
         # warrant a second materialization)
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-        pins.append(docs)
+        docs = persist(docs, StorageLevel.MEMORY_AND_DISK)
 
     # quality_score is computed AFTER the rewrites — the gate and the
     # output column must describe the bytes that ship, not the pre-clean
@@ -360,16 +346,9 @@ def curate(
             id_col="url",
         )
 
-    out = hash_split(
+    return hash_split(
         docs, dict(cfg.split_weights), id_col="url", seed=cfg.split_seed
     )
-    out = carry_pins(docs, out)
-    for p in pins:
-        out = pin(out, p)
-    # carry the pipeline's own routed-corpus pin too; near_dedup released
-    # its internal signature cache itself (its cluster rounds are eager)
-    # and pinned the final component-labels checkpoint (carried above)
-    return carry_pins(corrected, out)
 
 
 def annotate(

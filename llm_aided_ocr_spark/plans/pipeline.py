@@ -55,34 +55,32 @@ def salted_repartition(df: DataFrame, cfg: PipelineConfig, *extra_cols) -> DataF
 def _spread_documents(
     df: DataFrame, cfg: PipelineConfig, gate_df: DataFrame | None = None
 ) -> DataFrame:
-    """Scale-adaptive document spread (``cfg.salted_spread``): the
-    per-document correction stage is embarrassingly parallel, so the
-    salted repartition buys exactly one thing — parallelism when the
-    input is under-split (a toy table's single row-group would serialize
-    the Python kernel on one core). A splittable corpus scan is already
-    size-uniform at ``maxPartitionBytes`` and mega-documents route to
-    the staged path, so ``auto`` skips the full-corpus shuffle there
-    (guide §2.4: remove shuffles outright; measured ~27% of pipeline
-    wall at the 1.1 GB bench tier, byte-identical output) and applies
-    the salted spread only below the :func:`scan_partitions_below`
-    threshold — the same gate ensure_min_parallelism uses.
+    """Scale-adaptive document spread: the per-document correction
+    stage is embarrassingly parallel, so the salted repartition buys
+    exactly one thing — parallelism when the input is under-split (a toy
+    table's single row-group would serialize the Python kernel on one
+    core). A splittable corpus scan is already size-uniform at
+    ``maxPartitionBytes`` and mega-documents route to the staged path,
+    so the full-corpus shuffle is skipped there (guide §2.4: remove
+    shuffles outright; measured ~27% of pipeline wall at the 1.1 GB
+    bench tier, byte-identical output) and the salted spread applies
+    only below the :func:`scan_partitions_below` threshold — the same
+    gate ensure_min_parallelism uses. The STAGED chunk path always
+    salts on (url, chunk_ix): spreading a mega-document's chunks is the
+    whole point there.
 
     ``gate_df``: the plan to JUDGE when ``df`` itself cannot be (the
     auto strategy hands branches of a persisted relation, and
     ``inputFiles()`` on an InMemoryRelation is empty — the gate would
     conservatively skip the spread a toy input needs); pass the
     pre-persist source so the file-size estimate still sees the scan."""
-    mode = getattr(cfg, "salted_spread", "always")
-    if mode == "never":
-        return df
-    if mode == "auto":
-        from llm_aided_ocr_spark.operators.util import scan_partitions_below
+    from llm_aided_ocr_spark.operators.util import scan_partitions_below
 
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if not scan_partitions_below(
-            gate_df if gate_df is not None else df, max(1, target // 2)
-        ):
-            return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if not scan_partitions_below(
+        gate_df if gate_df is not None else df, max(1, target // 2)
+    ):
+        return df
     return salted_repartition(df, cfg)
 
 
@@ -262,7 +260,6 @@ def run_pipeline(
             )
 
     df = pages_df
-    pinned: list[DataFrame] = []
     if cfg.check_if_valid_english:
         df = language_gate(df)
 
@@ -297,9 +294,15 @@ def run_pipeline(
         # that routed relation — the parquet source is scanned once to
         # populate the cache and both branches filter the cached copy
         # (MEMORY_AND_DISK: partitions spill to executor-local disk at
-        # 100 TB, which beats a second remote scan; the ContextCleaner
-        # releases the blocks when the plan is garbage-collected).
+        # 100 TB, which beats a second remote scan). The cache is
+        # registered: callers free it with release_pipeline_cache once
+        # their terminal action completes, instead of leaning on
+        # ContextCleaner GC — which in a long-lived session holds
+        # executor memory/disk ≈ pruned-corpus size until the plan
+        # object is collected.
         from pyspark import StorageLevel
+
+        from llm_aided_ocr_spark.operators.util import persist
 
         # The routing size is computed ONCE at cache build and stored as
         # an int column: both branch filters would otherwise re-run
@@ -317,11 +320,10 @@ def run_pipeline(
                 F.lit("").cast("binary") if use_html else F.lit(""),
             )
         )
-        routed = df.select(
+        routed = persist(df.select(
             "url", "warc_ts", "lang", source_col,
             size.cast("bigint").alias("_ocr_route_sz"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        pinned.append(routed)
+        ), StorageLevel.MEMORY_AND_DISK)
         sz = F.col("_ocr_route_sz")
         small = routed.filter(sz <= cfg.mega_doc_chars).drop("_ocr_route_sz")
         big = routed.filter(sz > cfg.mega_doc_chars).drop("_ocr_route_sz")
@@ -339,28 +341,18 @@ def run_pipeline(
         result = store.write(
             result, "corrected_docs", mode="append", counted_col="corrected_text"
         )
-    # explicit persist lifecycle: the auto strategy's routed cache is pinned
-    # on the RESULT so callers release it deterministically once their
-    # terminal action completes (release_pipeline_cache), instead of leaning
-    # on ContextCleaner GC — which in a long-lived session pins executor
-    # memory/disk ≈ pruned-corpus size until the plan object is collected.
-    result._ocr_spark_pinned = pinned  # type: ignore[attr-defined]
     return result
 
 
 def release_pipeline_cache(result: DataFrame, blocking: bool = True) -> int:
-    """Unpersist every relation :func:`run_pipeline` pinned for ``result``
-    (the auto strategy's routed corpus cache). Call AFTER the terminal
-    action (write/collect) on ``result`` — the cache exists precisely so the
-    two routing branches share one source scan during that action. Returns
-    the number of relations released. Safe to call on any DataFrame (no-op
-    when nothing is pinned) and idempotent.
-
-    The same contract covers every operator with an internal cache
-    (ngram/minhash/simhash pairs, embedding near-dup, fingerprint
-    matches): their results carry the pin, and
-    ``operators.util.release_pinned`` (this function's generic form)
-    releases them."""
+    """Free the caches :func:`run_pipeline` registered (the auto
+    strategy's routed corpus cache, an Iceberg store's staged
+    increments) — together with every other unreleased cache of the
+    session: this is ``operators.util.release_pinned``, under the name
+    pipeline callers know. Call AFTER the terminal action (write/collect)
+    on ``result`` — the routed cache exists precisely so the two routing
+    branches share one source scan during that action. Returns the
+    number of caches released; idempotent."""
     from llm_aided_ocr_spark.operators.util import release_pinned
 
     return release_pinned(result, blocking=blocking)

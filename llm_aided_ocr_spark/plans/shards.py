@@ -117,7 +117,7 @@ def epoch_order(
     partitions). At 10^10 sequences the old no-partition window pushed
     the whole relation through one reducer; this shape never does."""
     from llm_aided_ocr_spark.operators.dedup import _word_hash_col
-    from llm_aided_ocr_spark.operators.util import carry_pins, global_row_number
+    from llm_aided_ocr_spark.operators.util import global_row_number
 
     seqs = (
         assignments.filter(F.col("split") == split)
@@ -135,8 +135,7 @@ def epoch_order(
         seqs.withColumn("_ek", key), ["_ek", "stream", "bin_ix"],
         rn_col="epoch_pos",
     )
-    out = ranked.select("split", "stream", "bin_ix", "shard", "epoch_pos")
-    return carry_pins(ranked, out)
+    return ranked.select("split", "stream", "bin_ix", "shard", "epoch_pos")
 
 
 def write_training_shards(

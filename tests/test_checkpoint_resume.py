@@ -5,8 +5,10 @@ from __future__ import annotations
 import tempfile
 
 import pytest
+from pyspark import StorageLevel
 
 from llm_aided_ocr_spark.config import PipelineConfig
+from llm_aided_ocr_spark.operators.util import release_pinned
 from llm_aided_ocr_spark.plans.checkpoint import CheckpointStore
 from llm_aided_ocr_spark.plans.pipeline import run_pipeline
 from llm_aided_ocr_spark.sources.synthetic import pages_dataframe
@@ -282,6 +284,11 @@ def test_iceberg_mode_dispatch(spark, monkeypatch):
         )
         inc = store.write(df, "s", counted_col="text", return_committed=False)
         assert inc.count() == 6
+        # the staged increment stays cached for the stages downstream of
+        # it, and a release through any frame derived from it frees it
+        assert inc.storageLevel.useMemory
+        release_pinned(inc.select("url"), blocking=True)
+        assert inc.storageLevel == StorageLevel.NONE
         inc2 = store.write(df.limit(2), "s", return_committed=False)
         assert inc2.count() == 2
         assert calls == [("createOrReplace", table), ("append", table)]

@@ -358,23 +358,30 @@ def test_dedup_clusters_random_vs_union_find(spark):
 
 
 def test_internal_caches_are_pinned_and_releasable(spark, corpus):
-    """Every operator with an internal .cache() pins it on its result so a
-    long-lived session can release the storage deterministically."""
+    """Every operator with an internal cache registers it in the session
+    cache registry, so a long-lived session can release the storage
+    deterministically — through any frame derived from the result."""
     from llm_aided_ocr_spark.operators.dedup import (
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
         simhash_near_dup_pairs,
     )
-    from llm_aided_ocr_spark.operators.util import release_pinned
+    from llm_aided_ocr_spark.operators.util import (
+        _registered,
+        cache_mark,
+        release_pinned,
+    )
 
+    release_pinned(corpus)  # start from an empty registry
     for op in (ngram_jaccard_pairs, minhash_dedup_pairs, simhash_near_dup_pairs):
+        start = cache_mark()
         out = op(corpus)
         out.count()
-        pinned = getattr(out, "_ocr_spark_pinned", [])
-        assert pinned, op.__name__
-        assert all(p.storageLevel.useMemory for p in pinned), op.__name__
-        assert release_pinned(out, blocking=True) >= 1, op.__name__
-        assert not any(p.storageLevel.useMemory for p in pinned), op.__name__
+        cached = [h for k, h in _registered(spark).items() if k > start]
+        assert cached, op.__name__
+        assert all(c.storageLevel.useMemory for c in cached), op.__name__
+        assert release_pinned(out.select("id_a"), blocking=True) >= 1, op.__name__
+        assert not any(c.storageLevel.useMemory for c in cached), op.__name__
         assert release_pinned(out) == 0  # idempotent
 
 
@@ -826,3 +833,32 @@ def test_cluster_keepers_string_ids_all_null_quality(spark):
     assert (r["keeper_id"], r["n_members"], r["best_quality"]) == (
         "u/a", 2, None,
     )
+
+
+def test_cluster_keepers_null_cluster_same_on_both_id_paths(spark):
+    # a NULL cluster_id is one group on the numeric (groupBy) path; the
+    # string path's join back to the per-cluster stats must keep it too
+    from llm_aided_ocr_spark.operators.dedup import cluster_keepers
+
+    members = [(1, 10, 5), (2, 10, 9), (3, None, 7), (4, None, 7), (5, 20, 1)]
+
+    def sid(i):  # order-preserving id mapping, so ties break alike
+        return None if i is None else f"u{i:02d}"
+
+    def keepers(rows, id_type):
+        return cluster_keepers(
+            spark.createDataFrame(
+                [(i, c) for i, c, _ in rows], f"id {id_type}, cluster_id {id_type}"
+            ),
+            spark.createDataFrame(
+                [(i, q) for i, _, q in rows], f"id {id_type}, quality bigint"
+            ),
+        )
+
+    num = keepers(members, "bigint")
+    txt = keepers([(sid(i), sid(c), q) for i, c, q in members], "string")
+    want = {(10, 2, 2, 9), (None, 3, 2, 7), (20, 5, 1, 1)}
+    assert {tuple(r) for r in num.collect()} == want
+    assert {tuple(r) for r in txt.collect()} == {
+        (sid(c), sid(k), n, q) for c, k, n, q in want
+    }

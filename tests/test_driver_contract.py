@@ -63,15 +63,21 @@ def test_queries_match_oracles(spark, entry_mod, duck):
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     assert set(oracles) <= set(qs)
+    jsc = spark.sparkContext._jsc
     for name, sql in oracles.items():
+        before = set(jsc.getPersistentRDDs())
         sdf = qs[name](spark, SF_DIR)
         spark_cols = sdf.columns
         spark_rows = [tuple(r) for r in sdf.collect()]
         # follow each operator's documented cache lifecycle: release the
-        # pinned relations after the terminal action so a 61-query sweep
-        # does not accumulate executor storage (and so later storage-
-        # count tests see a quiet session, not ContextCleaner races)
+        # registered caches after the terminal action so the sweep does
+        # not accumulate executor storage (and so later storage-count
+        # tests see a quiet session, not ContextCleaner races)
         release_pinned(sdf, blocking=True)
+        # leak gate: no RDD this query persisted may outlive the release
+        # (a set difference, so GC of earlier RDDs cannot mask a leak)
+        leaked = set(jsc.getPersistentRDDs()) - before
+        assert not leaked, f"{name}: persistent RDDs {sorted(leaked)} left after release"
         res = duck.execute(sql)
         duck_cols = [c[0] for c in res.description]
         duck_rows = res.fetchall()

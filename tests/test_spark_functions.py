@@ -105,6 +105,7 @@ def test_postings_index(spark):
     # and re-tokenize the corpus (the 100 TB double-pass trap)
     from llm_aided_ocr_spark.operators.util import release_pinned
 
+    release_pinned(df)  # start from an empty cache registry
     out = postings(df, min_df=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") == 2  # tf side + stats side

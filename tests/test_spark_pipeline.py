@@ -56,6 +56,27 @@ def test_fused_equals_staged(spark, pages):
     assert f == s
 
 
+def test_fused_rows_identical_with_large_var_types(spark, pages):
+    # the fused mapInArrow pass hands the url column back as the input's
+    # own Arrow array; with useLargeVarTypes on that array is
+    # large_string while the built columns are string — Spark must still
+    # accept the batch and return the same rows
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    cfg = PipelineConfig(provider="heuristic")
+    prev = spark.conf.get(conf, None)
+    try:
+        rows = {}
+        for on in ("false", "true"):
+            spark.conf.set(conf, on)
+            rows[on] = sorted(map(tuple, run_pipeline(pages, cfg, strategy="fused").collect()))
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+    assert rows["true"] == rows["false"] and len(rows["true"]) == 40
+
+
 def test_auto_routes_mega_docs(spark):
     df = pages_dataframe(spark, n_rows=12, seed=42, mega_doc=True)
     cfg = PipelineConfig(provider="heuristic", mega_doc_chars=100_000)
