@@ -3,14 +3,19 @@
 The parameter surface mirrors the reference CLI's intended flags
 (``/root/reference/llm-aided-ocr-cli.py:6-16``) — page range, markdown
 toggle, header suppression, language gate, hallucination-filter threshold,
-filter-test mode — plus the scale knobs the north rule requires (salted
-partitioning, checkpointing). Unlike the reference (ambient ``.env`` read at
-import, llm_aided_ocr.py:31), config here is constructed, never ambient.
+filter-test mode — plus the scale knobs the north rule requires
+(partition count, mega-document routing, Arrow batch size, checkpointing).
+Constants no caller varies live where they are used: the url-hash
+partition salt is ``plans.pipeline.SALT`` and the page-filter thresholds
+are ``apply_page_filter``'s defaults; with checkpointing on, every stage
+is checkpointed.
+Unlike the reference (ambient ``.env`` read at import, llm_aided_ocr.py:31),
+config here is constructed, never ambient.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -29,13 +34,11 @@ class PipelineConfig:
     overlap_words: int = 10
     # --- correction provider ---
     provider: str = "heuristic"          # heuristic | identity (LLM providers pluggable)
-    # --- v1 page filter thresholds (CHANGELOG.md:160, relaxed values) ---
-    page_min_chars: int = 10
-    page_min_words: int = 5
+    # --- v1 page filter (CHANGELOG.md:160; thresholds are
+    # apply_page_filter's relaxed defaults, 10 chars / 5 words) ---
     apply_page_filter: bool = False
     apply_hallucination_filter: bool = False
     # --- scale knobs (north rule) ---
-    salt: int = 0x5ABE                   # partition salt for url hashing
     num_partitions: int | None = None    # None → spark.sql.shuffle.partitions
     mega_doc_chars: int = 4_000_000      # docs above this processed page-granular
     arrow_max_records_per_batch: int = 512
@@ -43,6 +46,3 @@ class PipelineConfig:
     warehouse_dir: str = "/tmp/ocr_spark_warehouse"
     run_id: str = "run0"
     checkpointing: bool = False
-    stages_to_checkpoint: tuple = field(
-        default=("extracted", "chunks", "corrected_chunks", "corrected_docs")
-    )

@@ -26,13 +26,11 @@ Design — blocked-bloom, division-free:
   partial bit_or means each task emits at most ``m_words`` rows no
   matter how many keys it saw — the exchange is bounded by the filter
   size, not the corpus;
-* **probe** (default ``strategy='map'``) folds the whole filter into
-  ONE broadcast map row and evaluates all k bit-tests as a per-row
-  native expression: zero shuffle, zero Python on the probe side. A
-  62-bit-word filter of 2^20 words ≈ 8 MiB — comfortably broadcast-able
-  (that's ~10^7 keys at 1% FP). ``strategy='join'`` keeps the filter as
-  a relation (explode k probe rows, left join, bool_and) for filters
-  too big to broadcast.
+* **probe** folds the whole filter into ONE broadcast map row and
+  evaluates all k bit-tests as a per-row native expression: zero
+  shuffle, zero Python on the probe side. A 62-bit-word filter of 2^20
+  words ≈ 8 MiB — comfortably broadcast-able (that's ~10^7 keys at 1%
+  FP).
 
 False positives are deterministic (same hashes → same collisions), so
 the oracle matches them bit for bit; false negatives are impossible.
@@ -43,19 +41,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from llm_aided_ocr_spark.operators.util import md5_52
+
 BITS_PER_WORD = 62
-
-
-def _h52(s: Column) -> Column:
-    return F.conv(F.substring(F.md5(s), 1, 13), 16, 10).cast("bigint")
 
 
 def _probe_cols(key: Column, k: int, m_words: int, seed: int) -> list:
     """k (word_ix, mask) column pairs for ``key``."""
     out = []
     for j in range(k):
-        w = _h52(F.concat(F.lit(f"{seed}:w{j}:"), key)) % m_words
-        b = _h52(F.concat(F.lit(f"{seed}:b{j}:"), key)) % BITS_PER_WORD
+        w = md5_52(F.concat(F.lit(f"{seed}:w{j}:"), key)) % m_words
+        b = md5_52(F.concat(F.lit(f"{seed}:b{j}:"), key)) % BITS_PER_WORD
         mask = F.call_function(
             "shiftleft", F.lit(1).cast("long"), b.cast("int")
         )
@@ -97,56 +93,32 @@ def bloom_probe(
     m_words: int = 1024,
     k: int = 4,
     seed: int = 1,
-    strategy: str = "map",
 ) -> DataFrame:
     """``(id, maybe_present)`` — True iff all k probed bits are set
     (possible false positive, never a false negative). ``m_words`` /
     ``k`` / ``seed`` must match the build call.
 
-    ``strategy='map'`` (default): the filter collapses to ONE broadcast
-    map row; the probe is a pure per-row expression — no exchange
-    touches the probe side at all. ``strategy='join'``: explode k probe
-    rows per key and left-join the filter relation on ``word_ix`` —
-    for filters past broadcast size (the join key is an 8-byte word
-    index; the probe side shuffles k rows of ~24 bytes per key)."""
+    The filter collapses to ONE broadcast map row; the probe is a pure
+    per-row expression — no exchange touches the probe side at all."""
     key = F.coalesce(F.col(key_col), F.lit(""))
-    probes = _probe_cols(key, k, m_words, seed)
-    if strategy == "map":
-        bloom_map = bloom.groupBy().agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("word_ix", "word"))
-            ).alias("_bloom")
-        )
-        hit = None
-        for w, mask in probes:
-            one = (
-                F.coalesce(
-                    F.try_element_at(F.col("_bloom"), w).bitwiseAND(mask)
-                    == mask,
-                    F.lit(False),
-                )
-            )
-            hit = one if hit is None else (hit & one)
-        return (
-            df.crossJoin(F.broadcast(bloom_map))
-            .select(F.col(id_col).alias("id"), hit.alias("maybe_present"))
-        )
-    if strategy != "join":
-        raise ValueError(f"unknown strategy: {strategy!r}")
-    entries = F.array(
-        *[F.struct(w.alias("word_ix"), m.alias("mask")) for w, m in probes]
+    bloom_map = bloom.groupBy().agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("word_ix", "word"))
+        ).alias("_bloom")
     )
-    exploded = df.select(
-        F.col(id_col).alias("id"), F.explode(entries).alias("_e")
-    ).select("id", F.col("_e.word_ix").alias("word_ix"), F.col("_e.mask").alias("mask"))
-    joined = exploded.join(bloom, "word_ix", "left")
-    return joined.groupBy("id").agg(
-        F.bool_and(
+    hit = None
+    for w, mask in _probe_cols(key, k, m_words, seed):
+        one = (
             F.coalesce(
-                F.col("word").bitwiseAND(F.col("mask")) == F.col("mask"),
+                F.try_element_at(F.col("_bloom"), w).bitwiseAND(mask)
+                == mask,
                 F.lit(False),
             )
-        ).alias("maybe_present")
+        )
+        hit = one if hit is None else (hit & one)
+    return (
+        df.crossJoin(F.broadcast(bloom_map))
+        .select(F.col(id_col).alias("id"), hit.alias("maybe_present"))
     )
 
 
@@ -194,7 +166,7 @@ def countmin_build(
         F.struct(
             F.lit(j).alias("row_ix"),
             (
-                _h52(F.concat(F.lit(f"{seed}:cm{j}:"), F.col("_k"))) % width
+                md5_52(F.concat(F.lit(f"{seed}:cm{j}:"), F.col("_k"))) % width
             ).cast("int").alias("col_ix"),
         )
         for j in range(depth)
@@ -228,7 +200,7 @@ def countmin_estimate(
         F.struct(
             F.lit(j).alias("row_ix"),
             (
-                _h52(F.concat(F.lit(f"{seed}:cm{j}:"), key)) % width
+                md5_52(F.concat(F.lit(f"{seed}:cm{j}:"), key)) % width
             ).cast("int").alias("col_ix"),
         )
         for j in range(depth)
@@ -291,7 +263,7 @@ def hll_build(
     w = HLL_HASH_BITS - p
     m = 1 << p
     key = F.col(key_col).cast("string")
-    h = _h52(F.concat(F.lit(f"{seed}:hll:"), key))
+    h = md5_52(F.concat(F.lit(f"{seed}:hll:"), key))
     groups = [F.col(c) for c in (group_cols or [])]
     rem = (h / F.lit(m)).cast("bigint")  # h // m: h >= 0 so trunc == floor
     return (

@@ -17,14 +17,10 @@ Scale shape, in order of data moved:
   document-locally (``array_distinct`` over a native ``transform``) and
   explode as 8-byte longs into one map-side-combined ``groupBy`` — the
   count exchange carries hash+partial-count, never line text.
-* rebuild (default ``strategy='join'``): per-line ``(id, pos, hash)``
-  24-byte rows anti-join the frequent relation through a REAL hash table
-  (AQE broadcasts the set when small) and regroup to kept-position
-  arrays; document text still moves at most once (the final id join).
-* rebuild (``strategy='broadcast'``): the frequent set as one sorted
-  array literal, zero exchanges — but the per-line probe is a LINEAR
-  interpreted scan, usable only when the set is tiny (see line_dedup's
-  docstring for the measured blowup).
+* rebuild: per-line ``(id, pos, hash)`` 24-byte rows anti-join the
+  frequent relation through a REAL hash table (AQE broadcasts the set
+  when small) and regroup to kept-position arrays; document text still
+  moves at most once (the final id join).
 """
 
 from __future__ import annotations
@@ -33,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.operators.dedup import _word_hash_col
-from llm_aided_ocr_spark.operators.util import corpus_scaled, persist
+from llm_aided_ocr_spark.operators.util import corpus_scaled, let_, persist
 
 
 def _lines_col(text_col: str) -> F.Column:
@@ -44,32 +40,6 @@ def _line_hash(line: F.Column, hash_family: str) -> F.Column:
     return _word_hash_col(F.trim(line), hash_family)
 
 
-def dup_line_hashes(
-    df: DataFrame,
-    text_col: str = "text",
-    min_doc_freq: int = 5,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
-    """``(line_hash)`` — hashes of trimmed non-blank lines that occur in
-    at least ``min_doc_freq`` DISTINCT documents. Distinctness is
-    document-local (``array_distinct`` before the explode), so the
-    ``groupBy`` count IS the document frequency and the exchange carries
-    only 8-byte hashes with map-side combine."""
-    hashes = F.array_distinct(
-        F.transform(
-            F.filter(_lines_col(text_col), lambda l: F.trim(l) != ""),
-            lambda l: _line_hash(l, hash_family),
-        )
-    )
-    return (
-        df.select(F.explode(hashes).alias("line_hash"))
-        .groupBy("line_hash")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-        .filter(F.col("doc_freq") >= F.lit(min_doc_freq))
-        .select("line_hash")
-    )
-
-
 def line_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -77,7 +47,6 @@ def line_dedup(
     min_doc_freq: int = 5,
     hash_family: str = "xxhash64",
     out_col: str | None = None,
-    strategy: str = "join",
 ) -> DataFrame:
     """Strip corpus-frequent lines from every document, preserving the
     order (and blank-line structure) of everything that survives. Blank
@@ -86,108 +55,71 @@ def line_dedup(
     dropped: line dedup edits documents, document-level filters decide
     their fate.
 
-    ``strategy='join'`` (default) explodes line hashes into an anti-join
-    against the frequent set — a REAL hash-table probe: AQE broadcasts
-    the set when it is small (O(1) codegen probes, no corpus exchange
-    for the join) and falls back to a shuffle join when it is not; kept
-    positions regroup per document and the rebuild join is pinned off
-    broadcast (``corpus_scaled``). ``strategy='broadcast'`` ships the
-    frequent-hash set as one sorted array column and probes it per line
-    with ``array_contains`` — ZERO exchanges, but the probe is a LINEAR
+    Line hashes explode into an anti-join against the frequent set — a
+    REAL hash-table probe: AQE broadcasts the set when it is small (O(1)
+    codegen probes, no corpus exchange for the join) and falls back to a
+    shuffle join when it is not; kept positions regroup per document and
+    the rebuild join is pinned off broadcast (``corpus_scaled``). (A
+    zero-exchange form that shipped the frequent set as one array column
+    and probed it per line with ``array_contains`` is a LINEAR
     interpreted scan, O(lines x |dup set|): at 37k frequent lines over a
-    28M-line corpus that is ~10^12 ops (measured: did not finish in 9
-    minutes where the join form takes seconds). Use it only when the
-    frequent set is known to be tiny (hundreds)."""
+    28M-line corpus that is ~10^12 ops — measured: did not finish in 9
+    minutes where the join form takes seconds.)"""
+    from pyspark import StorageLevel
+
     out_col = out_col or text_col
     lines = _lines_col(text_col)
     blank_hash = _line_hash(F.lit(""), hash_family)
-    if strategy == "join":
-        # ONE tokenize+hash pass feeds BOTH the frequency count and the
-        # per-position explode: persist the per-doc hash ARRAYS (8
-        # bytes/line — ~an order narrower than the text) instead of
-        # re-splitting and re-hashing every document for each consumer
-        # (guide §2.4/§1.2). Equivalence of the dup side: a line's hash
-        # is of its TRIMMED form, so `hash != hash('')` selects exactly
-        # the trimmed-non-blank lines the filter-then-hash form counted.
-        from pyspark import StorageLevel
-
-        hrel = persist(df.select(
-            F.col(id_col).alias("_ld_id"),
-            F.transform(
-                lines, lambda l: _line_hash(l, hash_family)
-            ).alias("_lh"),
-        ), StorageLevel.MEMORY_AND_DISK)
-        dup = (
-            hrel.select(
-                F.explode(
-                    F.array_distinct(
-                        F.filter("_lh", lambda h: h != blank_hash)
-                    )
-                ).alias("line_hash")
-            )
-            .groupBy("line_hash")
-            .agg(F.count(F.lit(1)).alias("doc_freq"))
-            .filter(F.col("doc_freq") >= F.lit(min_doc_freq))
-            .select("line_hash")
+    # ONE tokenize+hash pass feeds BOTH the frequency count and the
+    # per-position explode: persist the per-doc hash ARRAYS (8 bytes/line
+    # — ~an order narrower than the text) instead of re-splitting and
+    # re-hashing every document for each consumer (guide §2.4/§1.2). A
+    # line's hash is of its TRIMMED form, so `hash != hash('')` selects
+    # exactly the trimmed-non-blank lines, counted once per document
+    # (`array_distinct` before the explode makes the count the document
+    # frequency).
+    hrel = persist(df.select(
+        F.col(id_col).alias("_ld_id"),
+        F.transform(lines, lambda l: _line_hash(l, hash_family)).alias("_lh"),
+    ), StorageLevel.MEMORY_AND_DISK)
+    dup = (
+        hrel.select(
+            F.explode(
+                F.array_distinct(F.filter("_lh", lambda h: h != blank_hash))
+            ).alias("line_hash")
         )
-    else:
-        dup = dup_line_hashes(
-            df, text_col=text_col, min_doc_freq=min_doc_freq,
-            hash_family=hash_family,
-        )
-    if strategy == "broadcast":
-        dup_arr = F.broadcast(
-            dup.agg(F.sort_array(F.collect_list("line_hash")).alias("_dup_hashes"))
-        )
-        kept = F.filter(
-            lines,
-            lambda l: (F.trim(l) == "")
-            | ~F.array_contains(F.col("_dup_hashes"), _line_hash(l, hash_family)),
-        )
-        return (
-            df.crossJoin(dup_arr)
-            .withColumn(out_col, F.array_join(kept, "\n"))
-            .drop("_dup_hashes")
-        )
-    if strategy == "join":
-        ex = hrel.select(
-            "_ld_id",
-            F.posexplode("_lh").alias("pos", "line_hash"),
-        )
-        kept_pos = (
-            ex.join(
-                dup.withColumn("_dup", F.lit(True)), on="line_hash", how="left"
-            )
-            # blank lines hash to hash('') which can never enter `dup`
-            # (non-blank-only counting), but keep the guard explicit
-            .filter(F.col("_dup").isNull() | (F.col("line_hash") == blank_hash))
-            .groupBy("_ld_id")
-            .agg(F.sort_array(F.collect_list("pos")).alias("_kept_pos"))
-        )
-        from llm_aided_ocr_spark.operators.util import let_
-
-        kept_arr = F.coalesce(F.col("_kept_pos"), F.array().cast("array<int>"))
-        # let-bind the line array: HOF lambdas are interpreted with NO
-        # subexpression elimination, so an unbound `lines` inside the
-        # per-position lambda would re-split the WHOLE document once per
-        # kept line — O(lines x doc_bytes), hours on a 31k-line mega-doc
-        # (measured: the unbound form did not finish 320k docs in 9 min;
-        # bound, the full operator runs in seconds)
-        rebuilt = let_(
-            lines,
-            lambda ls: F.array_join(
-                F.transform(kept_arr, lambda i: F.element_at(ls, i + 1)),
-                "\n",
-            ),
-        )
-        return (
-            df.join(
-                corpus_scaled(kept_pos), df[id_col] == kept_pos["_ld_id"], "left"
-            )
-            .withColumn(out_col, rebuilt)
-            .drop("_ld_id", "_kept_pos")
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
+        .groupBy("line_hash")
+        .agg(F.count(F.lit(1)).alias("doc_freq"))
+        .filter(F.col("doc_freq") >= F.lit(min_doc_freq))
+        .select("line_hash")
+    )
+    ex = hrel.select("_ld_id", F.posexplode("_lh").alias("pos", "line_hash"))
+    kept_pos = (
+        ex.join(dup.withColumn("_dup", F.lit(True)), on="line_hash", how="left")
+        # blank lines hash to hash('') which can never enter `dup`
+        # (non-blank-only counting), but keep the guard explicit
+        .filter(F.col("_dup").isNull() | (F.col("line_hash") == blank_hash))
+        .groupBy("_ld_id")
+        .agg(F.sort_array(F.collect_list("pos")).alias("_kept_pos"))
+    )
+    kept_arr = F.coalesce(F.col("_kept_pos"), F.array().cast("array<int>"))
+    # let-bind the line array: HOF lambdas are interpreted with NO
+    # subexpression elimination, so an unbound `lines` inside the
+    # per-position lambda would re-split the WHOLE document once per kept
+    # line — O(lines x doc_bytes), hours on a 31k-line mega-doc
+    # (measured: the unbound form did not finish 320k docs in 9 min;
+    # bound, the full operator runs in seconds)
+    rebuilt = let_(
+        lines,
+        lambda ls: F.array_join(
+            F.transform(kept_arr, lambda i: F.element_at(ls, i + 1)), "\n"
+        ),
+    )
+    return (
+        df.join(corpus_scaled(kept_pos), df[id_col] == kept_pos["_ld_id"], "left")
+        .withColumn(out_col, rebuilt)
+        .drop("_ld_id", "_kept_pos")
+    )
 
 
 def line_dedup_stats(
@@ -196,7 +128,6 @@ def line_dedup_stats(
     id_col: str = "doc_id",
     min_doc_freq: int = 5,
     hash_family: str = "xxhash64",
-    strategy: str = "join",
 ) -> DataFrame:
     """``(id, n_lines, n_kept, clean_len, clean_md5)`` — the audit view of
     :func:`line_dedup`: per-document line counts before/after plus the
@@ -204,7 +135,7 @@ def line_dedup_stats(
     driver oracle verifies the rebuilt BYTES, not just counts)."""
     cleaned = line_dedup(
         df, text_col=text_col, id_col=id_col, min_doc_freq=min_doc_freq,
-        hash_family=hash_family, out_col="_clean", strategy=strategy,
+        hash_family=hash_family, out_col="_clean",
     )
     return cleaned.select(
         F.col(id_col).alias("id"),

@@ -30,6 +30,7 @@ from llm_aided_ocr_spark.operators.util import (
     cache_mark,
     corpus_scaled,
     local_checkpoint,
+    md5_52,
     persist,
     release_between,
     release_local_checkpoint,
@@ -206,7 +207,7 @@ def _word_hash_col(word: F.Column, hash_family: str) -> F.Column:
     if hash_family == "xxhash64":
         return F.xxhash64(word)
     if hash_family == "md5_52":
-        return F.conv(F.substring(F.md5(word), 1, 13), 16, 10).cast("bigint")
+        return md5_52(word)
     raise ValueError(f"unknown hash_family {hash_family!r}")
 
 
@@ -1391,37 +1392,6 @@ def remove_contaminated(
 # Exact duplicate-span detection / removal (hashed-n-gram approximation)
 # ---------------------------------------------------------------------------
 
-def _strip_covered_udf(n: int):
-    """Scalar pandas UDF ``(tokens array<string>, dup_pos array<int>) ->
-    string``: the document's tokens minus every position covered by a
-    duplicated n-gram start (position j covered iff some start p
-    satisfies ``p <= j <= p+n-1``), single-space-joined. Coverage is a
-    numpy difference array — +1 at each start, -1 at ``start+n`` (gram
-    starts satisfy ``p+n <= T`` by construction; ``minimum`` guards
-    degenerate inputs), ``cumsum > 0`` is the covered mask — so the pass
-    is O(tokens + dup_positions) per document regardless of how the dup
-    positions cluster. NULL token input (the clean-document gate in
-    :func:`dup_span_profile`) short-circuits to ``''``."""
-
-    @F.pandas_udf("string")
-    def _strip(toks: "pd.Series", ps: "pd.Series") -> "pd.Series":
-        out = []
-        for t, p in zip(toks, ps):
-            if t is None:
-                out.append("")
-                continue
-            T = len(t)
-            pos = np.asarray(p, dtype=np.int64)
-            diff = np.zeros(T + 1, dtype=np.int64)
-            np.add.at(diff, pos, 1)
-            np.add.at(diff, np.minimum(pos + n, T), -1)
-            cov = np.cumsum(diff[:T]) > 0
-            out.append(" ".join(np.asarray(t, dtype=object)[~cov]))
-        return pd.Series(out, dtype=object)
-
-    return _strip
-
-
 def dup_span_profile(
     df: DataFrame,
     n: int = 50,
@@ -1429,8 +1399,6 @@ def dup_span_profile(
     id_col: str = "doc_id",
     hash_family: str = "xxhash64",
     with_stripped: bool = True,
-    impl: str = "arrow",
-    strip_impl: str = "native",
 ) -> DataFrame:
     """``(id, n_grams, n_dup, dup_frac[, stripped])`` — per-document
     profile of EXACT duplicated token spans: a position is duplicated if
@@ -1449,15 +1417,14 @@ def dup_span_profile(
     finds, at the cost of hash-collision false positives (~2^-64 per
     gram pair) and of missing duplicates shorter than ``n``.
 
-    Scale shape: gram hashes are document-local arrays (one Arrow/numpy
-    pass by default — ``impl='native'`` keeps the pure-expression form,
-    but higher-order functions are interpreted, so at n=50 the native
-    projection alone ran at ~6 MB/s; see :func:`gram_hashes_arrow`); the
-    frequency pass shuffles 8-byte gram hashes into a map-side-combined
-    count; the duplicate-position pass streams ``(id, pos, gram)`` rows
-    through a SHUFFLE-HASH semi-join against the dup set (the
-    ``shuffle_hash`` hint is load-bearing twice over: it kills the
-    sort-merge plan's two corpus-length sorts, and it forbids
+    Scale shape: gram hashes are document-local arrays built by one
+    Arrow/numpy pass (:func:`gram_hashes_arrow`; higher-order functions
+    are interpreted, so at n=50 the pure-expression projection alone ran
+    at ~6 MB/s); the frequency pass shuffles 8-byte gram hashes into a
+    map-side-combined count; the duplicate-position pass streams
+    ``(id, pos, gram)`` rows through a SHUFFLE-HASH semi-join against the
+    dup set (the ``shuffle_hash`` hint is load-bearing twice over: it
+    kills the sort-merge plan's two corpus-length sorts, and it forbids
     broadcasting the unbounded dup set) and regroups to per-doc sorted
     position arrays — document TEXT never enters an exchange; the final
     assembly joins those small arrays back to the corpus by id. (A
@@ -1471,45 +1438,32 @@ def dup_span_profile(
     GCLocker allocation-stall warnings even at test scale. Streaming
     rows through a hash probe has no degenerate key, so the semi-join
     form is the default on robustness, not speed.)
-    Token-level coverage-removal
-    (``strip_impl``) offers two value-identical forms (pinned by
-    ``test_dup_span_strip_impls_agree``): the default ``'native'`` is a
-    ``filter`` + ``exists`` probe over MERGED dup intervals —
-    O(tokens x merged-intervals) interpreted, but zero Python and tiny M
-    on real web boilerplate, where dup positions coalesce into a few
-    long runs (measured 2x faster than arrow at 320k docs on the
-    template bench corpus, where most docs are dirty and arrow pays
-    token-array Arrow transfer for each); ``'arrow'`` is one numpy
-    difference-array pass per DIRTY document — O(tokens + dup-positions)
-    with no degenerate shape, measured 2-3x faster than native on an
-    interval-FRAGMENTED corpus (~40 separate dup intervals per doc,
-    native's worst case; numbers in BENCH.md). Clean documents skip
-    either probe entirely (their stripped stream IS the normalized
-    text, and the arrow form gates their token input NULL so they never
-    cross into Python)."""
-    if impl == "arrow":
-        # The gram relation feeds BOTH the frequency count and the
-        # duplicate-position probe; unpersisted, each side runs its own
-        # full Arrow gram pass over the corpus (two MapInPandas nodes in
-        # the physical plan). Persist the per-doc hash ARRAYS (8
-        # bytes/token, pre-explode — the narrowest form both sides can
-        # derive from) so the corpus crosses the Python boundary once;
-        # MEMORY_AND_DISK, registered for deterministic release. The explodes stay JVM-side and cheap (guide §4: pay
-        # the Python boundary once).
-        from pyspark import StorageLevel
+    Token-level coverage-removal is a ``filter`` + ``exists`` probe over
+    MERGED dup intervals — O(tokens x merged-intervals) interpreted, but
+    zero Python and tiny M on real web boilerplate, where dup positions
+    coalesce into a few long runs (measured 2x faster than a numpy
+    difference-array UDF at 320k docs on the template bench corpus,
+    where most docs are dirty and the UDF paid a token-array Arrow
+    transfer for each; the UDF won 2-3x only on an interval-FRAGMENTED
+    corpus of ~40 separate dup intervals per doc — numbers in BENCH.md).
+    Clean documents skip the probe entirely: their stripped stream IS the
+    normalized text."""
+    # The gram relation feeds BOTH the frequency count and the
+    # duplicate-position probe; unpersisted, each side runs its own full
+    # Arrow gram pass over the corpus (two MapInPandas nodes in the
+    # physical plan). Persist the per-doc hash ARRAYS (8 bytes/token,
+    # pre-explode — the narrowest form both sides can derive from) so the
+    # corpus crosses the Python boundary once; MEMORY_AND_DISK, registered
+    # for deterministic release. The explodes stay JVM-side and cheap
+    # (guide §4: pay the Python boundary once).
+    from pyspark import StorageLevel
 
-        gh_rel = persist(gram_hashes_arrow(
-            df, n=n, text_col=text_col, id_col=id_col, hash_family=hash_family
-        ), StorageLevel.MEMORY_AND_DISK)
-        ex = gh_rel.select(
-            F.col("id").alias("_ds_id"), F.posexplode("ghs").alias("pos", "gh")
-        )
-    else:
-        grams = shingle_array_col(text_col, n=n, hash_family=hash_family)
-        ex = df.select(
-            F.col(id_col).alias("_ds_id"),
-            F.posexplode(grams).alias("pos", "gh"),
-        )
+    gh_rel = persist(gram_hashes_arrow(
+        df, n=n, text_col=text_col, id_col=id_col, hash_family=hash_family
+    ), StorageLevel.MEMORY_AND_DISK)
+    ex = gh_rel.select(
+        F.col("id").alias("_ds_id"), F.posexplode("ghs").alias("pos", "gh")
+    )
     dup = (
         ex.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1550,25 +1504,7 @@ def dup_span_profile(
         .otherwise(F.lit(0.0))
         .alias("dup_frac"),
     ]
-    if with_stripped and strip_impl == "arrow":
-        # Vectorized coverage-removal: one Arrow pass per dup-bearing
-        # document, O(T + D) via a numpy difference array (each dup gram
-        # start p adds +1 at p and -1 at p+n; cumsum > 0 is coverage) —
-        # the bounded-worst-case alternative to the interpreted
-        # merged-interval default below (trade measured in BENCH.md;
-        # docstring has the regime analysis). Clean documents
-        # (n_dup == 0) never reach Python: the token-array input is
-        # gated NULL for them, so the extracted Python projection
-        # Arrow-transfers a null, and the outer CASE takes the native
-        # normalized string (array_join of the hoisted token array —
-        # _normalize_col is DEFINED as exactly that join).
-        strip_udf = _strip_covered_udf(n)
-        cols.append(
-            F.when(n_dup == 0, F.array_join(tokens, " "))
-            .otherwise(strip_udf(F.when(n_dup > 0, tokens), ps))
-            .alias("stripped")
-        )
-    elif with_stripped:
+    if with_stripped:
         from llm_aided_ocr_spark.operators.util import let_
 
         # coverage via MERGED intervals: ps is sorted, so folding the

@@ -22,7 +22,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from llm_aided_ocr_spark.operators.util import cache_mark, persist, release_between
+from llm_aided_ocr_spark.operators.util import (
+    cache_mark,
+    let_,
+    persist,
+    release_between,
+)
 
 
 def _dot(a, b) -> F.Column:
@@ -164,11 +169,6 @@ def rademacher_planes(dim: int, num_planes: int = 12, seed: int = 7) -> "np.ndar
 QUANT_SCALE = 1_000_000  # embedding quantization for exact integer sketches
 
 
-def _let(expr: F.Column, fn) -> F.Column:
-    # single-evaluation binding (see textstats._let)
-    return F.get(F.transform(F.array(expr), fn), 0)
-
-
 def quantized_sketch(
     df: DataFrame, planes: "np.ndarray", vec_col: str = "embedding"
 ) -> DataFrame:
@@ -286,7 +286,7 @@ def quantized_sketch_col(
             acc = acc + F.when(dot > 0, F.lit(1 << r)).otherwise(F.lit(0))
         return acc
 
-    return _let(q, _bucket)
+    return let_(q, _bucket)
 
 
 def embedding_near_dup_pairs(
@@ -726,8 +726,6 @@ def quantize_embeddings(
     stay in [-levels, levels] by construction (|v_i| ≤ max|v| and half-up
     needs +0.5 beyond the max to escape, which ``x/s ≤ levels`` cannot
     reach). One native projection: zero Python, zero shuffle."""
-    from llm_aided_ocr_spark.operators.util import let_
-
     v = F.col(vec_col)
     q = let_(
         F.aggregate(

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.functions.text import word_count_col
-from llm_aided_ocr_spark.operators.util import persist
+from llm_aided_ocr_spark.operators.util import md5_52, persist
 
 # ---------------------------------------------------------------------------
 # Language ID — stopword-hit heuristic
@@ -431,34 +431,12 @@ _FP_BITS = 52
 _FP_MASK = (1 << _FP_BITS) - 1
 
 
-def _let(expr: Column, fn) -> Column:
-    """Bind ``expr`` to a lambda variable so ``fn`` can reference it many
-    times with ONE evaluation (transform over a 1-element array; lambda
-    variables are evaluated once per element, and unlike a projected alias
-    the binding cannot be inlined-per-reference by CollapseProject)."""
-    return F.get(F.transform(F.array(expr), fn), 0)
-
-
-def _word_hash(word: Column) -> Column:
-    return F.conv(F.substring(F.md5(word), 1, 13), 16, 10).cast("bigint")
-
-
-def _rot(x: Column, j: int) -> Column:
-    """Rotate left by j within the 52-bit domain (j < 52)."""
-    if j == 0:
-        return x
-    return (
-        F.shiftleft(x, j).bitwiseOR(F.shiftright(x, _FP_BITS - j))
-    ).bitwiseAND(F.lit(_FP_MASK))
-
-
 def fingerprints(
     df: DataFrame,
     window: int = 8,
     winnow: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """``(id, content_hash, n_grams, fps: array<bigint>)`` — per-document
     winnowing fingerprints (Schleimer/Wilkerson/Aiken MOSS scheme):
@@ -473,72 +451,13 @@ def fingerprints(
        window+winnow-1 words).
 
     Word hashes and the content hash are computed natively (so the values
-    stay portable); the rolling-gram + winnowing pass runs either as one
-    Arrow/numpy pass over the word-hash arrays (``impl='arrow'``, default
-    — the hot-path form, ~50x the native expression's throughput) or as a
-    single JVM projection with statically-unrolled rotations
-    (``impl='native'``, no Python exchange). Both produce identical
-    fingerprint SETS (a parity test pins this); the array order is
-    unspecified. Documents shorter than ``window`` words yield an empty
-    set. No shuffle either way."""
-    if impl == "arrow":
-        return _fingerprints_arrow(df, window, winnow, text_col, id_col)
-    t = F.regexp_replace(
-        F.trim(F.lower(F.coalesce(F.col(text_col), F.lit("")))), r"\s+", " "
-    )
-
-    def _fps(whs: Column) -> Column:
-        n_gr = F.greatest(F.size(whs) - F.lit(window - 1), F.lit(0))
-        grams = F.when(
-            n_gr > 0,
-            F.transform(
-                F.sequence(F.lit(0), n_gr - 1),
-                lambda i: _xor_all(
-                    [_rot(F.get(whs, i + j), j) for j in range(window)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-
-        def _winnowed(grams_b: Column) -> Column:
-            n_win = F.greatest(F.size(grams_b) - F.lit(winnow - 1), F.lit(1))
-            wins = F.when(
-                F.size(grams_b) > 0,
-                F.transform(
-                    F.sequence(F.lit(1), n_win),
-                    lambda i: F.array_min(F.slice(grams_b, i, winnow)),
-                ),
-            ).otherwise(F.array().cast("array<bigint>"))
-            return F.array_distinct(wins)
-
-        return F.struct(
-            n_gr.alias("n_grams"), _let(grams, _winnowed).alias("fps")
-        )
-
-    word_hashes = F.transform(F.split(t, " "), _word_hash)
-    res = _let(word_hashes, _fps)
-    return df.select(
-        F.col(id_col),
-        F.conv(F.substring(F.md5(t), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("content_hash"),
-        res["n_grams"].alias("n_grams"),
-        res["fps"].alias("fps"),
-    )
-
-
-def _xor_all(cols: list) -> Column:
-    out = cols[0]
-    for c in cols[1:]:
-        out = out.bitwiseXOR(c)
-    return out
-
-
-def _fingerprints_arrow(
-    df: DataFrame, window: int, winnow: int, text_col: str, id_col: str
-) -> DataFrame:
-    """Arrow form: word hashes + content hash native (portable md5-52),
-    rolling rotation-XOR grams and sliding-window minima vectorized in
-    numpy int64 — identical values to the native expression."""
+    stay portable); the rolling-gram + winnowing pass is one Arrow/numpy
+    pass over the word-hash arrays — ~50x the throughput of the same
+    arithmetic as a single JVM projection with statically-unrolled
+    rotations, because higher-order functions run interpreted. The
+    fingerprint SET is pinned by a pure-Python reference and the driver's
+    DuckDB oracle; the array order is unspecified. Documents shorter than
+    ``window`` words yield an empty set. No shuffle."""
     import numpy as np
     import pandas as pd
     from typing import Iterator
@@ -554,7 +473,7 @@ def _fingerprints_arrow(
         F.conv(F.substring(F.md5(t), 1, 15), 16, 10)
         .cast("bigint")
         .alias("content_hash"),
-        F.transform(F.split(t, " "), _word_hash).alias("whs"),
+        F.transform(F.split(t, " "), md5_52).alias("whs"),
     )
 
     def _winnow(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1233,8 +1152,8 @@ _GATE_COLS = (
 
 def _fused_gate_metrics(text: str) -> list:
     """All 13 repetition fractions for one document, in ``_GATE_COLS``
-    order — the single-pass kernel behind ``impl='fused'``. Must agree
-    value-for-value with the three standalone operators (pinned by
+    order — the single-pass kernel behind :func:`gopher_repetition_gate`.
+    Must agree value-for-value with the three standalone operators (pinned by
     ``test_gate_fused_matches_composed``); the oracle validates it
     end-to-end independently."""
     import re
@@ -1306,7 +1225,6 @@ def gopher_repetition_gate(
     text_col: str = "text",
     id_col: str = "doc_id",
     thresholds: dict | None = None,
-    impl: str = "fused",
 ) -> DataFrame:
     """``(doc_id, <13 fraction columns>, repetition_pass)`` — the FULL
     Gopher repetition rule set (Rae et al. 2021 Table A1) as one gate:
@@ -1316,11 +1234,11 @@ def gopher_repetition_gate(
     published threshold (:data:`GOPHER_REPETITION_THRESHOLDS`; override
     per-key with ``thresholds``).
 
-    Scale shape: the default ``impl='fused'`` computes all 13 metrics in
-    ONE Arrow pass per document — the corpus text is read once and no
-    join exists at all (the composed form pays three text passes plus
-    two id-joins; kept as ``impl='composed'`` for the parity test and
-    for callers who already have the component relations). The pass
+    Scale shape: all 13 metrics come from ONE Arrow pass per document —
+    the corpus text is read once and no join exists at all (composing
+    :func:`repetition_metrics`, :func:`paragraph_repetition_metrics` and
+    :func:`gopher_ngram_metrics` pays three text passes plus two
+    id-joins; that composition is the parity test's oracle). The pass
     column is a native comparison chain, so downstream filters on
     ``repetition_pass`` stay in codegen. Fractions come through ROUNDED
     to 6 dp (HALF_UP, the repo's cross-engine contract) and thresholds
@@ -1331,64 +1249,35 @@ def gopher_repetition_gate(
         if unknown:
             raise ValueError(f"unknown threshold keys: {sorted(unknown)}")
         th.update(thresholds)
-    if impl not in ("fused", "composed"):
-        raise ValueError(f"unknown impl: {impl!r}")
+    from typing import Iterator
 
-    if impl == "fused":
-        from typing import Iterator
+    import pandas as pd
 
-        import pandas as pd
+    from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
 
-        from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
+    def _metrics(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            vals = [_fused_gate_metrics(t) for t in batch["t"]]
+            out = {"doc_id": batch["id"]}
+            for j, c in enumerate(_GATE_COLS):
+                out[c] = [v[j] for v in vals]
+            yield pd.DataFrame(out)
 
-        def _metrics(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for batch in batches:
-                vals = [_fused_gate_metrics(t) for t in batch["t"]]
-                out = {"doc_id": batch["id"]}
-                for j, c in enumerate(_GATE_COLS):
-                    out[c] = [v[j] for v in vals]
-                yield pd.DataFrame(out)
-
-        prepped = ensure_min_parallelism(df).select(
-            F.col(id_col).alias("id"),
-            F.coalesce(F.col(text_col), F.lit("")).alias("t"),
-        )
-        id_type = dict(prepped.dtypes)["id"]
-        fields = ", ".join(f"{c} double" for c in _GATE_COLS)
-        raw = prepped.mapInPandas(
-            _metrics, schema=f"doc_id {id_type}, {fields}"
-        )
-        joined = raw.select(
-            "doc_id", *[F.round(c, 6).alias(c) for c in _GATE_COLS]
-        )
-    else:
-        lines = repetition_metrics(df, text_col=text_col, id_col=id_col).select(
-            "doc_id",
-            F.round("dup_line_frac", 6).alias("dup_line_frac"),
-            F.round("dup_line_char_frac", 6).alias("dup_line_char_frac"),
-            F.round("top_bigram_char_frac", 6).alias("top_2gram_char_frac"),
-        )
-        paras = paragraph_repetition_metrics(
-            df, text_col=text_col, id_col=id_col
-        ).select(
-            "doc_id",
-            F.round("dup_para_frac", 6).alias("dup_para_frac"),
-            F.round("dup_para_char_frac", 6).alias("dup_para_char_frac"),
-        )
-        grams = gopher_ngram_metrics(
-            df, text_col=text_col, id_col=id_col, top_ns=(3, 4)
-        )
-        gram_cols = [c for c in grams.columns if c != "doc_id"]
-        grams = grams.select(
-            "doc_id", *[F.round(c, 6).alias(c) for c in gram_cols]
-        )
-        joined = lines.join(paras, "doc_id").join(grams, "doc_id")
-        joined = joined.select("doc_id", *_GATE_COLS)
+    prepped = ensure_min_parallelism(df).select(
+        F.col(id_col).alias("id"),
+        F.coalesce(F.col(text_col), F.lit("")).alias("t"),
+    )
+    id_type = dict(prepped.dtypes)["id"]
+    fields = ", ".join(f"{c} double" for c in _GATE_COLS)
+    raw = prepped.mapInPandas(_metrics, schema=f"doc_id {id_type}, {fields}")
+    metrics = raw.select(
+        "doc_id", *[F.round(c, 6).alias(c) for c in _GATE_COLS]
+    )
     passes = None
     for col in _GATE_COLS:
         cond = F.col(col) <= F.lit(th[col])
         passes = cond if passes is None else (passes & cond)
-    return joined.withColumn("repetition_pass", passes)
+    return metrics.withColumn("repetition_pass", passes)
 
 
 def gopher_ngram_metrics(

@@ -19,6 +19,14 @@ def let_(expr: Column, fn) -> Column:
     return F.get(F.transform(F.array(expr), fn), 0)
 
 
+def md5_52(s: Column) -> Column:
+    """The first 13 hex digits of ``md5(s)`` as a non-negative 52-bit
+    BIGINT — the engine-portable hash: any engine with md5 and hex
+    parsing reproduces it (the driver's DuckDB oracles do), and 52 bits
+    leave headroom for shifts inside a signed 64-bit value."""
+    return F.conv(F.substring(F.md5(s), 1, 13), 16, 10).cast("bigint")
+
+
 _BYTE_SUFFIX = {
     "": 1, "b": 1,
     "k": 1 << 10, "kb": 1 << 10,

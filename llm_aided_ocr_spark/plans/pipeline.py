@@ -42,13 +42,15 @@ from llm_aided_ocr_spark.plans.checkpoint import CheckpointStore
 
 RESULT_SCHEMA = "url string, raw_text string, corrected_text string, n_chunks int"
 
+SALT = 0x5ABE  # partition salt for url hashing
+
 
 def salted_repartition(df: DataFrame, cfg: PipelineConfig, *extra_cols) -> DataFrame:
     """Salted-hash repartition on url (north rule). ``xxhash64(url, salt)``
     decorrelates placement from any upstream layout; extra columns (e.g.
     chunk_ix) spread a single mega-document across tasks."""
     n = cfg.num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    cols = [F.col("url"), F.lit(cfg.salt), *[F.col(c) for c in extra_cols]]
+    cols = [F.col("url"), F.lit(SALT), *[F.col(c) for c in extra_cols]]
     return df.repartition(int(n), F.xxhash64(*cols))
 
 
@@ -139,7 +141,7 @@ def _staged_correct(
     )
     # Spread chunks of one document across tasks (mega-doc skew handling).
     chunks = salted_repartition(chunks, cfg, "chunk_ix")
-    if store is not None and cfg.checkpointing and "chunks" in cfg.stages_to_checkpoint:
+    if store is not None and cfg.checkpointing:
         # return_committed=False: continue from THIS increment only — the
         # committed table holds prior runs' chunks, which must not be
         # re-corrected and re-appended on resume.
@@ -150,11 +152,7 @@ def _staged_correct(
         reformat_as_markdown=cfg.reformat_as_markdown,
         suppress_headers_and_page_numbers=cfg.suppress_headers_and_page_numbers,
     )
-    if (
-        store is not None
-        and cfg.checkpointing
-        and "corrected_chunks" in cfg.stages_to_checkpoint
-    ):
+    if store is not None and cfg.checkpointing:
         corrected = store.write(
             corrected, "corrected_chunks", counted_col="corrected", return_committed=False
         )
@@ -276,9 +274,7 @@ def run_pipeline(
         else:
             out = extract_text(branch, use_html=use_html)
         if cfg.apply_page_filter:
-            out = apply_page_filter(
-                out, min_chars=cfg.page_min_chars, min_words=cfg.page_min_words
-            )
+            out = apply_page_filter(out)
         return _spread_documents(out, cfg, gate_df=gate_df)
 
     if strategy == "fused":

@@ -98,9 +98,7 @@ def correct_pages_stream(
         df = language_gate(df)
     out = extract_text(df, use_html=use_html)
     if cfg.apply_page_filter:
-        out = apply_page_filter(
-            out, min_chars=cfg.page_min_chars, min_words=cfg.page_min_words
-        )
+        out = apply_page_filter(out)
     return _fused_correct(out, cfg)
 
 

@@ -41,18 +41,15 @@ def test_bloom_absent_mostly_rejected(spark):
 
 
 def test_bloom_strategies_agree(spark):
+    """A dense filter (some false positives) still never misses a key
+    that was built into it."""
     present = _keys(spark, 150)
     bloom = bloom_build(present, m_words=64, k=3)  # dense → some FPs
     probe = _keys(spark, 300)
     a = {
         r["id"]: r["maybe_present"]
-        for r in bloom_probe(probe, bloom, m_words=64, k=3, strategy="map").collect()
+        for r in bloom_probe(probe, bloom, m_words=64, k=3).collect()
     }
-    b = {
-        r["id"]: r["maybe_present"]
-        for r in bloom_probe(probe, bloom, m_words=64, k=3, strategy="join").collect()
-    }
-    assert a == b
     assert all(a[i] for i in range(150))  # no false negatives even dense
 
 

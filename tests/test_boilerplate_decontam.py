@@ -9,11 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from llm_aided_ocr_spark.operators.boilerplate import (
-    dup_line_hashes,
-    line_dedup,
-    line_dedup_stats,
-)
+from llm_aided_ocr_spark.operators.boilerplate import line_dedup, line_dedup_stats
 from llm_aided_ocr_spark.operators.dedup import (
     decontaminate,
     eval_ngram_set,
@@ -41,42 +37,28 @@ def chrome_corpus(spark):
 
 
 def test_dup_line_hashes_counts_distinct_docs(spark, chrome_corpus):
-    # header appears in 7 docs, footer in 7; with min_doc_freq=7 both
-    # qualify; at 8 neither does
-    assert dup_line_hashes(chrome_corpus, min_doc_freq=7).count() == 2
-    assert dup_line_hashes(chrome_corpus, min_doc_freq=8).count() == 0
+    # header and footer each appear in 7 docs: with min_doc_freq=7 both
+    # are stripped; at 8 neither is
+    out7 = {r.doc_id: r.text for r in line_dedup(chrome_corpus, min_doc_freq=7).collect()}
+    assert out7[0] == "unique body 0 alpha\n\nunique body 0 beta"
+    assert out7[90] == ""
+    out8 = {r.doc_id: r.text for r in line_dedup(chrome_corpus, min_doc_freq=8).collect()}
+    assert out8 == {r.doc_id: r.text for r in chrome_corpus.collect()}
 
 
 def test_dup_line_counting_is_per_document_distinct(spark):
     # one doc repeating a line 10 times contributes doc-frequency 1
-    df = spark.createDataFrame(
-        [(1, "\n".join(["same line"] * 10))], "doc_id bigint, text string"
-    )
-    assert dup_line_hashes(df, min_doc_freq=2).count() == 0
+    text = "\n".join(["same line"] * 10)
+    df = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
+    assert [r.text for r in line_dedup(df, min_doc_freq=2).collect()] == [text]
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "join"])
-def test_line_dedup_strips_chrome_keeps_body_and_blanks(
-    spark, chrome_corpus, strategy
-):
-    out = {
-        r.doc_id: r.text
-        for r in line_dedup(
-            chrome_corpus, min_doc_freq=5, strategy=strategy
-        ).collect()
-    }
+def test_line_dedup_strips_chrome_keeps_body_and_blanks(spark, chrome_corpus):
+    out = {r.doc_id: r.text for r in line_dedup(chrome_corpus, min_doc_freq=5).collect()}
     assert out[0] == "unique body 0 alpha\n\nunique body 0 beta"
     assert out[90] == ""  # chrome-only page -> empty, not dropped
     assert out[91] == ""
     assert len(out) == 8
-
-
-def test_line_dedup_strategies_agree(spark, chrome_corpus):
-    a = line_dedup(chrome_corpus, min_doc_freq=5, strategy="broadcast")
-    b = line_dedup(chrome_corpus, min_doc_freq=5, strategy="join")
-    assert sorted((r.doc_id, r.text) for r in a.collect()) == sorted(
-        (r.doc_id, r.text) for r in b.collect()
-    )
 
 
 def test_line_dedup_trim_insensitive_but_preserves_original_bytes(spark):
@@ -104,20 +86,6 @@ def test_line_dedup_stats_md5_of_rebuilt_bytes(spark, chrome_corpus):
     assert (r0.n_lines, r0.n_kept, r0.clean_len) == (5, 3, len(want))
     assert r0.clean_md5 == hashlib.md5(want.encode()).hexdigest()
     assert stats[91].n_kept == 0 and stats[91].clean_len == 0
-
-
-def test_line_dedup_broadcast_rebuild_adds_no_per_line_exchange(spark, chrome_corpus):
-    """The default-strategy plan must contain exactly the counting
-    aggregation's exchanges — no per-line shuffle for the rebuild side."""
-    plan = (
-        line_dedup(chrome_corpus, min_doc_freq=5, strategy="broadcast")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # counting: one hash-partitioned exchange (partial->final count);
-    # rebuild: only the broadcast of the 1-row array
-    assert plan.count("Exchange hashpartitioning") <= 1
 
 
 def test_line_dedup_portable_hash_family(spark, chrome_corpus):
@@ -279,15 +247,42 @@ def test_dup_span_profile_stats_only_mode(spark, span_corpus):
     assert cols == ["id", "n_grams", "n_dup", "dup_frac"]
 
 
+def _dup_span_oracle(tokens: dict, n: int) -> list:
+    """Pure-Python dup-span profile over normalized token arrays: count
+    every word-n-gram corpus-wide, then strip with a difference array
+    (+1 at each duplicated gram start p, -1 at p+n; cumsum > 0 is
+    coverage) — O(tokens + dup positions) per document."""
+    from collections import Counter
+
+    def grams(t):
+        return [tuple(t[p : p + n]) for p in range(len(t) - n + 1)]
+
+    counts = Counter(g for t in tokens.values() for g in grams(t))
+    out = []
+    for did, t in tokens.items():
+        starts = [p for p, g in enumerate(grams(t)) if counts[g] >= 2]
+        diff = [0] * (len(t) + 1)
+        for p in starts:
+            diff[p] += 1
+            diff[min(p + n, len(t))] -= 1
+        kept, cov = [], 0
+        for j, tok in enumerate(t):
+            cov += diff[j]
+            if cov == 0:
+                kept.append(tok)
+        out.append((did, max(len(t) - n + 1, 0), len(starts), " ".join(kept)))
+    return sorted(out)
+
+
 def test_dup_span_strip_impls_agree(spark):
-    """The Arrow difference-array strip (default) and the interpreted
-    merged-interval HOF strip must be byte-identical on a randomized
-    corpus engineered to hit every coverage shape: clean docs, full
-    coverage, adjacent/overlapping spans, spans touching both document
-    edges, and sub-n docs."""
+    """The merged-interval strip must equal a difference-array coverage
+    oracle byte for byte, on a randomized corpus engineered to hit every
+    coverage shape: clean docs, full coverage, adjacent/overlapping
+    spans, spans touching both document edges, and sub-n docs."""
     import random
 
-    from llm_aided_ocr_spark.operators.dedup import dup_span_profile
+    from llm_aided_ocr_spark.operators.dedup import _words_col, dup_span_profile
+    from llm_aided_ocr_spark.operators.util import release_pinned
 
     rng = random.Random(7)
     shared_runs = [
@@ -307,13 +302,15 @@ def test_dup_span_strip_impls_agree(spark):
         rows.append((i, " ".join(parts)))
     rows += [(100, "tiny"), (101, ""), (102, None)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    key = lambda out: sorted(
-        (r.id, r.n_grams, r.n_dup, r.stripped) for r in out.collect()
-    )
-    a = key(dup_span_profile(df, n=6, strip_impl="arrow"))
-    b = key(dup_span_profile(df, n=6, strip_impl="native"))
-    assert a == b
-    assert any(r[2] > 0 and r[3] != "" for r in a)  # partial coverage hit
+    tokens = {
+        r.doc_id: list(r.toks)
+        for r in df.select("doc_id", _words_col("text").alias("toks")).collect()
+    }
+    out = dup_span_profile(df, n=6)
+    got = sorted((r.id, r.n_grams, r.n_dup, r.stripped) for r in out.collect())
+    release_pinned(out, blocking=True)
+    assert got == _dup_span_oracle(tokens, 6)
+    assert any(r[2] > 0 and r[3] != "" for r in got)  # partial coverage hit
 
 
 def test_gram_hashes_arrow_matches_native_expression(spark):
@@ -356,19 +353,6 @@ def test_gram_hashes_arrow_matches_native_expression(spark):
             assert arrow == native, (family, n)
 
 
-def test_dup_span_profile_impl_parity(spark, span_corpus):
-    from llm_aided_ocr_spark.operators.dedup import dup_span_profile
-    from llm_aided_ocr_spark.operators.util import release_pinned
-
-    a = dup_span_profile(span_corpus, n=6, impl="arrow")
-    b = dup_span_profile(span_corpus, n=6, impl="native")
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    release_pinned(a, blocking=True)
-    release_pinned(b, blocking=True)
-    assert ra == rb
-
-
 def test_corpus_rejoins_never_broadcast(spark, span_corpus):
     """The O(corpus) per-document rebuild relations (dup positions, kept
     line/paragraph positions, per-doc scores) must reach their corpus
@@ -388,7 +372,7 @@ def test_corpus_rejoins_never_broadcast(spark, span_corpus):
     for out in (
         paragraph_dedup_stats(corpus),
         dup_span_profile(corpus, n=6),
-        line_dedup(corpus, min_doc_freq=2, strategy="join"),
+        line_dedup(corpus, min_doc_freq=2),
     ):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "ShuffledHashJoin" in plan, plan

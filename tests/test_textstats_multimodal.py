@@ -113,16 +113,6 @@ def test_fingerprints(spark, docs):
     # determinism across partitioning
     rows2 = {r["doc_id"]: r.asDict() for r in fingerprints(docs.repartition(5)).collect()}
     assert rows == rows2
-    # impl parity: the native expression and the Arrow pass produce the
-    # same fingerprint SETS (array order is unspecified)
-    native = {
-        r["doc_id"]: r.asDict()
-        for r in fingerprints(docs, impl="native").collect()
-    }
-    for did in rows:
-        assert native[did]["content_hash"] == rows[did]["content_hash"]
-        assert native[did]["n_grams"] == rows[did]["n_grams"]
-        assert sorted(native[did]["fps"]) == sorted(rows[did]["fps"]), did
 
 
 def test_fingerprint_matches_hot_fp_cap(spark):
@@ -707,10 +697,17 @@ def test_top_ngrams_counts_and_ties(spark):
 
 
 def test_gate_fused_matches_composed(spark):
-    """impl='fused' (one Arrow pass, zero joins) must equal
-    impl='composed' (the three standalone operators) row-for-row on a
-    corpus that exercises every metric family."""
-    from llm_aided_ocr_spark.operators.textstats import gopher_repetition_gate
+    """The gate's one Arrow pass must equal the composition of the three
+    standalone operators (rounded to 6 dp, joined on doc_id) row-for-row
+    on a corpus that exercises every metric family."""
+    from llm_aided_ocr_spark.operators.textstats import (
+        _GATE_COLS,
+        GOPHER_REPETITION_THRESHOLDS,
+        gopher_ngram_metrics,
+        gopher_repetition_gate,
+        paragraph_repetition_metrics,
+        repetition_metrics,
+    )
 
     clean = " ".join(f"word{i} item{i * 7 % 101}" for i in range(60))
     docs = [
@@ -722,13 +719,28 @@ def test_gate_fused_matches_composed(spark):
         (6, None),
     ]
     df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    fused = sorted(map(tuple, gopher_repetition_gate(df, impl="fused").collect()))
-    comp = sorted(map(tuple, gopher_repetition_gate(df, impl="composed").collect()))
-    assert fused == comp
-    import pytest
-
-    with pytest.raises(ValueError):
-        gopher_repetition_gate(df, impl="nope")
+    r6 = lambda c, name=None: F.round(c, 6).alias(name or c)  # noqa: E731
+    lines = repetition_metrics(df).select(
+        "doc_id",
+        r6("dup_line_frac"),
+        r6("dup_line_char_frac"),
+        r6("top_bigram_char_frac", "top_2gram_char_frac"),
+    )
+    paras = paragraph_repetition_metrics(df).select(
+        "doc_id", r6("dup_para_frac"), r6("dup_para_char_frac")
+    )
+    grams = gopher_ngram_metrics(df, top_ns=(3, 4))
+    grams = grams.select(
+        "doc_id", *[r6(c) for c in grams.columns if c != "doc_id"]
+    )
+    composed = lines.join(paras, "doc_id").join(grams, "doc_id")
+    passes = None
+    for c in _GATE_COLS:
+        cond = F.col(c) <= F.lit(GOPHER_REPETITION_THRESHOLDS[c])
+        passes = cond if passes is None else (passes & cond)
+    comp = composed.select("doc_id", *_GATE_COLS, passes.alias("repetition_pass"))
+    fused = sorted(map(tuple, gopher_repetition_gate(df).collect()))
+    assert fused == sorted(map(tuple, comp.collect()))
 
 
 def test_charset_signals(spark):
