@@ -172,8 +172,6 @@ def main(argv=None) -> int:
         )
 
     cfg = PipelineConfig(
-        max_pages=args.max_pages,
-        skip_first_n_pages=args.skip_first_n_pages,
         reformat_as_markdown=not args.no_markdown,
         suppress_headers_and_page_numbers=not args.keep_headers,
         check_if_valid_english=args.check_english,
@@ -183,13 +181,11 @@ def main(argv=None) -> int:
         provider=args.provider,
         apply_page_filter=args.page_filter,
         warehouse_dir=args.warehouse,
-        run_id=args.run_id,
         checkpointing=args.resume,
     )
     spark = get_spark(
         app_name="llm_aided_ocr_spark_cli",
         master=args.master,
-        arrow_max_records_per_batch=cfg.arrow_max_records_per_batch,
     )
     store = CheckpointStore(args.warehouse, run_id=args.run_id) if args.resume else None
 

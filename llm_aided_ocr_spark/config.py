@@ -1,14 +1,17 @@
 """Job configuration.
 
 The parameter surface mirrors the reference CLI's intended flags
-(``/root/reference/llm-aided-ocr-cli.py:6-16``) — page range, markdown
-toggle, header suppression, language gate, hallucination-filter threshold,
-filter-test mode — plus the scale knobs the north rule requires
-(partition count, mega-document routing, Arrow batch size, checkpointing).
-Constants no caller varies live where they are used: the url-hash
-partition salt is ``plans.pipeline.SALT`` and the page-filter thresholds
-are ``apply_page_filter``'s defaults; with checkpointing on, every stage
-is checkpointed.
+(the reference's ``llm-aided-ocr-cli.py:6-16``) — markdown toggle, header
+suppression, language gate, hallucination-filter threshold, filter-test
+mode — plus the scale knobs the north rule requires (partition count,
+mega-document routing, checkpointing). The reference's page range applies
+only to the PDF render path (``operators.extract.extract_pdf_pages``'s
+own arguments); the Arrow batch size is a session setting
+(``session.get_spark``); a checkpoint run's id belongs to its
+``CheckpointStore``. Constants no caller varies live where they are used:
+the url-hash partition salt is ``plans.pipeline.SALT`` and the page-filter
+thresholds are ``apply_page_filter``'s defaults; with checkpointing on,
+every stage is checkpointed.
 Unlike the reference (ambient ``.env`` read at import, llm_aided_ocr.py:31),
 config here is constructed, never ambient.
 """
@@ -21,8 +24,6 @@ from dataclasses import dataclass
 @dataclass(frozen=True)
 class PipelineConfig:
     # --- reference-parity knobs (llm-aided-ocr-cli.py:6-16) ---
-    max_pages: int = 0                   # 0 = all pages
-    skip_first_n_pages: int = 0
     reformat_as_markdown: bool = True
     suppress_headers_and_page_numbers: bool = True
     check_if_valid_english: bool = False          # F2 language gate
@@ -41,8 +42,6 @@ class PipelineConfig:
     # --- scale knobs (north rule) ---
     num_partitions: int | None = None    # None → spark.sql.shuffle.partitions
     mega_doc_chars: int = 4_000_000      # docs above this processed page-granular
-    arrow_max_records_per_batch: int = 512
     # --- checkpointing ---
     warehouse_dir: str = "/tmp/ocr_spark_warehouse"
-    run_id: str = "run0"
     checkpointing: bool = False

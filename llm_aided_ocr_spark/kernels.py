@@ -314,7 +314,7 @@ def extract_main_text(html_bytes: Optional[bytes]) -> str:
     charset sniff before this strip.
 
     Pure regex (no HTML parser dependency), document-local, so it runs
-    vectorized inside ``mapInPandas`` at scale.
+    per row inside one Arrow pass (``operators.util.map_arrow``) at scale.
     """
     if not html_bytes:
         return ""
@@ -673,6 +673,22 @@ def adaptive_similarity_threshold(
             return max(start_threshold, t - step)
         t += step
     return max_threshold
+
+
+def filter_document(
+    original_text: Optional[str],
+    processed_text: Optional[str],
+    threshold: float = 0.40,
+    adaptive: bool = False,
+) -> Tuple[str, int, int, float, float]:
+    """F3 over one document (NULL reads as empty): ``(filtered_text,
+    n_sentences, n_kept, min_score, threshold_used)``, the threshold
+    raised by :func:`adaptive_similarity_threshold` when ``adaptive``."""
+    orig, proc = original_text or "", processed_text or ""
+    t = adaptive_similarity_threshold(orig, proc, threshold) if adaptive else threshold
+    filtered, scores = filter_hallucinated_sentences(orig, proc, t)
+    n_kept = sum(1 for s in scores if s >= t)
+    return filtered, len(scores), n_kept, min(scores) if scores else 1.0, t
 
 
 # ---------------------------------------------------------------------------

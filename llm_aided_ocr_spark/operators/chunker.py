@@ -2,16 +2,13 @@
 
 The reference chunker (llm_aided_ocr.py:534-573) is document-local and
 order-dependent (separator-blind counter + compounding overlap), so it runs
-as one vectorized flatMap inside ``mapInPandas`` — NO ``groupBy``, NO
-shuffle; Spark's task parallelism over document partitions is the fan-out
-(the analogue of the reference's asyncio gather at :525-530).
+as one flatMap in one Arrow pass — NO ``groupBy``, NO shuffle; Spark's task
+parallelism over document partitions is the fan-out (the analogue of the
+reference's asyncio gather at :525-530).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from llm_aided_ocr_spark.kernels import (
@@ -19,6 +16,7 @@ from llm_aided_ocr_spark.kernels import (
     OVERLAP_WORDS,
     chunk_full_text,
 )
+from llm_aided_ocr_spark.operators.util import map_arrow
 
 CHUNKS_SCHEMA = "url string, chunk_ix int, n_chunks int, chunk string"
 
@@ -35,25 +33,23 @@ def chunk_documents(
     single empty chunk, matching the reference (an empty paragraph list
     still produces one chunk).
     """
-    cols = extracted_df.selectExpr(f"url", f"{text_col} as _text")
+    cols = extracted_df.selectExpr("url", f"{text_col} as _text")
 
-    def _chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            urls, ixs, totals, chunks = [], [], [], []
-            for url, text in zip(batch["url"], batch["_text"]):
-                doc_chunks = chunk_full_text(
-                    text if text is not None else "",
-                    chunk_size=chunk_size,
-                    overlap_words=overlap_words,
-                )
-                n = len(doc_chunks)
-                for ix, ch in enumerate(doc_chunks):
-                    urls.append(url)
-                    ixs.append(ix)
-                    totals.append(n)
-                    chunks.append(ch)
-            yield pd.DataFrame(
-                {"url": urls, "chunk_ix": ixs, "n_chunks": totals, "chunk": chunks}
+    def _chunk(doc_urls, texts):
+        # rows expand, so nothing is kept: url is emitted once per chunk
+        urls, ixs, totals, chunks = [], [], [], []
+        for url, text in zip(doc_urls, texts):
+            doc_chunks = chunk_full_text(
+                text if text is not None else "",
+                chunk_size=chunk_size,
+                overlap_words=overlap_words,
             )
+            n = len(doc_chunks)
+            for ix, ch in enumerate(doc_chunks):
+                urls.append(url)
+                ixs.append(ix)
+                totals.append(n)
+                chunks.append(ch)
+        return urls, ixs, totals, chunks
 
-    return cols.mapInPandas(_chunk, schema=CHUNKS_SCHEMA)
+    return map_arrow(cols, _chunk, CHUNKS_SCHEMA)

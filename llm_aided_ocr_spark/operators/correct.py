@@ -8,7 +8,7 @@ LLM providers would register here and initialize an executor-local client
 lazily (the Spark analogue of the FileLock-guarded model bootstrap at
 llm_aided_ocr.py:81-103).
 
-Runs as ``mapInPandas`` over chunk rows — narrow, zero shuffle; Spark task
+Runs as one Arrow pass over chunk rows — narrow, zero shuffle; Spark task
 parallelism is the reference's asyncio.gather (its parallel path passes
 ``prev_context=""`` for every chunk, llm_aided_ocr.py:526, which is the
 license for embarrassing parallelism).
@@ -16,12 +16,13 @@ license for embarrassing parallelism).
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Iterator
+from typing import Callable, Dict
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from llm_aided_ocr_spark.kernels import correct_chunk_text, identity_correct
+from llm_aided_ocr_spark.operators.util import map_arrow
 
 ChunkCorrector = Callable[[str, bool, bool], str]
 
@@ -61,22 +62,22 @@ def correct_chunks(
     """``(url, chunk_ix, n_chunks, chunk)`` → ``(url, chunk_ix, n_chunks,
     corrected)``."""
 
-    def _correct(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Provider resolved once per task (executor-local), not per row.
+    def _correct(chunks):
+        # Provider resolved once per batch (executor-local), not per row.
         fn = get_provider(provider)
-        for batch in batches:
-            out = batch[["url", "chunk_ix", "n_chunks"]].copy()
-            out["corrected"] = [
-                fn(
-                    c if c is not None else "",
-                    reformat_as_markdown,
-                    suppress_headers_and_page_numbers,
-                )
-                for c in batch["chunk"]
-            ]
-            yield out
+        return ([
+            fn(
+                c if c is not None else "",
+                reformat_as_markdown,
+                suppress_headers_and_page_numbers,
+            )
+            for c in chunks
+        ],)
 
-    return chunks_df.mapInPandas(_correct, schema=CORRECTED_SCHEMA)
+    keep = ("url", "chunk_ix", "n_chunks")
+    return map_arrow(
+        chunks_df.select(*keep, "chunk"), _correct, CORRECTED_SCHEMA, keep=keep
+    )
 
 
 ContextChunkCorrector = Callable[[str, str, bool, bool], str]

@@ -2,9 +2,9 @@
 
 The reference's analogue is PDF→image→Tesseract (llm_aided_ocr.py:411-426);
 the north rule widens the input to Common-Crawl-style pages and mandates a
-batched DOM boilerplate strip. Implemented as ``mapInPandas`` over Arrow
-batches — document-local, narrow (zero shuffle), column-pruned to
-``(url, html)`` plus passthroughs.
+batched DOM boilerplate strip. Implemented as one Arrow pass
+(``operators.util.map_arrow``) — document-local, narrow (zero shuffle),
+column-pruned to ``(url, html)`` plus zero-copy passthroughs.
 
 PDF extraction is STUBBED: poppler/tesseract are not in this container. The
 plumbing (schema, batching, page-range slice) is real; the render call
@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from llm_aided_ocr_spark.kernels import extract_main_text
+from llm_aided_ocr_spark.operators.util import map_arrow
 
 EXTRACTED_SCHEMA = "url string, warc_ts timestamp, lang string, extracted_text string"
 
@@ -61,13 +62,10 @@ def extract_text(
     else:
         kernel = extract_main_text
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = batch[["url", "warc_ts", "lang"]].copy()
-            out["extracted_text"] = batch["html"].map(kernel)
-            yield out
+    def _extract(htmls):
+        return ([kernel(h) for h in htmls],)
 
-    return cols.mapInPandas(_extract, schema=EXTRACTED_SCHEMA)
+    return map_arrow(cols, _extract, EXTRACTED_SCHEMA, keep=("url", "warc_ts", "lang"))
 
 
 # ---------------------------------------------------------------------------
@@ -441,27 +439,19 @@ def extract_by_density(
     agg = kept.groupBy("id").agg(
         F.array_sort(F.collect_list("s")).alias("blocks")
     )
-    from llm_aided_ocr_spark.kernels import extract_main_text
 
-    import pandas as pd
+    def _strip(docs):
+        return ([
+            "\n\n".join(
+                t
+                for blk in doc_blocks
+                if (t := extract_main_text(blk["block_html"].encode("utf-8")))
+            )
+            for doc_blocks in docs
+        ],)
 
-    def _strip(batches):
-        for batch in batches:
-            texts = [
-                "\n\n".join(
-                    t
-                    for blk in doc_blocks
-                    if (
-                        t := extract_main_text(
-                            blk["block_html"].encode("utf-8")
-                        )
-                    )
-                )
-                for doc_blocks in batch["blocks"]
-            ]
-            yield pd.DataFrame({"id": batch["id"], "text": texts})
     id_type = dict(agg.dtypes)["id"]
-    return agg.mapInPandas(_strip, schema=f"id {id_type}, text string")
+    return map_arrow(agg, _strip, f"id {id_type}, text string", keep=("id",))
 
 
 _META_TAG_RE = r"(?is)(<meta\b[^>]*>)"

@@ -3,20 +3,19 @@
 F1/F2 are NATIVE predicates — they push down to the parquet/Iceberg scan
 (visible as PushedFilters in the plan), which at 100 TB is the difference
 between reading a column chunk and skipping it. F3 is document-local difflib
-similarity inside ``mapInPandas`` (deterministic per the north star's
-"difflib-style fuzzy-similarity" instruction).
+similarity (:func:`~llm_aided_ocr_spark.kernels.filter_document`) in one
+Arrow pass (deterministic per the north star's "difflib-style
+fuzzy-similarity" instruction).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.functions.text import word_count_col
-from llm_aided_ocr_spark.kernels import filter_hallucinated_sentences
+from llm_aided_ocr_spark.kernels import filter_document
+from llm_aided_ocr_spark.operators.util import map_arrow
 
 
 def page_filter_predicate(
@@ -63,40 +62,15 @@ def hallucination_filter(
     the filtered text is shorter than the original, then roll back one
     step — still document-local, no driver loop needed.
     """
-    from llm_aided_ocr_spark.kernels import adaptive_similarity_threshold
-
     cols = docs_df.select(
         "url",
         F.col(original_col).alias("_orig"),
         F.col(processed_col).alias("_proc"),
     )
 
-    def _filter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            urls, texts, n_s, n_k, mins, ths = [], [], [], [], [], []
-            for url, orig, proc in zip(batch["url"], batch["_orig"], batch["_proc"]):
-                orig, proc = orig or "", proc or ""
-                t = (
-                    adaptive_similarity_threshold(orig, proc, threshold)
-                    if adaptive
-                    else threshold
-                )
-                filtered, scores = filter_hallucinated_sentences(orig, proc, t)
-                urls.append(url)
-                texts.append(filtered)
-                n_s.append(len(scores))
-                n_k.append(sum(1 for s in scores if s >= t))
-                mins.append(min(scores) if scores else 1.0)
-                ths.append(t)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "filtered_text": texts,
-                    "n_sentences": n_s,
-                    "n_kept": n_k,
-                    "min_score": mins,
-                    "threshold_used": ths,
-                }
-            )
+    def _filter(origs, procs):
+        return zip(*(
+            filter_document(o, p, threshold, adaptive) for o, p in zip(origs, procs)
+        ))
 
-    return cols.mapInPandas(_filter, schema=SIMILARITY_SCHEMA)
+    return map_arrow(cols, _filter, SIMILARITY_SCHEMA, keep=("url",))

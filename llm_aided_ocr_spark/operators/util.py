@@ -64,9 +64,10 @@ def _logical_plan_node_names(df: DataFrame) -> set:
     return names
 
 
-def ensure_min_parallelism(df: DataFrame, min_factor: float = 0.5) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the input has fewer partitions
-    than ``min_factor * defaultParallelism``.
+    than half of ``defaultParallelism`` — the same gate the pipeline's
+    salted document spread applies.
 
     Compute-heavy per-document operators (hashing, winnowing, signatures)
     are scan-parallel at corpus scale — a 100 TB table has millions of
@@ -83,21 +84,11 @@ def ensure_min_parallelism(df: DataFrame, min_factor: float = 0.5) -> DataFrame:
     that size); non-file and non-local sources skip the repartition —
     at scale they are many-partition anyway, and guessing wrong merely
     costs parallelism on a toy input, never a shuffle on a big one.
-
-    Escape hatch: set ``spark.ocrspark.ensureMinParallelism=false``
-    (session conf) to disable the gate wholesale.
     """
     if df.isStreaming:  # partitioning is per-micro-batch; no-op
         return df
-    spark = df.sparkSession
-    if (
-        str(spark.conf.get("spark.ocrspark.ensureMinParallelism", "true")).lower()
-        == "false"
-    ):  # documented escape hatch: disable the gate wholesale
-        return df
-    target = spark.sparkContext.defaultParallelism
-    threshold = max(1, int(target * min_factor))
-    if scan_partitions_below(df, threshold):
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if scan_partitions_below(df, max(1, target // 2)):
         return df.repartition(target)
     return df
 
@@ -210,6 +201,45 @@ def corpus_scaled(derived: DataFrame) -> DataFrame:
     dimension tables, frequency caps): those stay broadcast-eligible on
     purpose."""
     return derived.hint("shuffle_hash")
+
+
+def map_arrow(df: DataFrame, fn, schema: str, keep=()) -> DataFrame:
+    """``df.mapInArrow`` with the package's Arrow batch handling in one
+    place — the one way a pipeline pass crosses into Python.
+
+    ``fn`` is called once per non-empty batch with the batch's columns
+    that are NOT in ``keep``, in ``df``'s column order, as Python lists,
+    and returns one sequence per non-kept field of the DDL ``schema``, in
+    schema order. Each ``keep`` column goes back as the input's own Arrow
+    array, zero-copy, so it must already have the schema's type, and
+    ``fn`` must then return one value per input row (a pass that expands
+    rows keeps nothing). Every built array takes the schema field's Arrow
+    type: a value of the wrong type fails here, at the boundary, instead
+    of passing through pandas dtype inference."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    fields = list(to_arrow_schema(StructType.fromDDL(schema)))
+    keep = frozenset(keep)
+    inputs = [c for c in df.columns if c not in keep]
+
+    def _run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            built = iter(fn(*(batch.column(c).to_pylist() for c in inputs)))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(f.name) if f.name in keep
+                    else pa.array(next(built), f.type)
+                    for f in fields
+                ],
+                names=[f.name for f in fields],
+            )
+
+    return df.mapInArrow(_run, schema=schema)
 
 
 # -- cache lifetime ---------------------------------------------------------

@@ -6,7 +6,7 @@
 
 Two physical strategies, byte-identical outputs:
 
-* **fused** — chunk+correct+reassemble inside ONE ``mapInPandas`` pass per
+* **fused** — chunk+correct+reassemble inside ONE Arrow pass per
   document: zero shuffles, embarrassingly parallel over documents. The
   right plan when the provider is cheap (heuristic) and documents are
   bounded — the common 100 TB case.
@@ -17,13 +17,16 @@ Two physical strategies, byte-identical outputs:
 ``run_pipeline`` routes by document size: docs above
 ``cfg.mega_doc_chars`` take the staged path so one url cannot pin a task
 (the north rule's mega-page skew handling); everything else is fused.
+
+Every Python pass on this path — extraction, the fused pass, the chunker,
+correction and the hallucination filter — crosses the JVM boundary through
+``operators.util.map_arrow``.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Optional
+from typing import Callable, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -31,6 +34,7 @@ from llm_aided_ocr_spark.config import PipelineConfig
 from llm_aided_ocr_spark.kernels import (
     assemble_chunks,
     chunk_full_text,
+    filter_document,
     strip_correction_header,
 )
 from llm_aided_ocr_spark.operators.assemble import assemble_documents
@@ -38,6 +42,7 @@ from llm_aided_ocr_spark.operators.chunker import chunk_documents
 from llm_aided_ocr_spark.operators.correct import correct_chunks, get_provider
 from llm_aided_ocr_spark.operators.extract import extract_text
 from llm_aided_ocr_spark.operators.filters import apply_page_filter, language_gate
+from llm_aided_ocr_spark.operators.util import map_arrow
 from llm_aided_ocr_spark.plans.checkpoint import CheckpointStore
 
 RESULT_SCHEMA = "url string, raw_text string, corrected_text string, n_chunks int"
@@ -87,49 +92,32 @@ def _spread_documents(
 
 
 def _fused_correct(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Document rows → result rows in one narrow pass (no shuffle).
+    """Document rows → result rows in one narrow pass (no shuffle): chunk,
+    correct, reassemble and strip the header per document, url passed
+    through zero-copy. The Arrow form measured at parity with the pandas
+    form it replaced (best-of-7 3.404 s vs 3.401 s at the bench tier; the
+    pass is kernel-bound) with byte-identical output (count / corrected
+    bytes / chunks / crc32 of corrected and raw text over 320k docs)."""
 
-    Arrow-native (``mapInArrow``): the kernel needs plain Python strings
-    either way, but building the output as a RecordBatch directly skips
-    the pandas block-manager round-trip on BOTH sides of the boundary
-    (guide §4.2) and passes the url column through as the input's own
-    Arrow array, zero-copy. Measured PARITY with the pandas form at the
-    bench tier (best-of-7 3.404 s vs 3.401 s — the pass is
-    DRAM/kernel-bound there); kept because the avoided per-batch
-    object-array materialization grows with batch width and payload
-    size, and output is proven byte-identical (count / corrected-byte /
-    chunk / crc32-of-corrected / crc32-of-raw all equal over 320k
-    docs)."""
-
-    def _process(batches):
-        import pyarrow as pa
-
+    def _process(texts):
         fn = get_provider(cfg.provider)
         md = cfg.reformat_as_markdown
         sup = cfg.suppress_headers_and_page_numbers
-        for batch in batches:
-            texts = batch.column("extracted_text").to_pylist()
-            raws, outs, ns = [], [], []
-            for text in texts:
-                text = text if text is not None else ""
-                chunks = chunk_full_text(
-                    text, chunk_size=cfg.chunk_size_chars, overlap_words=cfg.overlap_words
-                )
-                corrected = assemble_chunks([fn(c, md, sup) for c in chunks])
-                raws.append(text)
-                outs.append(strip_correction_header(corrected))
-                ns.append(len(chunks))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("url"),
-                    pa.array(raws, pa.string()),
-                    pa.array(outs, pa.string()),
-                    pa.array(ns, pa.int32()),
-                ],
-                names=["url", "raw_text", "corrected_text", "n_chunks"],
+        raws, outs, ns = [], [], []
+        for text in texts:
+            text = text if text is not None else ""
+            chunks = chunk_full_text(
+                text, chunk_size=cfg.chunk_size_chars, overlap_words=cfg.overlap_words
             )
+            corrected = assemble_chunks([fn(c, md, sup) for c in chunks])
+            raws.append(text)
+            outs.append(strip_correction_header(corrected))
+            ns.append(len(chunks))
+        return raws, outs, ns
 
-    return df.select("url", "extracted_text").mapInArrow(_process, schema=RESULT_SCHEMA)
+    return map_arrow(
+        df.select("url", "extracted_text"), _process, RESULT_SCHEMA, keep=("url",)
+    )
 
 
 def _staged_correct(
@@ -168,51 +156,6 @@ FILTERED_SCHEMA = (
     "url string, raw_text string, corrected_text string, n_chunks int, "
     "n_sentences int, n_kept int, min_score double, threshold_used double"
 )
-
-
-def _apply_similarity_filter(result: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """F3 over the pipeline result in ONE narrow passthrough pass (no
-    self-join — joining the result with a filter of itself would execute
-    the whole upstream pipeline twice). ``test_filtering_hallucinations``
-    (reference CLI --test-filtering) reports verdicts without applying
-    them to the text."""
-    from llm_aided_ocr_spark.kernels import (
-        adaptive_similarity_threshold,
-        filter_hallucinated_sentences,
-    )
-
-    threshold = cfg.hallucination_similarity_threshold
-    adaptive = cfg.adaptive_hallucination_threshold
-    test_only = cfg.test_filtering_hallucinations
-
-    def _filter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            texts, n_s, n_k, mins, ths = [], [], [], [], []
-            for orig, proc in zip(batch["raw_text"], batch["corrected_text"]):
-                orig, proc = orig or "", proc or ""
-                t = (
-                    adaptive_similarity_threshold(orig, proc, threshold)
-                    if adaptive
-                    else threshold
-                )
-                filtered, scores = filter_hallucinated_sentences(orig, proc, t)
-                texts.append(proc if test_only else filtered)
-                n_s.append(len(scores))
-                n_k.append(sum(1 for s in scores if s >= t))
-                mins.append(min(scores) if scores else 1.0)
-                ths.append(t)
-            out = batch[["url", "raw_text", "n_chunks"]].copy()
-            out["corrected_text"] = texts
-            out["n_sentences"] = n_s
-            out["n_kept"] = n_k
-            out["min_score"] = mins
-            out["threshold_used"] = ths
-            yield out[
-                ["url", "raw_text", "corrected_text", "n_chunks",
-                 "n_sentences", "n_kept", "min_score", "threshold_used"]
-            ]
-
-    return result.mapInPandas(_filter, schema=FILTERED_SCHEMA)
 
 
 def run_pipeline(
@@ -331,7 +274,25 @@ def run_pipeline(
         )
 
     if cfg.apply_hallucination_filter:
-        result = _apply_similarity_filter(result, cfg)
+        # F3 in ONE narrow passthrough pass (a self-join with a filter of
+        # the result would execute the whole upstream pipeline twice).
+        # test_filtering_hallucinations (reference CLI --test-filtering)
+        # reports verdicts without applying them to the text.
+        threshold = cfg.hallucination_similarity_threshold
+        adaptive = cfg.adaptive_hallucination_threshold
+        test_only = cfg.test_filtering_hallucinations
+
+        def _filter(origs, procs):
+            texts, *stats = zip(*(
+                filter_document(o, p, threshold, adaptive)
+                for o, p in zip(origs, procs)
+            ))
+            return [origs, [p or "" for p in procs] if test_only else texts, *stats]
+
+        result = map_arrow(
+            result.select("url", "raw_text", "corrected_text", "n_chunks"),
+            _filter, FILTERED_SCHEMA, keep=("url", "n_chunks"),
+        )
 
     if store is not None and cfg.checkpointing:
         result = store.write(

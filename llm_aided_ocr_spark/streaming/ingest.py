@@ -11,7 +11,7 @@ run" without rescanning. This module closes that gap Spark-first:
   size for backpressure.
 * ``correct_pages_stream`` — the SAME stateless kernels as the batch
   fused path (extract → chunk → correct → reassemble inside one
-  ``mapInPandas``), so streaming output is byte-identical to a batch run
+  Arrow pass), so streaming output is byte-identical to a batch run
   over the same files; tested in ``tests/test_streaming.py``.
 * ``write_stream_parquet`` — checkpointed file sink (exactly-once per
   micro-batch via the sink's commit log); ``Trigger.AvailableNow`` makes
@@ -84,7 +84,7 @@ def correct_pages_stream(
     use_html: bool = False,
 ) -> DataFrame:
     """The batch fused path applied to a streaming DataFrame: language
-    gate → extraction → chunk+correct+reassemble in one ``mapInPandas``.
+    gate → extraction → chunk+correct+reassemble in one Arrow pass.
     All stages are stateless and document-local, so each micro-batch is
     byte-identical to a batch run over the same rows — no repartition
     (the file source's split granularity is the parallelism; a shuffle

@@ -495,6 +495,47 @@ def test_auto_strategy_routes_on_cached_size_column(spark):
     spark.catalog.clearCache()
 
 
+def test_pipeline_python_passes_all_map_in_arrow(spark):
+    """Every Python pass of the pipeline crosses the JVM boundary one way:
+    the executed plan of an html pipeline with a document on the staged
+    path and the hallucination filter on holds no MapInPandas (nor any
+    other Python node) — extraction on both branches, the fused pass, the
+    chunker, correction and the filter are all MapInArrow."""
+    import re
+
+    from llm_aided_ocr_spark.config import PipelineConfig
+    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache, run_pipeline
+    from llm_aided_ocr_spark.sources.synthetic import pages_dataframe
+
+    pages = pages_dataframe(spark, n_rows=12, seed=42)
+    # the largest page's html is ~22 KB, the next ~16 KB: one staged doc
+    cfg = PipelineConfig(
+        provider="heuristic", mega_doc_chars=20_000, apply_hallucination_filter=True
+    )
+    result = run_pipeline(pages, cfg, use_html=True, strategy="auto")
+    assert result.count() == 12
+    plan = result._jdf.queryExecution().executedPlan().toString()
+    release_pipeline_cache(result)
+    plan = plan.split("== Initial Plan ==")[0]  # AQE: the executed plan
+    nodes = re.findall(r"^[\s:+|-]*(?:\*\(\d+\) )?(\w+)", plan, re.M)
+    python = [n for n in nodes if re.search("Pandas|Arrow|Python", n)]
+    assert python and set(python) == {"MapInArrow"}, python
+    passes = []
+    for line in plan.splitlines():
+        if "MapInArrow" in line:
+            outputs = re.findall(r"(\w+)#\d+", line.rsplit("[", 1)[1])
+            passes.append(
+                "filter" if "threshold_used" in outputs
+                else "fused" if "corrected_text" in outputs
+                else "extract" if "extracted_text" in outputs
+                else "chunker" if "chunk" in outputs
+                else "correct" if "corrected" in outputs
+                else line
+            )
+    assert set(passes) == {"extract", "fused", "chunker", "correct", "filter"}, passes
+    assert passes.count("extract") >= 2, passes  # the fused and staged branches
+
+
 def test_auto_strategy_cache_released_after_action(spark):
     """run_pipeline(auto) registers the routed corpus cache;
     release_pipeline_cache must unpersist it after the terminal action so

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import tempfile
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -83,6 +84,36 @@ def test_pipeline_hallucination_filter_config(spark):
     r2 = run_pipeline(df, cfg_test, strategy="fused").first()
     assert r2["corrected_text"] == r["corrected_text"]  # test mode: unchanged text
     assert r2["n_sentences"] == 2
+
+    # one filter, two callers: the pipeline's filter step equals the
+    # standalone operator over the unfiltered result, per url, at fixed
+    # and adaptive thresholds
+    from llm_aided_ocr_spark.operators.filters import hallucination_filter
+
+    pages = pages_dataframe(spark, n_rows=16, seed=3)
+    pages = pages.filter(F.length("text") < 3000)
+    stats = ["n_sentences", "n_kept", "min_score", "threshold_used"]
+    for threshold, adaptive in ((0.4, False), (0.97, False), (0.4, True)):
+        cfg = PipelineConfig(
+            provider="heuristic",
+            hallucination_similarity_threshold=threshold,
+            adaptive_hallucination_threshold=adaptive,
+        )
+        plain = run_pipeline(pages, cfg, strategy="auto")
+        alone = {
+            r["url"]: (r["filtered_text"], *(r[c] for c in stats))
+            for r in hallucination_filter(plain, threshold, adaptive=adaptive).collect()
+        }
+        filtered = run_pipeline(
+            pages, replace(cfg, apply_hallucination_filter=True), strategy="auto"
+        )
+        piped = {
+            r["url"]: (r["corrected_text"], *(r[c] for c in stats))
+            for r in filtered.collect()
+        }
+        assert piped == alone and len(alone) >= 4, (threshold, adaptive)
+        if threshold > 0.9:  # the check must see sentences dropped
+            assert any(v[2] < v[1] for v in alone.values())
 
 
 def test_validate_unique_urls_raises(spark):
@@ -184,11 +215,3 @@ def test_plan_node_walk_compat(spark, tmp_path):
     assert not names & {"Join", "Window", "Aggregate", "Sort"}
     out = ensure_min_parallelism(scan.select("Join", "Window"))
     assert out.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism // 2
-
-    # the documented escape hatch disables the gate wholesale
-    spark.conf.set("spark.ocrspark.ensureMinParallelism", "false")
-    try:
-        off = ensure_min_parallelism(scan.select("Join"))
-        assert off.rdd.getNumPartitions() == scan.select("Join").rdd.getNumPartitions()
-    finally:
-        spark.conf.unset("spark.ocrspark.ensureMinParallelism")

@@ -3,7 +3,10 @@ the Python kernel oracle (and, transitively, the reference implementation)."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
+from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark import kernels
 from llm_aided_ocr_spark.config import PipelineConfig
@@ -57,24 +60,100 @@ def test_fused_equals_staged(spark, pages):
 
 
 def test_fused_rows_identical_with_large_var_types(spark, pages):
-    # the fused mapInArrow pass hands the url column back as the input's
-    # own Arrow array; with useLargeVarTypes on that array is
-    # large_string while the built columns are string — Spark must still
-    # accept the batch and return the same rows
+    # the Arrow passes hand kept columns back as the input's own Arrow
+    # arrays; with useLargeVarTypes on those are large_string /
+    # large_binary while the built columns are string — Spark must still
+    # accept the batches and return the same rows. Covers the fused pass,
+    # the staged path from html (extraction, chunker, correction) and the
+    # hallucination filter.
     conf = "spark.sql.execution.arrow.useLargeVarTypes"
     cfg = PipelineConfig(provider="heuristic")
+    short = pages.filter(F.length("text") < 3000)
+    runs = {
+        "fused": lambda: run_pipeline(pages, cfg, strategy="fused"),
+        "staged_html": lambda: run_pipeline(pages, cfg, use_html=True, strategy="staged"),
+        "filter": lambda: run_pipeline(
+            short, replace(cfg, apply_hallucination_filter=True), strategy="fused"
+        ),
+    }
     prev = spark.conf.get(conf, None)
     try:
         rows = {}
         for on in ("false", "true"):
             spark.conf.set(conf, on)
-            rows[on] = sorted(map(tuple, run_pipeline(pages, cfg, strategy="fused").collect()))
+            for name, run in runs.items():
+                rows[name, on] = sorted(map(tuple, run().collect()))
     finally:
         if prev is None:
             spark.conf.unset(conf)
         else:
             spark.conf.set(conf, prev)
-    assert rows["true"] == rows["false"] and len(rows["true"]) == 40
+    for name in runs:
+        assert rows[name, "true"] == rows[name, "false"], name
+    assert len(rows["fused", "true"]) == len(rows["staged_html", "true"]) == 40
+    assert rows["filter", "true"]
+
+
+def test_arrow_passes_nulls_empties_and_timestamps_local_tz(spark):
+    """Under a non-UTC session time zone (the oracle sweep's), the Arrow
+    passes map NULL and empty payloads as before and pass warc_ts through
+    exactly — including an instant in Lord Howe's ambiguous fall-back
+    half hour, which the pandas form shifted by 30 minutes."""
+    import datetime as dt
+
+    from llm_aided_ocr_spark.operators.chunker import chunk_documents
+    from llm_aided_ocr_spark.operators.correct import correct_chunks
+    from llm_aided_ocr_spark.operators.extract import extract_text
+    from llm_aided_ocr_spark.operators.filters import hallucination_filter
+
+    utc = dt.timezone.utc
+    ambiguous = dt.datetime(2024, 4, 6, 14, 40, tzinfo=utc)  # 01:40 +11:00
+    pages = spark.createDataFrame(
+        [
+            ("n", ambiguous, None, None, "en"),
+            ("e", dt.datetime(2024, 4, 6, 15, 10, tzinfo=utc), b"", "", None),
+            ("t", None, b"<p>Hi there.</p>", "Hi there.", "en"),
+        ],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Australia/Lord_Howe")
+    try:
+        for sniff in (False, True):
+            out = extract_text(pages, use_html=True, sniff_charset=sniff)
+            got = out.select(
+                "url", F.unix_micros("warc_ts"), "lang", "extracted_text"
+            ).collect()
+            assert sorted(map(tuple, got), key=str) == sorted([
+                ("n", 1712414400000000, "en", ""),
+                ("e", 1712416200000000, None, ""),
+                ("t", None, "en", "Hi there."),
+            ], key=str), sniff
+        docs = spark.createDataFrame(
+            [("n", None), ("e", "")], "url string, extracted_text string"
+        )
+        assert sorted(map(tuple, chunk_documents(docs).collect())) == [
+            ("e", 0, 1, ""), ("n", 0, 1, ""),
+        ]
+        chunks = spark.createDataFrame(
+            [("n", 0, 1, None), ("e", 0, 1, "")],
+            "url string, chunk_ix int, n_chunks int, chunk string",
+        )
+        assert sorted(map(tuple, correct_chunks(chunks).collect())) == [
+            ("e", 0, 1, ""), ("n", 0, 1, ""),
+        ]
+        res = spark.createDataFrame(
+            [("a", None, None), ("b", "", ""), ("c", "x. y.", None), ("d", None, "x. y.")],
+            "url string, raw_text string, corrected_text string",
+        )
+        assert sorted(map(tuple, hallucination_filter(res).collect())) == [
+            ("a", "", 0, 0, 1.0, 0.4),
+            ("b", "", 0, 0, 1.0, 0.4),
+            ("c", "", 0, 0, 1.0, 0.4),
+            ("d", "", 2, 0, 0.0, 0.4),
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
 
 
 def test_auto_routes_mega_docs(spark):

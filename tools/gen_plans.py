@@ -92,9 +92,10 @@ def main() -> None:
         "the fused branch and both staged consumers are InMemoryTableScans "
         "over ONE InMemoryRelation whose lineage holds the only FileScan "
         "(explain prints that lineage under each cached scan). Small docs: "
-        "cache -> salted Exchange -> ONE MapInPandas doing "
+        "cache -> salted Exchange -> ONE MapInArrow doing "
         "chunk+correct+reassemble (zero further shuffles); mega docs: "
-        "chunk table -> chunk-salted Exchange -> correction -> "
+        "MapInArrow chunk table -> chunk-salted Exchange -> MapInArrow "
+        "correction -> "
         "ObjectHashAggregate reassembly, unioned. Previously each branch "
         "re-filtered the raw parquet: 2x text-column scan IO.",
         plan_of(auto),
