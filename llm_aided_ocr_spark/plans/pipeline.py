@@ -17,6 +17,9 @@ Two physical strategies, byte-identical outputs:
 ``run_pipeline`` routes by document size: docs above
 ``cfg.mega_doc_chars`` take the staged path so one url cannot pin a task
 (the north rule's mega-page skew handling); everything else is fused.
+The routing runs one aggregate job when ``run_pipeline`` is called: it
+builds the routing cache and counts the mega documents, and the staged
+branch is planned only when that count is above zero.
 
 Every Python pass on this path — extraction, the fused pass, the chunker,
 correction and the hallucination filter — crosses the JVM boundary through
@@ -179,6 +182,10 @@ def run_pipeline(
     column's size).
 
     ``strategy``: ``"fused"`` | ``"staged"`` | ``"auto"`` (size-routed).
+    ``"auto"`` runs one Spark job when called: a global aggregate that
+    builds the routing cache and counts the documents above
+    ``cfg.mega_doc_chars``; the staged branch is planned (and unioned
+    with the fused one) only when that count is above zero.
     With a ``store`` and ``cfg.checkpointing``, already-completed documents
     (present in the ``corrected_docs`` stage) are skipped via anti-join and
     the increment is appended — the resume path.
@@ -250,9 +257,7 @@ def run_pipeline(
         # pipeline's wall on a corpus with ZERO mega docs). Filtering on
         # the cached int also lets the in-memory scan's per-batch
         # min/max stats prune whole batches for the branch they cannot
-        # feed, so the mega branch of a mega-free corpus (and the fused
-        # branch's share of a mega-heavy one) never decompresses text
-        # it will drop.
+        # feed, so neither branch decompresses text it will drop.
         size = F.length(
             F.coalesce(
                 F.col(source_col),
@@ -264,14 +269,26 @@ def run_pipeline(
             size.cast("bigint").alias("_ocr_route_sz"),
         ), StorageLevel.MEMORY_AND_DISK)
         sz = F.col("_ocr_route_sz")
+        # One global aggregate builds the cache (it reads every
+        # partition) and tells whether the staged branch has any input.
+        # A mega-free corpus — the common case — then plans the fused
+        # branch alone: the staged branch's empty chunk, correction,
+        # reassembly and join stages would each still cost a Spark job.
+        n_mega = routed.agg(F.count_if(sz > cfg.mega_doc_chars)).first()[0]
         small = routed.filter(sz <= cfg.mega_doc_chars).drop("_ocr_route_sz")
-        big = routed.filter(sz > cfg.mega_doc_chars).drop("_ocr_route_sz")
         # the branches filter the PERSISTED routed relation, whose plan
         # no longer exposes inputFiles(); judge the spread gate on the
         # pre-persist source plan instead
-        result = _fused_correct(_prepare(small, gate_df=df), cfg).unionByName(
-            _staged_correct(_prepare(big, gate_df=df), cfg, store)
-        )
+        result = _fused_correct(_prepare(small, gate_df=df), cfg)
+        if n_mega:
+            big = routed.filter(sz > cfg.mega_doc_chars).drop("_ocr_route_sz")
+            # the staged path reads its input twice (chunk side and
+            # raw_text join side): cache the extracted mega documents so
+            # each is extracted once
+            staged_in = persist(
+                _prepare(big, gate_df=df), StorageLevel.MEMORY_AND_DISK
+            )
+            result = result.unionByName(_staged_correct(staged_in, cfg, store))
 
     if cfg.apply_hallucination_filter:
         # F3 in ONE narrow passthrough pass (a self-join with a filter of
@@ -303,13 +320,14 @@ def run_pipeline(
 
 def release_pipeline_cache(result: DataFrame, blocking: bool = True) -> int:
     """Free the caches :func:`run_pipeline` registered (the auto
-    strategy's routed corpus cache, an Iceberg store's staged
-    increments) — together with every other unreleased cache of the
-    session: this is ``operators.util.release_pinned``, under the name
-    pipeline callers know. Call AFTER the terminal action (write/collect)
-    on ``result`` — the routed cache exists precisely so the two routing
-    branches share one source scan during that action. Returns the
-    number of caches released; idempotent."""
+    strategy's routed corpus cache and its extracted mega documents, an
+    Iceberg store's staged increments) — together with every other
+    unreleased cache of the session: this is
+    ``operators.util.release_pinned``, under the name pipeline callers
+    know. Call AFTER the terminal action (write/collect) on ``result`` —
+    the routed cache exists precisely so the two routing branches share
+    one source scan during that action. Returns the number of caches
+    released; idempotent."""
     from llm_aided_ocr_spark.operators.util import release_pinned
 
     return release_pinned(result, blocking=blocking)

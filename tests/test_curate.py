@@ -346,11 +346,28 @@ def test_annotate_is_one_native_projection(spark):
         assert bad not in plan, bad
 
 
-def test_curate_canonical_url_dedup_collapses_refetches(spark):
+def test_curate_canonical_url_dedup_collapses_refetches(spark, monkeypatch):
     """Refetch spellings of one page (case/port/fragment variants)
     collapse to one survivor BEFORE correction, keeping the longest
-    fetch."""
-    from llm_aided_ocr_spark.operators.util import release_pinned
+    fetch. The keeper pick's cache is already released when ``curate``
+    returns: the pipeline's routing cache holds the gated pages."""
+    from pyspark import StorageLevel
+
+    from llm_aided_ocr_spark.operators import dedup
+    from llm_aided_ocr_spark.operators.util import cache_mark, release_pinned
+
+    registered = []
+    keepers = dedup.canonical_url_keepers
+
+    def recording_keepers(*args, **kwargs):
+        start = cache_mark()
+        out = keepers(*args, **kwargs)
+        stop = cache_mark()
+        caches = spark.sparkContext._ocr_spark_caches
+        registered.extend(h for k, h in caches.items() if start < k < stop)
+        return out
+
+    monkeypatch.setattr(dedup, "canonical_url_keepers", recording_keepers)
 
     base = pages_dataframe(spark, n_rows=6, include_golden=False)
     rows = base.collect()
@@ -369,6 +386,8 @@ def test_curate_canonical_url_dedup_collapses_refetches(spark):
         near_dedup=False, exact_dedup=False, canonical_url_dedup=True
     )
     out = curate(refetch, cfg)
+    assert registered
+    assert all(h.storageLevel == StorageLevel.NONE for h in registered)
     urls = {r["url"] for r in out.collect()}
     release_pinned(out, blocking=True)
     assert urls == {"HTTP://A.org:80/p#frag", "https://b.org/q"}

@@ -452,22 +452,38 @@ def test_auto_strategy_scans_source_once(spark):
     """The auto (size-routed) strategy must not pay a second parquet scan
     of the source text for the mega-doc branch: the routed relation is
     persisted, so both branches read the in-memory copy and exactly one
-    FileScan of the source appears in the plan."""
+    FileScan of the source appears in the plan. The staged branch is
+    planned only when the routing aggregate found a mega document."""
+    from dataclasses import replace
+
     import __spark_entry__ as e
     from llm_aided_ocr_spark.config import PipelineConfig
-    from llm_aided_ocr_spark.plans.pipeline import run_pipeline
+    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache, run_pipeline
 
     pages = e._docs_as_pages(spark, "/root/testdata/sf0.001")
     cfg = PipelineConfig(provider="identity", apply_hallucination_filter=False)
-    plan = _plan(run_pipeline(pages, cfg, strategy="auto"))
-    # all consumers read the cached routed relation: fused branch (1) plus
-    # the staged branch's chunk path and raw-text join side (2) ...
-    assert plan.count("InMemoryTableScan") == 3, plan
-    # ... and every FileScan in the printed plan is the cached relation's
-    # lineage (explain repeats it under each InMemoryTableScan); a direct
-    # uncached scan per branch would show FileScans without relations.
-    assert plan.count("FileScan parquet") == plan.count("InMemoryRelation"), plan
-    spark.catalog.clearCache()
+    longest = pages.agg(F.max(F.length("text"))).first()[0]
+    assert longest <= cfg.mega_doc_chars
+    # mega-free at the default threshold: the fused branch alone reads
+    # the routed cache; with the longest document above a lowered
+    # threshold the staged branch's chunk side and raw-text join side
+    # read it too (through the staged input's own cache, under whose
+    # every scan explain prints the routed cache again)
+    for mega_doc_chars, scans in ((cfg.mega_doc_chars, 1), (longest - 1, 3)):
+        result = run_pipeline(
+            pages, replace(cfg, mega_doc_chars=mega_doc_chars), strategy="auto"
+        )
+        plan = _plan(result)
+        release_pipeline_cache(result)
+        routed = [line for line in plan.splitlines() if "_ocr_route_sz" in line]
+        assert sum("InMemoryTableScan" in line for line in routed) == scans, plan
+        # every FileScan in the printed plan is the routed cache's
+        # lineage; a direct uncached scan per branch would show FileScans
+        # without relations.
+        assert plan.count("FileScan parquet") == sum(
+            "InMemoryRelation" in line for line in routed
+        ), plan
+
 
 def test_auto_strategy_routes_on_cached_size_column(spark):
     """The auto strategy's branch filters must compare the routing size
@@ -534,6 +550,16 @@ def test_pipeline_python_passes_all_map_in_arrow(spark):
             )
     assert set(passes) == {"extract", "fused", "chunker", "correct", "filter"}, passes
     assert passes.count("extract") >= 2, passes  # the fused and staged branches
+    # one extract node per branch: the staged branch's chunk side and
+    # raw-text join side read one cached extract (explain prints it under
+    # each reader with the same expression ids; two uncached readers
+    # would be two nodes with distinct ids)
+    extracts = {
+        re.search(r"extracted_text#(\d+)", line.rsplit("[", 1)[1]).group(1)
+        for line in plan.splitlines()
+        if "MapInArrow" in line and "extracted_text#" in line.rsplit("[", 1)[1]
+    }
+    assert len(extracts) == 2, extracts
 
 
 def test_auto_strategy_cache_released_after_action(spark):

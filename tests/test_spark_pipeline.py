@@ -157,14 +157,61 @@ def test_arrow_passes_nulls_empties_and_timestamps_local_tz(spark):
 
 
 def test_auto_routes_mega_docs(spark):
+    """auto == fused == staged per url whatever the routing aggregate
+    finds: some mega documents, none, only mega documents, no rows."""
+    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
+
     df = pages_dataframe(spark, n_rows=12, seed=42, mega_doc=True)
     cfg = PipelineConfig(provider="heuristic", mega_doc_chars=100_000)
-    auto = run_pipeline(df, cfg, strategy="auto").collect()
-    fused = run_pipeline(df, cfg, strategy="fused").collect()
-    a = {r["url"]: r["corrected_text"] for r in auto}
-    f = {r["url"]: r["corrected_text"] for r in fused}
-    assert a == f
-    assert len(a) == 12
+    cases = [
+        (df, cfg, 12),  # one document above 100k chars
+        (df, replace(cfg, mega_doc_chars=10**9), 12),
+        (df.filter(F.length("text") > 0), replace(cfg, mega_doc_chars=0), 11),
+        (df.limit(0), cfg, 0),
+    ]
+    for pages_in, c, n in cases:
+        got = {}
+        for strategy in ("auto", "fused", "staged"):
+            result = run_pipeline(pages_in, c, strategy=strategy)
+            got[strategy] = {r["url"]: tuple(r) for r in result.collect()}
+            release_pipeline_cache(result)
+        assert got["auto"] == got["fused"] == got["staged"], c.mega_doc_chars
+        assert len(got["auto"]) == n, c.mega_doc_chars
+
+
+def test_auto_mega_free_runs_fused_jobs_plus_routing_aggregate(spark):
+    """On a corpus with no document above ``mega_doc_chars`` the auto
+    strategy plans the fused branch alone: the routing aggregate runs
+    when ``run_pipeline`` is called, and the action then runs no more
+    Spark jobs than the fused strategy's does."""
+    import uuid
+
+    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
+
+    sc = spark.sparkContext
+    df = pages_dataframe(spark, n_rows=40, seed=42)
+    cfg = PipelineConfig(provider="heuristic")  # 4M-char threshold: no mega
+
+    def jobs_of(fn):
+        group = f"auto-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            value = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        # job events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return value, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_fused, fused_jobs = jobs_of(
+        lambda: run_pipeline(df, cfg, strategy="fused").count()
+    )
+    auto, routing_jobs = jobs_of(lambda: run_pipeline(df, cfg, strategy="auto"))
+    n_auto, action_jobs = jobs_of(auto.count)
+    release_pipeline_cache(auto)
+    assert n_auto == n_fused == 40
+    assert routing_jobs >= 1
+    assert action_jobs <= fused_jobs, (routing_jobs, action_jobs, fused_jobs)
 
 
 def test_html_extraction_path(spark, pages):

@@ -87,17 +87,20 @@ def main() -> None:
     cfg = PipelineConfig(provider="identity", apply_hallucination_filter=False)
     auto = run_pipeline(pages, cfg, strategy="auto")
     sections.append((
-        "Full pipeline (auto) — ONE source scan, fused main path + staged skew branch",
+        "Full pipeline (auto) — ONE source scan; the staged skew branch "
+        "only when there is a mega document",
         "the routed relation is pruned to consumed columns and persisted; "
-        "the fused branch and both staged consumers are InMemoryTableScans "
-        "over ONE InMemoryRelation whose lineage holds the only FileScan "
-        "(explain prints that lineage under each cached scan). Small docs: "
-        "cache -> salted Exchange -> ONE MapInArrow doing "
-        "chunk+correct+reassemble (zero further shuffles); mega docs: "
-        "MapInArrow chunk table -> chunk-salted Exchange -> MapInArrow "
-        "correction -> "
-        "ObjectHashAggregate reassembly, unioned. Previously each branch "
-        "re-filtered the raw parquet: 2x text-column scan IO.",
+        "run_pipeline builds that cache with ONE global aggregate at call "
+        "time, which also counts the documents above mega_doc_chars. This "
+        "corpus has none, so the plan is the fused branch alone: an "
+        "InMemoryTableScan over the InMemoryRelation whose lineage holds "
+        "the only FileScan -> salted Exchange -> ONE MapInArrow doing "
+        "chunk+correct+reassemble (zero further shuffles). With a mega "
+        "document the staged branch is unioned in: its extracted input is "
+        "cached once for its two readers, then MapInArrow chunk table -> "
+        "chunk-salted Exchange -> MapInArrow correction -> "
+        "ObjectHashAggregate reassembly, joined to the raw text "
+        "(tests/test_providers_plans.py checks both outcomes).",
         plan_of(auto),
     ))
     spark.catalog.clearCache()
