@@ -156,6 +156,86 @@ def test_arrow_passes_nulls_empties_and_timestamps_local_tz(spark):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
+def test_zip_refresh_guard_rereads_only_changed_archives(tmp_path, monkeypatch):
+    """No Spark: with the guard installed, ``importlib.invalidate_caches()``
+    leaves an unchanged archive's directory alone, re-reads a rewritten
+    one, and handles a deleted one as Python does (no exception, the
+    cached directory dropped)."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from llm_aided_ocr_spark.operators.util import skip_unchanged_zip_refreshes
+
+    # restores Python's own method when the test ends
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    archive = tmp_path / "mods.zip"
+
+    def write(*names):
+        with zipfile.ZipFile(archive, "w") as zf:
+            for name in names:
+                zf.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+    read_directory = zipimport._read_directory
+    reads = []
+
+    def counting_read(path):
+        reads.append(path)
+        return read_directory(path)
+
+    write("zipguard_a")
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        assert importlib.import_module("zipguard_a").NAME == "zipguard_a"
+        skip_unchanged_zip_refreshes()
+        guard = zipimport.zipimporter.invalidate_caches
+        skip_unchanged_zip_refreshes()
+        assert zipimport.zipimporter.invalidate_caches is guard
+        importlib.invalidate_caches()  # the first guarded call reads
+        monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+
+        importlib.invalidate_caches()
+        assert reads == []
+
+        write("zipguard_a", "zipguard_b")
+        importlib.invalidate_caches()
+        assert reads == [str(archive)]
+        assert importlib.import_module("zipguard_b").NAME == "zipguard_b"
+
+        archive.unlink()
+        importlib.invalidate_caches()
+        assert reads == [str(archive)] * 2
+        assert str(archive) not in zipimport._zip_directory_cache
+        assert sys.path_importer_cache[str(archive)]._files == {}
+    finally:
+        for name in ("zipguard_a", "zipguard_b"):
+            sys.modules.pop(name, None)
+
+
+def test_map_arrow_guards_zip_refreshes_in_workers(spark):
+    """Every ``map_arrow`` task runs its ``fn`` under the zip-refresh
+    guard, so each Python worker skips the per-task re-read of unchanged
+    archives after its first task."""
+    from llm_aided_ocr_spark.operators.util import (
+        map_arrow,
+        skip_unchanged_zip_refreshes,
+    )
+
+    def _refresh_name(payloads):
+        import zipimport
+
+        return ([zipimport.zipimporter.invalidate_caches.__qualname__] * len(payloads),)
+
+    df = spark.range(8).selectExpr("id", "string(id) AS payload").repartition(4)
+    got = map_arrow(df, _refresh_name, "id bigint, name string", keep=("id",))
+    guard = f"{skip_unchanged_zip_refreshes.__qualname__}.<locals>.invalidate_caches"
+    assert sorted(map(tuple, got.collect())) == [(i, guard) for i in range(8)]
+
+
 def test_auto_routes_mega_docs(spark):
     """auto == fused == staged per url whatever the routing aggregate
     finds: some mega documents, none, only mega documents, no rows."""
