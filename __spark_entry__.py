@@ -230,23 +230,20 @@ def _q_chunk_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     per flush, so every boundary position is value-hash-verified (the
     compounding overlap prefix is additive on top and is byte-parity
     tested against the exec'd reference)."""
-    import pandas as pd
-
     from llm_aided_ocr_spark.kernels import chunk_pieces
+    from llm_aided_ocr_spark.operators.util import map_arrow
 
     pages = _synth_structured_pages(spark, sf_dir).select("url", "text")
 
-    def _bounds(batches):
-        for batch in batches:
-            urls, ixs, lens = [], [], []
-            for url, text in zip(batch["url"], batch["text"]):
-                for ix, piece in enumerate(chunk_pieces(text or "", _CHUNKY_SIZE)):
-                    urls.append(url)
-                    ixs.append(ix + 1)
-                    lens.append(len(piece))
-            yield pd.DataFrame({"url": urls, "chunk_ix": ixs, "chunk_len": lens})
+    def _bounds(urls, texts):
+        rows = [
+            (url, ix + 1, len(piece))
+            for url, text in zip(urls, texts)
+            for ix, piece in enumerate(chunk_pieces(text or "", _CHUNKY_SIZE))
+        ]
+        return zip(*rows) if rows else ([],) * 3
 
-    return pages.mapInPandas(_bounds, schema="url string, chunk_ix int, chunk_len long")
+    return map_arrow(pages, _bounds, "url string, chunk_ix int, chunk_len long")
 
 
 def _q_hallucination_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3977,36 +3974,33 @@ def _q_media_dimensions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct as st
 
     from llm_aided_ocr_spark.operators.multimodal import image_header_info
+    from llm_aided_ocr_spark.operators.util import map_arrow
 
     d = _docs(spark, sf_dir).select("doc_id")
 
-    def _mk(batches):
-        import pandas as pd
+    def _mk(doc_ids):
+        blobs = []
+        for i in doc_ids:
+            w, h = i % 1900 + 1, i % 1060 + 1
+            k = i % 4
+            if k == 0:
+                blob = (b"\x89PNG\r\n\x1a\n" + st.pack(">I", 13)
+                        + b"IHDR" + st.pack(">II", w, h)
+                        + b"\x08\x02\x00\x00\x00" + b"\x00" * 8)
+            elif k == 1:
+                blob = b"GIF89a" + st.pack("<HH", w, h) + b"\x00" * 6
+            elif k == 2:
+                app0 = b"JFIF\x00" + b"\x00" * 9
+                blob = (b"\xff\xd8\xff\xe0" + st.pack(">H", len(app0) + 2)
+                        + app0 + b"\xff\xc0" + st.pack(">H", 11)
+                        + b"\x08" + st.pack(">HH", h, w) + b"\x03\x00\x00")
+            else:
+                blob = (b"BM" + b"\x00" * 16 + st.pack("<ii", w, -h)
+                        + b"\x00" * 8)
+            blobs.append(blob)
+        return doc_ids, blobs
 
-        for batch in batches:
-            blobs = []
-            for doc_id in batch["doc_id"]:
-                i = int(doc_id)
-                w, h = i % 1900 + 1, i % 1060 + 1
-                k = i % 4
-                if k == 0:
-                    blob = (b"\x89PNG\r\n\x1a\n" + st.pack(">I", 13)
-                            + b"IHDR" + st.pack(">II", w, h)
-                            + b"\x08\x02\x00\x00\x00" + b"\x00" * 8)
-                elif k == 1:
-                    blob = b"GIF89a" + st.pack("<HH", w, h) + b"\x00" * 6
-                elif k == 2:
-                    app0 = b"JFIF\x00" + b"\x00" * 9
-                    blob = (b"\xff\xd8\xff\xe0" + st.pack(">H", len(app0) + 2)
-                            + app0 + b"\xff\xc0" + st.pack(">H", 11)
-                            + b"\x08" + st.pack(">HH", h, w) + b"\x03\x00\x00")
-                else:
-                    blob = (b"BM" + b"\x00" * 16 + st.pack("<ii", w, -h)
-                            + b"\x00" * 8)
-                blobs.append(blob)
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "media": blobs})
-
-    media = d.mapInPandas(_mk, schema="doc_id bigint, media binary")
+    media = map_arrow(d, _mk, "doc_id bigint, media binary")
     return image_header_info(media, id_col="doc_id").withColumnRenamed(
         "id", "doc_id"
     )

@@ -1,4 +1,4 @@
-from llm_aided_ocr_spark.functions.tokens import approx_tokens_col, approx_tokens_pandas_udf
+from llm_aided_ocr_spark.functions.tokens import approx_tokens_col
 from llm_aided_ocr_spark.functions.text import (
     strip_correction_header_col,
     word_count_col,
@@ -6,7 +6,6 @@ from llm_aided_ocr_spark.functions.text import (
 
 __all__ = [
     "approx_tokens_col",
-    "approx_tokens_pandas_udf",
     "strip_correction_header_col",
     "word_count_col",
 ]

@@ -2,8 +2,8 @@
 
 The reference's ``approximate_tokens`` (llm_aided_ocr.py:185-203) is pure
 regex + arithmetic, so it stays entirely JVM-side (whole-stage codegen, no
-Python exchange). The pandas-UDF variant exists only as the parity oracle;
-hot paths must use :func:`approx_tokens_col`.
+Python exchange); tests check it against the Python kernel
+``kernels.approx_token_count``.
 
 Caveat: the native expression uses Java regex (ASCII ``\\w``/``\\b``) while
 the Python kernel uses unicode-aware ``re`` — identical on ASCII text,
@@ -12,7 +12,6 @@ may differ on non-ASCII word characters.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
@@ -41,11 +40,3 @@ def approx_tokens_col(col: Column) -> Column:
         toks, F.lit(0).cast("long"), lambda acc, t: acc + _token_cost(t)
     )
     return (total.cast("double") * 1.1).cast(IntegerType())
-
-
-@F.pandas_udf(IntegerType())
-def approx_tokens_pandas_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-vectorized parity oracle wrapping the Python kernel."""
-    from llm_aided_ocr_spark.kernels import approx_token_count
-
-    return texts.fillna("").map(approx_token_count).astype("int32")

@@ -1,44 +1,7 @@
-from llm_aided_ocr_spark.operators.extract import extract_text, extract_pdf_pages
-from llm_aided_ocr_spark.operators.chunker import chunk_documents
-from llm_aided_ocr_spark.operators.correct import (
-    correct_chunks,
-    correct_chunks_sequential,
-    register_provider,
-)
-from llm_aided_ocr_spark.operators import (
-    dedup,
-    multimodal,
-    providers,
-    similarity,
-    textstats,
-)
-from llm_aided_ocr_spark.operators.assemble import assemble_documents, assemble_pages
-from llm_aided_ocr_spark.operators.filters import (
-    apply_page_filter,
-    hallucination_filter,
-    language_gate,
-    page_filter_predicate,
-)
-from llm_aided_ocr_spark.operators.quality import assess_quality, quality_rollup
+"""Spark operators, one module per family.
 
-__all__ = [
-    "extract_text",
-    "extract_pdf_pages",
-    "chunk_documents",
-    "correct_chunks",
-    "correct_chunks_sequential",
-    "register_provider",
-    "dedup",
-    "multimodal",
-    "providers",
-    "similarity",
-    "textstats",
-    "assemble_documents",
-    "assemble_pages",
-    "apply_page_filter",
-    "hallucination_filter",
-    "language_gate",
-    "page_filter_predicate",
-    "assess_quality",
-    "quality_rollup",
-]
+Import the submodule that holds an operator
+(``from llm_aided_ocr_spark.operators.dedup import exact_dedup``): this
+package imports nothing eagerly, so a Python worker that unpickles one
+Arrow pass loads only the modules that pass needs.
+"""

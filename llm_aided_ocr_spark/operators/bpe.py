@@ -31,12 +31,12 @@ from __future__ import annotations
 
 from typing import List, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.operators.util import (
     local_checkpoint,
+    map_arrow,
     persist,
     release_local_checkpoint,
 )
@@ -58,6 +58,33 @@ def _merge_word(syms: List[str], a: str, b: str) -> List[str]:
             out.append(syms[i])
             i += 1
     return out
+
+
+def _merge_pairs(merges) -> List[Tuple[str, str]]:
+    """The ``(left, right)`` pairs of a merge table given either as
+    ``(merge_ix, left, right, freq)`` rows or as bare pairs."""
+    return [(m[1], m[2]) if len(m) >= 3 else (m[0], m[1]) for m in merges]
+
+
+def _encode_word(w: str, pairs) -> List[str]:
+    """``w``'s subword symbols: its characters with every merge of
+    ``pairs`` applied in learned order."""
+    syms = list(w)
+    for a, b in pairs:
+        if len(syms) < 2:
+            break
+        syms = _merge_word(syms, a, b)
+    return syms
+
+
+def _vocab_symbol_counts(vocab: DataFrame, pairs) -> DataFrame:
+    """``(w, n_syms)`` — the encoded length of every word of the
+    vocab-sized relation ``vocab(w)``, in one Arrow pass."""
+
+    def _tokenize(words):
+        return words, [len(_encode_word(w, pairs)) for w in words]
+
+    return map_arrow(vocab, _tokenize, "w string, n_syms int")
 
 
 def _pair_positions(syms: List[str]) -> dict:
@@ -232,15 +259,11 @@ def bpe_learn(
         a, b, freq = top[0]["a"], top[0]["b"], int(top[0]["freq"])
         merges.append((t, a, b, freq))
 
-        def _apply(batches, a=a, b=b):
-            for pdf in batches:
-                pdf["syms"] = [
-                    _merge_word(list(s), a, b) for s in pdf["syms"]
-                ]
-                yield pdf
+        def _apply(syms_col, a=a, b=b):
+            return ([_merge_word(syms, a, b) for syms in syms_col],)
 
         new_vocab = local_checkpoint(
-            vocab.mapInPandas(_apply, schema="n bigint, syms array<string>")
+            map_arrow(vocab, _apply, "n bigint, syms array<string>", keep=("n",))
         )
         release_local_checkpoint(vocab)
         vocab = new_vocab
@@ -301,9 +324,7 @@ def bpe_token_counts(
         ensure_min_parallelism,
     )
 
-    pairs = [
-        (m[1], m[2]) if len(m) >= 3 else (m[0], m[1]) for m in merges
-    ]
+    pairs = _merge_pairs(merges)
     base = ensure_min_parallelism(df).select(
         F.col(id_col).alias("id"), _words_col(text_col).alias("ws")
     )
@@ -316,19 +337,7 @@ def bpe_token_counts(
     )
     vocab = occ.select("w").distinct()
 
-    def _tokenize(batches, pairs=pairs):
-        for pdf in batches:
-            counts = []
-            for w in pdf["w"]:
-                syms = list(w)
-                for a, b in pairs:
-                    if len(syms) < 2:
-                        break
-                    syms = _merge_word(syms, a, b)
-                counts.append(len(syms))
-            yield pd.DataFrame({"w": pdf["w"], "n_syms": counts})
-
-    vocab_tok = vocab.mapInPandas(_tokenize, schema="w string, n_syms int")
+    vocab_tok = _vocab_symbol_counts(vocab, pairs)
     per_doc = (
         occ.join(vocab_tok, "w")
         .groupBy("id")
@@ -365,9 +374,7 @@ def bpe_vocabulary(
     from llm_aided_ocr_spark.operators.dedup import _words_col
     from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
 
-    pairs = [
-        (m[1], m[2]) if len(m) >= 3 else (m[0], m[1]) for m in merges
-    ]
+    pairs = _merge_pairs(merges)
     words = (
         ensure_min_parallelism(df)
         .select(F.explode(_words_col(text_col)).alias("w"))
@@ -376,20 +383,11 @@ def bpe_vocabulary(
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
-    def _tok(batches, pairs=pairs):
-        for pdf in batches:
-            syms_col = []
-            for w in pdf["w"]:
-                syms = list(w)
-                for a, b in pairs:
-                    if len(syms) < 2:
-                        break
-                    syms = _merge_word(syms, a, b)
-                syms_col.append(syms)
-            yield pd.DataFrame({"n": pdf["n"], "syms": syms_col})
+    def _tok(words):
+        return ([_encode_word(w, pairs) for w in words],)
 
     return (
-        words.mapInPandas(_tok, schema="n bigint, syms array<string>")
+        map_arrow(words, _tok, "n bigint, syms array<string>", keep=("n",))
         .select(F.explode("syms").alias("symbol"), "n")
         .groupBy("symbol")
         .agg(F.sum("n").cast("bigint").alias("n_tokens"))
@@ -409,35 +407,21 @@ def bpe_encode(
     merge lists belong in a broadcast, same mechanics)."""
     from llm_aided_ocr_spark.operators.dedup import _words_col
 
-    pairs = [
-        (m[1], m[2]) if len(m) >= 3 else (m[0], m[1]) for m in merges
-    ]
-    prepared = df.withColumn("_bpe_words", _words_col(text_col))
+    pairs = _merge_pairs(merges)
     out_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in prepared.schema.fields
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
 
-    def _enc(batches, pairs=pairs):
-        for pdf in batches:
-            col = []
-            for ws in pdf["_bpe_words"]:
-                toks: List[str] = []
-                for w in ws:
-                    syms = list(w)
-                    for a, b in pairs:
-                        if len(syms) < 2:
-                            break
-                        syms = _merge_word(syms, a, b)
-                    toks.extend(syms)
-                col.append(toks)
-            pdf[out_col] = col
-            yield pdf
+    def _enc(words_col):
+        # merges are word-local: encode each distinct word of the batch once
+        enc = {w: _encode_word(w, pairs) for w in set().union(*words_col)}
+        return ([[sym for w in ws for sym in enc[w]] for ws in words_col],)
 
-    return (
-        prepared.mapInPandas(
-            _enc, schema=f"{out_fields}, {out_col} array<string>"
-        )
-        .drop("_bpe_words")
+    return map_arrow(
+        df.withColumn("_bpe_words", _words_col(text_col)),
+        _enc,
+        f"{out_fields}, {out_col} array<string>",
+        keep=df.columns,
     )
 
 
@@ -467,9 +451,7 @@ def bpe_fertility(
     from llm_aided_ocr_spark.operators.dedup import _words_col
     from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
 
-    pairs = [
-        (m[1], m[2]) if len(m) >= 3 else (m[0], m[1]) for m in merges
-    ]
+    pairs = _merge_pairs(merges)
     base = ensure_min_parallelism(df).select(
         F.coalesce(F.col(lang_col), F.lit("")).alias("lang"),
         _words_col(text_col).alias("ws"),
@@ -482,19 +464,7 @@ def bpe_fertility(
     )
     vocab = occ.select("w").distinct()
 
-    def _tokenize(batches, pairs=pairs):
-        for pdf in batches:
-            counts = []
-            for w in pdf["w"]:
-                syms = list(w)
-                for a, b in pairs:
-                    if len(syms) < 2:
-                        break
-                    syms = _merge_word(syms, a, b)
-                counts.append(len(syms))
-            yield pd.DataFrame({"w": pdf["w"], "n_syms": counts})
-
-    vocab_tok = vocab.mapInPandas(_tokenize, schema="w string, n_syms int")
+    vocab_tok = _vocab_symbol_counts(vocab, pairs)
     return (
         occ.join(vocab_tok, "w")
         .groupBy("lang")

@@ -18,11 +18,10 @@ from __future__ import annotations
 
 from typing import Callable, Dict
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from llm_aided_ocr_spark.kernels import correct_chunk_text, identity_correct
-from llm_aided_ocr_spark.operators.util import map_arrow
+from llm_aided_ocr_spark.operators.util import apply_arrow, map_arrow
 
 ChunkCorrector = Callable[[str, bool, bool], str]
 
@@ -97,8 +96,9 @@ def correct_chunks_sequential(
     chunk_ix order, each seeing the previous PROCESSED chunk's last 1000
     chars (:508) as context.
 
-    ``applyInPandas`` over ``groupBy(url)`` — one shuffle, document-local
-    ordered loop inside the group. The context is threaded to
+    One grouped Arrow pass (``operators.util.apply_arrow``) over
+    ``groupBy(url)`` — one shuffle, document-local ordered loop inside the
+    group. The context is threaded to
     ``context_provider`` (a 4-arg callable receiving ``prev_context``);
     when omitted, the registered context-free ``provider`` is wrapped and
     the context is ignored — matching the deterministic providers, whose
@@ -108,25 +108,29 @@ def correct_chunks_sequential(
     """
     fn: "ContextChunkCorrector | None" = context_provider
 
-    def _seq(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _seq(urls, ixs, ns, chunks):
         nonlocal fn
         if fn is None:
             base = get_provider(provider)
             fn = lambda chunk, _ctx, md, sup: base(chunk, md, sup)  # noqa: E731
-        pdf = pdf.sort_values("chunk_ix")
+        order = sorted(range(len(ixs)), key=ixs.__getitem__)
         outs = []
         context = ""
-        for chunk in pdf["chunk"]:
+        for i in order:
             processed = fn(
-                chunk if chunk is not None else "",
+                chunks[i] if chunks[i] is not None else "",
                 context,
                 reformat_as_markdown,
                 suppress_headers_and_page_numbers,
             )
             outs.append(processed)
             context = processed[-context_tail_chars:] if processed else ""
-        out = pdf[["url", "chunk_ix", "n_chunks"]].copy()
-        out["corrected"] = outs
-        return out
+        return (
+            [urls[i] for i in order], [ixs[i] for i in order],
+            [ns[i] for i in order], outs,
+        )
 
-    return chunks_df.groupBy("url").applyInPandas(_seq, schema=CORRECTED_SCHEMA)
+    return apply_arrow(
+        chunks_df.select("url", "chunk_ix", "n_chunks", "chunk"),
+        ["url"], _seq, CORRECTED_SCHEMA,
+    )

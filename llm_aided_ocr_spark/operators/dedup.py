@@ -13,16 +13,15 @@ All variants are DataFrame-native and shuffle-conscious:
 
 Scale notes: every candidate-generation path buckets FIRST (groupBy on a
 band/bucket key) so the pair join is per-bucket, not corpus-cross; signature
-computation is one narrow pandas pass; dedup keep-policy is min(doc_id) per
+computation is one narrow Arrow pass; dedup keep-policy is min(doc_id) per
 cluster (deterministic).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import List
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +29,7 @@ from llm_aided_ocr_spark.operators.util import (
     cache_mark,
     corpus_scaled,
     local_checkpoint,
+    map_arrow,
     md5_52,
     persist,
     release_between,
@@ -317,32 +317,28 @@ def gram_hashes_arrow(
     )
     mask = np.uint64((1 << bits) - 1)
 
-    def _grams(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for batch in batches:
-            out = []
-            for whs in batch["_whs"]:
-                w = np.asarray(whs, dtype=np.int64).view(np.uint64)
-                n_gr = max(len(w) - n + 1, 0)
-                if n_gr == 0:
-                    out.append([])
-                    continue
-                g = w[:n_gr].copy()
-                for j in range(1, n):
-                    x = w[j : j + n_gr]
-                    r = np.uint64(j % bits)  # Java shift semantics: j mod width
-                    if r == 0:
-                        rot = x
-                    else:
-                        rot = (x << r) | ((x & mask) >> (np.uint64(bits) - r))
-                    g ^= rot & mask if bits < 64 else rot
-                # hand Arrow the ndarray itself — materializing 10^8
-                # Python ints via tolist() measured 2x the whole pass
-                out.append(g.view(np.int64))
-            yield pd.DataFrame({"id": batch["id"], out_col: out})
+    def _grams(whss):
+        out = []
+        for whs in whss:
+            w = whs.view(np.uint64)
+            n_gr = max(len(w) - n + 1, 0)
+            g = w[:n_gr].copy()
+            for j in range(1, n):
+                x = w[j : j + n_gr]
+                r = np.uint64(j % bits)  # Java shift semantics: j mod width
+                if r == 0:
+                    rot = x
+                else:
+                    rot = (x << r) | ((x & mask) >> (np.uint64(bits) - r))
+                g ^= rot & mask if bits < 64 else rot
+            # hand Arrow the ndarray itself — materializing 10^8 Python
+            # ints via tolist() measured 2x the whole pass
+            out.append(g.view(np.int64))
+        return (out,)
 
     id_type = dict(df.dtypes)[id_col]
-    return prepared.mapInPandas(
-        _grams, schema=f"id {id_type}, {out_col} array<bigint>"
+    return map_arrow(
+        prepared, _grams, f"id {id_type}, {out_col} array<bigint>", keep=("id",)
     )
 
 
@@ -666,11 +662,11 @@ def minhash_signatures(
 
     Arrow-vectorized AND shuffle-free: the shingle set is document-local,
     so it is built as a native array column (:func:`shingle_array_col` +
-    ``array_distinct``) and fed straight into ``mapInPandas`` — no
+    ``array_distinct``) and fed straight into one Arrow pass — no
     explode, no ``distinct()`` shuffle, no ``collect_list`` shuffle. At
     10^12 docs the previous explode→distinct→groupBy form moved every
     shingle hash through two full exchanges; this form moves nothing.
-    One pandas pass computes all ``num_perm`` permutations per batch with
+    The pass computes all ``num_perm`` permutations per document with
     numpy broadcasting over the exact universal family of
     :func:`minhash_perms`. Empty documents get the ``[p] * num_perm``
     sentinel signature (p itself is never produced by ``mod p``; min over
@@ -690,23 +686,24 @@ def minhash_signatures(
     )
     id_type = dict(grouped.dtypes)["id"]  # follow the input's id type
 
-    def _sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sentinel = [int(MINHASH_P)] * num_perm
-        for batch in batches:
-            ids, sigs = [], []
-            for id_, shingles in zip(batch["id"], batch["shingles"]):
-                ids.append(id_)
-                if shingles is None or len(shingles) == 0:
-                    sigs.append(sentinel)
-                    continue
-                x = np.asarray(shingles, dtype=np.int64) % MINHASH_P
-                # (num_perm, n_shingles) broadcast; every term < 2^62, so
-                # int64 arithmetic is exact — no wrap, no approximation
-                vals = (a[:, None] * x[None, :] + b[:, None]) % MINHASH_P
-                sigs.append([int(v) for v in vals.min(axis=1)])
-            yield pd.DataFrame({"id": ids, "sig": sigs})
+    sentinel = np.full(num_perm, MINHASH_P, dtype=np.int64)
 
-    return grouped.mapInPandas(_sig, schema=f"id {id_type}, sig array<bigint>")
+    def _sig(shingle_rows):
+        sigs = []
+        for shingles in shingle_rows:
+            if shingles is None or len(shingles) == 0:
+                sigs.append(sentinel)
+                continue
+            x = shingles % MINHASH_P
+            # (num_perm, n_shingles) broadcast; every term < 2^62, so
+            # int64 arithmetic is exact — no wrap, no approximation
+            vals = (a[:, None] * x[None, :] + b[:, None]) % MINHASH_P
+            sigs.append(vals.min(axis=1))
+        return (sigs,)
+
+    return map_arrow(
+        grouped, _sig, f"id {id_type}, sig array<bigint>", keep=("id",)
+    )
 
 
 def _band_buckets(
@@ -855,27 +852,25 @@ def simhash_signatures(
         ).alias("word_hashes"),
     )
 
-    def _sim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, sims = [], []
-            for id_, hs in zip(batch["id"], batch["word_hashes"]):
-                ids.append(id_)
-                if hs is None or len(hs) == 0:
-                    sims.append(0)
-                    continue
-                arr = np.asarray(hs, dtype=np.int64).view(np.uint64)
-                bit_mat = (
-                    (arr[:, None] >> np.arange(bits, dtype=np.uint64)) & 1
-                ).astype(np.int64)
-                votes = (2 * bit_mat - 1).sum(axis=0)
-                sim = 0
-                for bit_ix in np.nonzero(votes > 0)[0]:
-                    sim |= 1 << int(bit_ix)
-                sims.append(sim - (1 << 64) if sim >= (1 << 63) else sim)
-            yield pd.DataFrame({"id": ids, "simhash": sims})
+    def _sim(hash_rows):
+        sims = []
+        for hs in hash_rows:
+            if hs is None or len(hs) == 0:
+                sims.append(0)
+                continue
+            arr = hs.view(np.uint64)
+            bit_mat = (
+                (arr[:, None] >> np.arange(bits, dtype=np.uint64)) & 1
+            ).astype(np.int64)
+            votes = (2 * bit_mat - 1).sum(axis=0)
+            sim = 0
+            for bit_ix in np.nonzero(votes > 0)[0]:
+                sim |= 1 << int(bit_ix)
+            sims.append(sim - (1 << 64) if sim >= (1 << 63) else sim)
+        return (sims,)
 
     id_type = dict(hashed.dtypes)["id"]  # follow the input's id type
-    return hashed.mapInPandas(_sim, schema=f"id {id_type}, simhash bigint")
+    return map_arrow(hashed, _sim, f"id {id_type}, simhash bigint", keep=("id",))
 
 
 def simhash_near_dup_pairs(

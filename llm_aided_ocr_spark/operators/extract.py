@@ -13,9 +13,8 @@ raises ``NotImplementedError`` unless a deterministic fake is injected.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, List, Optional
+from typing import Callable, List, Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -145,21 +144,17 @@ def extract_pdf_pages(
     first_page = skip_first_n_pages + 1
     last_page = None if max_pages == 0 else skip_first_n_pages + max_pages
 
-    def _render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            urls: List[str] = []
-            page_nos: List[int] = []
-            texts: List[str] = []
-            for url, blob in zip(batch["url"], batch["pdf"]):
-                pages = renderer(blob, first_page, last_page)
-                for i, page_text in enumerate(pages):
-                    urls.append(url)
-                    page_nos.append(first_page + i)
-                    texts.append(page_text)
-            yield pd.DataFrame({"url": urls, "page_no": page_nos, "page_text": texts})
+    def _render(urls, blobs):
+        rows = [
+            (url, first_page + i, page_text)
+            for url, blob in zip(urls, blobs)
+            for i, page_text in enumerate(renderer(blob, first_page, last_page))
+        ]
+        return zip(*rows) if rows else ([],) * 3
 
-    return pdf_df.select("url", "pdf").mapInPandas(
-        _render, schema="url string, page_no int, page_text string"
+    return map_arrow(
+        pdf_df.select("url", "pdf"), _render,
+        "url string, page_no int, page_text string",
     )
 
 
@@ -634,7 +629,7 @@ def decode_pages(
     Decoding uses ``errors="replace"`` so malformed bytes yield U+FFFD
     instead of failing the task — the torn-record discipline.
 
-    Sniff AND transcode both run in ONE Arrow ``mapInPandas`` pass —
+    Sniff AND transcode both run in ONE Arrow pass (``map_arrow``) —
     deliberately NOT the native ``decode()`` sniff
     :func:`charset_signals` uses: under ``spark.sql.ansi.enabled``,
     ``decode(bin, 'UTF-8')`` RAISES ``MALFORMED_CHARACTER_CODING`` on
@@ -644,26 +639,16 @@ def decode_pages(
     :func:`charset_signals` for cheap native sniffing of known-utf-8
     corpora; use this for raw fetch bytes. Document-local, zero
     shuffle."""
-    import pandas as pd
-
     base = pages_df.select(F.col(id_col).alias("id"), F.col(html_col).alias("_raw"))
     id_type = dict(base.dtypes)["id"]
     default_codec = SUPPORTED_CHARSETS.get(default.lower(), default)
 
-    def _decode(batches):
-        for batch in batches:
-            charsets, texts = [], []
-            for b in batch["_raw"]:
-                name, text = sniff_decode(b, default_codec)
-                charsets.append(name)
-                texts.append(text)
-            yield pd.DataFrame(
-                {"id": batch["id"], "charset_used": charsets,
-                 "html_text": texts}
-            )
+    def _decode(raws):
+        return zip(*(sniff_decode(b, default_codec) for b in raws))
 
-    return base.mapInPandas(
-        _decode, schema=f"id {id_type}, charset_used string, html_text string"
+    return map_arrow(
+        base, _decode, f"id {id_type}, charset_used string, html_text string",
+        keep=("id",),
     )
 
 

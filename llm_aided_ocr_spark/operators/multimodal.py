@@ -1,7 +1,7 @@
 """Multimodal column handling: image/audio/video as opaque ``binary``
 columns with typed metadata.
 
-The Spark-side plumbing — schemas, Arrow batch shapes, ``mapInPandas``
+The Spark-side plumbing — schemas, Arrow batch shapes, ``map_arrow``
 signatures, partition behavior — is real and tested. The actual media
 decode (the reference's analogue is pdf2image+cv2+Tesseract,
 llm_aided_ocr.py:404-426) requires native libs absent from this container,
@@ -13,12 +13,13 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Callable, Iterator, List, Optional, Tuple
+from typing import Callable, List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from llm_aided_ocr_spark.operators.util import map_arrow
 
 MEDIA_META_SCHEMA = (
     "url string, media_type string, n_bytes long, content_sha256 string"
@@ -129,23 +130,13 @@ def image_header_info(
     scan-bound, exactly like the text statistics family."""
     cols = df.select(F.col(id_col).alias("id"), media_col)
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            fmts, ws, hs = [], [], []
-            for blob in batch[media_col]:
-                fmt, w, h = parse_image_header(
-                    bytes(blob) if blob is not None else b""
-                )
-                fmts.append(fmt)
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {"id": batch["id"], "format": fmts, "width": ws, "height": hs}
-            )
+    def _parse(blobs):
+        return zip(*(parse_image_header(b or b"") for b in blobs))
 
     id_type = dict(cols.dtypes)["id"]
-    return cols.mapInPandas(
-        _parse, schema=f"id {id_type}, format string, width int, height int"
+    return map_arrow(
+        cols, _parse, f"id {id_type}, format string, width int, height int",
+        keep=("id",),
     )
 
 
@@ -160,21 +151,17 @@ def decode_image_features(
     blobs cannot blow executor memory."""
     cols = df.select("url", media_col)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            urls, ws, hs, cs = [], [], [], []
-            for url, blob in zip(batch["url"], batch[media_col]):
-                w, h, c = decoder(bytes(blob) if blob is not None else b"")
-                urls.append(url)
-                ws.append(w)
-                hs.append(h)
-                cs.append(c)
-            out = pd.DataFrame({"url": urls, "width": ws, "height": hs, "channels": cs})
-            out["aspect"] = out["width"] / out["height"]
-            yield out
+    def _decode(blobs):
+        ws, hs, cs = zip(*(decoder(b or b"") for b in blobs))
+        # float division: x/0 is ±inf; 0/0 is NaN, which map_arrow writes as NULL
+        with np.errstate(divide="ignore", invalid="ignore"):
+            aspect = np.asarray(ws, dtype=float) / np.asarray(hs, dtype=float)
+        return ws, hs, cs, aspect
 
-    return cols.mapInPandas(
-        _decode, schema="url string, width int, height int, channels int, aspect double"
+    return map_arrow(
+        cols, _decode,
+        "url string, width int, height int, channels int, aspect double",
+        keep=("url",),
     )
 
 
@@ -216,19 +203,15 @@ def sample_video_frames(
     video analogue of the PDF page explosion (extract.extract_pdf_pages)."""
     cols = df.select("url", media_col)
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            urls, ixs, frames = [], [], []
-            for url, blob in zip(batch["url"], batch[media_col]):
-                for i, frame in enumerate(
-                    sampler(bytes(blob) if blob is not None else b"", n_frames)
-                ):
-                    urls.append(url)
-                    ixs.append(i)
-                    frames.append(frame)
-            yield pd.DataFrame({"url": urls, "frame_ix": ixs, "frame": frames})
+    def _sample(urls, blobs):
+        rows = [
+            (url, i, frame)
+            for url, blob in zip(urls, blobs)
+            for i, frame in enumerate(sampler(blob or b"", n_frames))
+        ]
+        return zip(*rows) if rows else ([],) * 3
 
-    return cols.mapInPandas(_sample, schema="url string, frame_ix int, frame binary")
+    return map_arrow(cols, _sample, "url string, frame_ix int, frame binary")
 
 
 def embed_media_stub(
@@ -240,17 +223,14 @@ def embed_media_stub(
     exercisable end-to-end."""
     cols = df.select("url", media_col)
 
-    def _embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            urls, vecs = [], []
-            for url, blob in zip(batch["url"], batch[media_col]):
-                seed = int.from_bytes(
-                    hashlib.sha256(bytes(blob) if blob is not None else b"").digest()[:4],
-                    "big",
-                )
-                rng = np.random.RandomState(seed)
-                vecs.append([float(x) for x in rng.uniform(-1, 1, dim)])
-                urls.append(url)
-            yield pd.DataFrame({"url": urls, "embedding": vecs})
+    def _embed(blobs):
+        return ([
+            np.random.RandomState(
+                int.from_bytes(hashlib.sha256(b or b"").digest()[:4], "big")
+            ).uniform(-1, 1, dim)
+            for b in blobs
+        ],)
 
-    return cols.mapInPandas(_embed, schema="url string, embedding array<double>")
+    return map_arrow(
+        cols, _embed, "url string, embedding array<double>", keep=("url",)
+    )

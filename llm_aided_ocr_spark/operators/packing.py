@@ -18,10 +18,10 @@ match).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from llm_aided_ocr_spark.operators.util import apply_arrow
 
 
 def pack_sequences(
@@ -71,46 +71,35 @@ def pack_sequences(
             F.xxhash64(F.col(id_col)), F.lit(num_streams)
         ).cast("int")
 
-    sel = [
-        F.col(id_col).alias("doc_id"),
-        stream_expr.alias("stream"),
-        token_col.cast("int").alias("n_tokens"),
-    ]
+    sel = [F.col(id_col).alias("doc_id")]
     group = ["stream"]
-    out_cols = ["doc_id", "stream", "bin_ix", "n_tokens"]
-    out_schema = (
-        f"doc_id {id_type.simpleString()}, stream int, bin_ix bigint, n_tokens int"
-    )
+    split_ddl = ""
     if split_col is not None:
         sel.append(F.col(split_col).alias("split"))
         group = ["split", "stream"]
-        out_cols = ["doc_id", "split", "stream", "bin_ix", "n_tokens"]
-        split_type = df.schema[split_col].dataType.simpleString()
-        out_schema = (
-            f"doc_id {id_type.simpleString()}, split {split_type}, "
-            "stream int, bin_ix bigint, n_tokens int"
-        )
-    prepped = df.select(*sel)
+        split_ddl = f"split {df.schema[split_col].dataType.simpleString()}, "
+    prepped = df.select(
+        *sel, stream_expr.alias("stream"), token_col.cast("int").alias("n_tokens")
+    )
+    out_schema = (
+        f"doc_id {id_type.simpleString()}, {split_ddl}"
+        "stream int, bin_ix bigint, n_tokens int"
+    )
 
-    def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-        t = pdf["n_tokens"].to_numpy()
-        bins = np.empty(len(t), dtype=np.int64)
-        b = 0
-        fill = 0
-        for i, x in enumerate(t):
-            if i == 0:
-                fill = int(x)
-            elif fill + int(x) > budget:
-                b += 1
-                fill = int(x)
-            else:
-                fill += int(x)
-            bins[i] = b
-        pdf["bin_ix"] = bins
-        return pdf[out_cols]
+    def _pack(*cols):
+        ids, tokens = cols[0], cols[-1]
+        # null ids sort last, as pandas' sort_values placed them
+        order = sorted(range(len(ids)), key=lambda i: (ids[i] is None, ids[i]))
+        bins, b, fill = [], 0, 0
+        for j, i in enumerate(order):
+            if j and fill + tokens[i] > budget:
+                b, fill = b + 1, 0
+            fill += tokens[i]
+            bins.append(b)
+        ordered = [[c[i] for i in order] for c in cols]
+        return (*ordered[:-1], bins, ordered[-1])
 
-    return prepped.groupBy(*group).applyInPandas(_pack, schema=out_schema)
+    return apply_arrow(prepped, group, _pack, out_schema)
 
 
 def packing_stats(packed: DataFrame, budget: int) -> DataFrame:

@@ -1,7 +1,7 @@
 """A4 — quality assessment (reference llm_aided_ocr.py:584-632).
 
 Per-document: truncate both texts to 7500 chars natively (``substring``),
-call the assessor provider inside ``mapInPandas``, parse the
+call the assessor provider inside one Arrow pass, parse the
 ``SCORE:``/``EXPLANATION:`` wire format with native ``regexp_extract`` —
 the parse stays JVM-side even when the assessor is an LLM.
 
@@ -11,13 +11,11 @@ implicitly in logs; exposed as :func:`quality_rollup`.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.kernels import ASSESS_SAMPLE_CHARS, assess_quality_response
+from llm_aided_ocr_spark.operators.util import map_arrow
 
 
 def assess_quality(
@@ -33,16 +31,14 @@ def assess_quality(
         F.substring(F.col(processed_col), 1, ASSESS_SAMPLE_CHARS).alias("_proc"),
     )
 
-    def _assess(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = batch[["url"]].copy()
-            out["response"] = [
-                assess_quality_response(o or "", p or "")
-                for o, p in zip(batch["_orig"], batch["_proc"])
-            ]
-            yield out
+    def _assess(origs, procs):
+        return ([
+            assess_quality_response(o or "", p or "") for o, p in zip(origs, procs)
+        ],)
 
-    responses = sampled.mapInPandas(_assess, schema="url string, response string")
+    responses = map_arrow(
+        sampled, _assess, "url string, response string", keep=("url",)
+    )
     return responses.select(
         "url",
         F.regexp_extract("response", r"SCORE:\s*(\d+)", 1).cast("int").alias("score"),

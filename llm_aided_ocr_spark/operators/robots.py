@@ -14,7 +14,7 @@ Two relations:
   of ``User-agent`` lines followed by their rules, per RFC 9309 —
   blank lines do NOT end a group), which DataFrame expressions cannot
   express cleanly, so it runs as a document-local Arrow
-  ``mapInPandas`` flatMap over a pure-Python kernel
+  flatMap (``operators.util.map_arrow``) over a pure-Python kernel
   (:func:`parse_robots_text`) — one robots body is ≤ 500 KiB by spec,
   so the per-row work is bounded; zero shuffle.
 * :func:`robots_allowed` — ``(id, allowed)`` per url: longest-match
@@ -37,12 +37,13 @@ likewise dropped.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.operators.textstats import domain_col
+from llm_aided_ocr_spark.operators.util import map_arrow
 
 
 def parse_robots_text(
@@ -160,25 +161,13 @@ def robots_crawl_delays(
     ``agent`` (seconds, NULL when undeclared). Document-local Arrow
     pass like :func:`parse_robots`; zero shuffle; host-cardinality
     output."""
-    import pandas as pd
 
-    def _parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "host": batch[host_col].astype("object"),
-                    "crawl_delay": pd.Series(
-                        [
-                            crawl_delay_for_agent(b or "", agent)
-                            for b in batch[robots_col]
-                        ],
-                        dtype="float64",
-                    ),
-                }
-            )
+    def _parse(bodies):
+        return ([crawl_delay_for_agent(b or "", agent) for b in bodies],)
 
-    return df.select(host_col, robots_col).mapInPandas(
-        _parse, schema="host string, crawl_delay double"
+    return map_arrow(
+        df.select(F.col(host_col).alias("host"), robots_col),
+        _parse, "host string, crawl_delay double", keep=("host",),
     )
 
 
@@ -224,30 +213,18 @@ def parse_robots(
     """``(host, rule, prefix, prefix_len)`` — one row per literal rule
     applying to ``agent``. Document-local Arrow flatMap, zero shuffle;
     feed the output (tiny: rules × hosts) to :func:`robots_allowed`."""
-    import pandas as pd
 
-    def _parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            hosts, kinds, prefixes = [], [], []
-            for host, body in zip(batch[host_col], batch[robots_col]):
-                parsed, _ = parse_robots_text(body or "", agent)
-                for kind, prefix in parsed:
-                    hosts.append(host)
-                    kinds.append(kind)
-                    prefixes.append(prefix)
-            yield pd.DataFrame(
-                {
-                    "host": pd.Series(hosts, dtype="object"),
-                    "rule": pd.Series(kinds, dtype="object"),
-                    "prefix": pd.Series(prefixes, dtype="object"),
-                    "prefix_len": pd.Series(
-                        [len(p) for p in prefixes], dtype="int32"
-                    ),
-                }
-            )
+    def _parse(hosts, bodies):
+        rows = [
+            (host, kind, prefix, len(prefix))
+            for host, body in zip(hosts, bodies)
+            for kind, prefix in parse_robots_text(body or "", agent)[0]
+        ]
+        return zip(*rows) if rows else ([],) * 4
 
-    return df.select(host_col, robots_col).mapInPandas(
-        _parse, schema="host string, rule string, prefix string, prefix_len int"
+    return map_arrow(
+        df.select(host_col, robots_col), _parse,
+        "host string, rule string, prefix string, prefix_len int",
     )
 
 

@@ -15,16 +15,16 @@ retrieval QA).
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.operators.util import (
     cache_mark,
     let_,
+    map_arrow,
     persist,
     release_between,
 )
@@ -95,23 +95,29 @@ def hyperplane_sketch(
     Arrow-vectorized pass (numpy matmul per batch)."""
     rng = np.random.RandomState(seed)
     planes = rng.normal(size=(num_planes, dim)).astype(np.float64)
-    cols = df.columns
+    weights = 1 << np.arange(num_planes, dtype=np.int64)
 
-    def _sketch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            mats = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-            ) if len(batch) else np.zeros((0, dim))
-            signs = (mats @ planes.T) > 0
-            bucket = signs @ (1 << np.arange(num_planes, dtype=np.int64))
-            out = batch.copy()
-            out["bucket"] = bucket.astype(np.int64)
-            yield out
+    def _bucket(mats):
+        return ((mats @ planes.T) > 0) @ weights
+
+    return _append_bucket(df, vec_col, _bucket)
+
+
+def _append_bucket(df: DataFrame, vec_col: str, bucket) -> DataFrame:
+    """``df`` plus ``bucket bigint`` = ``bucket(mats)`` over each batch's
+    stacked ``vec_col`` rows as a float64 matrix. Every other column is
+    kept zero-copy; the vector column goes through the pass and back, so
+    ``map_arrow`` keeps one contract (``fn`` reads only columns it is not
+    keeping) at about 1 µs per 64-dim row of re-encoding."""
+
+    def _sketch(vecs):
+        return vecs, bucket(np.stack(vecs).astype(np.float64, copy=False))
 
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", bucket bigint"
-    return df.mapInPandas(_sketch, schema=schema)
+    keep = [c for c in df.columns if c != vec_col]
+    return map_arrow(df, _sketch, schema, keep=keep)
 
 
 def lsh_topk(
@@ -183,27 +189,12 @@ def quantized_sketch(
     num_planes, dim = planes.shape
     planes_t = planes.T.astype(np.int64)
     weights = (1 << np.arange(num_planes, dtype=np.int64))
-    cols = df.columns
 
-    def _sketch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            if len(batch):
-                mats = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in batch[vec_col]]
-                )
-                q = (mats * QUANT_SCALE).astype(np.int64)  # trunc toward 0
-                bits = (q @ planes_t) > 0
-                bucket = bits @ weights
-            else:
-                bucket = np.zeros(0, dtype=np.int64)
-            out = batch.copy()
-            out["bucket"] = bucket
-            yield out
+    def _bucket(mats):
+        q = (mats * QUANT_SCALE).astype(np.int64)  # trunc toward 0
+        return ((q @ planes_t) > 0) @ weights
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", bucket bigint"
-    return df.mapInPandas(_sketch, schema=schema)
+    return _append_bucket(df, vec_col, _bucket)
 
 
 def mean_pool_embeddings(
@@ -338,30 +329,27 @@ def embedding_near_dup_pairs(
         )
     )
 
-    # Arrow-vectorized cosine verify: the candidate set is the hot loop
-    # (every near-dup candidate pays one cosine); numpy row-wise dot beats
-    # the interpreted fold ~50x and matches it to ~1e-15 (both sides of
-    # the driver comparison round to 6dp).
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = batch[["id_a", "id_b"]].copy()
-            if len(batch):
-                va = np.stack([np.asarray(v, dtype=np.float64) for v in batch["vec_a"]])
-                vb = np.stack([np.asarray(v, dtype=np.float64) for v in batch["vec_b"]])
-                dots = np.einsum("ij,ij->i", va, vb)
-                denom = np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)
-                out["cosine"] = np.where(denom > 0, dots / np.where(denom == 0, 1, denom), 0.0)
-            else:
-                out["cosine"] = np.zeros(0)
-            yield out
+    return _cosine_verify(cand).distinct().filter(F.col("cosine") >= threshold)
+
+
+def _cosine_verify(cand: DataFrame) -> DataFrame:
+    """``(id_a, id_b, vec_a, vec_b)`` → ``(id_a, id_b, cosine)`` in one
+    Arrow pass: the candidate set is the hot loop (every near-dup
+    candidate pays one cosine); numpy row-wise dot beats the interpreted
+    fold ~50x and matches it to ~1e-15 (both sides of the driver
+    comparison round to 6dp). A zero-norm side scores 0.0."""
+
+    def _score(vas, vbs):
+        va = np.stack(vas).astype(np.float64, copy=False)
+        vb = np.stack(vbs).astype(np.float64, copy=False)
+        dots = np.einsum("ij,ij->i", va, vb)
+        denom = np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)
+        return (np.where(denom > 0, dots / np.where(denom == 0, 1, denom), 0.0),)
 
     id_type = dict(cand.dtypes)["id_a"]
-    return (
-        cand.mapInPandas(
-            _score, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
-        )
-        .distinct()
-        .filter(F.col("cosine") >= threshold)
+    return map_arrow(
+        cand, _score, f"id_a {id_type}, id_b {id_type}, cosine double",
+        keep=("id_a", "id_b"),
     )
 
 
@@ -582,23 +570,7 @@ def semantic_dedup_pairs(
         )
     )
 
-    def _score(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        for batch in batches:
-            out = batch[["id_a", "id_b"]].copy()
-            if len(batch):
-                va = np.stack([np.asarray(v, dtype=np.float64) for v in batch["vec_a"]])
-                vb = np.stack([np.asarray(v, dtype=np.float64) for v in batch["vec_b"]])
-                dots = np.einsum("ij,ij->i", va, vb)
-                denom = np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)
-                out["cosine"] = np.where(denom > 0, dots / np.where(denom == 0, 1, denom), 0.0)
-            else:
-                out["cosine"] = np.zeros(0)
-            yield out
-
-    id_type = dict(cand.dtypes)["id_a"]
-    return cand.mapInPandas(
-        _score, schema=f"id_a {id_type}, id_b {id_type}, cosine double"
-    ).filter(F.col("cosine") >= tau)
+    return _cosine_verify(cand).filter(F.col("cosine") >= tau)
 
 
 def semantic_dedup(

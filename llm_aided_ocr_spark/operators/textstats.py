@@ -8,11 +8,14 @@ driver's oracle comparison.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from llm_aided_ocr_spark.functions.text import word_count_col
-from llm_aided_ocr_spark.operators.util import md5_52, persist
+from llm_aided_ocr_spark.operators.util import map_arrow, md5_52, persist
 
 # ---------------------------------------------------------------------------
 # Language ID — stopword-hit heuristic
@@ -459,8 +462,6 @@ def fingerprints(
     DuckDB oracle; the array order is unspecified. Documents shorter than
     ``window`` words yield an empty set. No shuffle."""
     import numpy as np
-    import pandas as pd
-    from typing import Iterator
 
     from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
 
@@ -476,44 +477,33 @@ def fingerprints(
         F.transform(F.split(t, " "), md5_52).alias("whs"),
     )
 
-    def _winnow(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            n_grams_out, fps_out = [], []
-            for whs in batch["whs"]:
-                w = np.asarray(whs, dtype=np.int64)
-                n_gr = max(len(w) - window + 1, 0)
-                if n_gr == 0:
-                    n_grams_out.append(0)
-                    fps_out.append([])
-                    continue
-                grams = np.zeros(n_gr, dtype=np.int64)
-                for j in range(window):
-                    x = w[j : j + n_gr]
-                    grams ^= (
-                        ((x << j) | (x >> (_FP_BITS - j))) & _FP_MASK if j else x
-                    )
-                if n_gr >= winnow:
-                    wins = np.lib.stride_tricks.sliding_window_view(
-                        grams, winnow
-                    ).min(axis=1)
-                else:
-                    wins = grams.min(keepdims=True)
-                n_grams_out.append(n_gr)
-                fps_out.append([int(v) for v in np.unique(wins)])
-            yield pd.DataFrame(
-                {
-                    id_col: batch[id_col],
-                    "content_hash": batch["content_hash"],
-                    "n_grams": n_grams_out,
-                    "fps": fps_out,
-                }
-            )
+    def _winnow(whss):
+        n_grams_out, fps_out = [], []
+        for w in whss:
+            n_gr = max(len(w) - window + 1, 0)
+            n_grams_out.append(n_gr)
+            if n_gr == 0:
+                fps_out.append(w[:0])
+                continue
+            grams = np.zeros(n_gr, dtype=np.int64)
+            for j in range(window):
+                x = w[j : j + n_gr]
+                grams ^= ((x << j) | (x >> (_FP_BITS - j))) & _FP_MASK if j else x
+            if n_gr >= winnow:
+                wins = np.lib.stride_tricks.sliding_window_view(
+                    grams, winnow
+                ).min(axis=1)
+            else:
+                wins = grams.min(keepdims=True)
+            fps_out.append(np.unique(wins))
+        return n_grams_out, fps_out
 
     id_type = dict(df.dtypes)[id_col]
-    return prepared.mapInPandas(
+    return map_arrow(
+        prepared,
         _winnow,
-        schema=f"{id_col} {id_type}, content_hash bigint, n_grams int, "
-        "fps array<bigint>",
+        f"{id_col} {id_type}, content_hash bigint, n_grams int, fps array<bigint>",
+        keep=(id_col, "content_hash"),
     )
 
 
@@ -809,37 +799,24 @@ def compression_ratio(
     n-gram table (it catches LONG-range repetition the fixed-n grams
     miss). Empty text reports ratio 0.
 
-    Arrow ``mapInPandas`` pass — zlib is per-document CPU with no
+    Arrow pass (``map_arrow``) — zlib is per-document CPU with no
     DataFrame expression equivalent; document-local, zero shuffle, and
     the batch size is bounded by the session's Arrow batch cap. The
     ratio depends on the DEFLATE encoder's choices, so this operator is
     deliberately not DuckDB-oracled (the driver records the rows-only
     check); tests pin exact values against Python zlib directly."""
     import zlib
-    from typing import Iterator
 
-    import pandas as pd
-
-    def _ratios(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            ids, raws, comps = [], [], []
-            for i, t in zip(batch[id_col], batch[text_col]):
-                b = (t or "").encode("utf-8")
-                ids.append(i)
-                raws.append(len(b))
-                comps.append(len(zlib.compress(b, level)))
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "raw_bytes": pd.Series(raws, dtype="int64"),
-                    "deflate_bytes": pd.Series(comps, dtype="int64"),
-                }
-            )
+    def _ratios(texts):
+        raws = [(t or "").encode("utf-8") for t in texts]
+        return [len(b) for b in raws], [len(zlib.compress(b, level)) for b in raws]
 
     id_type = dict(df.dtypes)[id_col]
-    out = df.select(id_col, text_col).mapInPandas(
+    out = map_arrow(
+        df.select(F.col(id_col).alias("id"), text_col),
         _ratios,
-        schema=f"id {id_type}, raw_bytes bigint, deflate_bytes bigint",
+        f"id {id_type}, raw_bytes bigint, deflate_bytes bigint",
+        keep=("id",),
     )
     return out.select(
         "id",
@@ -994,70 +971,20 @@ def repetition_metrics(
     O(n²) per doc and melt on long documents). The driver's oracle states
     the same metrics relationally (GROUP BY line / bigram), so the Python
     counting is value-checked against an independent set-based derivation.
+    Raw doubles out — rounding happens in the caller's projection with
+    F.round (HALF_UP, matching SQL round); Python's round() is banker's
+    and would diverge on exact .5 ties at 6dp.
     """
-    import re
-    from collections import Counter
-    from typing import Iterator
 
-    import pandas as pd
+    def _metrics(texts):
+        return zip(*(
+            _dup_fracs(t.split("\n")) + _ngram_fracs(t, (2,), ())
+            for t in texts
+        ))
 
-    word_re = re.compile(r"[^a-z0-9]+")
-
-    def _metrics(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, dlf, dlcf, tbcf = [], [], [], []
-            for id_, text in zip(batch["id"], batch["t"]):
-                text = text or ""
-                # ASCII whitespace class only — Python's bare strip() also
-                # eats unicode whitespace, which SQL trim(...) does not;
-                # the oracle trims the identical class
-                lines = [ln.strip(" \t\r\n\f\v") for ln in text.split("\n")]
-                lines = [ln for ln in lines if ln]
-                if lines:
-                    lc = Counter(lines)
-                    dlf.append(1.0 - len(lc) / len(lines))
-                    total_lc = sum(len(ln) * c for ln, c in lc.items())
-                    dup_lc = sum(len(ln) * c for ln, c in lc.items() if c > 1)
-                    dlcf.append(dup_lc / total_lc if total_lc else 0.0)
-                else:
-                    dlf.append(0.0)
-                    dlcf.append(0.0)
-                words = [w for w in word_re.split(text.lower()) if w]
-                total_wc = sum(len(w) for w in words)
-                if len(words) >= 2 and total_wc:
-                    bc = Counter(
-                        words[i] + " " + words[i + 1] for i in range(len(words) - 1)
-                    )
-                    top_n = max(bc.values())
-                    top = min(b for b, c in bc.items() if c == top_n)
-                    tbcf.append(top_n * (len(top) - 1) / total_wc)
-                else:
-                    tbcf.append(0.0)
-                ids.append(id_)
-            # raw doubles — rounding happens in the caller's projection
-            # with F.round (HALF_UP, matching SQL round); Python's round()
-            # is banker's and would diverge on exact .5 ties at 6dp
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "dup_line_frac": dlf,
-                    "dup_line_char_frac": dlcf,
-                    "top_bigram_char_frac": tbcf,
-                }
-            )
-
-    from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
-
-    prepped = ensure_min_parallelism(df).select(
-        F.col(id_col).alias("id"), F.coalesce(F.col(text_col), F.lit("")).alias("t")
-    )
-    id_type = dict(prepped.dtypes)["id"]  # follow the input's id type
-    return prepped.mapInPandas(
-        _metrics,
-        schema=(
-            f"doc_id {id_type}, dup_line_frac double, "
-            "dup_line_char_frac double, top_bigram_char_frac double"
-        ),
+    return _per_doc_doubles(
+        df, text_col, id_col, _metrics,
+        ["dup_line_frac", "dup_line_char_frac", "top_bigram_char_frac"],
     )
 
 
@@ -1091,54 +1018,86 @@ def paragraph_repetition_metrics(
     also eats unicode whitespace, which RE2 (the oracle's engine) does
     not, so the class is spelled out on both sides. Raw doubles out;
     callers round."""
-    import re
-    from collections import Counter
-    from typing import Iterator
 
-    import pandas as pd
+    def _metrics(texts):
+        return zip(*(_dup_fracs(_PARA_RE.split(t)) for t in texts))
 
-    para_re = re.compile(r"\n[ \t\r\f\v]*\n")
+    return _per_doc_doubles(
+        df, text_col, id_col, _metrics, ["dup_para_frac", "dup_para_char_frac"]
+    )
 
-    def _metrics(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            dpf, dpcf = [], []
-            for text in batch["t"]:
-                paras = [
-                    p.strip(" \t\r\n\f\v")
-                    for p in para_re.split(text or "")
-                ]
-                paras = [p for p in paras if p]
-                if paras:
-                    pc = Counter(paras)
-                    dpf.append(1.0 - len(pc) / len(paras))
-                    total = sum(len(p) * c for p, c in pc.items())
-                    dup = sum(len(p) * c for p, c in pc.items() if c > 1)
-                    dpcf.append(dup / total if total else 0.0)
-                else:
-                    dpf.append(0.0)
-                    dpcf.append(0.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["id"],
-                    "dup_para_frac": dpf,
-                    "dup_para_char_frac": dpcf,
-                }
-            )
 
+_WORD_RE = re.compile(r"[^a-z0-9]+")
+_PARA_RE = re.compile(r"\n[ \t\r\f\v]*\n")
+
+
+def _per_doc_doubles(
+    df: DataFrame, text_col: str, id_col: str, metrics, names
+) -> DataFrame:
+    """``(doc_id, <names> double)`` — ``metrics(texts)`` (one column per
+    name, NULL text read as ``""``) in one Arrow pass; ``doc_id`` keeps the
+    input's id type."""
     from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
 
     prepped = ensure_min_parallelism(df).select(
-        F.col(id_col).alias("id"),
+        F.col(id_col).alias("doc_id"),
         F.coalesce(F.col(text_col), F.lit("")).alias("t"),
     )
-    id_type = dict(prepped.dtypes)["id"]
-    return prepped.mapInPandas(
-        _metrics,
-        schema=(
-            f"doc_id {id_type}, dup_para_frac double, "
-            "dup_para_char_frac double"
-        ),
+    id_type = dict(prepped.dtypes)["doc_id"]
+    fields = ", ".join(f"{c} double" for c in names)
+    return map_arrow(
+        prepped, metrics, f"doc_id {id_type}, {fields}", keep=("doc_id",)
     )
+
+
+def _dup_fracs(parts) -> list:
+    """``[dup_frac, dup_char_frac]`` over the non-blank parts (lines or
+    paragraphs), each stripped of the explicit ASCII whitespace class —
+    Python's bare ``strip()`` also eats unicode whitespace, which SQL
+    ``trim(...)`` does not: 1 − distinct/total, and the chars of parts
+    whose content repeats (every occurrence) over the chars of all parts."""
+    parts = [p for p in (p.strip(" \t\r\n\f\v") for p in parts) if p]
+    if not parts:
+        return [0.0, 0.0]
+    counts = Counter(parts)
+    total = sum(len(p) * c for p, c in counts.items())
+    dup = sum(len(p) * c for p, c in counts.items() if c > 1)
+    return [1.0 - len(counts) / len(parts), dup / total if total else 0.0]
+
+
+def _ngram_fracs(text: str, top_ns, dup_ns) -> list:
+    """``top_{n}gram_char_frac`` for each n in ``top_ns``, then
+    ``dup_{n}gram_char_frac`` for each n in ``dup_ns`` — the
+    :func:`gopher_ngram_metrics` definitions; 0.0 for a document with
+    fewer than n words."""
+    import numpy as np
+
+    words = [w for w in _WORD_RE.split(text.lower()) if w]
+    lens = np.fromiter((len(w) for w in words), dtype=np.int64, count=len(words))
+    total = int(lens.sum())
+    out = []
+    for n in top_ns:
+        if len(words) < n or not total:
+            out.append(0.0)
+            continue
+        grams = Counter(
+            " ".join(words[i : i + n]) for i in range(len(words) - n + 1)
+        )
+        top_c = max(grams.values())
+        top = min(g for g, c in grams.items() if c == top_c)
+        out.append(top_c * (len(top) - (n - 1)) / total)
+    for n in dup_ns:
+        if len(words) < n or not total:
+            out.append(0.0)
+            continue
+        grams = [tuple(words[i : i + n]) for i in range(len(words) - n + 1)]
+        cnt = Counter(grams)
+        covered = np.zeros(len(words), dtype=bool)
+        for i, g in enumerate(grams):
+            if cnt[g] > 1:
+                covered[i : i + n] = True
+        out.append(float(lens[covered].sum()) / total)
+    return out
 
 
 _GATE_COLS = (
@@ -1152,72 +1111,14 @@ _GATE_COLS = (
 
 def _fused_gate_metrics(text: str) -> list:
     """All 13 repetition fractions for one document, in ``_GATE_COLS``
-    order — the single-pass kernel behind :func:`gopher_repetition_gate`.
-    Must agree value-for-value with the three standalone operators (pinned by
-    ``test_gate_fused_matches_composed``); the oracle validates it
-    end-to-end independently."""
-    import re
-    from collections import Counter
-
-    import numpy as np
-
-    text = text or ""
-    out = {}
-    # --- line metrics (repetition_metrics semantics) ---
-    lines = [ln.strip(" \t\r\n\f\v") for ln in text.split("\n")]
-    lines = [ln for ln in lines if ln]
-    if lines:
-        lc = Counter(lines)
-        out["dup_line_frac"] = 1.0 - len(lc) / len(lines)
-        total_lc = sum(len(ln) * c for ln, c in lc.items())
-        dup_lc = sum(len(ln) * c for ln, c in lc.items() if c > 1)
-        out["dup_line_char_frac"] = dup_lc / total_lc if total_lc else 0.0
-    else:
-        out["dup_line_frac"] = out["dup_line_char_frac"] = 0.0
-    # --- paragraph metrics ---
-    paras = [
-        p.strip(" \t\r\n\f\v")
-        for p in re.split(r"\n[ \t\r\f\v]*\n", text)
-    ]
-    paras = [p for p in paras if p]
-    if paras:
-        pc = Counter(paras)
-        out["dup_para_frac"] = 1.0 - len(pc) / len(paras)
-        total_pc = sum(len(p) * c for p, c in pc.items())
-        dup_pc = sum(len(p) * c for p, c in pc.items() if c > 1)
-        out["dup_para_char_frac"] = dup_pc / total_pc if total_pc else 0.0
-    else:
-        out["dup_para_frac"] = out["dup_para_char_frac"] = 0.0
-    # --- n-gram metrics (gopher_ngram_metrics semantics) ---
-    words = [w for w in re.split(r"[^a-z0-9]+", text.lower()) if w]
-    lens = np.fromiter(
-        (len(w) for w in words), dtype=np.int64, count=len(words)
-    )
-    total = int(lens.sum())
-    for n in (2, 3, 4):
-        col = f"top_{n}gram_char_frac"
-        if len(words) < n or not total:
-            out[col] = 0.0
-            continue
-        grams = Counter(
-            " ".join(words[i : i + n]) for i in range(len(words) - n + 1)
-        )
-        top_c = max(grams.values())
-        top = min(g for g, c in grams.items() if c == top_c)
-        out[col] = top_c * (len(top) - (n - 1)) / total
-    for n in (5, 6, 7, 8, 9, 10):
-        col = f"dup_{n}gram_char_frac"
-        if len(words) < n or not total:
-            out[col] = 0.0
-            continue
-        grams = [tuple(words[i : i + n]) for i in range(len(words) - n + 1)]
-        cnt = Counter(grams)
-        covered = np.zeros(len(words), dtype=bool)
-        for i, g in enumerate(grams):
-            if cnt[g] > 1:
-                covered[i : i + n] = True
-        out[col] = float(lens[covered].sum()) / total
-    return [out[c] for c in _GATE_COLS]
+    order — the single-pass kernel behind :func:`gopher_repetition_gate`,
+    built from the same helpers as the three standalone operators
+    (``test_gate_fused_matches_composed`` pins them equal); the oracle
+    validates it end-to-end independently."""
+    line = _dup_fracs(text.split("\n"))
+    para = _dup_fracs(_PARA_RE.split(text))
+    grams = _ngram_fracs(text, (2, 3, 4), (5, 6, 7, 8, 9, 10))
+    return line + grams[:1] + para + grams[1:]
 
 
 def gopher_repetition_gate(
@@ -1249,27 +1150,11 @@ def gopher_repetition_gate(
         if unknown:
             raise ValueError(f"unknown threshold keys: {sorted(unknown)}")
         th.update(thresholds)
-    from typing import Iterator
 
-    import pandas as pd
+    def _metrics(texts):
+        return zip(*map(_fused_gate_metrics, texts))
 
-    from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
-
-    def _metrics(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            vals = [_fused_gate_metrics(t) for t in batch["t"]]
-            out = {"doc_id": batch["id"]}
-            for j, c in enumerate(_GATE_COLS):
-                out[c] = [v[j] for v in vals]
-            yield pd.DataFrame(out)
-
-    prepped = ensure_min_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("t"),
-    )
-    id_type = dict(prepped.dtypes)["id"]
-    fields = ", ".join(f"{c} double" for c in _GATE_COLS)
-    raw = prepped.mapInPandas(_metrics, schema=f"doc_id {id_type}, {fields}")
+    raw = _per_doc_doubles(df, text_col, id_col, _metrics, _GATE_COLS)
     metrics = raw.select(
         "doc_id", *[F.round(c, 6).alias(c) for c in _GATE_COLS]
     )
@@ -1309,68 +1194,14 @@ def gopher_ngram_metrics(
     and a position-coverage bitmap — never the O(n²) per-distinct-gram
     rescan. Raw doubles out; callers round (HALF_UP ``F.round``) for
     cross-engine comparison."""
-    import re
-    from collections import Counter
-    from typing import Iterator
 
-    import numpy as np
-    import pandas as pd
+    def _metrics(texts):
+        return zip(*(_ngram_fracs(t, top_ns, dup_ns) for t in texts))
 
-    word_re = re.compile(r"[^a-z0-9]+")
-    top_cols = [f"top_{n}gram_char_frac" for n in top_ns]
-    dup_cols = [f"dup_{n}gram_char_frac" for n in dup_ns]
-
-    def _metrics(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": batch["id"]}
-            cols = {c: [] for c in top_cols + dup_cols}
-            for text in batch["t"]:
-                words = [w for w in word_re.split((text or "").lower()) if w]
-                lens = np.fromiter(
-                    (len(w) for w in words), dtype=np.int64, count=len(words)
-                )
-                total = int(lens.sum())
-                for n, col in zip(top_ns, top_cols):
-                    if len(words) < n or not total:
-                        cols[col].append(0.0)
-                        continue
-                    grams = Counter(
-                        " ".join(words[i : i + n])
-                        for i in range(len(words) - n + 1)
-                    )
-                    top_c = max(grams.values())
-                    top = min(g for g, c in grams.items() if c == top_c)
-                    gram_chars = len(top) - (n - 1)
-                    cols[col].append(top_c * gram_chars / total)
-                for n, col in zip(dup_ns, dup_cols):
-                    if len(words) < n or not total:
-                        cols[col].append(0.0)
-                        continue
-                    grams = [
-                        tuple(words[i : i + n])
-                        for i in range(len(words) - n + 1)
-                    ]
-                    cnt = Counter(grams)
-                    covered = np.zeros(len(words), dtype=bool)
-                    for i, g in enumerate(grams):
-                        if cnt[g] > 1:
-                            covered[i : i + n] = True
-                    cols[col].append(float(lens[covered].sum()) / total)
-            out.update(cols)
-            yield pd.DataFrame(out)
-
-    from llm_aided_ocr_spark.operators.util import ensure_min_parallelism
-
-    prepped = ensure_min_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("t"),
-    )
-    id_type = dict(prepped.dtypes)["id"]
-    fields = ", ".join(
-        f"{c} double" for c in top_cols + dup_cols
-    )
-    return prepped.mapInPandas(
-        _metrics, schema=f"doc_id {id_type}, {fields}"
+    return _per_doc_doubles(
+        df, text_col, id_col, _metrics,
+        [f"top_{n}gram_char_frac" for n in top_ns]
+        + [f"dup_{n}gram_char_frac" for n in dup_ns],
     )
 
 

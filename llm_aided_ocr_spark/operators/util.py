@@ -237,49 +237,136 @@ def skip_unchanged_zip_refreshes() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+def _list_rows(arr, values) -> list:
+    """One slice of ``values`` (``arr``'s flattened values, converted
+    once) per row of the list array ``arr``; a null row is ``None``."""
+    import numpy as np
+
+    off = arr.offsets.to_numpy().tolist()
+    rows = [values[a:b] for a, b in zip(off[:-1], off[1:])]
+    if arr.null_count:
+        for i in np.flatnonzero(arr.is_null().to_numpy(zero_copy_only=False)):
+            rows[i] = None
+    return rows
+
+
+def _reader(dtype):
+    """How ``map_arrow`` hands one input column of Spark type ``dtype`` to
+    ``fn``, chosen once per column at plan time. An array of numbers: one
+    read-only numpy view per row over the Arrow values buffer (a null
+    element reads as NaN, as in pandas). An array of strings: one Python
+    list per row, sliced from one conversion of the flat values —
+    ``to_pylist`` builds a scalar per element, ~10x slower on word
+    arrays. Everything else: ``to_pylist``."""
+    from pyspark.sql.types import (
+        ArrayType,
+        DoubleType,
+        FloatType,
+        IntegralType,
+        StringType,
+    )
+
+    if isinstance(dtype, ArrayType):
+        element = dtype.elementType
+        if isinstance(element, (IntegralType, FloatType, DoubleType)):
+            return lambda arr: _list_rows(
+                arr, arr.values.to_numpy(zero_copy_only=False)
+            )
+        if isinstance(element, StringType):
+            return lambda arr: _list_rows(
+                arr, arr.values.to_numpy(zero_copy_only=False).tolist()
+            )
+    return lambda arr: arr.to_pylist()
+
+
+def _arrow_pass(df: DataFrame, fn, schema: str, keep):
+    """The batch function shared by :func:`map_arrow` and
+    :func:`apply_arrow`: one input ``RecordBatch`` in, one output
+    ``RecordBatch`` of ``schema`` (DDL or ``StructType``) out. Column
+    readers and output types are fixed here, once, at plan time."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    keep = frozenset(keep)
+    inputs = [
+        (f.name, _reader(f.dataType)) for f in df.schema.fields
+        if f.name not in keep
+    ]
+
+    def run(batch):
+        import pyarrow as pa
+
+        built = iter(fn(*(read(batch.column(c)) for c, read in inputs)))
+        return pa.RecordBatch.from_arrays(
+            [
+                batch.column(f.name) if f.name in keep
+                else pa.array(next(built), f.type, from_pandas=True)
+                for f in arrow_schema
+            ],
+            names=arrow_schema.names,
+        )
+
+    return run, arrow_schema
+
+
 def map_arrow(df: DataFrame, fn, schema: str, keep=()) -> DataFrame:
     """``df.mapInArrow`` with the package's Arrow batch handling in one
-    place — the one way a pipeline pass crosses into Python.
+    place — the one way a Python pass crosses the JVM boundary.
 
     ``fn`` is called once per non-empty batch with the batch's columns
-    that are NOT in ``keep``, in ``df``'s column order, as Python lists,
-    and returns one sequence per non-kept field of the DDL ``schema``, in
-    schema order. Each ``keep`` column goes back as the input's own Arrow
-    array, zero-copy, so it must already have the schema's type, and
-    ``fn`` must then return one value per input row (a pass that expands
-    rows keeps nothing). Every built array takes the schema field's Arrow
-    type: a value of the wrong type fails here, at the boundary, instead
-    of passing through pandas dtype inference.
+    that are NOT in ``keep``, in ``df``'s column order, and returns one
+    sequence per non-kept field of the DDL ``schema``, in schema order.
+    A column whose Spark type is an array of numbers reaches ``fn`` as
+    one read-only numpy view per row (``None`` for a null row); every
+    other column as a Python list, of lists for an array of strings
+    (``to_pylist`` values: a timestamp is a UTC-aware ``datetime``,
+    binary is ``bytes``). Each ``keep`` column
+    goes back as the input's own Arrow array, zero-copy, so it must
+    already have the schema's type, and ``fn`` must then return one
+    value per input row (a pass that expands rows keeps nothing).
+
+    Every built array takes the schema field's Arrow type: a value of the
+    wrong type fails here, at the boundary, instead of passing through
+    pandas dtype inference. Rows may be numpy arrays or scalars. A NaN in
+    a float field becomes NULL, as the pandas conversion made it. A timestamp
+    field takes naive UTC ``datetime`` values, whatever the session time
+    zone (pyarrow writes an aware value's wall-clock time as UTC, dropping
+    its offset).
 
     Each task first installs :func:`skip_unchanged_zip_refreshes` in its
     worker (a no-op after the worker's first task), so later tasks of that
     worker skip the per-task re-read of unchanged zip archives on
     ``sys.path``."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    fields = list(to_arrow_schema(StructType.fromDDL(schema)))
-    keep = frozenset(keep)
-    inputs = [c for c in df.columns if c not in keep]
+    run, _ = _arrow_pass(df, fn, schema, keep)
 
     def _run(batches):
+        skip_unchanged_zip_refreshes()
+        for batch in batches:
+            if batch.num_rows:
+                yield run(batch)
+
+    return df.mapInArrow(_run, schema=schema)
+
+
+def apply_arrow(df: DataFrame, by, fn, schema: str) -> DataFrame:
+    """``df.groupBy(*by).applyInArrow``: :func:`map_arrow`'s contract,
+    with ``fn`` called once per group (every column of ``df``, the
+    grouping columns included) and free to return any number of rows."""
+    run, arrow_schema = _arrow_pass(df, fn, schema, ())
+
+    def _run(table):
         import pyarrow as pa
 
         skip_unchanged_zip_refreshes()
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            built = iter(fn(*(batch.column(c).to_pylist() for c in inputs)))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(f.name) if f.name in keep
-                    else pa.array(next(built), f.type)
-                    for f in fields
-                ],
-                names=[f.name for f in fields],
-            )
+        return pa.Table.from_batches(
+            [run(b) for b in table.combine_chunks().to_batches()],
+            schema=arrow_schema,
+        )
 
-    return df.mapInArrow(_run, schema=schema)
+    return df.groupBy(*by).applyInArrow(_run, schema=schema)
 
 
 # -- cache lifetime ---------------------------------------------------------

@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from llm_aided_ocr_spark.operators.util import map_arrow
+
 GOLDEN_RAW_OCR_PATH = (
     "/root/reference/160301289-Warren-Buffett-Katharine-Graham-Letter__raw_ocr_output.txt"
 )
@@ -204,40 +206,34 @@ def pages_dataframe_distributed(
     mega_every: int = 10_000,
     with_html: bool = False,
 ) -> DataFrame:
-    """Bench-scale corpus generated ON THE EXECUTORS via ``mapInPandas``
-    over ``spark.range`` — the driver never materializes the corpus, so
-    generation scales with the cluster like a real source would."""
-    import pandas as pd  # local import: executors need it, driver may not
+    """Bench-scale corpus generated ON THE EXECUTORS by one Arrow pass
+    (``operators.util.map_arrow``) over ``spark.range`` — the driver never
+    materializes the corpus, so generation scales with the cluster like a
+    real source would. ``warc_ts`` is ``_EPOCH`` (UTC) + 37 s per id under
+    any session time zone."""
 
-    def _gen(batches):
-        for batch in batches:
-            ids = batch["id"].tolist()
-            texts = [_bench_text_for_id(int(i), seed, mega_every) for i in ids]
-            out = pd.DataFrame(
-                {
-                    "url": [f"https://example-{i % 97}.test/doc/{i}" for i in ids],
-                    "warc_ts": [_EPOCH + _dt.timedelta(seconds=37 * int(i)) for i in ids],
-                    "html": [
-                        _wrap_html(t, f"doc {i}") if with_html else None
-                        for i, t in zip(ids, texts)
-                    ],
-                    "text": texts,
-                    "lang": [
-                        "en"
-                        if random.Random((seed << 16) ^ int(i)).random() < 0.9
-                        else _LANGS[int(i) % len(_LANGS)]
-                        for i in ids
-                    ],
-                }
-            )
-            yield out
-
-    return (
-        spark.range(0, n_rows, numPartitions=num_partitions)
-        .mapInPandas(
-            _gen,
-            schema="url string, warc_ts timestamp, html binary, text string, lang string",
+    def _gen(ids):
+        texts = [_bench_text_for_id(i, seed, mega_every) for i in ids]
+        return (
+            [f"https://example-{i % 97}.test/doc/{i}" for i in ids],
+            [_EPOCH + _dt.timedelta(seconds=37 * i) for i in ids],
+            [
+                _wrap_html(t, f"doc {i}") if with_html else None
+                for i, t in zip(ids, texts)
+            ],
+            texts,
+            [
+                "en"
+                if random.Random((seed << 16) ^ i).random() < 0.9
+                else _LANGS[i % len(_LANGS)]
+                for i in ids
+            ],
         )
+
+    return map_arrow(
+        spark.range(0, n_rows, numPartitions=num_partitions),
+        _gen,
+        "url string, warc_ts timestamp, html binary, text string, lang string",
     )
 
 

@@ -10,7 +10,8 @@ reader can split work at member boundaries; this parser accepts both
 plain and (multi-member) gzip bytes.
 
 Scale shape: one WARC segment (row of binary) → many page rows is a
-pure ``mapInPandas`` flatMap — document-local, zero shuffle, composing
+pure Arrow flatMap (``operators.util.map_arrow``) — document-local, zero
+shuffle, composing
 with everything downstream of ``extract_text``. Segments are the unit
 of parallelism exactly as in a real crawl read (CC publishes ~1 GB
 segments; ``spark.read.format("binaryFile")`` or a manifest join feeds
@@ -39,6 +40,8 @@ from typing import Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from llm_aided_ocr_spark.operators.util import map_arrow
 
 _CRLF2 = b"\r\n\r\n"
 _DATE_RE = re.compile(
@@ -126,6 +129,42 @@ def _http_body(payload: bytes) -> bytes:
     return payload
 
 
+def _parse_records(
+    segments: DataFrame,
+    content_col: str,
+    segment_col: str | None,
+    warc_type: str,
+    body,
+    body_field: str,
+) -> DataFrame:
+    """``(segment, url, warc_date, warc_ts_unix, <body_field>)`` — one row
+    per ``warc_type`` record with a target URI across all segment blobs;
+    ``body`` maps the record payload to the last column."""
+
+    def _parse(blobs, names=None):
+        rows = []
+        for name, blob in zip(names or [None] * len(blobs), blobs):
+            if blob is None:
+                continue
+            for headers, payload in iter_warc_records(blob):
+                url = headers.get("warc-target-uri")
+                if headers.get("warc-type") != warc_type or not url:
+                    continue
+                date = headers.get("warc-date", "")
+                rows.append(
+                    (name, url, date, _parse_date_unix(date), body(payload))
+                )
+        return zip(*rows) if rows else ([],) * 5
+
+    cols = [content_col] + ([segment_col] if segment_col else [])
+    return map_arrow(
+        segments.select(*cols),
+        _parse,
+        "segment string, url string, warc_date string, warc_ts_unix bigint, "
+        f"{body_field}",
+    )
+
+
 def parse_warc(
     segments: DataFrame,
     content_col: str = "content",
@@ -136,46 +175,9 @@ def parse_warc(
     metadata records are skipped, like every crawl reader). ``segment``
     carries ``segment_col``'s value (or a null string) so lineage
     counters can attribute pages to their source segment."""
-    import pandas as pd
-
-    seg = segment_col
-
-    def _parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            segs, urls, dates, units, htmls = [], [], [], [], []
-            names = batch[seg] if seg else [None] * len(batch)
-            for name, blob in zip(names, batch[content_col]):
-                if blob is None:
-                    continue
-                for headers, payload in iter_warc_records(bytes(blob)):
-                    if headers.get("warc-type") != "response":
-                        continue
-                    url = headers.get("warc-target-uri")
-                    if not url:
-                        continue
-                    date = headers.get("warc-date", "")
-                    segs.append(name)
-                    urls.append(url)
-                    dates.append(date)
-                    units.append(_parse_date_unix(date))
-                    htmls.append(_http_body(payload))
-            yield pd.DataFrame(
-                {
-                    "segment": pd.Series(segs, dtype="object"),
-                    "url": pd.Series(urls, dtype="object"),
-                    "warc_date": pd.Series(dates, dtype="object"),
-                    "warc_ts_unix": pd.Series(units, dtype="object"),
-                    "html": pd.Series(htmls, dtype="object"),
-                }
-            )
-
-    cols = [content_col] + ([seg] if seg else [])
-    return segments.select(*cols).mapInPandas(
-        _parse,
-        schema=(
-            "segment string, url string, warc_date string, "
-            "warc_ts_unix bigint, html binary"
-        ),
+    return _parse_records(
+        segments, content_col, segment_col, "response", _http_body,
+        "html binary",
     )
 
 
@@ -194,49 +196,12 @@ def parse_wet(
     already paid for extraction.
 
     Same scale shape as :func:`parse_warc`: segment blob → rows is a
-    document-local ``mapInPandas`` flatMap, zero shuffle; torn records
+    document-local Arrow flatMap, zero shuffle; torn records
     end the blob's iteration instead of failing the task. Payload bytes
     are decoded UTF-8 with replacement (WET is specified UTF-8)."""
-    import pandas as pd
-
-    seg = segment_col
-
-    def _parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            segs, urls, dates, units, texts = [], [], [], [], []
-            names = batch[seg] if seg else [None] * len(batch)
-            for name, blob in zip(names, batch[content_col]):
-                if blob is None:
-                    continue
-                for headers, payload in iter_warc_records(bytes(blob)):
-                    if headers.get("warc-type") != "conversion":
-                        continue
-                    url = headers.get("warc-target-uri")
-                    if not url:
-                        continue
-                    date = headers.get("warc-date", "")
-                    segs.append(name)
-                    urls.append(url)
-                    dates.append(date)
-                    units.append(_parse_date_unix(date))
-                    texts.append(payload.decode("utf-8", "replace"))
-            yield pd.DataFrame(
-                {
-                    "segment": pd.Series(segs, dtype="object"),
-                    "url": pd.Series(urls, dtype="object"),
-                    "warc_date": pd.Series(dates, dtype="object"),
-                    "warc_ts_unix": pd.Series(units, dtype="object"),
-                    "text": pd.Series(texts, dtype="object"),
-                }
-            )
-
-    cols = [content_col] + ([seg] if seg else [])
-    return segments.select(*cols).mapInPandas(
-        _parse,
-        schema=(
-            "segment string, url string, warc_date string, "
-            "warc_ts_unix bigint, text string"
-        ),
+    return _parse_records(
+        segments, content_col, segment_col, "conversion",
+        lambda payload: payload.decode("utf-8", "replace"), "text string",
     )
 
 

@@ -225,7 +225,11 @@ def streaming_dedup_by_key(
 
     ``applyInPandasWithState`` keeps one boolean per key in the state
     store; output mode is append (each input row is emitted at most once,
-    immediately)."""
+    immediately). This is the package's one pandas pass: pyspark 4.1 has
+    no Arrow form of ``applyInPandasWithState``, and ``transformWithState``
+    is a different state API, so every other Python pass goes through
+    ``operators.util.map_arrow`` and this one stays on pandas — executors
+    need pandas only for it."""
     schema = df.schema
 
     def _dedup(

@@ -342,7 +342,8 @@ def test_annotate_is_one_native_projection(spark):
     with redirect_stdout(buf):
         out.explain("simple")
     plan = buf.getvalue()
-    for bad in ("Exchange", "EvalPython", "PythonUDF", "MapInPandas"):
+    for bad in ("Exchange", "EvalPython", "PythonUDF", "MapInPandas",
+                "MapInArrow", "FlatMapGroupsInArrow"):
         assert bad not in plan, bad
 
 

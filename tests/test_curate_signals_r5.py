@@ -60,7 +60,8 @@ def test_annotate_new_columns_match_operators(spark):
     with redirect_stdout(buf):
         tagged.explain("simple")
     plan = buf.getvalue()
-    for bad in ("Exchange", "EvalPython", "PythonUDF", "MapInPandas"):
+    for bad in ("Exchange", "EvalPython", "PythonUDF", "MapInPandas",
+                "MapInArrow", "FlatMapGroupsInArrow"):
         assert bad not in plan, bad
 
 

@@ -235,7 +235,7 @@ def test_minhash_signatures_shuffle_free(spark):
         ln for ln in plan.splitlines() if "REPARTITION_BY_NUM" not in ln
     )
     assert "Exchange" not in body, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_exact_keeper_ids(spark, corpus):

@@ -76,4 +76,5 @@ def test_mixer_plan_shape(spark):
     plan = buf.getvalue()
     assert "BroadcastHashJoin" not in plan  # keep relation is O(corpus)
     assert "LeftSemi" in plan
-    assert "PythonUDF" not in plan and "MapInPandas" not in plan
+    for node in ("PythonUDF", "MapInPandas", "MapInArrow", "FlatMapGroupsInArrow"):
+        assert node not in plan

@@ -135,7 +135,8 @@ def test_normalize_is_pure_projection(spark):
     df = spark.createDataFrame([("x", "A b 1 É")], "doc_id string, text string")
     plan = normalize_text(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                   "MapInArrow", "FlatMapGroupsInArrow"):
         assert marker not in plan
 
 

@@ -410,7 +410,7 @@ def test_lang_filter_pushes_down(spark):
 
 def test_native_queries_have_no_python_stage(spark):
     """Token estimation, header strip, quality score must stay JVM-side —
-    no ArrowEvalPython/BatchEvalPython/MapInPandas in the plan.
+    no ArrowEvalPython/BatchEvalPython/MapInPandas/MapInArrow in the plan.
     (fingerprints intentionally moved to a vectorized Arrow pass for its
     rolling/winnowing loop; its word hashes remain native.)"""
     import __spark_entry__ as e
@@ -421,7 +421,8 @@ def test_native_queries_have_no_python_stage(spark):
         plan = _plan(df)
         assert "EvalPython" not in plan, f"{name} fell off the JVM path"
         assert "PythonUDF" not in plan, f"{name} fell off the JVM path"
-        assert "MapInPandas" not in plan, f"{name} fell off the JVM path"
+        for node in ("MapInPandas", "MapInArrow", "FlatMapGroupsInArrow"):
+            assert node not in plan, f"{name} fell off the JVM path"
 
 
 def test_ann_broadcasts_queries(spark):
@@ -629,7 +630,7 @@ def test_canonical_dedup_uses_struct_min_not_window(spark):
 
 
 def test_bpe_counts_tokenize_distinct_words_only(spark):
-    """The merge-walk MapInPandas consumes the output of a distinct-word
+    """The merge-walk MapInArrow consumes the output of a distinct-word
     aggregate (schema (w)), never the corpus rows, and the per-doc sum
     joins pre-aggregated (id, w, n) — no per-occurrence join input."""
     from llm_aided_ocr_spark.operators.bpe import bpe_token_counts
@@ -639,8 +640,8 @@ def test_bpe_counts_tokenize_distinct_words_only(spark):
     df = bpe_token_counts(docs, [(0, "e", "r", 1)])
     plan = _plan(df)
     release_pinned(df)
-    mp_ix = plan.index("MapInPandas")
-    # the MapInPandas block's immediate input chain contains the
+    mp_ix = plan.index("MapInArrow")
+    # the MapInArrow block's immediate input chain contains the
     # distinct-word HashAggregate before any corpus scan reappears
     below = plan[mp_ix:]
     agg = below.find("HashAggregate(keys=[w")

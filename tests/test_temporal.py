@@ -73,7 +73,8 @@ def test_as_of_join_is_native(spark):
         df.explain()
     plan = buf.getvalue()
     assert "Window" in plan and "Union" in plan
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
+    for node in ("EvalPython", "MapInPandas", "MapInArrow", "FlatMapGroupsInArrow"):
+        assert node not in plan
 
 
 def test_host_fetch_stats(spark):

@@ -603,7 +603,8 @@ def test_url_filter_empty_lists_keep_all_and_stay_native(spark):
             df, blocked_domains=("a.b",), blocked_keywords=("k",)
         ).explain("simple")
     plan = buf.getvalue()
-    for marker in ("EvalPython", "PythonUDF", "MapInPandas"):
+    for marker in ("EvalPython", "PythonUDF", "MapInPandas", "MapInArrow",
+                   "FlatMapGroupsInArrow"):
         assert marker not in plan
 
 
