@@ -354,7 +354,7 @@ def main(argv=None) -> int:
 
     result.write.mode("overwrite").parquet(args.output + "/corrected_docs")
 
-    # the terminal action is done — release the auto strategy's routed cache
+    # the terminal action is done — release the staged branch's input cache
     from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
 
     release_pipeline_cache(result)

@@ -224,12 +224,14 @@ def embed_media_stub(
     cols = df.select("url", media_col)
 
     def _embed(blobs):
-        return ([
-            np.random.RandomState(
-                int.from_bytes(hashlib.sha256(b or b"").digest()[:4], "big")
-            ).uniform(-1, 1, dim)
-            for b in blobs
-        ],)
+        # one state per batch, reseeded per row: building a RandomState
+        # costs far more than seeding one, and the draws are the same
+        rs = np.random.RandomState()
+        out = []
+        for b in blobs:
+            rs.seed(int.from_bytes(hashlib.sha256(b or b"").digest()[:4], "big"))
+            out.append(rs.uniform(-1, 1, dim))
+        return (out,)
 
     return map_arrow(
         cols, _embed, "url string, embedding array<double>", keep=("url",)

@@ -295,6 +295,24 @@ def _arrow_pass(df: DataFrame, fn, schema: str, keep):
         (f.name, _reader(f.dataType)) for f in df.schema.fields
         if f.name not in keep
     ]
+    # pyarrow writes an aware datetime's wall-clock time as UTC, dropping
+    # its offset: fields of a zoned timestamp type take each aware value
+    # as its instant in UTC
+    zoned = frozenset(
+        f.name for f in arrow_schema if getattr(f.type, "tz", None) is not None
+    )
+
+    def build(f, values):
+        import pyarrow as pa
+
+        if f.name in zoned:
+            from datetime import timezone
+
+            values = [
+                v.astimezone(timezone.utc) if getattr(v, "tzinfo", None) else v
+                for v in values
+            ]
+        return pa.array(values, f.type, from_pandas=True)
 
     def run(batch):
         import pyarrow as pa
@@ -302,8 +320,7 @@ def _arrow_pass(df: DataFrame, fn, schema: str, keep):
         built = iter(fn(*(read(batch.column(c)) for c, read in inputs)))
         return pa.RecordBatch.from_arrays(
             [
-                batch.column(f.name) if f.name in keep
-                else pa.array(next(built), f.type, from_pandas=True)
+                batch.column(f.name) if f.name in keep else build(f, next(built))
                 for f in arrow_schema
             ],
             names=arrow_schema.names,
@@ -332,9 +349,8 @@ def map_arrow(df: DataFrame, fn, schema: str, keep=()) -> DataFrame:
     wrong type fails here, at the boundary, instead of passing through
     pandas dtype inference. Rows may be numpy arrays or scalars. A NaN in
     a float field becomes NULL, as the pandas conversion made it. A timestamp
-    field takes naive UTC ``datetime`` values, whatever the session time
-    zone (pyarrow writes an aware value's wall-clock time as UTC, dropping
-    its offset).
+    field takes a naive ``datetime`` as UTC, whatever the session time
+    zone, and an aware one as the instant it names.
 
     Each task first installs :func:`skip_unchanged_zip_refreshes` in its
     worker (a no-op after the worker's first task), so later tasks of that

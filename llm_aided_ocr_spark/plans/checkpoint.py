@@ -140,7 +140,9 @@ class CheckpointStore:
                 self.stage_path(stage), f"inc_{self.run_id}_{time.time_ns()}"
             )
             df.write.mode("errorifexists").parquet(inc_path)
-            increment = spark.read.parquet(inc_path)
+            # the schema just written: inferring it from the footers is a
+            # Spark job of its own
+            increment = spark.read.schema(df.schema).parquet(inc_path)
             commit_name = os.path.basename(inc_path)
 
         agg_cols = [F.count(F.lit(1)).alias("rows")]

@@ -147,11 +147,9 @@ def curate(
         # pipeline never runs. Keeps the LONGEST raw fetch per
         # canonical url (canonical_url_keepers' contract).
         from llm_aided_ocr_spark.operators.dedup import canonical_url_keepers
-        from llm_aided_ocr_spark.operators.util import cache_mark, corpus_scaled
+        from llm_aided_ocr_spark.operators.util import corpus_scaled
 
-        ck_start = cache_mark()
         ck = canonical_url_keepers(pages_df, id_col="url")
-        ck_stop = cache_mark()
         keep = ck.filter(F.col("keep")).select(F.col("id").alias("url"))
         pages_df = pages_df.join(corpus_scaled(keep), "url", "left_semi")
 
@@ -159,13 +157,6 @@ def curate(
         pages_df, cfg.pipeline, store=store,
         use_html=cfg.use_html, strategy="auto",
     )
-    if cfg.canonical_url_dedup:
-        # run_pipeline's routing aggregate has materialised its cache of
-        # the gated pages, and nothing else reads the keeper pick: free
-        # the keeper pick's cache now, not at the final release
-        from llm_aided_ocr_spark.operators.util import release_between
-
-        release_between(pages_df.sparkSession, ck_start, ck_stop)
     docs = corrected.select("url", "corrected_text", "n_chunks")
     # correction is the expensive stage (potentially real LLM calls) and
     # the curation graph consumes it from several branches (quality join,

@@ -17,9 +17,9 @@ Two physical strategies, byte-identical outputs:
 ``run_pipeline`` routes by document size: docs above
 ``cfg.mega_doc_chars`` take the staged path so one url cannot pin a task
 (the north rule's mega-page skew handling); everything else is fused.
-The routing runs one aggregate job when ``run_pipeline`` is called: it
-builds the routing cache and counts the mega documents, and the staged
-branch is planned only when that count is above zero.
+Each branch filters the source on that size. One existence probe runs
+when ``run_pipeline`` is called, and the staged branch is planned only
+when the probe finds a mega document.
 
 Every Python pass on this path — extraction, the fused pass, the chunker,
 correction and the hallucination filter — crosses the JVM boundary through
@@ -62,9 +62,7 @@ def salted_repartition(df: DataFrame, cfg: PipelineConfig, *extra_cols) -> DataF
     return df.repartition(int(n), F.xxhash64(*cols))
 
 
-def _spread_documents(
-    df: DataFrame, cfg: PipelineConfig, gate_df: DataFrame | None = None
-) -> DataFrame:
+def _spread_documents(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Scale-adaptive document spread: the per-document correction
     stage is embarrassingly parallel, so the salted repartition buys
     exactly one thing — parallelism when the input is under-split (a toy
@@ -77,19 +75,11 @@ def _spread_documents(
     only below the :func:`scan_partitions_below` threshold — the same
     gate ensure_min_parallelism uses. The STAGED chunk path always
     salts on (url, chunk_ix): spreading a mega-document's chunks is the
-    whole point there.
-
-    ``gate_df``: the plan to JUDGE when ``df`` itself cannot be (the
-    auto strategy hands branches of a persisted relation, and
-    ``inputFiles()`` on an InMemoryRelation is empty — the gate would
-    conservatively skip the spread a toy input needs); pass the
-    pre-persist source so the file-size estimate still sees the scan."""
+    whole point there."""
     from llm_aided_ocr_spark.operators.util import scan_partitions_below
 
     target = df.sparkSession.sparkContext.defaultParallelism
-    if not scan_partitions_below(
-        gate_df if gate_df is not None else df, max(1, target // 2)
-    ):
+    if not scan_partitions_below(df, max(1, target // 2)):
         return df
     return salted_repartition(df, cfg)
 
@@ -182,10 +172,9 @@ def run_pipeline(
     column's size).
 
     ``strategy``: ``"fused"`` | ``"staged"`` | ``"auto"`` (size-routed).
-    ``"auto"`` runs one Spark job when called: a global aggregate that
-    builds the routing cache and counts the documents above
-    ``cfg.mega_doc_chars``; the staged branch is planned (and unioned
-    with the fused one) only when that count is above zero.
+    ``"auto"`` runs one Spark job when called: a probe for any document
+    above ``cfg.mega_doc_chars``; the staged branch is planned (and
+    unioned with the fused one) only when the probe finds one.
     With a ``store`` and ``cfg.checkpointing``, already-completed documents
     (present in the ``corrected_docs`` stage) are skipped via anti-join and
     the increment is appended — the resume path.
@@ -216,77 +205,46 @@ def run_pipeline(
 
     source_col = "html" if use_html else "text"
 
-    def _prepare(
-        branch: DataFrame, gate_df: DataFrame | None = None
-    ) -> DataFrame:
+    def _prepare(branch: DataFrame) -> DataFrame:
         if extract_fn is not None:
             out = extract_fn(branch)
         else:
             out = extract_text(branch, use_html=use_html)
         if cfg.apply_page_filter:
             out = apply_page_filter(out)
-        return _spread_documents(out, cfg, gate_df=gate_df)
+        return _spread_documents(out, cfg)
 
     if strategy == "fused":
         result = _fused_correct(_prepare(df), cfg)
     elif strategy == "staged":
         result = _staged_correct(_prepare(df), cfg, store)
     else:
-        # auto: size-routed skew handling from ONE source scan. The two
-        # branches are two consumers of the same relation; filtering the
-        # raw source twice would read every text byte from parquet twice
-        # (the length predicate cannot push down to the scan). Instead:
-        # prune to exactly the columns the pipeline consumes and persist
-        # that routed relation — the parquet source is scanned once to
-        # populate the cache and both branches filter the cached copy
-        # (MEMORY_AND_DISK: partitions spill to executor-local disk at
-        # 100 TB, which beats a second remote scan). The cache is
-        # registered: callers free it with release_pipeline_cache once
-        # their terminal action completes, instead of leaning on
-        # ContextCleaner GC — which in a long-lived session holds
-        # executor memory/disk ≈ pruned-corpus size until the plan
-        # object is collected.
+        # auto: each branch filters the pruned source on the document
+        # size, so a corpus with mega documents reads its payload column
+        # once per branch. A mega-free corpus — the common case — plans
+        # the fused branch alone: the staged branch's empty chunk,
+        # correction, reassembly and join stages would each still cost a
+        # Spark job. The existence probe (``isEmpty``: a ``limit(1)`` over
+        # the size filter) is one job whatever the scan's width.
         from pyspark import StorageLevel
 
         from llm_aided_ocr_spark.operators.util import persist
 
-        # The routing size is computed ONCE at cache build and stored as
-        # an int column: both branch filters would otherwise re-run
-        # length() over every cached payload — an O(bytes) UTF8 scan of
-        # the whole corpus per branch (measured 0.65 s of the bench
-        # pipeline's wall on a corpus with ZERO mega docs). Filtering on
-        # the cached int also lets the in-memory scan's per-batch
-        # min/max stats prune whole batches for the branch they cannot
-        # feed, so neither branch decompresses text it will drop.
+        src = df.select("url", "warc_ts", "lang", source_col)
         size = F.length(
             F.coalesce(
                 F.col(source_col),
                 F.lit("").cast("binary") if use_html else F.lit(""),
             )
         )
-        routed = persist(df.select(
-            "url", "warc_ts", "lang", source_col,
-            size.cast("bigint").alias("_ocr_route_sz"),
-        ), StorageLevel.MEMORY_AND_DISK)
-        sz = F.col("_ocr_route_sz")
-        # One global aggregate builds the cache (it reads every
-        # partition) and tells whether the staged branch has any input.
-        # A mega-free corpus — the common case — then plans the fused
-        # branch alone: the staged branch's empty chunk, correction,
-        # reassembly and join stages would each still cost a Spark job.
-        n_mega = routed.agg(F.count_if(sz > cfg.mega_doc_chars)).first()[0]
-        small = routed.filter(sz <= cfg.mega_doc_chars).drop("_ocr_route_sz")
-        # the branches filter the PERSISTED routed relation, whose plan
-        # no longer exposes inputFiles(); judge the spread gate on the
-        # pre-persist source plan instead
-        result = _fused_correct(_prepare(small, gate_df=df), cfg)
-        if n_mega:
-            big = routed.filter(sz > cfg.mega_doc_chars).drop("_ocr_route_sz")
+        is_mega = size > cfg.mega_doc_chars
+        result = _fused_correct(_prepare(src.where(~is_mega)), cfg)
+        if not src.where(is_mega).isEmpty():
             # the staged path reads its input twice (chunk side and
             # raw_text join side): cache the extracted mega documents so
             # each is extracted once
             staged_in = persist(
-                _prepare(big, gate_df=df), StorageLevel.MEMORY_AND_DISK
+                _prepare(src.where(is_mega)), StorageLevel.MEMORY_AND_DISK
             )
             result = result.unionByName(_staged_correct(staged_in, cfg, store))
 
@@ -320,13 +278,13 @@ def run_pipeline(
 
 def release_pipeline_cache(result: DataFrame, blocking: bool = True) -> int:
     """Free the caches :func:`run_pipeline` registered (the auto
-    strategy's routed corpus cache and its extracted mega documents, an
-    Iceberg store's staged increments) — together with every other
-    unreleased cache of the session: this is
-    ``operators.util.release_pinned``, under the name pipeline callers
-    know. Call AFTER the terminal action (write/collect) on ``result`` —
-    the routed cache exists precisely so the two routing branches share
-    one source scan during that action. Returns the number of caches
+    strategy's extracted mega documents, an Iceberg store's staged
+    increments) — together with every other unreleased cache of the
+    session: this is ``operators.util.release_pinned``, under the name
+    pipeline callers know. Call AFTER the terminal action (write/collect)
+    on ``result`` — the mega-document cache exists precisely so the
+    staged branch's two readers share one extraction during that action.
+    A mega-free auto run registers nothing. Returns the number of caches
     released; idempotent."""
     from llm_aided_ocr_spark.operators.util import release_pinned
 

@@ -135,6 +135,7 @@ def test_numeric_views_follow_a_sliced_batch():
 
 
 def test_outputs_take_the_schema_types():
+    plus11 = dt.timezone(dt.timedelta(hours=11))
     batch = pa.RecordBatch.from_arrays(
         [pa.array([1, 2, 3], pa.int64()), pa.array([[1.0], [2.0], [3.0]])],
         names=["id", "v"],
@@ -146,11 +147,14 @@ def test_outputs_take_the_schema_types():
             [np.arange(3, dtype=np.int64), np.array([], np.int64), None],
             [float("nan"), 1.5, None],
             [dt.datetime(2024, 1, 1), None, dt.datetime(2024, 1, 1, 11)],
+            [dt.datetime(2024, 1, 1, 11, tzinfo=plus11), None,
+             dt.datetime(2024, 1, 1, 11, tzinfo=dt.timezone.utc)],
         )
 
     out = _pass(
         "id bigint, v array<double>", fn,
-        "id bigint, v array<double>, g array<bigint>, f double, ts timestamp",
+        "id bigint, v array<double>, g array<bigint>, f double, ts timestamp, "
+        "aware timestamp",
         keep=("id",),
     )(batch)
     kept, given = out.column("id"), batch.column("id")
@@ -162,6 +166,12 @@ def test_outputs_take_the_schema_types():
     assert out.column("f").to_pylist() == [None, 1.5, None]
     # a naive datetime is read as UTC
     assert out.column("ts").to_pylist() == [
+        dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc), None,
+        dt.datetime(2024, 1, 1, 11, tzinfo=dt.timezone.utc),
+    ]
+    # an aware datetime is written as the instant it names: 11:00 at
+    # +11:00 is 00:00 UTC
+    assert out.column("aware").to_pylist() == [
         dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc), None,
         dt.datetime(2024, 1, 1, 11, tzinfo=dt.timezone.utc),
     ]

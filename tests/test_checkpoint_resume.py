@@ -110,6 +110,35 @@ def test_mid_pipeline_checkpoint_reads_back_parquet(spark):
         assert store.read(spark, "mid").count() == 3
 
 
+def test_increment_reread_keeps_the_written_schema(spark, monkeypatch):
+    """``write`` re-reads an increment with the schema it just wrote
+    instead of inferring it from the parquet footers: for each of the
+    pipeline's three stage schemas the returned increment's schema equals
+    the inferred one."""
+    import os
+
+    with tempfile.TemporaryDirectory() as tmp:
+        store = CheckpointStore(tmp, run_id="sc")
+        write = CheckpointStore.write
+        returned = {}
+
+        def recording_write(self, df, stage, *args, **kwargs):
+            kwargs["return_committed"] = False
+            out = write(self, df, stage, *args, **kwargs)
+            commit = self.lineage_records()[-1]["commit"]
+            returned[stage] = (out, os.path.join(self.stage_path(stage), commit))
+            return out
+
+        monkeypatch.setattr(CheckpointStore, "write", recording_write)
+        cfg = PipelineConfig(provider="heuristic", checkpointing=True)
+        pages = pages_dataframe(spark, n_rows=6, include_golden=True)
+        assert run_pipeline(pages, cfg, store=store, strategy="staged").count() == 6
+        assert set(returned) == {"chunks", "corrected_chunks", "corrected_docs"}
+        for stage, (out, inc_path) in returned.items():
+            assert out.schema == spark.read.parquet(inc_path).schema, stage
+            assert out.count() == spark.read.parquet(inc_path).count(), stage
+
+
 def test_uncommitted_increment_invisible(spark):
     """Atomic-commit contract: an increment directory without _SUCCESS (a
     crashed writer) must be invisible to readers, resume, and exists()."""

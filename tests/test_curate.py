@@ -350,8 +350,9 @@ def test_annotate_is_one_native_projection(spark):
 def test_curate_canonical_url_dedup_collapses_refetches(spark, monkeypatch):
     """Refetch spellings of one page (case/port/fragment variants)
     collapse to one survivor BEFORE correction, keeping the longest
-    fetch. The keeper pick's cache is already released when ``curate``
-    returns: the pipeline's routing cache holds the gated pages."""
+    fetch. The keeper pick's cache is still held when ``curate``
+    returns — the pipeline's routing probe and both of its branches read
+    the gated pages — and the caller's ``release_pinned`` frees it."""
     from pyspark import StorageLevel
 
     from llm_aided_ocr_spark.operators import dedup
@@ -388,9 +389,10 @@ def test_curate_canonical_url_dedup_collapses_refetches(spark, monkeypatch):
     )
     out = curate(refetch, cfg)
     assert registered
-    assert all(h.storageLevel == StorageLevel.NONE for h in registered)
+    assert all(h.storageLevel != StorageLevel.NONE for h in registered)
     urls = {r["url"] for r in out.collect()}
     release_pinned(out, blocking=True)
+    assert all(h.storageLevel == StorageLevel.NONE for h in registered)
     assert urls == {"HTTP://A.org:80/p#frag", "https://b.org/q"}
 
 

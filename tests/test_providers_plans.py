@@ -450,11 +450,11 @@ def test_tpch_q3_broadcasts_dimension(spark):
 
 
 def test_auto_strategy_scans_source_once(spark):
-    """The auto (size-routed) strategy must not pay a second parquet scan
-    of the source text for the mega-doc branch: the routed relation is
-    persisted, so both branches read the in-memory copy and exactly one
-    FileScan of the source appears in the plan. The staged branch is
-    planned only when the routing aggregate found a mega document."""
+    """The auto (size-routed) strategy caches no corpus: a mega-free plan
+    is the fused branch over one FileScan of the source, with no
+    InMemoryRelation. With the threshold below the longest document the
+    staged branch is planned too, and its extracted input is the only
+    cache."""
     from dataclasses import replace
 
     import __spark_entry__ as e
@@ -465,51 +465,85 @@ def test_auto_strategy_scans_source_once(spark):
     cfg = PipelineConfig(provider="identity", apply_hallucination_filter=False)
     longest = pages.agg(F.max(F.length("text"))).first()[0]
     assert longest <= cfg.mega_doc_chars
-    # mega-free at the default threshold: the fused branch alone reads
-    # the routed cache; with the longest document above a lowered
-    # threshold the staged branch's chunk side and raw-text join side
-    # read it too (through the staged input's own cache, under whose
-    # every scan explain prints the routed cache again)
-    for mega_doc_chars, scans in ((cfg.mega_doc_chars, 1), (longest - 1, 3)):
-        result = run_pipeline(
-            pages, replace(cfg, mega_doc_chars=mega_doc_chars), strategy="auto"
-        )
-        plan = _plan(result)
-        release_pipeline_cache(result)
-        routed = [line for line in plan.splitlines() if "_ocr_route_sz" in line]
-        assert sum("InMemoryTableScan" in line for line in routed) == scans, plan
-        # every FileScan in the printed plan is the routed cache's
-        # lineage; a direct uncached scan per branch would show FileScans
-        # without relations.
-        assert plan.count("FileScan parquet") == sum(
-            "InMemoryRelation" in line for line in routed
-        ), plan
+
+    result = run_pipeline(pages, cfg, strategy="auto")
+    plan = _plan(result)
+    assert release_pipeline_cache(result) == 0
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "InMemoryRelation" not in plan, plan
+
+    result = run_pipeline(
+        pages, replace(cfg, mega_doc_chars=longest - 1), strategy="auto"
+    )
+    plan = _plan(result)
+    assert release_pipeline_cache(result) == 1
+    # explain prints the one cached relation under each of the staged
+    # branch's two readers (chunk side, raw-text join side): it holds the
+    # extracted text, and nothing else of the corpus is cached
+    relations = [line for line in plan.splitlines() if "InMemoryRelation" in line]
+    assert len(relations) == 2, plan
+    assert all("extracted_text#" in line for line in relations), relations
+    # the fused branch's own scan, plus the cached relation's lineage
+    # printed under each reader
+    assert plan.count("FileScan parquet") == 3, plan
 
 
-def test_auto_strategy_routes_on_cached_size_column(spark):
-    """The auto strategy's branch filters must compare the routing size
-    PRECOMPUTED at cache build (_ocr_route_sz), never re-run length()
-    over the cached payload — that is an O(bytes) UTF8 scan of the
-    whole corpus per branch (0.56 s of the bench pipeline's wall on a
-    mega-free corpus), and a plain cached int also enables per-batch
-    min/max pruning for the branch a batch cannot feed."""
-    import __spark_entry__ as e
+def _plan_nodes(node) -> list:
+    """Every node under ``node`` (itself included) of an optimized
+    logical plan, descending into each cached relation's physical plan:
+    a cache is a leaf of the logical plan."""
+    kids = [node.children().apply(i) for i in range(node.children().size())]
+    name = node.getClass().getSimpleName()
+    if name == "InMemoryRelation":
+        kids.append(node.cachedPlan())
+    elif name == "AdaptiveSparkPlanExec":
+        kids.append(node.inputPlan())
+    return [node, *(n for kid in kids for n in _plan_nodes(kid))]
+
+
+def test_auto_strategy_size_filter_runs_below_every_python_pass(spark):
+    """The auto strategy routes with one size predicate on the source,
+    below every MapInArrow: the fused pass never receives a mega
+    document, and the staged branch's passes receive only mega
+    documents."""
+    from dataclasses import replace
+
     from llm_aided_ocr_spark.config import PipelineConfig
-    from llm_aided_ocr_spark.plans.pipeline import run_pipeline
+    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache, run_pipeline
+    from llm_aided_ocr_spark.sources.synthetic import pages_dataframe
 
-    pages = e._docs_as_pages(spark, "/root/testdata/sf0.001")
-    cfg = PipelineConfig(provider="identity", apply_hallucination_filter=False)
-    plan = _plan(run_pipeline(pages, cfg, strategy="auto"))
-    assert "_ocr_route_sz" in plan, plan
-    import re
+    pages = pages_dataframe(spark, n_rows=12, seed=42)
+    # the largest page's html is ~22 KB, the next ~16 KB: one staged doc
+    cfg = PipelineConfig(
+        provider="heuristic", mega_doc_chars=20_000, apply_hallucination_filter=False
+    )
 
-    # no branch Filter may apply length() to the payload column; the
-    # only length() allowed in a Filter is inside the cached relation's
-    # own build lineage (none today — the size is projected, not
-    # filtered, at build)
-    for m in re.finditer(r"Filter \(\d+\)\nInput.*\nCondition : (.*)", plan):
-        assert "length(" not in m.group(1), m.group(1)
-    spark.catalog.clearCache()
+    def kind(node):
+        return node.getClass().getSimpleName().removesuffix("Exec")
+
+    for c, n_passes in ((cfg, 5), (replace(cfg, mega_doc_chars=10**9), 2)):
+        result = run_pipeline(pages, c, use_html=True, strategy="auto")
+        root = result._jdf.queryExecution().optimizedPlan()
+        release_pipeline_cache(result)
+        # extraction once per branch, the fused pass, chunker, correction;
+        # the walk meets the cached staged input once per reader, so a
+        # pass is known by its output attributes
+        passes = {
+            n.output().toString(): n for n in _plan_nodes(root)
+            if kind(n) == "MapInArrow"
+        }
+        assert len(passes) == n_passes, list(passes)
+        for outputs, node in passes.items():
+            conds = [
+                n.condition().toString() for n in _plan_nodes(node)
+                if kind(n) == "Filter" and "length(" in n.condition().toString()
+            ]
+            assert len(conds) == 1, (outputs, conds)
+            assert f"> {c.mega_doc_chars})" in conds[0] or (
+                f"<= {c.mega_doc_chars})" in conds[0]
+            ), conds
+            if "corrected_text" in outputs:  # the fused pass
+                assert f"<= {c.mega_doc_chars})" in conds[0], conds
 
 
 def test_pipeline_python_passes_all_map_in_arrow(spark):
@@ -564,9 +598,12 @@ def test_pipeline_python_passes_all_map_in_arrow(spark):
 
 
 def test_auto_strategy_cache_released_after_action(spark):
-    """run_pipeline(auto) registers the routed corpus cache;
-    release_pipeline_cache must unpersist it after the terminal action so
-    a long-lived session does not accumulate corpus-sized storage."""
+    """A mega-free run_pipeline(auto) registers no cache. A run with a
+    mega document registers exactly one, its extracted staged input, and
+    release_pipeline_cache unpersists it after the terminal action so a
+    long-lived session does not accumulate it."""
+    from dataclasses import replace
+
     import __spark_entry__ as e
     from llm_aided_ocr_spark.config import PipelineConfig
     from llm_aided_ocr_spark.plans.pipeline import (
@@ -585,10 +622,17 @@ def test_auto_strategy_cache_released_after_action(spark):
     cfg = PipelineConfig(provider="identity")
     result = run_pipeline(pages, cfg, strategy="auto")
     assert result.count() > 0
-    assert n_cached() > base, "auto strategy should have materialized its cache"
-    released = release_pipeline_cache(result, blocking=True)
-    assert released == 1
-    assert n_cached() == base, "routed cache must be gone after release"
+    assert n_cached() == base, "a mega-free auto run caches nothing"
+    assert release_pipeline_cache(result) == 0
+
+    longest = pages.agg(F.max(F.length("text"))).first()[0]
+    result = run_pipeline(
+        pages, replace(cfg, mega_doc_chars=longest - 1), strategy="auto"
+    )
+    assert result.count() > 0
+    assert n_cached() == base + 1, "the staged input should be materialized"
+    assert release_pipeline_cache(result, blocking=True) == 1
+    assert n_cached() == base, "the staged input's cache must be gone after release"
     # idempotent: nothing is left for a second call, from any DataFrame
     assert release_pipeline_cache(result) == 0
     assert release_pipeline_cache(pages) == 0
@@ -661,10 +705,10 @@ def test_salted_spread_gate(spark):
     """The scale-adaptive spread (round 6): the document-branch salted
     repartition fires for an under-split toy input (restoring kernel
     parallelism) but is SKIPPED when the gate cannot prove the input
-    under-split — e.g. a branch of a persisted relation judged without
-    a gate_df — because a size-uniform corpus scan needs no extra
-    full-corpus shuffle (guide §2.4). Values never depend on the
-    choice; this pins the plan shape."""
+    under-split — e.g. a branch of a persisted relation — because a
+    size-uniform corpus scan needs no extra full-corpus shuffle (guide
+    §2.4). Values never depend on the choice; this pins the plan
+    shape."""
     from pyspark import StorageLevel
 
     from llm_aided_ocr_spark.config import PipelineConfig
@@ -681,14 +725,16 @@ def test_salted_spread_gate(spark):
     spread = _spread_documents(pages, cfg)
     assert "RepartitionByExpression" in spread._jdf.queryExecution().logical().toString()
 
-    # persisted relation, no gate_df: inputFiles() is empty, the gate
-    # stays conservative and the plan is returned unchanged
+    # a size-filtered branch of the scan (the auto strategy's branch
+    # shape) is still judged on the scan
+    spread = _spread_documents(pages.where(F.length("text") > 0), cfg)
+    assert "RepartitionByExpression" in spread._jdf.queryExecution().logical().toString()
+
+    # persisted relation: inputFiles() is empty, the gate stays
+    # conservative and the plan is returned unchanged
     cached = pages.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         branch = cached.select("url", "text")
         assert _spread_documents(branch, cfg) is branch
-        # ... but judging via the pre-persist source restores the spread
-        spread2 = _spread_documents(branch, cfg, gate_df=pages)
-        assert "RepartitionByExpression" in spread2._jdf.queryExecution().logical().toString()
     finally:
         cached.unpersist()

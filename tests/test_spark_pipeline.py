@@ -259,39 +259,69 @@ def test_auto_routes_mega_docs(spark):
         assert len(got["auto"]) == n, c.mega_doc_chars
 
 
+def _jobs_of(spark, fn):
+    """``(fn(), the number of Spark jobs fn ran)``."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        value = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return value, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_auto_mega_free_runs_fused_jobs_plus_routing_aggregate(spark):
     """On a corpus with no document above ``mega_doc_chars`` the auto
     strategy plans the fused branch alone: the routing aggregate runs
     when ``run_pipeline`` is called, and the action then runs no more
     Spark jobs than the fused strategy's does."""
-    import uuid
-
     from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
 
-    sc = spark.sparkContext
     df = pages_dataframe(spark, n_rows=40, seed=42)
     cfg = PipelineConfig(provider="heuristic")  # 4M-char threshold: no mega
 
-    def jobs_of(fn):
-        group = f"auto-jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            value = fn()
-        finally:
-            sc._jsc.clearJobGroup()
-        # job events reach the status store through the listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-        return value, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    n_fused, fused_jobs = jobs_of(
-        lambda: run_pipeline(df, cfg, strategy="fused").count()
+    n_fused, fused_jobs = _jobs_of(
+        spark, lambda: run_pipeline(df, cfg, strategy="fused").count()
     )
-    auto, routing_jobs = jobs_of(lambda: run_pipeline(df, cfg, strategy="auto"))
-    n_auto, action_jobs = jobs_of(auto.count)
+    auto, routing_jobs = _jobs_of(
+        spark, lambda: run_pipeline(df, cfg, strategy="auto")
+    )
+    n_auto, action_jobs = _jobs_of(spark, auto.count)
     release_pipeline_cache(auto)
     assert n_auto == n_fused == 40
-    assert routing_jobs >= 1
+    assert routing_jobs == 1
     assert action_jobs <= fused_jobs, (routing_jobs, action_jobs, fused_jobs)
+
+
+def test_auto_routing_probe_is_one_job_on_a_wide_scan(spark, tmp_path):
+    """The auto strategy's mega-document probe runs one Spark job on a
+    scan of 64 or more partitions, whether it finds a mega document or
+    not: the probe's limit does not grow its scan a few partitions per
+    job."""
+    from llm_aided_ocr_spark.plans.pipeline import release_pipeline_cache
+
+    path = str(tmp_path / "pages")
+    pages_dataframe(spark, n_rows=40, seed=42).write.parquet(path)
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "512")
+    try:
+        pages = spark.read.parquet(path)
+        assert pages.rdd.getNumPartitions() >= 64
+        cfg = PipelineConfig(provider="identity")
+        for c in (cfg, replace(cfg, mega_doc_chars=0)):
+            result, jobs = _jobs_of(
+                spark, lambda: run_pipeline(pages, c, strategy="auto")
+            )
+            release_pipeline_cache(result)
+            assert jobs == 1, c.mega_doc_chars
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_html_extraction_path(spark, pages):

@@ -255,6 +255,26 @@ def test_frame_sampling_and_embedding(spark):
     assert emb == emb2
 
 
+def test_embed_media_stub_matches_a_fresh_state_per_row(spark):
+    """One reseeded RandomState per batch draws what a fresh
+    ``RandomState(seed)`` per row draws, NULL and empty blobs included."""
+    import hashlib
+
+    import numpy as np
+
+    from llm_aided_ocr_spark.operators.multimodal import embed_media_stub
+
+    blobs = [b"a", None, b"", b"video-bytes-0", b"a", bytes(range(256)) * 8]
+    df = spark.createDataFrame(
+        [(f"u{i}", b) for i, b in enumerate(blobs)], "url string, media binary"
+    ).repartition(2)
+    got = {r["url"]: r["embedding"] for r in embed_media_stub(df, dim=5).collect()}
+    for i, b in enumerate(blobs):
+        seed = int.from_bytes(hashlib.sha256(b or b"").digest()[:4], "big")
+        want = np.random.RandomState(seed).uniform(-1, 1, 5).tolist()
+        assert got[f"u{i}"] == want, i
+
+
 def test_domain_col_edges(spark):
     from llm_aided_ocr_spark.operators.textstats import domain_col
     from pyspark.sql import functions as F
