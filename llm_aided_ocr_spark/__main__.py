@@ -8,8 +8,7 @@ run the pipeline, write ``corrected_docs`` (+ optional quality scores).
     python -m llm_aided_ocr_spark --input pages.parquet --output out_dir \
         [--provider heuristic] [--no-markdown] [--keep-headers] \
         [--check-english] [--filter-hallucinations] [--threshold 0.4] \
-        [--max-pages N] [--skip-first-n-pages N] [--resume --warehouse DIR] \
-        [--assess-quality] [--master local[*]]
+        [--resume --warehouse DIR] [--assess-quality] [--master local[*]]
 """
 
 from __future__ import annotations
@@ -24,9 +23,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--output", required=True, help="output directory (parquet)")
     p.add_argument("--provider", default="heuristic",
                    help="correction provider (heuristic | identity | registered name)")
-    # reference CLI flag surface (llm-aided-ocr-cli.py:6-16)
-    p.add_argument("--max-pages", type=int, default=0)
-    p.add_argument("--skip-first-n-pages", type=int, default=0)
     p.add_argument("--no-markdown", action="store_true",
                    help="disable markdown reformatting")
     p.add_argument("--keep-headers", action="store_true",
@@ -162,14 +158,6 @@ def main(argv=None) -> int:
     if args.write_shards and not args.curate:
         print("warning: --write-shards only applies with --curate; ignored",
               file=sys.stderr)
-
-    if args.max_pages or args.skip_first_n_pages:
-        print(
-            "warning: --max-pages/--skip-first-n-pages apply to the PDF "
-            "page-render path (operators.extract.extract_pdf_pages); the "
-            "text/html corpus pipeline processes whole documents",
-            file=sys.stderr,
-        )
 
     cfg = PipelineConfig(
         reformat_as_markdown=not args.no_markdown,

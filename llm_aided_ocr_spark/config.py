@@ -3,12 +3,14 @@
 The parameter surface mirrors the reference CLI's intended flags
 (the reference's ``llm-aided-ocr-cli.py:6-16``) — markdown toggle, header
 suppression, language gate, hallucination-filter threshold, filter-test
-mode — plus the scale knobs the north rule requires (partition count,
-mega-document routing, checkpointing). The reference's page range applies
-only to the PDF render path (``operators.extract.extract_pdf_pages``'s
-own arguments); the Arrow batch size is a session setting
-(``session.get_spark``); a checkpoint run's id belongs to its
-``CheckpointStore``. Constants no caller varies live where they are used:
+mode — plus the scale knobs the north rule requires (mega-document
+routing, checkpointing). The reference's page range applies only to the
+PDF render path (``operators.extract.extract_pdf_pages``'s own arguments;
+the CLI has no page-range flags); the partition count of every salted
+repartition is the session's ``spark.sql.shuffle.partitions`` and the
+Arrow batch size is a session setting too (``session.get_spark``); a
+checkpoint run's id belongs to its ``CheckpointStore``, which always
+appends. Constants no caller varies live where they are used:
 the url-hash partition salt is ``plans.pipeline.SALT`` and the page-filter
 thresholds are ``apply_page_filter``'s defaults; with checkpointing on,
 every stage is checkpointed.
@@ -39,8 +41,7 @@ class PipelineConfig:
     # apply_page_filter's relaxed defaults, 10 chars / 5 words) ---
     apply_page_filter: bool = False
     apply_hallucination_filter: bool = False
-    # --- scale knobs (north rule) ---
-    num_partitions: int | None = None    # None → spark.sql.shuffle.partitions
+    # --- scale knob (north rule) ---
     mega_doc_chars: int = 4_000_000      # docs above this processed page-granular
     # --- checkpointing ---
     warehouse_dir: str = "/tmp/ocr_spark_warehouse"

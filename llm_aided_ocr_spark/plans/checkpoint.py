@@ -1,6 +1,8 @@
 """Per-stage checkpointing with per-partition lineage + counters, and
 anti-join resume (north rule: "each stage checkpointed ... so runs resume
-mid-pipeline at 10^12-document scale").
+mid-pipeline at 10^12-document scale"). A stage only ever grows: each
+commit appends one increment, and a run resumes by anti-joining its input
+against the stage's committed keys.
 
 Backend is parquet-table-per-stage under a warehouse directory. On a real
 cluster this maps 1:1 onto Iceberg tables (``df.writeTo(...).append()`` with
@@ -15,10 +17,8 @@ commit — on plain parquet. The reference's analogue is its two output files
 from __future__ import annotations
 
 import glob
-import hashlib
 import json
 import os
-import shutil
 import time
 from dataclasses import dataclass
 from typing import List, Optional
@@ -31,18 +31,13 @@ from llm_aided_ocr_spark.operators.util import persist
 
 @dataclass
 class CheckpointStore:
-    """``bucketed_keys=True`` additionally maintains, per stage, a catalog
-    table of committed keys bucketed on ``key_col`` (``n_buckets``). The
-    resume anti-join then reads that table instead of the full stage
-    parquet: when the input is itself bucketed on the same key/count, the
-    anti-join runs with ZERO Exchange on either side — the 100 TB resume
-    primitive (every crawl re-run starts with this join)."""
+    """Stage tables under ``warehouse_dir`` committed as append-only
+    increments, one lineage record (with per-partition counters) per
+    commit, and one resume path: :meth:`remaining`'s anti-join against
+    the stage's committed keys."""
 
     warehouse_dir: str
     run_id: str = "run0"
-    bucketed_keys: bool = False
-    key_col: str = "url"
-    n_buckets: int = 64
     # Iceberg toggle: with a configured Iceberg catalog on the cluster
     # (spark.sql.catalog.<name> = org.apache.iceberg.spark.SparkCatalog),
     # set use_iceberg=True and stage tables commit via the DataFrameWriterV2
@@ -60,19 +55,6 @@ class CheckpointStore:
 
     def iceberg_table(self, stage: str) -> str:
         return f"{self.iceberg_catalog}.{self.iceberg_namespace}.{stage}"
-
-    def keys_table(self, stage: str) -> str:
-        """Catalog table name for the stage's bucketed key set — scoped by
-        a digest of (warehouse path, RAW stage name) so two stores never
-        collide in a shared metastore AND two stages whose names mangle to
-        the same identifier (``stage.a`` vs ``stage_a``) never share a key
-        set (a merged key set would make resume silently skip rows that
-        only the OTHER stage processed)."""
-        digest = hashlib.md5(
-            f"{self.warehouse_dir}\x00{stage}".encode()
-        ).hexdigest()[:10]
-        safe = "".join(c if c.isalnum() else "_" for c in stage)
-        return f"ckpt_keys_{safe}_{digest}"
 
     def _lineage_dir(self) -> str:
         return os.path.join(self.warehouse_dir, "_lineage")
@@ -94,7 +76,6 @@ class CheckpointStore:
         self,
         df: DataFrame,
         stage: str,
-        mode: str = "append",
         counted_col: Optional[str] = None,
         return_committed: bool = True,
     ) -> DataFrame:
@@ -114,11 +95,6 @@ class CheckpointStore:
         history is never reprocessed on resume.
         """
         spark = df.sparkSession
-        if mode == "overwrite":
-            if os.path.exists(self.stage_path(stage)):
-                shutil.rmtree(self.stage_path(stage))
-            if self.bucketed_keys:
-                spark.sql(f"DROP TABLE IF EXISTS {self.keys_table(stage)}")
         if self.use_iceberg:
             # DataFrameWriterV2 commit: one Iceberg snapshot per increment.
             # The increment is persisted so the commit and the counter pass
@@ -130,11 +106,10 @@ class CheckpointStore:
             increment = df.persist() if return_committed else persist(df)
             commit_name = f"iceberg_{self.run_id}_{time.time_ns()}"
             writer = increment.writeTo(table)
-            if mode == "overwrite" or not spark.catalog.tableExists(table):
-                writer.createOrReplace()
-            else:
+            if spark.catalog.tableExists(table):
                 writer.append()
-            inc_path = None
+            else:
+                writer.createOrReplace()
         else:
             inc_path = os.path.join(
                 self.stage_path(stage), f"inc_{self.run_id}_{time.time_ns()}"
@@ -156,20 +131,16 @@ class CheckpointStore:
             .collect()
         )
         inc_rows = int(sum(r["rows"] for r in counters))
-        prev_rows = 0
-        for r in self.lineage_records():
-            if r["stage"] != stage:
-                continue
-            if r.get("mode") == "overwrite":  # history was cleared then
-                prev_rows = 0
-            prev_rows += r.get("increment_rows", r.get("total_rows", 0))
-        if mode == "overwrite":  # this commit replaced all history
-            prev_rows = 0
+        prev_rows = sum(
+            r.get("increment_rows", r.get("total_rows", 0))
+            for r in self.lineage_records()
+            if r["stage"] == stage
+        )
         record = {
             "run_id": self.run_id,
             "stage": stage,
             "ts": time.time(),
-            "mode": mode,
+            "mode": "append",  # every commit appends; kept for log readers
             "commit": commit_name,
             "increment_rows": inc_rows,
             "total_rows": prev_rows + inc_rows,
@@ -179,83 +150,9 @@ class CheckpointStore:
         log_path = os.path.join(self._lineage_dir(), "lineage.jsonl")
         with open(log_path, "a", encoding="utf-8") as f:
             f.write(json.dumps(record) + "\n")
-        if self.bucketed_keys:
-            if self.use_iceberg:
-                # no _SUCCESS markers to heal from in iceberg mode —
-                # append this increment's keys directly (the increment is
-                # still persisted). Crash window between the Iceberg
-                # commit and this append = possible reprocessing on
-                # resume, not data loss; a production deployment should
-                # maintain the keys table in the SAME Iceberg transaction
-                # (or use storage-partitioned joins on the stage table).
-                if self.key_col in increment.columns:
-                    (
-                        increment.select(self.key_col)
-                        .write.mode("append")
-                        .bucketBy(self.n_buckets, self.key_col)
-                        .sortBy(self.key_col)
-                        .format("parquet")
-                        .saveAsTable(self.keys_table(stage))
-                    )
-            else:
-                # keys lag the parquet commit by design (the increment's
-                # _SUCCESS is the source of truth); _sync_keys is the
-                # self-healing reconciliation that replays any committed
-                # increment whose keys never landed (crash window), so it
-                # is the ONLY writer of the keys table — called here and
-                # again defensively in remaining()
-                self._sync_keys(spark, stage)
         if self.use_iceberg and return_committed:
             increment.unpersist()
         return self.read(spark, stage) if return_committed else increment
-
-    def _keys_marker(self, stage: str) -> str:
-        # digest-suffixed for the same mangling-collision reason as
-        # keys_table (stage.a vs stage_a must not share sync state)
-        digest = hashlib.md5(stage.encode()).hexdigest()[:10]
-        safe = "".join(c if c.isalnum() else "_" for c in stage)
-        return os.path.join(
-            self.warehouse_dir, "_keys_synced", f"{safe}_{digest}.txt"
-        )
-
-    def _sync_keys(self, spark: SparkSession, stage: str) -> int:
-        """Bring the bucketed keys table up to date with the COMMITTED
-        increments — O(unsynced increments), idempotent, crash-safe:
-
-        * keys append AFTER the increment's ``_SUCCESS``: a crash between
-          them leaves a committed increment unsynced; the next write OR
-          the next ``remaining()`` replays it here (missing keys would
-          otherwise make resume reprocess committed rows).
-        * marker append AFTER the keys append: a crash between THEM
-          re-appends that increment's keys once more — duplicate key rows,
-          which the left-anti join is insensitive to. Never data loss in
-          either window.
-        """
-        marker = self._keys_marker(stage)
-        synced: set = set()
-        if os.path.exists(marker):
-            with open(marker, encoding="utf-8") as f:
-                synced = {line.strip() for line in f if line.strip()}
-        done = 0
-        for inc_path in self._committed_increments(stage):
-            name = os.path.basename(inc_path)
-            if name in synced:
-                continue
-            inc = spark.read.parquet(inc_path)
-            if self.key_col in inc.columns:
-                (
-                    inc.select(self.key_col)
-                    .write.mode("append")
-                    .bucketBy(self.n_buckets, self.key_col)
-                    .sortBy(self.key_col)
-                    .format("parquet")
-                    .saveAsTable(self.keys_table(stage))
-                )
-            os.makedirs(os.path.dirname(marker), exist_ok=True)
-            with open(marker, "a", encoding="utf-8") as f:
-                f.write(name + "\n")
-            done += 1
-        return done
 
     # -- read / resume ----------------------------------------------------
 
@@ -296,39 +193,21 @@ class CheckpointStore:
     def remaining(
         self, input_df: DataFrame, stage: str, key: str = "url"
     ) -> DataFrame:
-        """Rows of ``input_df`` not yet present in ``stage`` — the resume
-        anti-join. Broadcast-eligible when the checkpoint key set is small;
-        at scale AQE picks the join strategy from runtime stats.
-
-        With ``bucketed_keys``, the done-key side reads the bucketed
-        catalog table: its scan already satisfies the join's distribution
-        (no Exchange, no ``distinct`` needed — left_anti is
-        duplicate-insensitive on the right), and a same-bucketed input
-        joins with no Exchange on either side (plan-tested)."""
+        """Rows of ``input_df`` whose ``key`` is not yet committed in
+        ``stage`` — the resume anti-join. The committed keys join as they
+        are read, with no ``distinct``: a left anti join is insensitive to
+        duplicate keys on its right side (a key committed in two
+        increments, e.g. by two overlapping runs, still excludes its input
+        rows once), so an aggregate would only add a shuffle.
+        Broadcast-eligible when the committed key set is small; at scale
+        AQE picks the join strategy from runtime stats."""
         spark = input_df.sparkSession
-        if self.bucketed_keys and (
-            self.use_iceberg or self.exists(stage)
-        ):
-            if not self.use_iceberg:
-                # heal any committed-but-unsynced increments BEFORE
-                # trusting the keys table (crash between increment commit
-                # and keys append — see _sync_keys); iceberg mode has no
-                # _SUCCESS markers to heal from (see write())
-                self._sync_keys(spark, stage)
-            if spark.catalog.tableExists(self.keys_table(stage)):
-                done_keys = spark.table(self.keys_table(stage))
-                if key != self.key_col:
-                    done_keys = done_keys.withColumnRenamed(self.key_col, key)
-                return input_df.join(done_keys, on=key, how="left_anti")
-            # increments carry no key_col → fall through to the stage read
         if self.use_iceberg:
             if not spark.catalog.tableExists(self.iceberg_table(stage)):
                 return input_df
-            done_keys = spark.table(self.iceberg_table(stage)).select(key).distinct()
-            return input_df.join(done_keys, on=key, how="left_anti")
-        if not self.exists(stage):
+        elif not self.exists(stage):
             return input_df
-        done_keys = self.read(spark, stage).select(key).distinct()
+        done_keys = self.read(spark, stage).select(key)
         return input_df.join(done_keys, on=key, how="left_anti")
 
     def lineage_records(self) -> List[dict]:
@@ -347,22 +226,19 @@ class CheckpointStore:
         count/list, and the partition histogram of the commits' per-file-
         partition row counts (min/max/mean + the raw counts), so skew in
         what each commit wrote is visible without rescanning any table.
-        ``stage=None`` returns all stages keyed by name; overwrites reset
-        the cumulative totals exactly as ``total_rows`` bookkeeping does."""
+        ``stage=None`` returns all stages keyed by name."""
         out: dict = {}
         for rec in self.lineage_records():
             s = rec["stage"]
             if stage is not None and s != stage:
                 continue
-            if rec.get("mode") == "overwrite" or s not in out:
-                out[s] = {
-                    "total_rows": 0,
-                    "total_payload_chars": 0,
-                    "n_commits": 0,
-                    "commits": [],
-                    "partition_rows": [],
-                }
-            agg = out[s]
+            agg = out.setdefault(s, {
+                "total_rows": 0,
+                "total_payload_chars": 0,
+                "n_commits": 0,
+                "commits": [],
+                "partition_rows": [],
+            })
             parts = rec.get("partitions", [])
             prow = [int(p.get("rows", 0)) for p in parts]
             inc_payload = sum(int(p.get("payload_chars") or 0) for p in parts)

@@ -56,10 +56,11 @@ SALT = 0x5ABE  # partition salt for url hashing
 def salted_repartition(df: DataFrame, cfg: PipelineConfig, *extra_cols) -> DataFrame:
     """Salted-hash repartition on url (north rule). ``xxhash64(url, salt)``
     decorrelates placement from any upstream layout; extra columns (e.g.
-    chunk_ix) spread a single mega-document across tasks."""
-    n = cfg.num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    chunk_ix) spread a single mega-document across tasks. The partition
+    count is the session's ``spark.sql.shuffle.partitions``."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cols = [F.col("url"), F.lit(SALT), *[F.col(c) for c in extra_cols]]
-    return df.repartition(int(n), F.xxhash64(*cols))
+    return df.repartition(n, F.xxhash64(*cols))
 
 
 def _spread_documents(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -270,9 +271,7 @@ def run_pipeline(
         )
 
     if store is not None and cfg.checkpointing:
-        result = store.write(
-            result, "corrected_docs", mode="append", counted_col="corrected_text"
-        )
+        result = store.write(result, "corrected_docs", counted_col="corrected_text")
     return result
 
 
