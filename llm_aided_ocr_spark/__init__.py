@@ -10,7 +10,8 @@ Layout:
     operators/    Arrow-vectorized pipeline stages (extract, chunk, correct,
                   assemble, filters, quality) and training-data extras
     plans/        end-to-end pipeline assembly, checkpointing, lineage
-    streaming/    (reserved — the reference has no streaming surface)
+    streaming/    Structured Streaming ingestion: the fused pipeline, sinks and
+                  stateful dedup over readStream sources (the reference has none)
 """
 
 from llm_aided_ocr_spark.config import PipelineConfig

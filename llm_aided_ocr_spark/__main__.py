@@ -67,8 +67,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="skip documents already in the warehouse checkpoint")
     p.add_argument("--warehouse", default="/tmp/ocr_spark_warehouse")
     p.add_argument("--run-id", default="cli")
-    p.add_argument("--strategy", default="auto",
-                   choices=["auto", "fused", "staged"])
     p.add_argument("--master", default=None)
     # --- one-call curation mode ---
     p.add_argument("--curate", action="store_true",
@@ -168,7 +166,6 @@ def main(argv=None) -> int:
         apply_hallucination_filter=args.filter_hallucinations,
         provider=args.provider,
         apply_page_filter=args.page_filter,
-        warehouse_dir=args.warehouse,
         checkpointing=args.resume,
     )
     spark = get_spark(
@@ -335,7 +332,6 @@ def main(argv=None) -> int:
         cfg,
         store=store,
         use_html=args.from_html,
-        strategy=args.strategy,
         validate_unique_urls=True,
         extract_fn=extract_fn,
     )

@@ -12,7 +12,7 @@ Arrow batch size is a session setting too (``session.get_spark``); a
 checkpoint run's id belongs to its ``CheckpointStore``, which always
 appends. Constants no caller varies live where they are used:
 the url-hash partition salt is ``plans.pipeline.SALT`` and the page-filter
-thresholds are ``apply_page_filter``'s defaults; with checkpointing on,
+thresholds are ``apply_page_filter``'s constants; with checkpointing on,
 every stage is checkpointed.
 Unlike the reference (ambient ``.env`` read at import, llm_aided_ocr.py:31),
 config here is constructed, never ambient.
@@ -38,11 +38,13 @@ class PipelineConfig:
     # --- correction provider ---
     provider: str = "heuristic"          # heuristic | identity (LLM providers pluggable)
     # --- v1 page filter (CHANGELOG.md:160; thresholds are
-    # apply_page_filter's relaxed defaults, 10 chars / 5 words) ---
+    # apply_page_filter's relaxed constants, 10 chars / 5 words) ---
     apply_page_filter: bool = False
     apply_hallucination_filter: bool = False
     # --- scale knob (north rule) ---
     mega_doc_chars: int = 4_000_000      # docs above this processed page-granular
     # --- checkpointing ---
+    # unread by the package (a CheckpointStore carries its own); kept
+    # because perfbench passes it
     warehouse_dir: str = "/tmp/ocr_spark_warehouse"
     checkpointing: bool = False

@@ -137,16 +137,10 @@ def chunk_full_text(
     return chunks
 
 
-def chunk_pages(
-    pages: List[str],
-    chunk_size: int = CHUNK_SIZE_CHARS,
-    overlap_words: int = OVERLAP_WORDS,
-) -> List[str]:
+def chunk_pages(pages: List[str]) -> List[str]:
     """Page list → chunk list, as ``process_document`` does before the LLM
     stage (reference llm_aided_ocr.py:536-573)."""
-    return chunk_full_text(
-        join_pages_for_processing(pages), chunk_size=chunk_size, overlap_words=overlap_words
-    )
+    return chunk_full_text(join_pages_for_processing(pages))
 
 
 # ---------------------------------------------------------------------------
@@ -206,7 +200,6 @@ def chunk_text_by_tokens(
     text: str,
     max_chunk_tokens: int,
     count_tokens: TokenCounter = approx_token_count,
-    overlap_size: int = TOKEN_OVERLAP_WORDS,
 ) -> List[str]:
     """Token-budgeted sentence chunker + overlap adjust — the
     prompt-too-long fallback path (reference llm_aided_ocr.py:205-226).
@@ -228,7 +221,7 @@ def chunk_text_by_tokens(
             pending_tokens += n
     if pending:
         chunks.append(" ".join(pending))
-    return adjust_overlaps(chunks, max_chunk_tokens, count_tokens, overlap_size)
+    return adjust_overlaps(chunks, max_chunk_tokens, count_tokens, TOKEN_OVERLAP_WORDS)
 
 
 def adjust_overlaps(
@@ -254,11 +247,7 @@ def adjust_overlaps(
     return out
 
 
-def split_long_sentence(
-    sentence: str,
-    max_tokens: int,
-    count_tokens: TokenCounter = approx_token_count,
-) -> List[str]:
+def split_long_sentence(sentence: str, max_tokens: int) -> List[str]:
     """T5 — word-greedy sentence splitter. DEAD CODE in the reference
     (defined at llm_aided_ocr.py:228-248, never called); kept for API
     parity only."""
@@ -266,7 +255,7 @@ def split_long_sentence(
     pending: List[str] = []
     pending_tokens = 0
     for word in sentence.split():
-        n = count_tokens(word)
+        n = approx_token_count(word)
         if pending_tokens + n > max_tokens and pending:
             chunks.append(" ".join(pending))
             pending, pending_tokens = [word], n
@@ -660,19 +649,17 @@ def adaptive_similarity_threshold(
     original_text: str,
     processed_text: str,
     start_threshold: float = 0.40,
-    step: float = 0.05,
-    max_threshold: float = 0.95,
 ) -> float:
     """v1's adaptive search (CHANGELOG.md:171-173): raise the threshold
-    until the filtered text is shorter than the original, then roll back
-    one step."""
+    in 0.05 steps up to 0.95 until the filtered text is shorter than the
+    original, then roll back one step."""
     t = start_threshold
-    while t <= max_threshold:
+    while t <= 0.95:
         filtered, _ = filter_hallucinated_sentences(original_text, processed_text, t)
         if len(filtered) < len(original_text):
-            return max(start_threshold, t - step)
-        t += step
-    return max_threshold
+            return max(start_threshold, t - 0.05)
+        t += 0.05
+    return 0.95
 
 
 def filter_document(
@@ -749,15 +736,12 @@ class DocumentResult:
 def process_document_text(
     pages: List[str],
     correct: Callable[[str], str] = identity_correct,
-    reformat_as_markdown: bool = True,  # noqa: ARG001 — parity surface
-    chunk_size: int = CHUNK_SIZE_CHARS,
-    overlap_words: int = OVERLAP_WORDS,
 ) -> DocumentResult:
     """Reference main() semantics on one document: raw join (A1), chunk
     (§2.3), per-chunk correction, empty-join reassembly (A3), header strip
     (P3)."""
     raw = join_pages_raw(pages)
-    chunks = chunk_pages(pages, chunk_size=chunk_size, overlap_words=overlap_words)
+    chunks = chunk_pages(pages)
     corrected = assemble_chunks([correct(c) for c in chunks])
     return DocumentResult(
         raw_text=raw,

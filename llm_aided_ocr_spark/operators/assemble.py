@@ -26,15 +26,11 @@ def _ordered_concat(ix_col: str, payload_col: str, sep: str) -> Column:
     return F.array_join(payloads, sep)
 
 
-def assemble_documents(
-    corrected_df: DataFrame,
-    payload_col: str = "corrected",
-    strip_header: bool = True,
-) -> DataFrame:
+def assemble_documents(corrected_df: DataFrame, strip_header: bool = True) -> DataFrame:
     """``(url, chunk_ix, corrected)`` → ``(url, corrected_text, n_chunks)``
     with the P3 header strip applied natively after the empty-separator
     join (reference :576 then :672)."""
-    joined = _ordered_concat("chunk_ix", payload_col, "")
+    joined = _ordered_concat("chunk_ix", "corrected", "")
     agg = corrected_df.groupBy("url").agg(
         joined.alias("_joined"), F.max("n_chunks").alias("n_chunks")
     )
@@ -42,14 +38,9 @@ def assemble_documents(
     return agg.select("url", text.alias("corrected_text"), "n_chunks")
 
 
-def assemble_pages(
-    pages_df: DataFrame,
-    ix_col: str = "page_no",
-    payload_col: str = "page_text",
-    separator: str = "\n",
-) -> DataFrame:
+def assemble_pages(pages_df: DataFrame, separator: str = "\n") -> DataFrame:
     """A1/A2 — page rows → ``(url, doc_text)`` with the chosen separator
     (``"\\n"`` for the raw sink, ``"\\n\\n"`` for the processing path)."""
     return pages_df.groupBy("url").agg(
-        _ordered_concat(ix_col, payload_col, separator).alias("doc_text")
+        _ordered_concat("page_no", "page_text", separator).alias("doc_text")
     )

@@ -184,7 +184,6 @@ def countmin_build(
 def countmin_estimate(
     sketch: DataFrame,
     probes: DataFrame,
-    key_col: str = "key",
     depth: int = 4,
     width: int = 1024,
     seed: int = 1,
@@ -195,7 +194,7 @@ def countmin_estimate(
     (row, col) coordinates natively, left-joins the sketch's nonzero
     cells (broadcast — the sketch is bounded by construction), and
     takes the per-key MIN with absent cells as exact 0."""
-    key = F.col(key_col).cast("string")
+    key = F.col("key").cast("string")
     coords = F.array(*[
         F.struct(
             F.lit(j).alias("row_ix"),
@@ -205,9 +204,7 @@ def countmin_estimate(
         )
         for j in range(depth)
     ])
-    exploded = probes.select(
-        F.col(key_col).alias("key"), F.explode(coords).alias("c")
-    ).select(
+    exploded = probes.select(F.col("key"), F.explode(coords).alias("c")).select(
         "key",
         F.col("c.row_ix").alias("row_ix"),
         F.col("c.col_ix").alias("col_ix"),

@@ -127,7 +127,6 @@ def line_dedup_stats(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_doc_freq: int = 5,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """``(id, n_lines, n_kept, clean_len, clean_md5)`` — the audit view of
     :func:`line_dedup`: per-document line counts before/after plus the
@@ -135,7 +134,7 @@ def line_dedup_stats(
     driver oracle verifies the rebuilt BYTES, not just counts)."""
     cleaned = line_dedup(
         df, text_col=text_col, id_col=id_col, min_doc_freq=min_doc_freq,
-        hash_family=hash_family, out_col="_clean",
+        out_col="_clean",
     )
     return cleaned.select(
         F.col(id_col).alias("id"),
@@ -174,9 +173,6 @@ def _c4_line_keep(line: F.Column, min_words: int) -> F.Column:
 def c4_clean(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    min_line_words: int = C4_MIN_LINE_WORDS,
-    min_sentences: int = C4_MIN_SENTENCES,
     out_col: str | None = None,
     keep_col: str = "c4_keep",
 ) -> DataFrame:
@@ -184,13 +180,13 @@ def c4_clean(
     no shuffle, no Python, survives any scale the scan survives:
 
     * line level — keep only TRIMMED lines that end in a terminal
-      punctuation mark (``. ! ? "``), contain >= ``min_line_words``
+      punctuation mark (``. ! ? "``), contain >= ``C4_MIN_LINE_WORDS``
       words, and don't mention "javascript"; kept lines are re-joined
       with ``"\\n"`` (C4 operates on stripped lines, so the rebuild emits
       the trimmed text);
     * page level — ``keep_col`` is false when the ORIGINAL page mentions
       "lorem ipsum" (case-insensitive), contains a curly bracket, or the
-      cleaned text has fewer than ``min_sentences`` sentences. Sentences
+      cleaned text has fewer than ``C4_MIN_SENTENCES`` sentences. Sentences
       are counted as terminal-punctuation marks (``[.!?]``) in the
       cleaned text — a deterministic relational stand-in for the paper's
       nltk sentence splitter, documented as a deviation.
@@ -201,10 +197,7 @@ def c4_clean(
     """
     out_col = out_col or text_col
     text = F.coalesce(F.col(text_col), F.lit(""))
-    kept = F.filter(
-        F.split(text, "\n"),
-        lambda l: _c4_line_keep(l, min_line_words),
-    )
+    kept = F.filter(F.split(text, "\n"), lambda l: _c4_line_keep(l, C4_MIN_LINE_WORDS))
     # NB: an explicit 1-arg lambda — transform() passes (element, index)
     # to any 2-arity callable, and F.trim's optional second parameter
     # would silently become the index (trim-by-charset, wrong bytes)
@@ -218,31 +211,21 @@ def c4_clean(
             & ~F.contains(text, F.lit("{"))
             & (
                 F.regexp_count(F.col(out_col), F.lit(r"[.!?]"))
-                >= F.lit(min_sentences)
+                >= F.lit(C4_MIN_SENTENCES)
             ),
         )
     )
 
 
-def c4_clean_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_line_words: int = C4_MIN_LINE_WORDS,
-    min_sentences: int = C4_MIN_SENTENCES,
-) -> DataFrame:
+def c4_clean_stats(df: DataFrame) -> DataFrame:
     """``(id, n_lines, n_kept, n_sent, keep, clean_len, clean_md5)`` —
     the audit view of :func:`c4_clean` with the rebuilt BYTES pinned by
     an engine-portable md5 (the driver-oracle contract shared by
     line_dedup_stats / paragraph_dedup_stats)."""
-    cleaned = c4_clean(
-        df, text_col=text_col, id_col=id_col,
-        min_line_words=min_line_words, min_sentences=min_sentences,
-        out_col="_c4_clean", keep_col="_c4_keep",
-    )
-    lines = _lines_col(text_col)
+    cleaned = c4_clean(df, out_col="_c4_clean", keep_col="_c4_keep")
+    lines = _lines_col("text")
     return cleaned.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(lines).alias("n_lines"),
         F.when(F.length("_c4_clean") == 0, F.lit(0))
         .otherwise(F.size(F.split(F.col("_c4_clean"), "\n")))
@@ -299,7 +282,6 @@ def _phrase_stream_col(text_col: str):
 def blocklist_flags(
     df: DataFrame,
     blocklist: list,
-    text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """``(id, n_blocked, blocked)`` — C4's remaining document gate: drop
@@ -328,10 +310,10 @@ def blocklist_flags(
     n_hits = F.lit(0)
     if tokens:
         bl = F.array(*[F.lit(w) for w in tokens])
-        toks = F.array_distinct(_words_col(text_col))
+        toks = F.array_distinct(_words_col("text"))
         n_hits = n_hits + F.size(F.array_intersect(toks, bl))
     if phrases:
-        stream = _phrase_stream_col(text_col)
+        stream = _phrase_stream_col("text")
         from llm_aided_ocr_spark.operators.util import let_
 
         n_hits = n_hits + let_(

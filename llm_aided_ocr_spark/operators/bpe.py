@@ -271,18 +271,11 @@ def bpe_learn(
     return merges
 
 
-def bpe_merges_df(
-    df: DataFrame,
-    num_merges: int,
-    text_col: str = "text",
-    min_word_freq: int = 1,
-) -> DataFrame:
+def bpe_merges_df(df: DataFrame, num_merges: int) -> DataFrame:
     """:func:`bpe_learn` as a DataFrame ``(merge_ix, lhs, rhs, freq)`` —
     the driver-contract surface (``lhs``/``rhs`` because left/right are
     SQL keywords on both engines)."""
-    merges = bpe_learn(
-        df, num_merges, text_col=text_col, min_word_freq=min_word_freq
-    )
+    merges = bpe_learn(df, num_merges)
     spark = df.sparkSession
     return spark.createDataFrame(
         merges or [], "merge_ix int, lhs string, rhs string, freq bigint"
@@ -359,7 +352,6 @@ def bpe_token_counts(
 def bpe_vocabulary(
     df: DataFrame,
     merges: List[Tuple[int, str, str, int]] | List[Tuple[str, str]],
-    text_col: str = "text",
 ) -> DataFrame:
     """``(symbol, n_tokens)`` — the corpus's subword vocabulary under a
     learned merge table: every symbol the tokenizer will emit with its
@@ -377,7 +369,7 @@ def bpe_vocabulary(
     pairs = _merge_pairs(merges)
     words = (
         ensure_min_parallelism(df)
-        .select(F.explode(_words_col(text_col)).alias("w"))
+        .select(F.explode(_words_col("text")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -397,11 +389,9 @@ def bpe_vocabulary(
 def bpe_encode(
     df: DataFrame,
     merges: List[Tuple[int, str, str, int]] | List[Tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
 ) -> DataFrame:
     """Apply a learned merge list to tokenize documents:
-    ``out_col array<string>`` of subword symbols (word-local, merges in
+    ``bpe_tokens array<string>`` of subword symbols (word-local, merges in
     learned order — the standard BPE encoder loop). One Arrow pass over
     the corpus; the merge table rides in the task closure (vocab-sized
     merge lists belong in a broadcast, same mechanics)."""
@@ -418,9 +408,9 @@ def bpe_encode(
         return ([[sym for w in ws for sym in enc[w]] for ws in words_col],)
 
     return map_arrow(
-        df.withColumn("_bpe_words", _words_col(text_col)),
+        df.withColumn("_bpe_words", _words_col("text")),
         _enc,
-        f"{out_fields}, {out_col} array<string>",
+        f"{out_fields}, bpe_tokens array<string>",
         keep=df.columns,
     )
 
@@ -428,8 +418,6 @@ def bpe_encode(
 def bpe_fertility(
     df: DataFrame,
     merges: List[Tuple[int, str, str, int]] | List[Tuple[str, str]],
-    text_col: str = "text",
-    lang_col: str = "lang",
 ) -> DataFrame:
     """``(lang, n_words, n_chars, n_bpe_tokens, fertility, chars_per_token)``
     — per-language tokenizer FERTILITY (subword tokens per word) and
@@ -453,8 +441,8 @@ def bpe_fertility(
 
     pairs = _merge_pairs(merges)
     base = ensure_min_parallelism(df).select(
-        F.coalesce(F.col(lang_col), F.lit("")).alias("lang"),
-        _words_col(text_col).alias("ws"),
+        F.coalesce(F.col("lang"), F.lit("")).alias("lang"),
+        _words_col("text").alias("ws"),
     )
     occ = persist(
         base.select("lang", F.explode("ws").alias("w"))

@@ -230,8 +230,6 @@ def chain_assembly(
 
 def pagination_chains(
     pages_df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
     max_len: int = 1024,
     on_conflict: str = "error",
 ) -> DataFrame:
@@ -246,7 +244,7 @@ def pagination_chains(
     from llm_aided_ocr_spark.operators.linkgraph import resolve_href_col
 
     nexts = (
-        link_rels(pages_df, html_col=html_col, id_col=url_col, rels=["next"])
+        link_rels(pages_df, rels=["next"])
         .select(
             F.col("id").alias("src"),
             resolve_href_col(F.col("id"), F.col("href")).alias("dst"),
@@ -254,7 +252,7 @@ def pagination_chains(
         .where(F.col("dst").isNotNull() & (F.col("dst") != F.col("src")))
     )
     out = chain_assembly(
-        pages_df.select(F.col(url_col).alias("url")),
+        pages_df.select(F.col("url")),
         nexts,
         id_col="url",
         max_len=max_len,
@@ -267,9 +265,6 @@ def pagination_chains(
 
 def redirect_resolve(
     fetch_df: DataFrame,
-    url_col: str = "url",
-    status_col: str = "status",
-    location_col: str = "location",
     max_hops: int = 10,
     on_conflict: str = "error",
 ) -> DataFrame:
@@ -286,9 +281,9 @@ def redirect_resolve(
     Linear per-hop loop, not pointer doubling — see the module
     docstring for why that is the right call at a ≤10-hop budget."""
     f = fetch_df.select(
-        F.col(url_col).alias("url"),
-        F.col(status_col).cast("int").alias("status"),
-        F.col(location_col).alias("location"),
+        F.col("url"),
+        F.col("status").cast("int").alias("status"),
+        F.col("location"),
     )
     dup = f.groupBy("url").count().where(F.col("count") > 1)
     if on_conflict == "error":

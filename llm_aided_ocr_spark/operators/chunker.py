@@ -25,7 +25,6 @@ def chunk_documents(
     extracted_df: DataFrame,
     chunk_size: int = CHUNK_SIZE_CHARS,
     overlap_words: int = OVERLAP_WORDS,
-    text_col: str = "extracted_text",
 ) -> DataFrame:
     """``(url, <text_col>)`` → ``(url, chunk_ix, n_chunks, chunk)``.
 
@@ -33,7 +32,7 @@ def chunk_documents(
     single empty chunk, matching the reference (an empty paragraph list
     still produces one chunk).
     """
-    cols = extracted_df.selectExpr("url", f"{text_col} as _text")
+    cols = extracted_df.selectExpr("url", "extracted_text as _text")
 
     def _chunk(doc_urls, texts):
         # rows expand, so nothing is kept: url is emitted once per chunk

@@ -86,9 +86,6 @@ ContextChunkCorrector = Callable[[str, str, bool, bool], str]
 def correct_chunks_sequential(
     chunks_df: DataFrame,
     provider: str = "heuristic",
-    reformat_as_markdown: bool = True,
-    suppress_headers_and_page_numbers: bool = True,
-    context_tail_chars: int = 1000,
     context_provider: "ContextChunkCorrector | None" = None,
 ) -> DataFrame:
     """Sequential-context mode — the reference's local-LLM path
@@ -120,11 +117,11 @@ def correct_chunks_sequential(
             processed = fn(
                 chunks[i] if chunks[i] is not None else "",
                 context,
-                reformat_as_markdown,
-                suppress_headers_and_page_numbers,
+                True,  # reformat_as_markdown
+                True,  # suppress_headers_and_page_numbers
             )
             outs.append(processed)
-            context = processed[-context_tail_chars:] if processed else ""
+            context = processed[-1000:] if processed else ""
         return (
             [urls[i] for i in order], [ixs[i] for i in order],
             [ns[i] for i in order], outs,

@@ -51,12 +51,9 @@ _URL_DASHED_RE = r"/((?:19|20)\d{2}-\d{2}-\d{2})(?:/|$|\?)"
 
 def publication_dates(
     pages_df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
     id_col: str = "url",
     meta_keys: Optional[List[str]] = None,
     min_year: int = 1995,
-    max_year: int = 2035,
 ) -> DataFrame:
     """``(id, date_meta, date_time_tag, date_url, pub_date, source)`` —
     one row per page; the three channel columns are each normalized and
@@ -81,7 +78,7 @@ def publication_dates(
     # whole-stage codegen (plans/r06/publication_dates_before.txt).
     # CollapseProject keeps non-cheap aliases, so each survives as one
     # evaluation (guide §1.2; same fix as capture_novelty/dup_spans).
-    h = F.decode(F.coalesce(F.col(html_col), F.lit(b"")), "UTF-8")
+    h = F.decode(F.coalesce(F.col("html"), F.lit(b"")), "UTF-8")
     tags = F.regexp_extract_all(h, F.lit(_META_TAG_RE), F.lit(1))
     pairs = F.transform(
         tags,
@@ -90,7 +87,7 @@ def publication_dates(
             F.regexp_extract(t, _META_CONTENT_RE, 1).alias("content"),
         ),
     )
-    url = F.coalesce(F.col(url_col), F.lit(""))
+    url = F.coalesce(F.col("url"), F.lit(""))
     s1 = pages_df.select(
         F.col(id_col).alias("_pd_id"),
         pairs.alias("_pairs"),
@@ -134,7 +131,7 @@ def publication_dates(
     )
 
     def _gate(d):  # range gate (NULL outside [min_year, max_year])
-        return F.when((F.year(d) >= min_year) & (F.year(d) <= max_year), d)
+        return F.when((F.year(d) >= min_year) & (F.year(d) <= 2035), d)
 
     s3 = s2.select(
         "_pd_id",

@@ -61,9 +61,7 @@ def exact_dedup(
     )
 
 
-def exact_keeper_ids(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_keeper_ids(df: DataFrame) -> DataFrame:
     """``(keeper_id)`` — the min-id representative of every exact-text
     group (groups of size 1 included: a unique doc keeps itself). The
     aggregation projects to ``(id, fingerprint)`` BEFORE the shuffle, so
@@ -71,9 +69,9 @@ def exact_keeper_ids(
     100 TB-scale keep-list path. Materialize with
     ``corpus.join(keepers, corpus[id] == keepers.keeper_id, 'left_semi')``
     against a table bucketed on the id (no exchange on the corpus side)."""
-    h = F.xxhash64(F.coalesce(F.col(text_col), F.lit("")))
+    h = F.xxhash64(F.coalesce(F.col("text"), F.lit("")))
     return (
-        df.select(F.col(id_col).alias("_id"), h.alias("_fp"))
+        df.select(F.col("doc_id").alias("_id"), h.alias("_fp"))
         .groupBy("_fp")
         .agg(F.min("_id").alias("keeper_id"))
         .select("keeper_id")
@@ -142,17 +140,15 @@ def canonical_url_keepers(
     )
 
 
-def exact_dup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """``(fingerprint, n_dups, keeper_id)`` for groups with >1 member."""
-    h = F.xxhash64(F.coalesce(F.col(text_col), F.lit("")))
+    h = F.xxhash64(F.coalesce(F.col("text"), F.lit("")))
     return (
-        df.select(F.col(id_col), h.alias("fingerprint"))
+        df.select(F.col("doc_id"), h.alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
             F.count(F.lit(1)).alias("n_dups"),
-            F.min(id_col).alias("keeper_id"),
+            F.min("doc_id").alias("keeper_id"),
         )
         .filter(F.col("n_dups") > 1)
     )
@@ -288,7 +284,6 @@ def gram_hashes_arrow(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_family: str = "xxhash64",
-    out_col: str = "ghs",
 ) -> DataFrame:
     """``(id, ghs array<bigint>)`` — the SAME word-n-gram hash array as
     :func:`shingle_array_col`, computed as one Arrow/numpy pass over
@@ -337,9 +332,10 @@ def gram_hashes_arrow(
         return (out,)
 
     id_type = dict(df.dtypes)[id_col]
-    return map_arrow(
-        prepared, _grams, f"id {id_type}, {out_col} array<bigint>", keep=("id",)
-    )
+    return map_arrow(prepared, _grams, f"id {id_type}, ghs array<bigint>", keep=("id",))
+
+
+PREFIX_C = 8  # the ``c`` of ngram_jaccard_pairs' extended prefix
 
 
 def ngram_jaccard_pairs(
@@ -349,7 +345,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_shingle_df: int | None = 1000,
-    prefix_c: int = 8,
 ) -> DataFrame:
     """All pairs with word-n-gram Jaccard >= threshold — EXACT, via
     c-extended PREFIX-FILTERED candidate generation with a common-prefix
@@ -359,7 +354,7 @@ def ngram_jaccard_pairs(
 
     * every document's (capped) shingle set is sorted by GLOBAL ascending
       document frequency; only its EXTENDED PREFIX of length
-      ``min(sz, sz - ceil(t*sz) + c)`` is indexed;
+      ``min(sz, sz - ceil(t*sz) + c)`` is indexed (``c`` = :data:`PREFIX_C`);
     * **count-filter theorem** (the load-bearing step): if J(A,B) >= t
       then |A∩B| >= ceil(t*max(|A|,|B|)), and because both arrays are
       sorted by the same global order, at most ``ceil(t*|A|) - c``
@@ -433,7 +428,7 @@ def ngram_jaccard_pairs(
             "plen",
             F.least(
                 F.col("sz"),
-                (F.col("sz") - _ceil_t(F.col("sz")) + F.lit(prefix_c)).cast("int"),
+                (F.col("sz") - _ceil_t(F.col("sz")) + F.lit(PREFIX_C)).cast("int"),
             ),
         )
     )
@@ -470,7 +465,7 @@ def ngram_jaccard_pairs(
             (
                 F.col("cpp")
                 >= F.least(
-                    F.lit(prefix_c).cast("bigint"),
+                    F.lit(PREFIX_C).cast("bigint"),
                     _ceil_t(F.col("sz_a")),
                     _ceil_t(F.col("sz_b")),
                 )
@@ -738,27 +733,24 @@ def lsh_candidate_pairs(
     sig_df: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
-    max_bucket_size: int | None = 200,
 ) -> DataFrame:
     """Banded LSH: hash each band of the signature to a bucket; docs
     sharing any (band, bucket) are candidates. The pair join runs WITHIN
     buckets only — this is what makes near-dup tractable at 10^12 docs.
 
-    ``max_bucket_size`` drops buckets larger than the cap before the
-    self-join (a bucket of B docs yields B² pairs; one degenerate bucket —
-    e.g. all empty documents sharing the sentinel signature — would
-    otherwise dominate the job). Members of an over-full bucket almost
-    always co-occur in other, smaller buckets, so recall loss is
-    marginal; set ``None`` for exhaustive candidates."""
+    Buckets of more than 200 documents are dropped before the self-join
+    (a bucket of B docs yields B² pairs; one degenerate bucket — e.g. all
+    empty documents sharing the sentinel signature — would otherwise
+    dominate the job). Members of an over-full bucket almost always
+    co-occur in other, smaller buckets, so recall loss is marginal."""
     buckets = _band_buckets(sig_df, bands, rows_per_band)
-    if max_bucket_size is not None:
-        small = (
-            buckets.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("bsz"))
-            .filter(F.col("bsz") <= max_bucket_size)
-            .select("band", "bucket")
-        )
-        buckets = buckets.join(small, on=["band", "bucket"], how="left_semi")
+    small = (
+        buckets.groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("bsz"))
+        .filter(F.col("bsz") <= 200)
+        .select("band", "bucket")
+    )
+    buckets = buckets.join(small, on=["band", "bucket"], how="left_semi")
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -775,11 +767,8 @@ def minhash_dedup_pairs(
     num_perm: int = 64,
     bands: int = 16,
     rows_per_band: int = 4,
-    n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_bucket_size: int | None = 200,
-    hash_family: str = "md5_52",
 ) -> DataFrame:
     """LSH candidates verified by estimated Jaccard (signature agreement).
     ``(id_a, id_b, est_jaccard)``."""
@@ -798,12 +787,10 @@ def minhash_dedup_pairs(
     # are exact_dedup's job. (sig[0] == p identifies the sentinel: the
     # universal family maps real shingles into [0, p).)
     sigs = persist(minhash_signatures(
-        df, num_perm=num_perm, n=n, text_col=text_col, id_col=id_col,
-        hash_family=hash_family,
+        df, num_perm=num_perm, text_col=text_col, id_col=id_col,
     ).filter(F.get(F.col("sig"), 0) != F.lit(MINHASH_P)))
     cands = lsh_candidate_pairs(
         sigs, bands=bands, rows_per_band=rows_per_band,
-        max_bucket_size=max_bucket_size,
     )
     sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
@@ -878,13 +865,12 @@ def simhash_near_dup_pairs(
     max_hamming: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_bucket_size: int | None = 200,
     hash_family: str = "md5_52",
 ) -> DataFrame:
     """Candidate generation by 4-band equality over the signature (any
     identical band → candidate; guarantees recall for hamming<=3 by
     pigeonhole), verified by exact hamming distance via bit_count(xor).
-    ``max_bucket_size`` drops degenerate band buckets before the
+    Band buckets of more than 200 documents are dropped before the
     self-join (same rationale as :func:`lsh_candidate_pairs`)."""
     sigs = persist(simhash_signatures(
         df, text_col=text_col, id_col=id_col, hash_family=hash_family
@@ -908,14 +894,13 @@ def simhash_near_dup_pairs(
             )
         ).alias("bb"),
     ).select("id", "simhash", F.col("bb.band").alias("band"), F.col("bb.key").alias("key"))
-    if max_bucket_size is not None:
-        small = (
-            bands.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("bsz"))
-            .filter(F.col("bsz") <= max_bucket_size)
-            .select("band", "key")
-        )
-        bands = bands.join(small, on=["band", "key"], how="left_semi")
+    small = (
+        bands.groupBy("band", "key")
+        .agg(F.count(F.lit(1)).alias("bsz"))
+        .filter(F.col("bsz") <= 200)
+        .select("band", "key")
+    )
+    bands = bands.join(small, on=["band", "key"], how="left_semi")
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -937,12 +922,7 @@ def simhash_near_dup_pairs(
 # Dedup clusters (connected components over near-dup pairs)
 # ---------------------------------------------------------------------------
 
-def dedup_clusters(
-    pairs_df: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def dedup_clusters(pairs_df: DataFrame, max_iter: int = 25) -> DataFrame:
     """``(id, cluster_id)`` — connected components over a near-dup pair
     relation (cluster_id = min doc id in the component), the step that
     turns pairwise dedup output into a drop list: keep ``id ==
@@ -977,9 +957,7 @@ def dedup_clusters(
     already their own keeper). Input pairs may be duplicated/asymmetric;
     the edge set is symmetrized internally.
     """
-    edges = pairs_df.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    )
+    edges = pairs_df.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -1034,17 +1012,13 @@ def dedup_clusters(
     )
 
 
-def dedup_keep_list(
-    pairs_df: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
+def dedup_keep_list(pairs_df: DataFrame) -> DataFrame:
     """``(id, cluster_id, keep)`` — the actionable form of
     :func:`dedup_clusters`: ``keep`` is true for the cluster's min-id
     representative. Materialize survivors with an anti-join of the corpus
     against ``filter(~keep)`` (16-byte rows; bucket the corpus on the id
     for an exchange-free join, see ``sources/io.py``)."""
-    c = dedup_clusters(pairs_df, id_a=id_a, id_b=id_b)
+    c = dedup_clusters(pairs_df)
     return c.withColumn("keep", F.col("id") == F.col("cluster_id"))
 
 
@@ -1329,7 +1303,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_family: str = "xxhash64",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """``(id, n_hits)`` — training documents sharing at least one word
     n-gram with the evaluation corpus, with the count of DISTINCT shared
@@ -1341,15 +1314,14 @@ def decontaminate(
     Scale shape: the train side never shuffles — shingle sets are
     document-local arrays and the contamination join streams them against
     the BROADCAST eval-gram set (eval benchmarks are tiny relative to a
-    100 TB corpus; set ``broadcast_eval=False`` to fall back to a
-    shuffle hash join when the blocklist outgrows the driver). The only
+    100 TB corpus). The only
     exchange of the whole operator is the final ``groupBy(id)`` on
     16-byte ``(id, 1)`` rows with map-side combine. Normalization matches
     the n-gram Jaccard family (lower → strip non-alnum → collapse
     whitespace), so "same gram" is casing/punctuation-insensitive."""
-    ev = eval_ngram_set(eval_df, n=n, text_col=text_col, hash_family=hash_family)
-    if broadcast_eval:
-        ev = F.broadcast(ev)
+    ev = F.broadcast(
+        eval_ngram_set(eval_df, n=n, text_col=text_col, hash_family=hash_family)
+    )
     tr = word_shingles(
         train_df, n=n, text_col=text_col, id_col=id_col, hash_family=hash_family
     )
@@ -1364,23 +1336,14 @@ def remove_contaminated(
     train_df: DataFrame,
     eval_df: DataFrame,
     n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_family: str = "xxhash64",
-    min_hits: int = 1,
 ) -> DataFrame:
     """The actionable form: the training corpus minus every document with
-    ``>= min_hits`` eval-gram collisions. The anti-join's right side is
+    at least one eval-gram collision. The anti-join's right side is
     the tiny contaminated-id list (broadcast-eligible); the corpus rows
     move at most once, same discipline as :func:`near_dedup`."""
-    hits = decontaminate(
-        train_df, eval_df, n=n, text_col=text_col, id_col=id_col,
-        hash_family=hash_family,
-    )
-    drops = hits.filter(F.col("n_hits") >= F.lit(min_hits)).select(
-        F.col("id").alias(id_col)
-    )
-    return train_df.join(drops, on=id_col, how="left_anti")
+    hits = decontaminate(train_df, eval_df, n=n)
+    drops = hits.filter(F.col("n_hits") >= F.lit(1)).select(F.col("id").alias("doc_id"))
+    return train_df.join(drops, on="doc_id", how="left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -1392,7 +1355,6 @@ def dup_span_profile(
     n: int = 50,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_family: str = "xxhash64",
     with_stripped: bool = True,
 ) -> DataFrame:
     """``(id, n_grams, n_dup, dup_frac[, stripped])`` — per-document
@@ -1454,7 +1416,7 @@ def dup_span_profile(
     from pyspark import StorageLevel
 
     gh_rel = persist(gram_hashes_arrow(
-        df, n=n, text_col=text_col, id_col=id_col, hash_family=hash_family
+        df, n=n, text_col=text_col, id_col=id_col
     ), StorageLevel.MEMORY_AND_DISK)
     ex = gh_rel.select(
         F.col("id").alias("_ds_id"), F.posexplode("ghs").alias("pos", "gh")
@@ -1687,13 +1649,7 @@ def paragraph_dedup_stats(
     )
 
 
-def cluster_keepers(
-    clusters: DataFrame,
-    quality: DataFrame,
-    id_col: str = "id",
-    cluster_col: str = "cluster_id",
-    quality_col: str = "quality",
-) -> DataFrame:
+def cluster_keepers(clusters: DataFrame, quality: DataFrame) -> DataFrame:
     """``(cluster_id, keeper_id, n_members, best_quality)`` — pick the
     QUALITY-BEST representative of every near-dup cluster (ties by min
     id) instead of the positional min-id default: the FineWeb/RefinedWeb
@@ -1722,13 +1678,8 @@ def cluster_keepers(
     the all-NULL-quality cluster's min-id keeper)."""
     from pyspark.sql.types import NumericType
 
-    j = clusters.select(
-        F.col(id_col).alias("_id"), F.col(cluster_col).alias("cluster_id")
-    ).join(
-        quality.select(
-            F.col(id_col).alias("_id"),
-            F.col(quality_col).alias("_q"),
-        ),
+    j = clusters.select(F.col("id").alias("_id"), F.col("cluster_id")).join(
+        quality.select(F.col("id").alias("_id"), F.col("quality").alias("_q")),
         "_id",
     )
     if isinstance(j.schema["_id"].dataType, NumericType):

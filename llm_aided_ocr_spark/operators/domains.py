@@ -125,11 +125,11 @@ def _normalized_host_and_ps_len(host_raw, rules):
     return host, ps, valid
 
 
-def registered_domain_col(host_raw, rules: Optional[List[str]] = None):
+def registered_domain_col(host_raw):
     """eTLD+1 as a single native column over a raw-host column — the
     per-row form :func:`annotate` and grouping keys use (NULL when the
     host is empty, malformed, or itself a public suffix)."""
-    host, ps, valid = _normalized_host_and_ps_len(host_raw, rules)
+    host, ps, valid = _normalized_host_and_ps_len(host_raw, None)
     n = F.size(F.split(host, r"\."))
     return F.when(
         valid & (n >= ps + 1),
@@ -139,7 +139,6 @@ def registered_domain_col(host_raw, rules: Optional[List[str]] = None):
 
 def registered_domains(
     df: DataFrame,
-    host_col: str = "host",
     id_col: Optional[str] = "id",
     rules: Optional[List[str]] = None,
 ) -> DataFrame:
@@ -148,7 +147,7 @@ def registered_domains(
     one trailing dot stripped); NULL/empty hosts yield NULL outputs;
     a host that is itself a public suffix yields a NULL
     ``registered_domain``."""
-    host, ps, valid = _normalized_host_and_ps_len(F.col(host_col), rules)
+    host, ps, valid = _normalized_host_and_ps_len(F.col("host"), rules)
     out = df.withColumn("__h", F.when(valid, host)).withColumn(
         "__ps", F.when(valid, ps)
     )

@@ -173,11 +173,7 @@ def noindex_col(html_col: str = "html") -> F.Column:
     )
 
 
-def html_page_signals(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-) -> DataFrame:
+def html_page_signals(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, lang_attr, title, noindex, n_links, html_bytes,
     links_per_kb)`` — the cheap page-level signals an extraction
     pipeline reads BEFORE committing to a full DOM strip:
@@ -207,13 +203,13 @@ def html_page_signals(
     high-link-density pages)."""
     from llm_aided_ocr_spark.operators.util import let_
 
-    raw = F.coalesce(F.col(html_col), F.lit(b""))  # NULL html = empty page
+    raw = F.coalesce(F.col("html"), F.lit(b""))  # NULL html = empty page
     h = F.decode(raw, "UTF-8")
     lang = F.regexp_extract(
         h, r'(?is)<html\b[^>]*\blang\s*=\s*["\']?([A-Za-z-]+)', 1
     )
     title = F.regexp_extract(h, r"(?is)<title[^>]*>(.*?)</title>", 1)
-    noindex = noindex_col(html_col)
+    noindex = noindex_col("html")
     n_links = F.regexp_count(h, F.lit(r"(?is)<a[\s>]"))
     canon_fwd = F.regexp_extract(
         h,
@@ -259,11 +255,7 @@ def html_page_signals(
     )
 
 
-def charset_signals(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-) -> DataFrame:
+def charset_signals(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, has_bom, charset)`` — encoding declaration sniff, the step
     a Common-Crawl extraction pipeline runs BEFORE committing to a
     decode: raw fetch bytes arrive with no reliable charset, and
@@ -288,7 +280,7 @@ def charset_signals(
     :func:`decode_pages`, which sniffs AND transcodes in one Arrow pass
     and never fails on malformed input.
     """
-    h = F.decode(F.coalesce(F.col(html_col), F.lit(b"")), "UTF-8")
+    h = F.decode(F.coalesce(F.col("html"), F.lit(b"")), "UTF-8")
     bom = F.startswith(h, F.lit("\ufeff"))
     declared = F.lower(
         F.nullif(
@@ -408,13 +400,7 @@ def content_blocks(
     )
 
 
-def extract_by_density(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-    min_words: int = 4,
-    max_link_density: float = 0.5,
-) -> DataFrame:
+def extract_by_density(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, text)`` — the density-based alternative extractor: keep
     :func:`content_blocks`' content blocks in document order, strip
     tags/entities per block through the SAME kernel the main extractor
@@ -424,9 +410,7 @@ def extract_by_density(
     sized rows (the page html itself never shuffles — blocks carry only
     their own bytes); ``array_sort`` on (block_idx) restores order
     without a window."""
-    blocks = content_blocks(
-        pages_df, html_col, id_col, min_words, max_link_density
-    )
+    blocks = content_blocks(pages_df, "html", id_col, 4, 0.5)
     kept = blocks.filter(F.col("is_content")).select(
         "id",
         F.struct("block_idx", "block_html").alias("s"),
@@ -457,7 +441,6 @@ _HEADING_RE = r"(?is)<h([1-6])\b[^>]*>(.*?)</h\1\s*>"
 
 def meta_properties(
     pages_df: DataFrame,
-    html_col: str = "html",
     id_col: str = "url",
     keys: Optional[List[str]] = None,
 ) -> DataFrame:
@@ -479,7 +462,7 @@ def meta_properties(
     become rows. Zero Python, zero shuffle, fuses into the scan.
     Document-local; no reference analogue (the reference ingests PDFs,
     llm_aided_ocr.py:411-426); part of the web-curation suite."""
-    h = F.decode(F.coalesce(F.col(html_col), F.lit(b"")), "UTF-8")
+    h = F.decode(F.coalesce(F.col("html"), F.lit(b"")), "UTF-8")
     tags = F.regexp_extract_all(h, F.lit(_META_TAG_RE), F.lit(1))
     pairs = F.transform(
         tags,
@@ -497,11 +480,7 @@ def meta_properties(
     ).select("id", F.col("p.key").alias("key"), F.col("p.content").alias("content"))
 
 
-def heading_outline(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-) -> DataFrame:
+def heading_outline(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, heading_ix, level, text)`` — the document's ``<h1>–<h6>``
     outline in order: section structure for markdown reconstruction
     (the reference's correction pass promotes detected headings to
@@ -515,7 +494,7 @@ def heading_outline(
     evaluated twice (level group, body group — identical pattern, so
     the match lists align), ``arrays_zip`` + ``posexplode``, stripping
     as codegen expressions. Zero Python, zero shuffle."""
-    h = F.decode(F.coalesce(F.col(html_col), F.lit(b"")), "UTF-8")
+    h = F.decode(F.coalesce(F.col("html"), F.lit(b"")), "UTF-8")
     base = pages_df.select(
         F.col(id_col).alias("id"),
         F.regexp_extract_all(h, F.lit(_HEADING_RE), F.lit(1)).alias("lv"),
@@ -539,10 +518,7 @@ def heading_outline(
     )
 
 
-def density_extract_stage(
-    min_words: int = 4,
-    max_link_density: float = 0.5,
-):
+def density_extract_stage():
     """A ``run_pipeline(extract_fn=...)``-compatible extraction stage
     that swaps the default DOM strip for :func:`extract_by_density`
     (block-level link-density selection): takes the pages relation,
@@ -557,8 +533,6 @@ def density_extract_stage(
         txt = extract_by_density(
             pages_df,
             id_col="url",
-            min_words=min_words,
-            max_link_density=max_link_density,
         ).withColumnsRenamed({"id": "url", "text": "extracted_text"})
         meta = pages_df.select("url", "warc_ts", "lang")
         return meta.join(txt, "url", "left").select(
@@ -589,12 +563,12 @@ SUPPORTED_CHARSETS = {
 _DECL_RE = None  # compiled lazily on the executor
 
 
-def sniff_decode(b, default_codec: str = "utf-8"):
+def sniff_decode(b):
     """``(charset_used, text)`` for one page's raw bytes — the WHATWG-
     subset precedence shared by :func:`decode_pages` and
     ``extract_text(sniff_charset=True)``: BOM (authoritative, stripped)
     → declared charset within the 1024-byte prescan window if in
-    :data:`SUPPORTED_CHARSETS` → ``default_codec``; always
+    :data:`SUPPORTED_CHARSETS` → utf-8; always
     ``errors="replace"``."""
     global _DECL_RE
     if _DECL_RE is None:
@@ -608,16 +582,11 @@ def sniff_decode(b, default_codec: str = "utf-8"):
         return "utf-8", b[3:].decode("utf-8", errors="replace")
     m = _DECL_RE.search(b[:1024].decode("latin-1"))
     decl = m.group(1).lower() if m else None
-    name = SUPPORTED_CHARSETS.get(decl, default_codec)
+    name = SUPPORTED_CHARSETS.get(decl, "utf-8")
     return name, b.decode(name, errors="replace")
 
 
-def decode_pages(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-    default: str = "utf-8",
-) -> DataFrame:
+def decode_pages(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, charset_used, html_text)`` — charset-aware transcode of
     raw fetch bytes to text, the step :func:`charset_signals` only
     SNIFFS for: decode windows-1252 as utf-8 and every non-ASCII page
@@ -625,7 +594,7 @@ def decode_pages(
     UTF-8 BOM is authoritative (and stripped from the output), else the
     first declared ``charset=`` IF it is in :data:`SUPPORTED_CHARSETS`
     (aliases folded — ``latin-1`` → iso-8859-1, ``windows-1252`` →
-    cp1252, which differ in the 0x80–0x9F block), else ``default``.
+    cp1252, which differ in the 0x80–0x9F block), else utf-8.
     Decoding uses ``errors="replace"`` so malformed bytes yield U+FFFD
     instead of failing the task — the torn-record discipline.
 
@@ -639,12 +608,11 @@ def decode_pages(
     :func:`charset_signals` for cheap native sniffing of known-utf-8
     corpora; use this for raw fetch bytes. Document-local, zero
     shuffle."""
-    base = pages_df.select(F.col(id_col).alias("id"), F.col(html_col).alias("_raw"))
+    base = pages_df.select(F.col(id_col).alias("id"), F.col("html").alias("_raw"))
     id_type = dict(base.dtypes)["id"]
-    default_codec = SUPPORTED_CHARSETS.get(default.lower(), default)
 
     def _decode(raws):
-        return zip(*(sniff_decode(b, default_codec) for b in raws))
+        return zip(*(sniff_decode(b) for b in raws))
 
     return map_arrow(
         base, _decode, f"id {id_type}, charset_used string, html_text string",
@@ -657,11 +625,7 @@ _TR_RE = r"(?is)<tr\b[^>]*>(.*?)</tr\s*>"
 _CELL_RE = r"(?is)<(td|th)\b[^>]*>(.*?)</\1\s*>"
 
 
-def table_extract(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-) -> DataFrame:
+def table_extract(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, table_ix, row_ix, col_ix, is_header, cell_text)`` — every
     ``<table>`` flattened to a long-form cell relation in document
     order: the structured data a text-only DOM strip destroys
@@ -680,7 +644,7 @@ def table_extract(
     cell truncates its parent at the inner close tag — acceptable for
     the dominant data-table shapes; a DOM parse is the injectable
     upgrade path."""
-    h = F.decode(F.coalesce(F.col(html_col), F.lit(b"")), "UTF-8")
+    h = F.decode(F.coalesce(F.col("html"), F.lit(b"")), "UTF-8")
     tables = pages_df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.regexp_extract_all(h, F.lit(_TABLE_RE), F.lit(1))).alias(
@@ -731,7 +695,6 @@ _HREF_ATTR_RE = r"""(?i)\bhref\s*=\s*["']?([^"'\s>]+)"""
 
 def link_rels(
     pages_df: DataFrame,
-    html_col: str = "html",
     id_col: str = "url",
     rels: Optional[List[str]] = None,
 ) -> DataFrame:
@@ -751,7 +714,7 @@ def link_rels(
     ``regexp_extract_all`` lists the link tags, a ``transform``
     projects (rel-token array, href), the rel filter evaluates BEFORE
     the explode. Zero Python, zero shuffle, fuses into the scan."""
-    h = F.decode(F.coalesce(F.col(html_col), F.lit(b"")), "UTF-8")
+    h = F.decode(F.coalesce(F.col("html"), F.lit(b"")), "UTF-8")
     tags = F.regexp_extract_all(h, F.lit(_LINK_TAG_RE), F.lit(1))
     pairs = F.transform(
         tags,
@@ -785,18 +748,20 @@ _JSONLD_RE = (
 )
 
 
-def jsonld_objects(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-    fields: Optional[dict] = None,
-) -> DataFrame:
+JSONLD_FIELDS = {
+    "ld_type": "$['@type']",
+    "headline": "$.headline",
+    "date_published": "$.datePublished",
+}
+
+
+def jsonld_objects(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, jsonld_ix, raw_json, <field columns>)`` — the page's
     JSON-LD structured-data blocks (``<script
     type="application/ld+json">``), the schema.org channel publishers
     actually fill (NewsArticle headline / datePublished / author feed
     document metadata far more reliably than visible DOM heuristics).
-    ``fields`` maps output column → JSONPath (default: ``ld_type`` →
+    :data:`JSONLD_FIELDS` maps output column → JSONPath (``ld_type`` →
     ``$['@type']``, ``headline``, ``date_published`` →
     ``$.datePublished``); extraction is Spark's native
     ``get_json_object`` (NULL for absent paths or malformed JSON — a
@@ -805,13 +770,7 @@ def jsonld_objects(
     Same scan-fused shape as :func:`meta_properties`: one regexp pass
     lists the blocks, posexplode, then native JSON path projection.
     Zero Python, zero shuffle."""
-    if fields is None:
-        fields = {
-            "ld_type": "$['@type']",
-            "headline": "$.headline",
-            "date_published": "$.datePublished",
-        }
-    h = F.decode(F.coalesce(F.col(html_col), F.lit(b"")), "UTF-8")
+    h = F.decode(F.coalesce(F.col("html"), F.lit(b"")), "UTF-8")
     blocks = pages_df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.regexp_extract_all(h, F.lit(_JSONLD_RE), F.lit(1))).alias(
@@ -825,21 +784,15 @@ def jsonld_objects(
         raw.alias("raw_json"),
         *[
             F.get_json_object(raw, path).alias(name)
-            for name, path in fields.items()
+            for name, path in JSONLD_FIELDS.items()
         ],
     )
 
 
-def content_blocks_contextual(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-    min_words: int = 4,
-    max_link_density: float = 0.5,
-) -> DataFrame:
+def content_blocks_contextual(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """:func:`content_blocks` plus JusText's context pass, simplified
     to one rule: a block that failed only on LENGTH (link density
-    within the threshold, ``0 < n_words < min_words``) is PROMOTED when
+    within the threshold, ``0 < n_words < 4``) is PROMOTED when
     an adjacent block in document order is content — short connective
     paragraphs, single-line quotes and sub-headings between body
     paragraphs are prose, while the same short block inside a
@@ -854,9 +807,7 @@ def content_blocks_contextual(
     document-sized, bounded by the block regex's per-page match count).
     ``block_html`` rides through that exchange; callers who only need
     verdicts can drop it first."""
-    base = content_blocks(
-        pages_df, html_col, id_col, min_words, max_link_density
-    )
+    base = content_blocks(pages_df, "html", id_col, 4, 0.5)
     w = Window.partitionBy("id").orderBy("block_idx")
     neighbor_good = (
         F.coalesce(F.lag("is_content").over(w), F.lit(False))
@@ -865,8 +816,8 @@ def content_blocks_contextual(
     promoted = (
         (~F.col("is_content"))
         & (F.col("n_words") > 0)
-        & (F.col("n_words") < F.lit(int(min_words)))
-        & (F.col("link_density") <= F.lit(float(max_link_density)))
+        & (F.col("n_words") < F.lit(4))
+        & (F.col("link_density") <= F.lit(0.5))
         & neighbor_good
     )
     return base.select(

@@ -60,16 +60,12 @@ def _field(item: Column, pattern: str) -> Column:
     return _clean(F.regexp_extract(item, pattern, 1))
 
 
-def feed_items(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-) -> DataFrame:
+def feed_items(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, item_ix, kind, title, link, published, guid)`` — one row
     per feed item/entry, ``item_ix`` 0-based in document order,
     ``kind`` ∈ {'rss', 'atom'}. Pages that are not feeds yield no
     rows. See the module docstring for dialect rules and scale shape."""
-    doc = F.decode(F.coalesce(F.col(html_col), F.lit(b"")), "UTF-8")
+    doc = F.decode(F.coalesce(F.col("html"), F.lit(b"")), "UTF-8")
     low = F.lower(doc)
     is_rss = low.contains("<rss") | low.contains("<channel")
     is_atom = low.contains("<feed")

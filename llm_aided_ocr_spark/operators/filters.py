@@ -25,17 +25,15 @@ def page_filter_predicate(
     return (F.length(text_col) >= min_chars) & (word_count_col(text_col) >= min_words)
 
 
-def apply_page_filter(
-    df: DataFrame, text_col: str = "extracted_text",
-    min_chars: int = 10, min_words: int = 5,
-) -> DataFrame:
-    return df.filter(page_filter_predicate(F.col(text_col), min_chars, min_words))
+def apply_page_filter(df: DataFrame) -> DataFrame:
+    """F1 over ``extracted_text`` at the relaxed thresholds: 10 chars, 5 words."""
+    return df.filter(page_filter_predicate(F.col("extracted_text"), 10, 5))
 
 
-def language_gate(df: DataFrame, lang: str = "en", lang_col: str = "lang") -> DataFrame:
+def language_gate(df: DataFrame) -> DataFrame:
     """F2 — English-language gate (v1 semantics; the input_hint's ``lang``
     column makes this a pushed-down scan predicate)."""
-    return df.filter(F.col(lang_col) == lang)
+    return df.filter(F.col("lang") == "en")
 
 
 SIMILARITY_SCHEMA = (
@@ -47,8 +45,6 @@ SIMILARITY_SCHEMA = (
 def hallucination_filter(
     docs_df: DataFrame,
     threshold: float = 0.40,
-    original_col: str = "raw_text",
-    processed_col: str = "corrected_text",
     adaptive: bool = False,
 ) -> DataFrame:
     """F3 — per-document sentence-level difflib similarity filter
@@ -64,8 +60,8 @@ def hallucination_filter(
     """
     cols = docs_df.select(
         "url",
-        F.col(original_col).alias("_orig"),
-        F.col(processed_col).alias("_proc"),
+        F.col("raw_text").alias("_orig"),
+        F.col("corrected_text").alias("_proc"),
     )
 
     def _filter(origs, procs):

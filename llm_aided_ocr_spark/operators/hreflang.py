@@ -42,9 +42,9 @@ _HREFLANG_ATTR_RE = r"""(?is)\bhreflang\s*=\s*["']?([^"'>\s]+)"""
 _HREF_ATTR_RE = r"""(?is)\bhref\s*=\s*["']([^"']+)["']"""
 
 
-def _variants(html_col: str):
+def _variants():
     """array<struct<hreflang,href>> of declared alternates per page."""
-    h = F.decode(F.coalesce(F.col(html_col), F.lit(b"")), "UTF-8")
+    h = F.decode(F.coalesce(F.col("html"), F.lit(b"")), "UTF-8")
     tags = F.regexp_extract_all(h, F.lit(_LINK_TAG_RE), F.lit(1))
     triples = F.transform(
         tags,
@@ -70,16 +70,12 @@ def _variants(html_col: str):
     )
 
 
-def hreflang_map(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-) -> DataFrame:
+def hreflang_map(pages_df: DataFrame) -> DataFrame:
     """``(id, hreflang, href)`` — one row per declared language
     variant, in document order. Pages without hreflang annotations
     yield no rows."""
     return pages_df.select(
-        F.col(id_col).alias("id"), F.explode(_variants(html_col)).alias("v")
+        F.col("url").alias("id"), F.explode(_variants()).alias("v")
     ).select(
         "id",
         F.col("v.hreflang").alias("hreflang"),
@@ -87,15 +83,11 @@ def hreflang_map(
     )
 
 
-def hreflang_clusters(
-    pages_df: DataFrame,
-    html_col: str = "html",
-    id_col: str = "url",
-) -> DataFrame:
+def hreflang_clusters(pages_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, cluster_key, n_variants)`` — see the module docstring.
     ``n_variants`` counts DISTINCT declared hrefs (self-references,
     which proper annotations include, are part of the count)."""
-    vs = _variants(html_col)
+    vs = _variants()
     hrefs = F.array_distinct(F.transform(vs, lambda v: v["href"]))
     return (
         pages_df.select(
@@ -116,10 +108,7 @@ def hreflang_clusters(
 URL_LANG_SEG_RE = r"(?i)/([a-z]{2}(?:-[a-z]{2})?)/"
 
 
-def url_bitext_candidates(
-    df: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
+def url_bitext_candidates(df: DataFrame) -> DataFrame:
     """``(key, lang_a, url_a, lang_b, url_b)`` — cross-language page
     pairs mined from URL STRUCTURE alone (the CCAligned stage-1 recipe,
     El-Kishky et al. 2020): two urls on the same host whose paths are
@@ -152,7 +141,7 @@ def url_bitext_candidates(
     (guide §2.4); this form moves the same rows through two keyed
     exchanges total, and ``lang_a < lang_b`` falls out of the sorted
     order."""
-    u = F.col(url_col)
+    u = F.col("url")
     host = F.lower(
         F.regexp_extract(u, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)", 1)
     )

@@ -49,14 +49,10 @@ def _envelope(raw: Column) -> Column:
     return F.when(sep > 0, F.substring(norm, F.lit(1), sep - 1)).otherwise(norm)
 
 
-def http_status(
-    fetch_df: DataFrame,
-    raw_col: str = "payload",
-    id_col: str = "url",
-) -> DataFrame:
+def http_status(fetch_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, http_version, status)`` — the status line alone (both
     NULL when the payload does not start with an HTTP status line)."""
-    raw = F.decode(F.coalesce(F.col(raw_col).cast("binary"), F.lit(b"")), "UTF-8")
+    raw = F.decode(F.coalesce(F.col("payload").cast("binary"), F.lit(b"")), "UTF-8")
     ver = F.regexp_extract(raw, _STATUS_RE, 1)
     code = F.regexp_extract(raw, _STATUS_RE, 2)
     return fetch_df.select(
@@ -66,15 +62,11 @@ def http_status(
     )
 
 
-def http_headers(
-    fetch_df: DataFrame,
-    raw_col: str = "payload",
-    id_col: str = "url",
-) -> DataFrame:
+def http_headers(fetch_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, header_ix, name, value)`` — one row per header field of
     the response envelope, 0-based in wire order after obs-fold
     merging. See the module docstring for the full contract."""
-    raw = F.decode(F.coalesce(F.col(raw_col).cast("binary"), F.lit(b"")), "UTF-8")
+    raw = F.decode(F.coalesce(F.col("payload").cast("binary"), F.lit(b"")), "UTF-8")
     lines = F.split(_envelope(raw), F.lit("\n"))
     # drop the status line; fold obs-fold continuations into their
     # predecessor (array-local aggregate — no shuffle)

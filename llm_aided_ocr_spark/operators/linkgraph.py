@@ -162,14 +162,7 @@ def _resolve_from_parts(
     return F.when(r_origin == "", res).otherwise(F.concat(r_origin, tail))
 
 
-def outlinks(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    max_links: int = 1000,
-    http_only: bool = True,
-) -> DataFrame:
+def outlinks(df: DataFrame, max_links: int = 1000) -> DataFrame:
     """``(id, url, href, dst_url)`` — one exploded row per extracted
     ``<a href>`` value, with ``dst_url`` resolved against the page url
     (:func:`resolve_href_col`). Pages with no links produce no rows.
@@ -177,7 +170,7 @@ def outlinks(
     ``max_links`` slices the per-page href array BEFORE the explode —
     the hot-key cap that keeps a single spam hub from dominating a
     partition (set 0/None to disable, not recommended at scale).
-    ``http_only`` drops resolved targets outside ``http(s)://`` —
+    Resolved targets outside ``http(s)://`` are dropped —
     ``mailto:``, ``javascript:``, ``tel:`` and friends are anchors, not
     crawl edges. Unresolvable hrefs (fragment-only, or a base url with
     no origin) are dropped.
@@ -193,13 +186,13 @@ def outlinks(
     filter-duplication, just with native expressions). Filters cannot
     cross the Generate, so the tree now evaluates once per href.
     """
-    hrefs = F.regexp_extract_all(_decoded(F.col(html_col)), F.lit(HREF_PATTERN), 1)
+    hrefs = F.regexp_extract_all(_decoded(F.col("html")), F.lit(HREF_PATTERN), 1)
     if max_links:
         hrefs = F.slice(hrefs, 1, max_links)
-    scheme, origin, basepath, basedir = _base_parts(F.col(url_col))
+    scheme, origin, basepath, basedir = _base_parts(F.col("url"))
     parsed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(url_col).alias("url"),
+        F.col("doc_id").alias("id"),
+        F.col("url"),
         scheme.alias("_bscheme"),
         origin.alias("_borigin"),
         basepath.alias("_bpath"),
@@ -224,10 +217,9 @@ def outlinks(
             F.col("_l.dst_url").alias("dst_url"),
         )
     )
-    out = out.filter(F.col("dst_url").isNotNull())
-    if http_only:
-        out = out.filter(F.col("dst_url").rlike(r"^https?://"))
-    return out
+    return out.filter(F.col("dst_url").isNotNull()).filter(
+        F.col("dst_url").rlike(r"^https?://")
+    )
 
 
 def anchor_texts(
@@ -316,12 +308,7 @@ def anchor_texts(
     )
 
 
-def host_graph(
-    links: DataFrame,
-    src_col: str = "url",
-    dst_col: str = "dst_url",
-    drop_self: bool = True,
-) -> DataFrame:
+def host_graph(links: DataFrame, drop_self: bool = True) -> DataFrame:
     """``(src_host, dst_host, n_links)`` — the host-level edge relation
     (CC web-graph shape). Hosts come from the shared native
     :func:`~llm_aided_ocr_spark.operators.textstats.domain_col`
@@ -331,8 +318,8 @@ def host_graph(
     links). ONE exchange, carrying only (host, host) pairs — map-side
     partial aggregation has already collapsed duplicates per task."""
     e = links.select(
-        domain_col(F.col(src_col)).alias("src_host"),
-        domain_col(F.col(dst_col)).alias("dst_host"),
+        domain_col(F.col("url")).alias("src_host"),
+        domain_col(F.col("dst_url")).alias("dst_host"),
     ).filter((F.col("src_host") != "") & (F.col("dst_host") != ""))
     if drop_self:
         e = e.filter(F.col("src_host") != F.col("dst_host"))
@@ -341,14 +328,7 @@ def host_graph(
     )
 
 
-def pagerank(
-    graph: DataFrame,
-    damping: float = 0.85,
-    iters: int = 10,
-    src_col: str = "src_host",
-    dst_col: str = "dst_host",
-    weight_col: str = "n_links",
-) -> DataFrame:
+def pagerank(graph: DataFrame, iters: int = 10) -> DataFrame:
     """``(host, rank)`` — weighted PageRank over a :func:`host_graph`
     edge relation (Page et al. 1999; the host-level centrality Common
     Crawl publishes alongside its web graph, and the classic
@@ -370,11 +350,12 @@ def pagerank(
     reproducible only to ~1e-12 — this operator is deliberately
     NOT DuckDB-oracled (the driver records a rows-only check); the unit
     tests pin it against an independent dense NumPy power iteration
-    instead."""
+    instead. The damping factor is the paper's 0.85."""
+    damping = 0.85
     edges = graph.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("double").alias("w"),
+        F.col("src_host").alias("src"),
+        F.col("dst_host").alias("dst"),
+        F.col("n_links").cast("double").alias("w"),
     )
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     edges_n = local_checkpoint(
@@ -455,15 +436,7 @@ def host_degrees(graph: DataFrame) -> DataFrame:
     )
 
 
-def anchor_corpus(
-    df: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    max_links: int = 1000,
-    max_anchors: int = 100,
-    cross_host_only: bool = True,
-) -> DataFrame:
+def anchor_corpus(df: DataFrame, cross_host_only: bool = True) -> DataFrame:
     """``(dst_host, n_anchors, n_src_hosts, anchors_cat)`` — the inbound
     anchor-text corpus per destination host: how the rest of the web
     *describes* a host. Inlink anchor text is the classic external
@@ -482,16 +455,14 @@ def anchor_corpus(
     ``n_anchors``/``n_src_hosts`` come from one narrow agg;
     the text list comes from a ``distinct`` (map-side partial dedup)
     then ``collect_list`` whose result is sorted and CAPPED at
-    ``max_anchors`` — so output row width is bounded. A mega-host with
+    100 — so output row width is bounded. A mega-host with
     ~10^7 *distinct* inbound anchors still collects them in one reducer
     before the cap; if that host exists in your crawl, pre-filter the
     anchor relation (e.g. on a per-(host, anchor) min count) before
     calling. Anchors are emitted pipe-joined (``anchors_cat``) so the
     result hashes identically across engines.
     """
-    a = anchor_texts(
-        df, html_col, url_col, id_col, max_links, _resolve_base=True
-    )
+    a = anchor_texts(df, "html", "url", "doc_id", 1000, _resolve_base=True)
     a = (
         a.filter(
             F.col("dst_url").isNotNull()
@@ -527,9 +498,7 @@ def anchor_corpus(
         .groupBy("dst_host")
         .agg(
             F.array_join(
-                F.slice(
-                    F.array_sort(F.collect_list("anchor")), 1, max_anchors
-                ),
+                F.slice(F.array_sort(F.collect_list("anchor")), 1, 100),
                 "|",
             ).alias("anchors_cat")
         )
@@ -542,11 +511,6 @@ def trustrank(
     seeds: DataFrame,
     damping: float = 0.85,
     iters: int = 5,
-    scale: int = 10**12,
-    src_col: str = "src_host",
-    dst_col: str = "dst_host",
-    weight_col: str = "n_links",
-    seed_col: str = "host",
 ) -> DataFrame:
     """``(host, itrust)`` — TrustRank (Gyöngyi, Garcia-Molina & Pedersen,
     VLDB 2004): personalized PageRank whose teleport vector is uniform
@@ -557,12 +521,12 @@ def trustrank(
 
     Unlike :func:`pagerank` (float ranks, summation-order reproducible
     only to ~1e-12, deliberately rows-only-oracled), this iteration is
-    FIXED-POINT: scores are ``scale``-denominated BIGINTs, every
+    FIXED-POINT: scores are ``10**12``-denominated BIGINTs, every
     per-edge contribution is ``floor(share * itrust)`` (one IEEE
     multiply on exact inputs, then floor), and all sums are integer
     sums — so the result is bit-identical across partitionings, engines,
     and cluster layouts, and the DuckDB oracle replays the recursion
-    exactly. The pinned recursion (T = scale, S = seed set, d = damping):
+    exactly. The pinned recursion (T = 10**12, S = seed set, d = damping):
 
         itrust_0(h)  = T // |S|                          if h ∈ S else 0
         C_k(h)       = Σ_{e: src→h} floor(share_e · itrust_k(src))
@@ -572,7 +536,7 @@ def trustrank(
 
     (dangling mass returns to the seeds — the personalized analogue of
     pagerank's uniform redistribution). The floor quantization loses at
-    most 1/scale per edge per round — noise ~1e-12, far below any
+    most 1/T per edge per round — noise ~1e-12, far below any
     ranking decision — and buys exact reproducibility, the same trade
     the portable-hash family makes.
 
@@ -582,16 +546,16 @@ def trustrank(
     as a bounded 1-row collect. ``|S|`` is a driver count: a trust seed
     list is curated and bounded by construction."""
     edges = graph.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("double").alias("w"),
+        F.col("src_host").alias("src"),
+        F.col("dst_host").alias("dst"),
+        F.col("n_links").cast("double").alias("w"),
     )
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
     edges_n = local_checkpoint(
         edges.join(out_w, "src")
         .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
     )
-    seed_nodes = seeds.select(F.col(seed_col).alias("host")).distinct()
+    seed_nodes = seeds.select(F.col("host")).distinct()
     nodes = local_checkpoint(
         edges.select(F.col("src").alias("host"))
         .union(edges.select(F.col("dst").alias("host")))
@@ -610,10 +574,10 @@ def trustrank(
     sinks = local_checkpoint(flagged.select("host").join(
         out_w, flagged["host"] == out_w["src"], "left_anti"
     ))
-    tele = int((1.0 - damping) * scale) // n_seeds
+    tele = int((1.0 - damping) * 10**12) // n_seeds
     ranks = local_checkpoint(flagged.withColumn(
         "itrust",
-        F.when(F.col("_is_seed"), F.lit(scale // n_seeds)).otherwise(
+        F.when(F.col("_is_seed"), F.lit(10**12 // n_seeds)).otherwise(
             F.lit(0)
         ).cast("bigint"),
     ))
@@ -658,14 +622,7 @@ def trustrank(
     return ranks.select("host", "itrust")
 
 
-def hits(
-    graph: DataFrame,
-    iters: int = 4,
-    scale: int = 10**9,
-    src_col: str = "src_host",
-    dst_col: str = "dst_host",
-    weight_col: str = "n_links",
-) -> DataFrame:
+def hits(graph: DataFrame, iters: int = 4, scale: int = 10**9) -> DataFrame:
     """``(host, hub, auth)`` — HITS hubs & authorities (Kleinberg,
     JACM 1999) over a :func:`host_graph` edge relation: hubs are hosts
     that link to good authorities, authorities are hosts linked to by
@@ -707,9 +664,9 @@ def hits(
     a mega in-degree host is one groupBy key with map-side partial
     aggregation."""
     edges = local_checkpoint(graph.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("bigint").alias("w"),
+        F.col("src_host").alias("src"),
+        F.col("dst_host").alias("dst"),
+        F.col("n_links").cast("bigint").alias("w"),
     ))
     nodes = local_checkpoint(
         edges.select(F.col("src").alias("host"))
@@ -771,11 +728,7 @@ def hits(
     return hub.join(auth, "host").select("host", "hub", "auth")
 
 
-def host_triangles(
-    graph: DataFrame,
-    src_col: str = "src_host",
-    dst_col: str = "dst_host",
-) -> DataFrame:
+def host_triangles(graph: DataFrame) -> DataFrame:
     """``(host, n_triangles, degree, clustering)`` — per-host triangle
     count and local clustering coefficient over the UNDIRECTED host
     graph (direction dropped, self-loops and multi-edges collapsed).
@@ -802,8 +755,8 @@ def host_triangles(
     as an exact ratio of integers."""
     e = local_checkpoint(
         graph.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
+            F.least(F.col("src_host"), F.col("dst_host")).alias("u"),
+            F.greatest(F.col("src_host"), F.col("dst_host")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()

@@ -32,10 +32,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+LAM = 0.9  # the bigram weight ``lam`` of the score above
 
-def _bigram_rel(
-    df: DataFrame, text_col: str, id_col: str, hash_family: str, hashed: bool
-) -> DataFrame:
+
+def _bigram_rel(df: DataFrame, text_col: str, id_col: str, hashed: bool) -> DataFrame:
     """``(id, g1, g2, n)`` — per-document bigram occurrence counts over
     the shared tokenizer (``_words_col``; the artificial ``['']`` token
     of empty docs produces no bigram because single-token docs have
@@ -47,7 +47,7 @@ def _bigram_rel(
 
     ws = _words_col(text_col)
     key = (
-        (lambda c: _word_hash_col(c, hash_family)) if hashed else (lambda c: c)
+        (lambda c: _word_hash_col(c, "xxhash64")) if hashed else (lambda c: c)
     )
     empty_t = (
         "array<struct<g1:bigint,g2:bigint>>"
@@ -85,7 +85,6 @@ def train_bigram_lm(
     ref_df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_family: str = "xxhash64",
     hashed: bool = True,
 ) -> dict:
     """``{'uni': (g, c), 'bi': (g1, g2, c), 'stats': (t, v)}`` — the
@@ -103,7 +102,7 @@ def train_bigram_lm(
 
     ws = _words_col(text_col)
     key = (
-        (lambda c: _word_hash_col(c, hash_family)) if hashed else (lambda c: c)
+        (lambda c: _word_hash_col(c, "xxhash64")) if hashed else (lambda c: c)
     )
     toks = (
         ensure_min_parallelism(ref_df)
@@ -111,9 +110,9 @@ def train_bigram_lm(
         .select(key(F.col("w")).alias("g"))
     )
     uni = toks.groupBy("g").agg(F.count(F.lit(1)).alias("c"))
-    bi = _bigram_rel(
-        ref_df, text_col, id_col, hash_family, hashed
-    ).groupBy("g1", "g2").agg(F.sum("n").alias("c"))
+    bi = _bigram_rel(ref_df, text_col, id_col, hashed).groupBy("g1", "g2").agg(
+        F.sum("n").alias("c")
+    )
     stats = uni.agg(
         F.coalesce(F.sum("c"), F.lit(0)).cast("bigint").alias("t"),
         F.count(F.lit(1)).cast("bigint").alias("v"),
@@ -125,10 +124,8 @@ def lm_score(
     df: DataFrame,
     ref_df: DataFrame | None = None,
     model: dict | None = None,
-    lam: float = 0.9,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_family: str = "xxhash64",
     hashed: bool = True,
 ) -> DataFrame:
     """``(id, n_bigrams, oov_bigram_frac_r, lm_score_r)`` — every input
@@ -159,10 +156,7 @@ def lm_score(
     if (ref_df is None) == (model is None):
         raise ValueError("pass exactly one of ref_df or model")
     if model is None:
-        model = train_bigram_lm(
-            ref_df, text_col=text_col, id_col=id_col,
-            hash_family=hash_family, hashed=hashed,
-        )
+        model = train_bigram_lm(ref_df, text_col=text_col, id_col=id_col, hashed=hashed)
         # The unigram relation feeds THREE consumers (c1, c2, stats);
         # without a persist each one re-tokenizes and re-aggregates the
         # reference slice from scratch (verified in the physical plan: 3
@@ -176,7 +170,7 @@ def lm_score(
         # re-runs the reference tokenize+explode+aggregate from scratch.
         model["uni"] = persist(model["uni"], StorageLevel.MEMORY_AND_DISK)
         model["bi"] = persist(model["bi"], StorageLevel.MEMORY_AND_DISK)
-    occ = _bigram_rel(df, text_col, id_col, hash_family, hashed)
+    occ = _bigram_rel(df, text_col, id_col, hashed)
     uni = model["uni"]
     c1 = uni.select(F.col("g").alias("g1"), F.col("c").alias("c1"))
     c2 = uni.select(F.col("g").alias("g2"), F.col("c").alias("c2"))
@@ -205,10 +199,10 @@ def lm_score(
         F.round(
             F.when(
                 F.col("s1") > 0,
-                F.lit(lam)
+                F.lit(LAM)
                 * (F.col("s12").cast("double") / F.col("s1").cast("double")),
             ).otherwise(F.lit(0.0))
-            + F.lit(1.0 - lam)
+            + F.lit(1.0 - LAM)
             * (
                 (F.col("s2") + F.col("n_bi")).cast("double")
                 # greatest(..,1): an empty reference model (t+v=0) floors
@@ -235,13 +229,8 @@ def lm_score(
 def ccnet_buckets(
     df: DataFrame,
     ref_df: DataFrame | None = None,
-    model: dict | None = None,
-    lam: float = 0.9,
     text_col: str = "text",
     id_col: str = "doc_id",
-    lang_col: str = "lang",
-    hash_family: str = "xxhash64",
-    hashed: bool = True,
 ) -> DataFrame:
     """``(id, lang, lm_score_r, doc_bytes, bucket)`` — CCNet's
     head/middle/tail corpus split (Wenzek et al. 2020 §4.4): per
@@ -273,12 +262,11 @@ def ccnet_buckets(
     from llm_aided_ocr_spark.operators.util import corpus_scaled, persist
 
     scored = lm_score(
-        df, ref_df=ref_df, model=model, lam=lam, text_col=text_col,
-        id_col=id_col, hash_family=hash_family, hashed=hashed,
+        df, ref_df=ref_df, text_col=text_col, id_col=id_col
     ).select("id", "lm_score_r")
     meta = df.select(
         F.col(id_col).alias("id"),
-        F.col(lang_col).alias("lang"),
+        F.col("lang"),
         F.octet_length(F.coalesce(F.col(text_col), F.lit(""))).cast(
             "bigint"
         ).alias("doc_bytes"),

@@ -95,17 +95,13 @@ def _sniff_column(raw: Column) -> Column:
     )
 
 
-def sniff_mime(
-    fetch_df: DataFrame,
-    raw_col: str = "payload",
-    id_col: str = "url",
-) -> DataFrame:
+def sniff_mime(fetch_df: DataFrame) -> DataFrame:
     """``(id, sniffed_type)`` — the magic-byte MIME type per payload.
     NULL/empty payloads sniff as ``application/octet-stream`` (nothing
     to dispatch on, but the row survives for diagnostics)."""
-    raw = F.coalesce(F.col(raw_col).cast("binary"), F.lit(b""))
+    raw = F.coalesce(F.col("payload").cast("binary"), F.lit(b""))
     return fetch_df.select(
-        F.col(id_col).alias("id"), _sniff_column(raw).alias("sniffed_type")
+        F.col("url").alias("id"), _sniff_column(raw).alias("sniffed_type")
     )
 
 
@@ -117,12 +113,7 @@ def normalize_content_type(declared: Column) -> Column:
     return F.lower(F.regexp_replace(essence, r"^[ \t]+|[ \t]+$", ""))
 
 
-def mime_dispatch_audit(
-    fetch_df: DataFrame,
-    raw_col: str = "payload",
-    declared_col: str = "content_type",
-    id_col: str = "url",
-) -> DataFrame:
+def mime_dispatch_audit(fetch_df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, declared_type, sniffed_type, agree)`` — the dispatch
     audit relation: ``declared_type`` is the normalized header essence
     (NULL when the header is absent), ``agree`` is true only when both
@@ -130,8 +121,8 @@ def mime_dispatch_audit(
     route-on-bytes override set; aggregate by the pair for the crawl
     health report. Join-free — both signals are same-row projections,
     so the audit fuses into the scan."""
-    raw = F.coalesce(F.col(raw_col).cast("binary"), F.lit(b""))
-    declared = normalize_content_type(F.col(declared_col))
+    raw = F.coalesce(F.col("payload").cast("binary"), F.lit(b""))
+    declared = normalize_content_type(F.col("content_type"))
     declared = F.when(declared != "", declared)  # absent/blank → NULL
     sniffed = _sniff_column(raw)
     return fetch_df.select(

@@ -12,7 +12,7 @@ Counting contract (pinned for the DuckDB oracle): non-overlapping
 left-to-right occurrences of U+FFFD plus each artifact literal, over the
 UNICODE text (both engines count codepoints, not bytes);
 ``damage_per_kchar_r`` = ``round(1000 * hits / n_chars, 6)`` (NULL for
-empty text); ``is_damaged`` = rate strictly above ``threshold``, false
+empty text); ``is_damaged`` = rate strictly above 2.0, false
 for empty text.
 
 Scale shape: one ``regexp_extract_all`` over a literal alternation plus
@@ -36,15 +36,12 @@ DEFAULT_ARTIFACTS: List[str] = [
 ]
 
 
-def mojibake_rate_col(text_col, artifacts: Optional[List[str]] = None) -> F.Column:
+def mojibake_rate_col(text_col) -> F.Column:
     """``damage_per_kchar_r`` alone as one native column (NULL for
-    empty text) — the per-row form :func:`annotate` and the curation
-    gate compose into their projections."""
-    if artifacts is None:
-        artifacts = DEFAULT_ARTIFACTS
-    if not artifacts:
-        raise ValueError("artifacts must be non-empty (or None for defaults)")
-    pattern = "|".join(re.escape(a) for a in artifacts)
+    empty text) over :data:`DEFAULT_ARTIFACTS` — the per-row form
+    :func:`annotate` and the curation gate compose into their
+    projections."""
+    pattern = "|".join(re.escape(a) for a in DEFAULT_ARTIFACTS)
     text = F.coalesce(
         text_col if not isinstance(text_col, str) else F.col(text_col),
         F.lit(""),
@@ -58,10 +55,8 @@ def mojibake_rate_col(text_col, artifacts: Optional[List[str]] = None) -> F.Colu
 
 def mojibake_scores(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "id",
     artifacts: Optional[List[str]] = None,
-    threshold: float = 2.0,
 ) -> DataFrame:
     """``(id, n_chars, n_damage, damage_per_kchar_r, is_damaged)`` —
     one row per input row."""
@@ -70,7 +65,7 @@ def mojibake_scores(
     if not artifacts:
         raise ValueError("artifacts must be non-empty (or None for defaults)")
     pattern = "|".join(re.escape(a) for a in artifacts)
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     n_chars = F.length(text)
     n_damage = F.size(F.regexp_extract_all(text, F.lit(pattern), F.lit(0)))
     rate = F.round(F.lit(1000.0) * n_damage / n_chars, 6)
@@ -80,6 +75,6 @@ def mojibake_scores(
         n_damage.cast("bigint").alias("n_damage"),
         F.when(n_chars > 0, rate).alias("damage_per_kchar_r"),
         F.coalesce(
-            F.when(n_chars > 0, rate > F.lit(threshold)), F.lit(False)
+            F.when(n_chars > 0, rate > F.lit(2.0)), F.lit(False)
         ).alias("is_damaged"),
     )

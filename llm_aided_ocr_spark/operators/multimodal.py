@@ -47,14 +47,14 @@ def deterministic_fake_decoder(blob: bytes) -> Tuple[int, int, int]:
     return (w % 1920 + 1, hgt % 1080 + 1, 3)
 
 
-def media_metadata(df: DataFrame, media_col: str = "media", media_type: str = "image") -> DataFrame:
+def media_metadata(df: DataFrame, media_type: str = "image") -> DataFrame:
     """Typed metadata over an opaque binary column — fully native
     (length + sha2), no Python."""
     return df.select(
         "url",
         F.lit(media_type).alias("media_type"),
-        F.coalesce(F.length(F.col(media_col)), F.lit(0)).cast("long").alias("n_bytes"),
-        F.sha2(F.coalesce(F.col(media_col), F.lit(b"")), 256).alias("content_sha256"),
+        F.coalesce(F.length(F.col("media")), F.lit(0)).cast("long").alias("n_bytes"),
+        F.sha2(F.coalesce(F.col("media"), F.lit(b"")), 256).alias("content_sha256"),
     )
 
 
@@ -120,15 +120,13 @@ def parse_image_header(blob: bytes) -> Tuple[str, Optional[int], Optional[int]]:
     return ("unknown", None, None)
 
 
-def image_header_info(
-    df: DataFrame, media_col: str = "media", id_col: str = "url"
-) -> DataFrame:
+def image_header_info(df: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, format, width, height)`` — :func:`parse_image_header` over
     the binary column in one Arrow pass. Narrow per-row compute, no
     shuffle; the blob never leaves its partition and only the four small
     output columns survive the stage — at 100 TB of media this is
     scan-bound, exactly like the text statistics family."""
-    cols = df.select(F.col(id_col).alias("id"), media_col)
+    cols = df.select(F.col(id_col).alias("id"), "media")
 
     def _parse(blobs):
         return zip(*(parse_image_header(b or b"") for b in blobs))
@@ -142,14 +140,13 @@ def image_header_info(
 
 def decode_image_features(
     df: DataFrame,
-    media_col: str = "media",
     decoder: ImageDecoder = _no_decoder,
 ) -> DataFrame:
     """``(url, media)`` → ``(url, width, height, channels, aspect)`` via an
     Arrow-batched decode. Batch size is bounded by
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a batch of large
     blobs cannot blow executor memory."""
-    cols = df.select("url", media_col)
+    cols = df.select("url", "media")
 
     def _decode(blobs):
         ws, hs, cs = zip(*(decoder(b or b"") for b in blobs))
@@ -165,15 +162,11 @@ def decode_image_features(
     )
 
 
-def resize_plan(
-    df: DataFrame, target_w: int = 224, target_h: int = 224
-) -> DataFrame:
+def resize_plan(df: DataFrame) -> DataFrame:
     """Resize planning over decoded dims — pure native arithmetic (scale
     factors, letterbox padding). The pixel work would live in the same
     decode UDF; the plan columns are what downstream sharding needs."""
-    scale = F.least(
-        F.lit(target_w) / F.col("width"), F.lit(target_h) / F.col("height")
-    )
+    scale = F.least(F.lit(224) / F.col("width"), F.lit(224) / F.col("height"))
     new_w = F.round(F.col("width") * scale).cast("int")
     new_h = F.round(F.col("height") * scale).cast("int")
     return df.select(
@@ -181,8 +174,8 @@ def resize_plan(
         scale.alias("scale"),
         new_w.alias("out_w"),
         new_h.alias("out_h"),
-        ((F.lit(target_w) - new_w) / 2).cast("int").alias("pad_x"),
-        ((F.lit(target_h) - new_h) / 2).cast("int").alias("pad_y"),
+        ((F.lit(224) - new_w) / 2).cast("int").alias("pad_x"),
+        ((F.lit(224) - new_h) / 2).cast("int").alias("pad_y"),
     )
 
 
@@ -193,35 +186,30 @@ def deterministic_fake_frame_sampler(blob: bytes, n_frames: int) -> List[bytes]:
     return [hashlib.sha256(h + bytes([i])).digest()[:16] for i in range(n_frames)]
 
 
-def sample_video_frames(
-    df: DataFrame,
-    n_frames: int = 4,
-    media_col: str = "media",
-    sampler: FrameSampler = deterministic_fake_frame_sampler,
-) -> DataFrame:
+def sample_video_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """``(url, media)`` → exploded ``(url, frame_ix, frame binary)`` — the
     video analogue of the PDF page explosion (extract.extract_pdf_pages)."""
-    cols = df.select("url", media_col)
+    cols = df.select("url", "media")
 
     def _sample(urls, blobs):
         rows = [
             (url, i, frame)
             for url, blob in zip(urls, blobs)
-            for i, frame in enumerate(sampler(blob or b"", n_frames))
+            for i, frame in enumerate(
+                deterministic_fake_frame_sampler(blob or b"", n_frames)
+            )
         ]
         return zip(*rows) if rows else ([],) * 3
 
     return map_arrow(cols, _sample, "url string, frame_ix int, frame binary")
 
 
-def embed_media_stub(
-    df: DataFrame, dim: int = 16, media_col: str = "media"
-) -> DataFrame:
+def embed_media_stub(df: DataFrame, dim: int = 16) -> DataFrame:
     """Deterministic pseudo-embedding from content bytes (hash-seeded
     uniform vector) — the feature-extraction slot a real encoder would
     fill; keeps the downstream ANN operators (operators.similarity)
     exercisable end-to-end."""
-    cols = df.select("url", media_col)
+    cols = df.select("url", "media")
 
     def _embed(blobs):
         # one state per batch, reseeded per row: building a RandomState

@@ -118,12 +118,10 @@ def normalize_text_col(
     return c
 
 
-def normalize_text(
-    df: DataFrame, text_col: str = "text", out_col: str = "norm_text", **flags
-) -> DataFrame:
+def normalize_text(df: DataFrame, **flags) -> DataFrame:
     """``df`` plus the normalized column — the tag-as-you-scan shape
     (works unchanged on a stream, like ``annotate``)."""
-    return df.withColumn(out_col, normalize_text_col(F.col(text_col), **flags))
+    return df.withColumn("norm_text", normalize_text_col(F.col("text"), **flags))
 
 
 def _norm_key_col(text_col: str, key: str) -> Column:
@@ -164,7 +162,6 @@ def normalized_keeper_ids(
 
 def normalized_keepers(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     key: str = "text",
 ) -> DataFrame:
@@ -180,9 +177,7 @@ def normalized_keepers(
     semi-join (:func:`normalized_dedup` does exactly that)."""
     from llm_aided_ocr_spark.operators.util import corpus_scaled
 
-    base = df.select(
-        F.col(id_col).alias("id"), _norm_key_col(text_col, key).alias("_nk")
-    )
+    base = df.select(F.col(id_col).alias("id"), _norm_key_col("text", key).alias("_nk"))
     keepers = base.groupBy("_nk").agg(F.min("id").alias("_keeper_id"))
     return base.join(corpus_scaled(keepers), "_nk").select(
         "id", (F.col("id") == F.col("_keeper_id")).alias("keep")

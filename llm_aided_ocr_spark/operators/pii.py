@@ -66,19 +66,15 @@ def redact_pii(
     return df.withColumn(out_col, red)
 
 
-def pii_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pii_stats(df: DataFrame) -> DataFrame:
     """``(id, n_email, n_ip, n_phone, red_len, red_md5)`` — the audit
     view of :func:`redact_pii`: per-category counts plus the length and
     engine-portable md5 of the redacted text, so the driver oracle
     verifies the redacted BYTES (the contract shared by
     line_dedup_stats / c4_clean_stats / paragraph_dedup_stats)."""
-    red = redact_pii(df, text_col=text_col, out_col="_pii_red")
+    red = redact_pii(df, out_col="_pii_red")
     return red.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         "n_email",
         "n_ip",
         "n_phone",

@@ -283,7 +283,6 @@ def process_chunk_with_provider(
     provider: CompletionProvider,
     reformat_as_markdown: bool = True,
     suppress_headers_and_page_numbers: bool = True,
-    context_tail_chars: int = 1000,
 ):
     """The reference's per-chunk control flow (llm_aided_ocr.py:428-510):
 
@@ -307,7 +306,7 @@ def process_chunk_with_provider(
         )
         if md is not None:
             processed = md
-    new_context = processed[-context_tail_chars:] if processed else ""
+    new_context = processed[-1000:] if processed else ""
     return processed, new_context
 
 

@@ -18,17 +18,13 @@ from llm_aided_ocr_spark.kernels import ASSESS_SAMPLE_CHARS, assess_quality_resp
 from llm_aided_ocr_spark.operators.util import map_arrow
 
 
-def assess_quality(
-    docs_df: DataFrame,
-    original_col: str = "raw_text",
-    processed_col: str = "corrected_text",
-) -> DataFrame:
+def assess_quality(docs_df: DataFrame) -> DataFrame:
     """``(url, raw_text, corrected_text)`` → ``(url, score int,
     explanation string)``."""
     sampled = docs_df.select(
         "url",
-        F.substring(F.col(original_col), 1, ASSESS_SAMPLE_CHARS).alias("_orig"),
-        F.substring(F.col(processed_col), 1, ASSESS_SAMPLE_CHARS).alias("_proc"),
+        F.substring(F.col("raw_text"), 1, ASSESS_SAMPLE_CHARS).alias("_orig"),
+        F.substring(F.col("corrected_text"), 1, ASSESS_SAMPLE_CHARS).alias("_proc"),
     )
 
     def _assess(origs, procs):

@@ -85,14 +85,10 @@ def flesch_x1e4_col(text_col) -> F.Column:
     )
 
 
-def flesch_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "id",
-) -> DataFrame:
+def flesch_scores(df: DataFrame, id_col: str = "id") -> DataFrame:
     """``(id, n_words, n_sentences, n_syllables, flesch_x1e4)`` — one
     row per input row; ``flesch_x1e4`` is NULL for wordless text."""
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     low = F.lower(text)
     w = F.size(F.regexp_extract_all(low, F.lit(r"[a-z]+"), F.lit(0)))
     vowel_groups = F.size(F.regexp_extract_all(low, F.lit(r"[aeiouy]+"), F.lit(0)))

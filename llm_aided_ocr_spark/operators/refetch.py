@@ -47,14 +47,12 @@ _NO_STORE_RE = r"(?i)(?:^|[,\s])no-(?:store|cache)(?:$|[,\s=])"
 def refetch_schedule(
     headers_df: DataFrame,
     fetches_df: Optional[DataFrame] = None,
-    id_col: str = "id",
-    ts_col: str = "warc_ts",
 ) -> DataFrame:
     """``(id, ttl_seconds, policy, etag, last_modified
     [, next_fetch_ts])`` — one row per document that has at least one
     parsed header. ``headers_df`` is the long form ``(id, header_ix,
     name, value)`` with lowercased names; ``fetches_df`` (optional)
-    supplies ``(id_col, ts_col)`` for the absolute ``next_fetch_ts``.
+    supplies ``(id, warc_ts)`` for the absolute ``next_fetch_ts``.
     See the module docstring for the RFC 9111 subset."""
 
     def first_of(name: str):
@@ -64,7 +62,7 @@ def refetch_schedule(
             F.when(F.col("name") == name, F.col("header_ix")),
         )
 
-    agg = headers_df.groupBy(F.col(id_col).alias("id")).agg(
+    agg = headers_df.groupBy(F.col("id")).agg(
         first_of("cache-control").alias("cc"),
         first_of("etag").alias("etag"),
         first_of("last-modified").alias("last_modified"),
@@ -89,9 +87,7 @@ def refetch_schedule(
     )
     if fetches_df is None:
         return out
-    fetched = fetches_df.select(
-        F.col(id_col).alias("id"), F.col(ts_col).alias("_fetch_ts")
-    )
+    fetched = fetches_df.select(F.col("id"), F.col("warc_ts").alias("_fetch_ts"))
     return out.join(fetched, "id", "left").select(
         "id",
         "ttl_seconds",
@@ -105,12 +101,7 @@ def refetch_schedule(
     )
 
 
-def crawl_budget(
-    hosts: DataFrame,
-    budget: int,
-    host_col: str = "host",
-    weight_col: str = "weight",
-) -> DataFrame:
+def crawl_budget(hosts: DataFrame, budget: int) -> DataFrame:
     """``(host, weight, alloc)`` — split an integer fetch ``budget``
     across hosts proportionally to nonnegative integer weights, by the
     LARGEST-REMAINDER (Hamilton) method: every host gets
@@ -138,8 +129,8 @@ def crawl_budget(
     if b < 0:
         raise ValueError("budget must be nonnegative")
     base_rel = hosts.select(
-        F.col(host_col).alias("host"),
-        F.col(weight_col).cast("bigint").alias("weight"),
+        F.col("host"),
+        F.col("weight").cast("bigint").alias("weight"),
     )
     W = int(
         base_rel.agg(F.coalesce(F.sum("weight"), F.lit(0))).first()[0]
@@ -176,11 +167,6 @@ def politeness_schedule(
     frontier: DataFrame,
     delays: DataFrame,
     t0: int = 0,
-    default_delay_sec: int = 1,
-    host_col: str = "host",
-    url_col: str = "url",
-    priority_col: str = "priority",
-    delay_col: str = "crawl_delay_sec",
 ) -> DataFrame:
     """``(host, url, fetch_rank, fetch_ts)`` — serialize each host's
     frontier into an explicit fetch timetable honoring its crawl delay:
@@ -189,7 +175,7 @@ def politeness_schedule(
     fetch per host, ``delay`` seconds apart) that robots.txt
     ``Crawl-delay`` declares and :func:`crawl_budget` budgets for.
     Hosts missing from ``delays`` (or with NULL delay) use
-    ``default_delay_sec``; a host with SEVERAL delay rows (appended
+    a 1-second delay; a host with SEVERAL delay rows (appended
     robots snapshots) uses the largest — the conservative politeness
     choice — via a pre-aggregation that also stops the lookup join
     fanning every frontier row out into duplicate timetables.
@@ -206,14 +192,14 @@ def politeness_schedule(
         F.desc("priority"), F.col("url")
     )
     f = frontier.select(
-        F.col(host_col).alias("host"),
-        F.col(url_col).alias("url"),
-        F.col(priority_col).cast("bigint").alias("priority"),
+        F.col("host"),
+        F.col("url"),
+        F.col("priority").cast("bigint").alias("priority"),
     )
     d = (
         delays.select(
-            F.col(host_col).alias("host"),
-            F.col(delay_col).cast("bigint").alias("_delay"),
+            F.col("host"),
+            F.col("crawl_delay_sec").cast("bigint").alias("_delay"),
         )
         .groupBy("host")
         .agg(F.max("_delay").alias("_delay"))
@@ -222,7 +208,7 @@ def politeness_schedule(
         f.join(d, "host", "left")
         .withColumn(
             "_d",
-            F.coalesce(F.col("_delay"), F.lit(int(default_delay_sec))),
+            F.coalesce(F.col("_delay"), F.lit(1)),
         )
         .withColumn("fetch_rank", F.row_number().over(w) - F.lit(1))
         .select(
@@ -236,13 +222,8 @@ def politeness_schedule(
     )
 
 
-def rendezvous_assign(
-    df: DataFrame,
-    shards: list,
-    id_col: str = "doc_id",
-    out_col: str = "shard",
-) -> DataFrame:
-    """Append ``out_col`` — rendezvous (highest-random-weight) routing
+def rendezvous_assign(df: DataFrame, shards: list) -> DataFrame:
+    """Append ``shard`` — rendezvous (highest-random-weight) routing
     of every row to one of ``shards``: the shard maximizing the
     portable 52-bit md5 of ``'hrw:' || id || '|' || shard`` (ties by
     shard name, which md5 makes measure-zero). HRW's property is the
@@ -259,7 +240,7 @@ def rendezvous_assign(
     the assignment replays bit-identically in any engine with md5."""
     if not shards:
         raise ValueError("rendezvous_assign needs at least one shard")
-    sid = F.col(id_col).cast("string")
+    sid = F.col("doc_id").cast("string")
     entries = [
         F.struct(
             F.conv(
@@ -275,6 +256,4 @@ def rendezvous_assign(
         )
         for s in shards
     ]
-    return df.withColumn(
-        out_col, F.array_max(F.array(*entries)).getField("s")
-    )
+    return df.withColumn("shard", F.array_max(F.array(*entries)).getField("s"))

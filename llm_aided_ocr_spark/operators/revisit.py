@@ -38,9 +38,6 @@ from pyspark.sql import functions as F
 
 def change_rates(
     history_df: DataFrame,
-    id_col: str = "url",
-    ts_col: str = "warc_ts",
-    fp_col: str = "fingerprint",
     min_interval_sec: int = 3600,
     max_interval_sec: int = 30 * 86400,
 ) -> DataFrame:
@@ -56,9 +53,9 @@ def change_rates(
         raise ValueError("need 0 < min_interval_sec <= max_interval_sec")
     w = Window.partitionBy("id").orderBy("ts")
     obs = history_df.select(
-        F.col(id_col).alias("id"),
-        F.col(ts_col).cast("timestamp").alias("ts"),
-        F.col(fp_col).alias("fp"),
+        F.col("url").alias("id"),
+        F.col("warc_ts").cast("timestamp").alias("ts"),
+        F.col("fingerprint").alias("fp"),
     ).withColumn("prev_fp", F.lag("fp").over(w))
     agg = (
         obs.groupBy("id")

@@ -151,33 +151,22 @@ def crawl_delay_for_agent(text: str, agent: str = "*") -> Optional[float]:
     return delay
 
 
-def robots_crawl_delays(
-    df: DataFrame,
-    host_col: str = "host",
-    robots_col: str = "robots_txt",
-    agent: str = "*",
-) -> DataFrame:
+def robots_crawl_delays(df: DataFrame) -> DataFrame:
     """``(host, crawl_delay)`` — the per-host Crawl-delay contract for
-    ``agent`` (seconds, NULL when undeclared). Document-local Arrow
+    ``agent`` (default ``*``; seconds, NULL when undeclared). Document-local Arrow
     pass like :func:`parse_robots`; zero shuffle; host-cardinality
     output."""
 
     def _parse(bodies):
-        return ([crawl_delay_for_agent(b or "", agent) for b in bodies],)
+        return ([crawl_delay_for_agent(b or "", "*") for b in bodies],)
 
     return map_arrow(
-        df.select(F.col(host_col).alias("host"), robots_col),
+        df.select(F.col("host"), "robots_txt"),
         _parse, "host string, crawl_delay double", keep=("host",),
     )
 
 
-def politeness_audit(
-    fetches: DataFrame,
-    robots_df: DataFrame,
-    ts_col: str = "warc_ts",
-    url_col: str = "url",
-    agent: str = "*",
-) -> DataFrame:
+def politeness_audit(fetches: DataFrame, robots_df: DataFrame) -> DataFrame:
     """``(host, n_fetches, min_gap_s, crawl_delay, violates)`` — the
     crawl-politeness audit: observed per-host fetch cadence
     (:func:`~llm_aided_ocr_spark.operators.temporal.host_fetch_stats`)
@@ -191,8 +180,8 @@ def politeness_audit(
     broadcast-joins. Left join keeps undeclared hosts in the audit."""
     from llm_aided_ocr_spark.operators.temporal import host_fetch_stats
 
-    stats = host_fetch_stats(fetches, ts_col=ts_col, url_col=url_col)
-    delays = robots_crawl_delays(robots_df, agent=agent)
+    stats = host_fetch_stats(fetches)
+    delays = robots_crawl_delays(robots_df)
     joined = stats.join(F.broadcast(delays), "host", "left")
     violates = F.when(
         F.col("crawl_delay").isNotNull() & F.col("min_gap_s").isNotNull(),
@@ -204,26 +193,21 @@ def politeness_audit(
     )
 
 
-def parse_robots(
-    df: DataFrame,
-    host_col: str = "host",
-    robots_col: str = "robots_txt",
-    agent: str = "*",
-) -> DataFrame:
+def parse_robots(df: DataFrame) -> DataFrame:
     """``(host, rule, prefix, prefix_len)`` — one row per literal rule
-    applying to ``agent``. Document-local Arrow flatMap, zero shuffle;
+    applying to the ``*`` agent. Document-local Arrow flatMap, zero shuffle;
     feed the output (tiny: rules × hosts) to :func:`robots_allowed`."""
 
     def _parse(hosts, bodies):
         rows = [
             (host, kind, prefix, len(prefix))
             for host, body in zip(hosts, bodies)
-            for kind, prefix in parse_robots_text(body or "", agent)[0]
+            for kind, prefix in parse_robots_text(body or "", "*")[0]
         ]
         return zip(*rows) if rows else ([],) * 4
 
     return map_arrow(
-        df.select(host_col, robots_col), _parse,
+        df.select("host", "robots_txt"), _parse,
         "host string, rule string, prefix string, prefix_len int",
     )
 
@@ -233,15 +217,13 @@ def robots_allowed(
     rules: DataFrame,
     url_col: str = "url",
     id_col: str = "doc_id",
-    broadcast_rules: bool = True,
 ) -> DataFrame:
     """``(id, allowed)`` — longest-match robots evaluation per url.
 
     Plan shape: project the url to ``(id, host, path)`` (path ``''`` →
     ``'/'``, the RFC's default), join the rules relation on ``host``
-    (broadcast by default — the rules table is rules × hosts, far under
-    broadcast size even for a full crawl's robots corpus; pass
-    ``broadcast_rules=False`` to let AQE decide), keep matching rules
+    (broadcast — the rules table is rules × hosts, far under broadcast
+    size even for a full crawl's robots corpus), keep matching rules
     (``path startswith prefix`` — literal, case-sensitive per RFC), and
     take ONE ``max(struct(prefix_len, is_allow))`` per id: longest
     prefix wins, equal-length ties resolve to Allow because the allow
@@ -263,14 +245,12 @@ def robots_allowed(
             F.lit("/"),
         ).alias("path"),
     )
-    r = rules.select(
+    r = F.broadcast(rules.select(
         "host",
         "prefix",
         F.col("prefix_len").alias("_plen"),
         (F.col("rule") == "allow").cast("int").alias("_is_allow"),
-    )
-    if broadcast_rules:
-        r = F.broadcast(r)
+    ))
     joined = u.join(r, "host", "left")
     score = F.when(
         F.col("prefix").isNotNull() & F.col("path").startswith(F.col("prefix")),
@@ -289,11 +269,7 @@ def robots_allowed(
 _SITEMAP_LINE_RE = r"(?im)^[ \t]*sitemap[ \t]*:[ \t]*([^#\s]+)"
 
 
-def robots_sitemaps(
-    robots_df: DataFrame,
-    host_col: str = "host",
-    text_col: str = "robots_txt",
-) -> DataFrame:
+def robots_sitemaps(robots_df: DataFrame) -> DataFrame:
     """``(host, sitemap_ix, sitemap_url)`` — the ``Sitemap:`` directives
     declared in each robots.txt, in file order: the standard sitemap
     DISCOVERY channel (the sitemaps.org protocol's robots.txt
@@ -308,10 +284,8 @@ def robots_sitemaps(
     + ``posexplode``. Zero Python, zero shuffle, engine-portable
     pattern (Java∩RE2), so the oracle replays it verbatim."""
     urls = F.regexp_extract_all(
-        F.coalesce(F.col(text_col), F.lit("")), F.lit(_SITEMAP_LINE_RE), F.lit(1)
+        F.coalesce(F.col("robots_txt"), F.lit("")), F.lit(_SITEMAP_LINE_RE), F.lit(1)
     )
-    return robots_df.select(
-        F.col(host_col).alias("host"), urls.alias("u")
-    ).select(
+    return robots_df.select(F.col("host"), urls.alias("u")).select(
         "host", F.posexplode("u").alias("sitemap_ix", "sitemap_url")
     )

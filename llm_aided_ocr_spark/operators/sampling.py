@@ -53,7 +53,6 @@ def hash_split(
     weights: Dict[str, float] | None = None,
     id_col: str = "doc_id",
     seed: int = 1,
-    split_col: str = "split",
 ) -> DataFrame:
     """Append a ``split`` column assigning every row to exactly one named
     split by disjoint hash ranges (e.g. train/val/test 0.9/0.05/0.05).
@@ -77,7 +76,7 @@ def hash_split(
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     last = F.lit(names[-1])
     expr = last if expr is None else expr.otherwise(last)
-    return df.withColumn(split_col, expr)
+    return df.withColumn("split", expr)
 
 
 # ---------------------------------------------------------------------------
@@ -115,7 +114,6 @@ def dsir_log_weights(
     target_df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    smoothing: float = 1.0,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """``(id, log_weight)`` — per-document DSIR log importance weight
@@ -132,8 +130,8 @@ def dsir_log_weights(
     the only corpus-keyed exchanges are ``groupBy(id, f)`` and the final
     ``groupBy(id)`` sum. The 1-row totals relation rides a broadcast
     cross join (the repo's standard scalar pattern), never a driver
-    collect."""
-    a = float(smoothing)
+    collect. ``a`` is 1 (add-one smoothing)."""
+    a = 1.0
     from llm_aided_ocr_spark.operators.util import persist
 
     docfeat = persist(_feature_counts(df, text_col, id_col, hash_family))
@@ -174,10 +172,6 @@ def dsir_select(
     target_df: DataFrame,
     k: int,
     seed: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    smoothing: float = 1.0,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """``(id, log_weight, gumbel_key)`` — the ``k`` documents DSIR
     selects: Gumbel-top-k sampling without replacement from the softmax
@@ -188,10 +182,7 @@ def dsir_select(
     engine-reproducible, like every sampling decision in this module.
     Top-k is a TakeOrdered (per-partition heads + one small merge), not a
     global sort."""
-    w = dsir_log_weights(
-        df, target_df, text_col=text_col, id_col=id_col,
-        smoothing=smoothing, hash_family=hash_family,
-    )
+    w = dsir_log_weights(df, target_df)
     u = F.greatest(_unit_hash_col(F.col("id"), seed), F.lit(1e-300))
     key = F.col("log_weight") - F.log(-F.log(u))
     return (
@@ -299,9 +290,7 @@ def domain_cap(
     return under.unionByName(ranked).drop("_dc_domain")
 
 
-def temperature_rates(
-    df: DataFrame, url_col: str = "url"
-) -> DataFrame:
+def temperature_rates(df: DataFrame) -> DataFrame:
     """``(domain, n_docs, rate_r)`` — square-root temperature sampling
     rates (the α=0.5 of multilingual-pretraining temperature mixing,
     mBERT/mT5 family): target share of domain d ∝ ``sqrt(count_d)``, so
@@ -331,7 +320,7 @@ def temperature_rates(
     from llm_aided_ocr_spark.operators.textstats import domain_col
 
     counts = (
-        df.select(domain_col(F.col(url_col)).alias("domain"))
+        df.select(domain_col(F.col("url")).alias("domain"))
         .groupBy("domain")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     )
@@ -359,9 +348,7 @@ def mixture_resample(
     df: DataFrame,
     domain_rates: Dict[str, float],
     default_rate: float = 1.0,
-    url_col: str = "url",
     seed: int = 1,
-    copy_col: str = "copy_ix",
 ) -> DataFrame:
     """Deterministic per-domain mixture resampling — the data-mixing
     step that tunes a crawl toward target domain weights (the
@@ -371,7 +358,7 @@ def mixture_resample(
     both directions: ``r < 1`` down-samples (0-or-1 copies, exactly
     :func:`deterministic_sample` per domain), ``r > 1`` up-samples
     (epoch repetition with a deterministic fractional epoch), ``r = 0``
-    drops the domain. Output rows carry ``copy_col`` (0-based copy
+    drops the domain. Output rows carry ``copy_ix`` (0-based copy
     index) so downstream stages — packing streams, shard routing — can
     key on ``(url, copy_ix)`` and keep copies distinct.
 
@@ -399,16 +386,16 @@ def mixture_resample(
         for k, v in domain_rates.items():
             entries.extend([F.lit(k), F.lit(float(v))])
         rate = F.coalesce(
-            F.element_at(F.create_map(*entries), domain_col(F.col(url_col))),
+            F.element_at(F.create_map(*entries), domain_col(F.col("url"))),
             F.lit(float(default_rate)),
         )
     else:
         rate = F.lit(float(default_rate))
     whole = F.floor(rate).cast("int")
     frac = rate - F.floor(rate)
-    extra = (_unit_hash_col(F.col(url_col), seed) < frac).cast("int")
+    extra = (_unit_hash_col(F.col("url"), seed) < frac).cast("int")
     copies = whole + extra
     idx = F.when(
         copies > 0, F.sequence(F.lit(0), copies - F.lit(1))
     ).otherwise(F.array().cast("array<int>"))
-    return df.withColumn(copy_col, F.explode(idx))
+    return df.withColumn("copy_ix", F.explode(idx))

@@ -39,14 +39,7 @@ from pyspark.sql import functions as F
 from llm_aided_ocr_spark.operators.util import persist
 
 
-def bm25_scores(
-    df: DataFrame,
-    query_terms: Sequence[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_scores(df: DataFrame, query_terms: Sequence[str]) -> DataFrame:
     """``(id, dl, n_matched, score_r)`` — the BM25 score of every
     document against ``query_terms`` (matched on the shared normalized
     tokenization: lowercase alphanumeric runs), rounded to 6dp (the
@@ -61,7 +54,8 @@ def bm25_scores(
     normalizes to nothing raises. Duplicate query terms (after
     normalization) are deduplicated (BM25 is defined over the query's
     term SET; Lucene does the same); term order is irrelevant. Empty
-    documents score 0. ``k1``/``b`` are the standard Okapi defaults."""
+    documents score 0. ``k1 = 1.2`` and ``b = 0.75`` are the standard Okapi
+    constants."""
     import re
 
     from llm_aided_ocr_spark.operators.dedup import _words_col
@@ -78,10 +72,9 @@ def bm25_scores(
     terms = list(dict.fromkeys(norm_terms))
     if not terms:
         raise ValueError("query_terms must be non-empty")
-    k1 = float(k1)
-    b = float(b)
+    k1, b = 1.2, 0.75
 
-    words = F.filter(_words_col(text_col), lambda w: w != "")
+    words = F.filter(_words_col("text"), lambda w: w != "")
 
     def _tf(term: str) -> F.Column:
         # NB: a closure returning a 1-ARG lambda — a `lambda w, t=t:`
@@ -90,7 +83,7 @@ def bm25_scores(
         return F.size(F.filter(words, lambda w: w == F.lit(term)))
 
     base = persist(df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(words).alias("dl"),
         *[_tf(t).alias(f"_tf{i}") for i, t in enumerate(terms)],
     ))
@@ -136,21 +129,11 @@ def bm25_scores(
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_terms: Sequence[str],
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_topk(df: DataFrame, query_terms: Sequence[str], k: int = 10) -> DataFrame:
     """The ``k`` best-scoring documents (ties broken by id for
     determinism) — a TakeOrdered over :func:`bm25_scores`, so the driver
     merge sees ``k`` rows per partition, never the corpus."""
-    scores = bm25_scores(
-        df, query_terms, text_col=text_col, id_col=id_col, k1=k1, b=b
-    )
+    scores = bm25_scores(df, query_terms)
     return scores.orderBy(F.desc("score_r"), F.col("id")).limit(k)
 
 
@@ -273,15 +256,7 @@ def phrase_search(
     )
 
 
-def related_docs(
-    df: DataFrame,
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    quant: int = 10**6,
-    min_df: int | None = None,
-    max_df_frac: float | None = None,
-) -> DataFrame:
+def related_docs(df: DataFrame, k: int = 10) -> DataFrame:
     """``(doc_id, rel_id, cosine_r, rank)`` — top-k related documents by
     TF-IDF sparse cosine THROUGH the inverted index (the classic
     "similar pages" computation): ltn weights ``w = (1 + ln tf) ·
@@ -290,18 +265,16 @@ def related_docs(
 
     Engine-exact scoring (the :func:`~llm_aided_ocr_spark.operators
     .similarity.quantized_topk` discipline): weights are quantized to
-    ``floor(w · quant)`` BIGINTs, so dots and squared norms are exact
+    ``floor(w · 1e6)`` BIGINTs, so dots and squared norms are exact
     integer sums and the final cosine is one deterministic double
     expression — ranks cannot flip between engines or partitionings.
-    ``quant = 1e6`` keeps a document's squared norm under int64 up to
-    ~20k distinct terms at web-typical idf; pass 1e5 beyond that.
+    The 1e6 scale keeps a document's squared norm under int64 up to
+    ~20k distinct terms at web-typical idf.
 
     Scale shape: ``df = N`` terms weight to exactly 0 and are DROPPED
     before the self-join — the mathematically-dead terms are precisely
     the corpus-wide hottest keys, so the worst join fanout eliminates
-    itself; ``max_df_frac`` (forwarded to :func:`postings`) bounds the
-    remaining fanout the way ``max_shingle_df`` does for n-gram
-    Jaccard. Norms derive from the same weights relation (grouped on
+    itself. Norms derive from the same weights relation (grouped on
     its own key); the per-doc top-k window partitions on ``doc_id``
     (parallel across docs). Corpus size is ONE broadcast row.
 
@@ -317,10 +290,7 @@ def related_docs(
     consumers)."""
     from pyspark import StorageLevel
 
-    p = postings(
-        df, text_col=text_col, id_col=id_col,
-        min_df=min_df, max_df_frac=max_df_frac,
-    )
+    p = postings(df)
     n = df.select(F.count(F.lit(1)).cast("bigint").alias("_n_docs"))
     w = persist(
         p.crossJoin(F.broadcast(n))
@@ -332,7 +302,7 @@ def related_docs(
                     F.col("_n_docs").cast("double")
                     / F.col("df").cast("double")
                 )
-                * F.lit(float(quant))
+                * F.lit(1e6)
             ).cast("bigint").alias("iw"),
         )
         .filter(F.col("iw") > 0),
@@ -373,7 +343,7 @@ def related_docs(
         scored.withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("ida").alias(id_col),
+            F.col("ida").alias("doc_id"),
             F.col("idb").alias("rel_id"),
             F.round("cos", 6).alias("cosine_r"),
             "rank",
@@ -381,14 +351,7 @@ def related_docs(
     )
 
 
-def rrf_fuse(
-    rankings: DataFrame,
-    k: int = 60,
-    scale: int = 10**15,
-    id_col: str = "id",
-    source_col: str = "source",
-    rank_col: str = "rank",
-) -> DataFrame:
+def rrf_fuse(rankings: DataFrame, k: int = 60, scale: int = 10**15) -> DataFrame:
     """``(id, rrf_q, n_sources)`` — Reciprocal Rank Fusion (Cormack,
     Clarke & Buettcher, SIGIR 2009) over a LONG-FORM ranking relation
     ``(id, source, rank)`` (rank 1-based within each source): the
@@ -409,9 +372,9 @@ def rrf_fuse(
         raise ValueError("need k >= 0 and scale > 0")
     return (
         rankings.select(
-            F.col(id_col).alias("id"),
-            F.col(source_col).alias("source"),
-            F.expr(f"CAST({scale} AS BIGINT) div ({k} + {rank_col})")
+            F.col("id"),
+            F.col("source"),
+            F.expr(f"CAST({scale} AS BIGINT) div ({k} + rank)")
             .alias("_c"),
         )
         .groupBy("id")

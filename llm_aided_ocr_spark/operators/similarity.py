@@ -51,31 +51,21 @@ def cosine_col(a, b) -> F.Column:
     return F.when(denom > 0, _dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
+def brute_force_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k by cosine: broadcast the query set against the corpus
     (queries are small by construction; the corpus never shuffles), score
     natively, take k per query with a window."""
-    q = F.broadcast(queries.select(query_id_col, query_vec_col))
+    q = F.broadcast(queries.select("query_id", "query_vec"))
     scored = vectors.crossJoin(q).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        cosine_col(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
+        F.col("query_id"),
+        F.col("vec_id"),
+        cosine_col(F.col("embedding"), F.col("query_vec")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col)
-    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -127,10 +117,6 @@ def lsh_topk(
     k: int = 10,
     num_planes: int = 12,
     seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     sketch: str = "normal",
 ) -> DataFrame:
     """Approximate top-k: score only corpus vectors whose hyperplane bucket
@@ -140,27 +126,27 @@ def lsh_topk(
     :func:`quantized_sketch`); ``'normal'`` the float Gaussian sketch."""
     if sketch == "rademacher_q6":
         planes = rademacher_planes(dim, num_planes, seed)
-        v = quantized_sketch(vectors, planes, vec_col)
+        v = quantized_sketch(vectors, planes, "embedding")
         q = quantized_sketch(
-            queries.select(query_id_col, F.col(query_vec_col).alias(vec_col)),
-            planes, vec_col,
-        ).select(query_id_col, F.col(vec_col).alias(query_vec_col), "bucket")
+            queries.select("query_id", F.col("query_vec").alias("embedding")),
+            planes, "embedding",
+        ).select("query_id", F.col("embedding").alias("query_vec"), "bucket")
     else:
-        v = hyperplane_sketch(vectors, dim, num_planes, seed, vec_col)
+        v = hyperplane_sketch(vectors, dim, num_planes, seed, "embedding")
         q = hyperplane_sketch(
-            queries.select(query_id_col, F.col(query_vec_col).alias(vec_col)),
-            dim, num_planes, seed, vec_col,
-        ).select(query_id_col, F.col(vec_col).alias(query_vec_col), "bucket")
+            queries.select("query_id", F.col("query_vec").alias("embedding")),
+            dim, num_planes, seed, "embedding",
+        ).select("query_id", F.col("embedding").alias("query_vec"), "bucket")
     joined = v.join(F.broadcast(q), on="bucket").select(
-        query_id_col,
-        F.col(id_col),
-        cosine_col(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
+        "query_id",
+        F.col("vec_id"),
+        cosine_col(F.col("embedding"), F.col("query_vec")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
     return (
         joined.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -287,9 +273,6 @@ def embedding_near_dup_pairs(
     num_planes: int = 12,
     seed: int = 7,
     max_bucket_size: int | None = 200,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sketch: str = "rademacher_q6",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: hyperplane-LSH buckets
     generate candidates (same-bucket only — never an all-pairs join), then
@@ -297,17 +280,13 @@ def embedding_near_dup_pairs(
     of minhash-LSH for the embedding modality; ``max_bucket_size`` guards
     degenerate buckets exactly as in operators.dedup.
 
-    ``sketch='rademacher_q6'`` (default) buckets with the exact-integer
-    quantized sketch — fully native AND portable to the DuckDB oracle;
-    ``'normal'`` uses the float Gaussian sketch (numpy pass)."""
-    if sketch == "rademacher_q6":
-        planes = rademacher_planes(dim, num_planes, seed)
-        sk = quantized_sketch(vectors, planes, vec_col)
-    else:
-        sk = hyperplane_sketch(vectors, dim, num_planes, seed, vec_col)
+    Buckets come from the exact-integer quantized (Rademacher) sketch —
+    fully native AND portable to the DuckDB oracle."""
+    planes = rademacher_planes(dim, num_planes, seed)
+    sk = quantized_sketch(vectors, planes, "embedding")
     # cache: the sketch feeds the bucket-size aggregation and both join
     # sides; uncached it would be recomputed per consumer
-    buckets = persist(sk.select(id_col, vec_col, "bucket"))
+    buckets = persist(sk.select("vec_id", "embedding", "bucket"))
     if max_bucket_size is not None:
         small = (
             buckets.groupBy("bucket")
@@ -320,12 +299,12 @@ def embedding_near_dup_pairs(
     b = buckets.alias("b")
     cand = (
         a.join(b, on="bucket")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("vec_a"),
-            F.col(f"b.{vec_col}").alias("vec_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            F.col("a.embedding").alias("vec_a"),
+            F.col("b.embedding").alias("vec_b"),
         )
     )
 
@@ -405,8 +384,6 @@ def train_centroids_sample(
     n_centroids: int = 16,
     sample_fraction: float = 0.1,
     iters: int = 5,
-    seed: int = 11,
-    vec_col: str = "embedding",
     max_rows: int = 100_000,
 ) -> List[List[float]]:
     """k-means on a driver-side sample (the standard IVF recipe: train the
@@ -423,10 +400,10 @@ def train_centroids_sample(
     Corpus-scale alternative when a fully layout-independent model is
     required: Spark ML KMeans on the sampled relation (distributed, no
     driver collect)."""
-    X = _collect_bounded_sample(df, vec_col, sample_fraction, seed, max_rows)
+    X = _collect_bounded_sample(df, "embedding", sample_fraction, 11, max_rows)
     if len(X) < n_centroids:
         raise ValueError("sample smaller than n_centroids; raise sample_fraction")
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(11)
     cents = X[rng.choice(len(X), n_centroids, replace=False)]
     for _ in range(iters):
         d = ((X[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
@@ -438,15 +415,15 @@ def train_centroids_sample(
     return [list(map(float, c)) for c in cents]
 
 
-def ivf_demo_centroids(n_centroids: int = 8, dim: int = 64, seed: int = 13):
+def ivf_demo_centroids():
     """Fixed seeded centroids (values rounded to 6 decimals so the same
     literals parse to identical doubles in any engine) — lets the driver's
     DuckDB oracle reproduce IVF cell assignment exactly without sharing a
     trained model. Production uses :func:`train_centroids_sample`."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(13)
     return [
         [round(float(x), 6) for x in row]
-        for row in rng.normal(scale=0.1, size=(n_centroids, dim))
+        for row in rng.normal(scale=0.1, size=(8, 64))
     ]
 
 
@@ -454,7 +431,6 @@ def ivf_probe_cells(
     df: DataFrame,
     centroids: List[List[float]],
     nprobe: int = 1,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Append ``cell`` = each of the ``nprobe`` nearest centroids by L2
     (one output row per probed cell), computed natively: distances →
@@ -471,7 +447,7 @@ def ivf_probe_cells(
     dists = F.transform(
         cents,
         lambda c: F.aggregate(
-            F.zip_with(F.col(vec_col), c, lambda x, y: (x - y) * (x - y)),
+            F.zip_with(F.col("embedding"), c, lambda x, y: (x - y) * (x - y)),
             F.lit(0.0).cast("double"),
             lambda acc, v: acc + v,
         ),
@@ -490,30 +466,26 @@ def ivf_topk(
     queries: DataFrame,
     centroids: List[List[float]],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     nprobe: int = 1,
 ) -> DataFrame:
     """Approximate top-k searching the query's ``nprobe`` nearest IVF
     cells (corpus vectors live in exactly one cell, so a (query, vector)
     pair meets at most once — no dedup needed)."""
-    v = ivf_assign(vectors, centroids, vec_col)
+    v = ivf_assign(vectors, centroids, "embedding")
     q = ivf_probe_cells(
-        queries.select(query_id_col, F.col(query_vec_col).alias(vec_col)),
-        centroids, nprobe=nprobe, vec_col=vec_col,
-    ).select(query_id_col, F.col(vec_col).alias(query_vec_col), "cell")
+        queries.select("query_id", F.col("query_vec").alias("embedding")),
+        centroids, nprobe=nprobe,
+    ).select("query_id", F.col("embedding").alias("query_vec"), "cell")
     joined = v.join(F.broadcast(q), on="cell").select(
-        query_id_col,
-        F.col(id_col),
-        cosine_col(F.col(vec_col), F.col(query_vec_col)).alias("cosine"),
+        "query_id",
+        F.col("vec_id"),
+        cosine_col(F.col("embedding"), F.col("query_vec")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
     return (
         joined.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -525,8 +497,6 @@ def semantic_dedup_pairs(
     vectors: DataFrame,
     centroids: List[List[float]],
     tau: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cell_size: int | None = None,
 ) -> DataFrame:
     """``(id_a, id_b, cosine)`` — same-IVF-cell pairs with cosine >=
@@ -547,8 +517,8 @@ def semantic_dedup_pairs(
     skipping one would change SEMANTICS, not just recall. The cosine
     verify is the same Arrow-vectorized pass as
     :func:`embedding_near_dup_pairs`."""
-    assigned = ivf_assign(vectors, centroids, vec_col)
-    cells = persist(assigned.select(id_col, vec_col, "cell"))
+    assigned = ivf_assign(vectors, centroids, "embedding")
+    cells = persist(assigned.select("vec_id", "embedding", "cell"))
     if max_cell_size is not None:
         small = (
             cells.groupBy("cell")
@@ -561,12 +531,12 @@ def semantic_dedup_pairs(
     b = cells.alias("b")
     cand = (
         a.join(b, on="cell")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("vec_a"),
-            F.col(f"b.{vec_col}").alias("vec_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            F.col("a.embedding").alias("vec_a"),
+            F.col("b.embedding").alias("vec_b"),
         )
     )
 
@@ -577,8 +547,6 @@ def semantic_dedup(
     vectors: DataFrame,
     centroids: List[List[float]],
     tau: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     keep: str = "min_id",
 ) -> DataFrame:
     """Surviving rows after SemDeDup: within-cell cosine-``tau`` pairs →
@@ -609,20 +577,16 @@ def semantic_dedup(
 
     spark = vectors.sparkSession
     start = cache_mark()
-    pairs = semantic_dedup_pairs(
-        vectors, centroids, tau=tau, id_col=id_col, vec_col=vec_col
-    )
+    pairs = semantic_dedup_pairs(vectors, centroids, tau=tau)
     stop = cache_mark()
     # dedup_clusters materializes eagerly (localCheckpoint rounds): after
     # it the cell cache registered inside semantic_dedup_pairs is dead,
     # while the final labels checkpoint (registered after `stop`) stays
     if keep == "min_id":
         keep_df = dedup_keep_list(pairs)
-        drops = keep_df.filter(~F.col("keep")).select(
-            F.col("id").alias(id_col)
-        )
+        drops = keep_df.filter(~F.col("keep")).select(F.col("id").alias("vec_id"))
         release_between(spark, start, stop)
-        return vectors.join(drops, on=id_col, how="left_anti")
+        return vectors.join(drops, on="vec_id", how="left_anti")
 
     clusters = dedup_clusters(pairs)
     release_between(spark, start, stop)
@@ -636,7 +600,7 @@ def semantic_dedup(
     )
     cvec = F.get(cents, F.col("cell"))
     dot = F.aggregate(
-        F.zip_with(F.col(vec_col), cvec, lambda x, y: x * y),
+        F.zip_with(F.col("embedding"), cvec, lambda x, y: x * y),
         F.lit(0.0).cast("double"),
         lambda acc, v: acc + v,
     )
@@ -650,39 +614,34 @@ def semantic_dedup(
             )
         )
 
-    denom = _norm(F.col(vec_col)) * _norm(cvec)
+    denom = _norm(F.col("embedding")) * _norm(cvec)
     cos = F.when(denom > 0, dot / denom).otherwise(F.lit(0.0))
     members = (
         ivf_assign(
-            vectors.join(
-                clusters.withColumnRenamed("id", id_col), on=id_col
-            ),
+            vectors.join(clusters.withColumnRenamed("id", "vec_id"), on="vec_id"),
             centroids,
-            vec_col,
+            "embedding",
         )
-        .select(id_col, "cluster_id", cos.alias("_cos"))
+        .select("vec_id", "cluster_id", cos.alias("_cos"))
     )
     keepers = (
         members.groupBy("cluster_id")
         .agg(
-            F.min(F.struct(F.col("_cos"), F.col(id_col))).alias("_k")
+            F.min(F.struct(F.col("_cos"), F.col("vec_id"))).alias("_k")
         )
-        .select(F.col("_k")[id_col].alias("_keep_id"))
+        .select(F.col("_k")["vec_id"].alias("_keep_id"))
     )
     drops = (
-        members.join(
-            keepers, members[id_col] == keepers["_keep_id"], "left_anti"
-        )
-        .select(F.col(id_col))
+        members.join(keepers, members["vec_id"] == keepers["_keep_id"], "left_anti")
+        .select(F.col("vec_id"))
     )
-    return vectors.join(drops, on=id_col, how="left_anti")
+    return vectors.join(drops, on="vec_id", how="left_anti")
 
 
 def quantize_embeddings(
     df: DataFrame,
     vec_col: str = "embedding",
     out_col: str = "q_embedding",
-    levels: int = 127,
 ) -> DataFrame:
     """Per-vector symmetric scalar quantization to int8 range: ``q_i =
     floor(v_i / s + 0.5)`` with ``s = max|v| / levels`` (zero vectors
@@ -697,7 +656,9 @@ def quantize_embeddings(
     between engines is a known cross-engine hash breaker; the values
     stay in [-levels, levels] by construction (|v_i| ≤ max|v| and half-up
     needs +0.5 beyond the max to escape, which ``x/s ≤ levels`` cannot
-    reach). One native projection: zero Python, zero shuffle."""
+    reach); ``levels`` is 127. One native projection: zero Python, zero
+    shuffle."""
+    levels = 127
     v = F.col(vec_col)
     q = let_(
         F.aggregate(
@@ -711,36 +672,20 @@ def quantize_embeddings(
     return df.withColumn(out_col, q)
 
 
-def quantized_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    levels: int = 127,
-) -> DataFrame:
+def quantized_topk(vectors: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """:func:`brute_force_topk` over int8-quantized vectors (both sides
     quantized through :func:`quantize_embeddings`): the memory-bound
     exact-scan baseline a quantized serving index runs. Since quantized
     components are exact small integers, the cosine doubles are
     bit-identical across engines — the scores themselves are
     deterministic, not just the ranking."""
-    qv = quantize_embeddings(
-        vectors, vec_col=vec_col, out_col="_q", levels=levels
-    ).select(
-        id_col, F.col("_q").cast("array<double>").alias(vec_col)
+    qv = quantize_embeddings(vectors, out_col="_q").select(
+        "vec_id", F.col("_q").cast("array<double>").alias("embedding")
     )
-    qq = quantize_embeddings(
-        queries, vec_col=query_vec_col, out_col="_q", levels=levels
-    ).select(
-        query_id_col, F.col("_q").cast("array<double>").alias(query_vec_col)
+    qq = quantize_embeddings(queries, vec_col="query_vec", out_col="_q").select(
+        "query_id", F.col("_q").cast("array<double>").alias("query_vec")
     )
-    return brute_force_topk(
-        qv, qq, k=k, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-    )
+    return brute_force_topk(qv, qq, k=k)
 
 
 def mine_bitext(
@@ -748,10 +693,6 @@ def mine_bitext(
     y: DataFrame,
     k: int = 4,
     threshold: float = 1.05,
-    levels: int = 127,
-    scale: int = 10**12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """``(x_id, y_id, margin)`` — margin-based bitext mining (Artetxe &
     Schwenk, ACL 2019; the CCMatrix/CCAligned recipe): mine translation
@@ -768,7 +709,7 @@ def mine_bitext(
 
     Determinism: both sides pass through :func:`quantize_embeddings`
     (pinned half-up int8), so every cosine double is bit-identical
-    cross-engine; each cosine is then FLOOR-QUANTIZED to a ``scale``-
+    cross-engine; each cosine is then FLOOR-QUANTIZED to a ``10**12``-
     denominated bigint and the k-NN neighborhood sums are INTEGER sums
     — order-free — so ``margin = (2k·qcos) / (sx + sy)`` is one IEEE
     division of exact integers. Rankings, ties (broken by id), and the
@@ -789,12 +730,12 @@ def mine_bitext(
     # (guide §1.2 per-task work / §2.4 don't recompute). The expression
     # trees are identical to cosine_col's, so every double — and hence
     # every floor-quantized qcos — is bit-identical.
-    qx = quantize_embeddings(x, vec_col=vec_col, out_col="_q", levels=levels).select(
-        F.col(id_col).alias("x_id"),
+    qx = quantize_embeddings(x, out_col="_q").select(
+        F.col("vec_id").alias("x_id"),
         F.col("_q").cast("array<double>").alias("xv"),
     ).withColumn("xn", _norm(F.col("xv")))
-    qy = quantize_embeddings(y, vec_col=vec_col, out_col="_q", levels=levels).select(
-        F.col(id_col).alias("y_id"),
+    qy = quantize_embeddings(y, out_col="_q").select(
+        F.col("vec_id").alias("y_id"),
         F.col("_q").cast("array<double>").alias("yv"),
     ).withColumn("yn", _norm(F.col("yv")))
     denom = F.col("xn") * F.col("yn")
@@ -812,7 +753,7 @@ def mine_bitext(
         .select(
             "x_id",
             "y_id",
-            F.floor(cos * F.lit(float(scale))).cast("bigint").alias("qcos"),
+            F.floor(cos * F.lit(1e12)).cast("bigint").alias("qcos"),
         )
         .repartition("x_id")
     )
@@ -900,10 +841,6 @@ def hamming_topk(
     queries: DataFrame,
     dim: int,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """``(query_id, vec_id, hamming, rank)`` — exact top-k by Hamming
     distance over 1-bit sign codes (:func:`sign_codes_col`): the
@@ -914,17 +851,17 @@ def hamming_topk(
     binary codes feed hyperplane projections instead of raw components;
     the scan is identical."""
     codes = vectors.select(
-        F.col(id_col), sign_codes_col(F.col(vec_col), dim).alias("_c")
+        F.col("vec_id"), sign_codes_col(F.col("embedding"), dim).alias("_c")
     )
     qc = F.broadcast(
         queries.select(
-            F.col(query_id_col),
-            sign_codes_col(F.col(query_vec_col), dim).alias("_qc"),
+            F.col("query_id"),
+            sign_codes_col(F.col("query_vec"), dim).alias("_qc"),
         )
     )
     scored = codes.crossJoin(qc).select(
-        F.col(query_id_col),
-        F.col(id_col),
+        F.col("query_id"),
+        F.col("vec_id"),
         F.aggregate(
             F.zip_with(
                 F.col("_c"),
@@ -935,11 +872,9 @@ def hamming_topk(
             lambda acc, v: acc + v,
         ).alias("hamming"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("hamming"), F.col(id_col)
-    )
+    w = Window.partitionBy("query_id").orderBy(F.col("hamming"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "hamming", "rank")
+        .select("query_id", "vec_id", "hamming", "rank")
     )

@@ -21,12 +21,7 @@ from pyspark.sql import functions as F
 SNAPSHOT_STATUSES = ("added", "removed", "changed", "unchanged")
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame, id_col: str = "url") -> DataFrame:
     """``(id, status)`` with status ∈ ``added | removed | changed |
     unchanged`` — the full-outer comparison of two snapshots keyed on
     the url.
@@ -42,7 +37,7 @@ def snapshot_diff(
     first when they are not)."""
     fp = lambda df: df.select(  # noqa: E731
         F.col(id_col).alias("id"),
-        F.xxhash64(F.coalesce(F.col(text_col), F.lit(""))).alias("fp"),
+        F.xxhash64(F.coalesce(F.col("text"), F.lit(""))).alias("fp"),
     )
     o = fp(old).withColumnRenamed("fp", "old_fp")
     n = fp(new).withColumnRenamed("fp", "new_fp")
@@ -66,13 +61,7 @@ def snapshot_diff_stats(diff: DataFrame) -> DataFrame:
     )
 
 
-def capture_novelty(
-    df: DataFrame,
-    n: int = 3,
-    url_col: str = "url",
-    ts_col: str = "ts",
-    text_col: str = "text",
-) -> DataFrame:
+def capture_novelty(df: DataFrame, n: int = 3) -> DataFrame:
     """``(url, ts, n_shingles, n_new, novelty)`` — per capture (from the
     second onward), the fraction of its word-``n``-gram shingle set NOT
     present in the SAME url's previous capture:
@@ -111,9 +100,9 @@ def capture_novelty(
 
     w = Window.partitionBy("_url").orderBy(F.col("_ts"))
     caps = df.select(
-        F.col(url_col).alias("_url"),
-        F.col(ts_col).alias("_ts"),
-        F.array_distinct(shingle_array_col(text_col, n=n)).alias("_sh"),
+        F.col("url").alias("_url"),
+        F.col("ts").alias("_ts"),
+        F.array_distinct(shingle_array_col("text", n=n)).alias("_sh"),
     ).select(
         "_url",
         "_ts",

@@ -15,13 +15,13 @@ A page is flagged iff ALL of:
 
 * declared ``status`` is 200 (real 4xx/5xx are already routed by
   status — NULL status is treated as unknown, not flagged);
-* its lowercased text matches one of the marker phrases (default set
-  below, override via ``markers``) — matching is substring, so "404"
-  is deliberately NOT in the default set (false-positives on prose);
-* its word count is below ``max_words`` (error templates are short;
+* its lowercased text matches one of the marker phrases
+  (``DEFAULT_MARKERS`` below) — matching is substring, so "404"
+  is deliberately NOT in the set (false-positives on prose);
+* its word count is below 200 (error templates are short;
   a long article that merely quotes "page not found" survives).
 
-Output keeps the matched marker (first in the ``markers`` list, a
+Output keeps the matched marker (first in ``DEFAULT_MARKERS``, a
 deterministic tie-break) and the word count for threshold tuning.
 
 Scale shape: pure native projections (zero Python, zero shuffle,
@@ -31,7 +31,7 @@ probes over the already-extracted text column.
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,40 +48,30 @@ DEFAULT_MARKERS: List[str] = [
 ]
 
 
-def soft404_flags(
-    df: DataFrame,
-    text_col: str = "text",
-    status_col: str = "status",
-    id_col: str = "url",
-    markers: Optional[List[str]] = None,
-    max_words: int = 200,
-) -> DataFrame:
+def soft404_flags(df: DataFrame) -> DataFrame:
     """``(id, status, n_words, marker, is_soft404)`` — one row per
-    input row; ``marker`` is the first matching phrase (NULL if none),
-    ``is_soft404`` applies the full rule from the module docstring."""
-    if markers is None:
-        markers = DEFAULT_MARKERS
-    if not markers:
-        raise ValueError("markers must be non-empty (or None for defaults)")
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    input row; ``marker`` is the first matching phrase of
+    :data:`DEFAULT_MARKERS` (NULL if none), ``is_soft404`` applies the
+    full rule from the module docstring."""
+    text = F.coalesce(F.col("text"), F.lit(""))
     low = F.lower(text)
     marker = None
-    for m in markers:
+    for m in DEFAULT_MARKERS:
         hit = F.when(low.contains(m.lower()), F.lit(m))
         marker = hit if marker is None else F.coalesce(marker, hit)
     n_words = F.size(F.split(F.trim(text), r"\s+")) - F.when(
         F.trim(text) == "", 1
     ).otherwise(0)
-    status = F.col(status_col)
+    status = F.col("status")
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("url").alias("id"),
         status.alias("status"),
         n_words.alias("n_words"),
         marker.alias("marker"),
         F.coalesce(
             (status == 200)
             & marker.isNotNull()
-            & (n_words < F.lit(max_words)),
+            & (n_words < F.lit(200)),
             F.lit(False),  # NULL status = unknown, never flagged
         ).alias("is_soft404"),
     )

@@ -51,12 +51,7 @@ def surt_key_col(url_col: Column) -> Column:
     return F.when(host != "", key)
 
 
-def cdx_records(
-    pages_df: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    text_col: str = "text",
-) -> DataFrame:
+def cdx_records(pages_df: DataFrame) -> DataFrame:
     """``(surt_key, ts14, digest, url)`` — one CDX index row per
     capture. ``digest`` is the md5 hex of the capture's text bytes (CDX
     uses SHA-1/Base32; the fingerprint CONTRACT — same bytes ⇒ same
@@ -66,15 +61,15 @@ def cdx_records(
     across driver configs — a timezone-dependent index key would be a
     correctness bug)."""
     ts14 = F.date_format(
-        F.to_utc_timestamp(F.col(ts_col), F.current_timezone()),
+        F.to_utc_timestamp(F.col("warc_ts"), F.current_timezone()),
         "yyyyMMddHHmmss",
     )
-    digest = F.md5(F.encode(F.coalesce(F.col(text_col), F.lit("")), "UTF-8"))
+    digest = F.md5(F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8"))
     return pages_df.select(
-        surt_key_col(F.col(url_col)).alias("surt_key"),
+        surt_key_col(F.col("url")).alias("surt_key"),
         ts14.alias("ts14"),
         digest.alias("digest"),
-        F.col(url_col).alias("url"),
+        F.col("url"),
     )
 
 
@@ -194,12 +189,7 @@ def cdx_prefix_scan(
     return cand.select("block_ix", "first_surt_key").join(stats, "block_ix")
 
 
-def revisit_records(
-    captures: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "ts14",
-    digest_col: str = "digest",
-) -> DataFrame:
+def revisit_records(captures: DataFrame) -> DataFrame:
     """WARC ``revisit`` semantics (ISO 28500 / WARC 1.1
     identical-payload-digest profile) over a capture relation: per
     ``(url, digest)``, the FIRST capture stores the payload; every later
@@ -220,26 +210,20 @@ def revisit_records(
     revisit counts (tens), no skew hazard, nothing global."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(url_col, digest_col)
-    first_ts = F.min(ts_col).over(w)
-    is_rev = F.col(ts_col) > first_ts
+    w = Window.partitionBy("url", "digest")
+    first_ts = F.min("ts14").over(w)
+    is_rev = F.col("ts14") > first_ts
     return captures.select(
-        F.col(url_col).alias("url"),
-        F.col(ts_col).alias("ts14"),
-        F.col(digest_col).alias("digest"),
+        F.col("url"),
+        F.col("ts14"),
+        F.col("digest"),
         is_rev.alias("is_revisit"),
         F.when(is_rev, first_ts).alias("refers_to_ts14"),
     )
 
 
-def closest_capture(
-    captures: DataFrame,
-    target_ts14: str,
-    key_col: str = "url",
-    ts_col: str = "ts14",
-    digest_col: str = "digest",
-) -> DataFrame:
-    """The Wayback lookup: per ``key_col``, the capture whose timestamp
+def closest_capture(captures: DataFrame, target_ts14: str) -> DataFrame:
+    """The Wayback lookup: per ``url``, the capture whose timestamp
     is closest to ``target_ts14`` (absolute seconds-free ts14 integer
     distance; ties go to the EARLIER capture — the replay convention).
     Output ``(key, ts14, digest)``.
@@ -251,15 +235,9 @@ def closest_capture(
     must be all-digit (CDX contract); the cast is ANSI-safe for that
     input."""
     t = int(target_ts14)
-    dist = F.abs(F.col(ts_col).cast("bigint") - F.lit(t))
-    best = captures.groupBy(F.col(key_col).alias("key")).agg(
-        F.min(
-            F.struct(
-                dist.alias("d"),
-                F.col(ts_col).alias("ts14"),
-                F.col(digest_col).alias("digest"),
-            )
-        ).alias("b")
+    dist = F.abs(F.col("ts14").cast("bigint") - F.lit(t))
+    best = captures.groupBy(F.col("url").alias("key")).agg(
+        F.min(F.struct(dist.alias("d"), F.col("ts14"), F.col("digest"),)).alias("b")
     )
     return best.select(
         "key", F.col("b.ts14").alias("ts14"), F.col("b.digest").alias("digest")

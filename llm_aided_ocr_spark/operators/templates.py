@@ -7,8 +7,8 @@ since 1952 | Products | About | Contact") repeats only WITHIN its
 host — far below any global document-frequency threshold, yet present
 on every one of the host's pages. This operator learns template lines
 PER HOST: a trimmed non-blank line is a template line for host H when
-it appears on at least ``min_frac`` of H's pages, provided H has at
-least ``min_pages`` pages (small hosts carry no statistics — their
+it appears on at least half of H's pages, provided H has at least 4
+pages (small hosts carry no statistics — their
 lines are never stripped, the conservative default). The reference
 repo strips per-PAGE repeated headers (its 4-pass header heuristic,
 /root/reference/llm_aided_ocr.py — re-expressed in
@@ -39,55 +39,35 @@ from pyspark.sql import functions as F
 from .boilerplate import _line_hash, _lines_col
 
 
-def host_template_lines(
-    df: DataFrame,
-    host_col: str = "host",
-    text_col: str = "text",
-    min_frac: float = 0.5,
-    min_pages: int = 4,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
+def host_template_lines(df: DataFrame) -> DataFrame:
     """``(host, line_hash, n_pages_with, n_pages_host, frac)`` — the
     learned template relation (see module docstring for thresholds).
     ``frac`` is page frequency / host page count."""
-    if not (0.0 < min_frac <= 1.0):
-        raise ValueError("min_frac must be in (0, 1]")
     hashes = F.array_distinct(
         F.transform(
-            F.filter(_lines_col(text_col), lambda l: F.trim(l) != ""),
-            lambda l: _line_hash(l, hash_family),
+            F.filter(_lines_col("text"), lambda l: F.trim(l) != ""),
+            lambda l: _line_hash(l, "xxhash64"),
         )
     )
-    pairs = df.select(
-        F.col(host_col).alias("host"), F.explode(hashes).alias("line_hash")
-    )
+    pairs = df.select(F.col("host"), F.explode(hashes).alias("line_hash"))
     per_line = pairs.groupBy("host", "line_hash").agg(
         F.count(F.lit(1)).alias("n_pages_with")
     )
     per_host = (
-        df.groupBy(F.col(host_col).alias("host"))
+        df.groupBy(F.col("host"))
         .agg(F.count(F.lit(1)).alias("n_pages_host"))
-        .where(F.col("n_pages_host") >= int(min_pages))
+        .where(F.col("n_pages_host") >= 4)
     )
     return (
         per_line.join(per_host, "host")
         .withColumn(
             "frac", F.col("n_pages_with") / F.col("n_pages_host")
         )
-        .where(F.col("frac") >= float(min_frac))
+        .where(F.col("frac") >= 0.5)
     )
 
 
-def strip_host_templates(
-    df: DataFrame,
-    templates_df: DataFrame = None,
-    host_col: str = "host",
-    text_col: str = "text",
-    id_col: str = "url",
-    min_frac: float = 0.5,
-    min_pages: int = 4,
-    hash_family: str = "xxhash64",
-) -> DataFrame:
+def strip_host_templates(df: DataFrame, templates_df: DataFrame = None) -> DataFrame:
     """``(id, host, text, n_lines_in, n_lines_kept)`` — pages with
     their host's template lines removed (blank lines collapse with
     the removed line; surviving lines rejoin with ``\\n`` in original
@@ -95,17 +75,14 @@ def strip_host_templates(
     over the same input (pass a persisted relation when stripping the
     corpus it was learned from — the default recomputes it)."""
     if templates_df is None:
-        templates_df = host_template_lines(
-            df, host_col=host_col, text_col=text_col,
-            min_frac=min_frac, min_pages=min_pages, hash_family=hash_family,
-        )
-    lines = F.filter(_lines_col(text_col), lambda l: F.trim(l) != "")
+        templates_df = host_template_lines(df)
+    lines = F.filter(_lines_col("text"), lambda l: F.trim(l) != "")
     exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.col(host_col).alias("host"),
+        F.col("url").alias("id"),
+        F.col("host"),
         F.size(lines).alias("n_lines_in"),
         F.posexplode_outer(lines).alias("line_ix", "line"),
-    ).withColumn("line_hash", _line_hash(F.col("line"), hash_family))
+    ).withColumn("line_hash", _line_hash(F.col("line"), "xxhash64"))
     # left join with a match flag rather than left_anti: a page whose
     # EVERY line is a template must still emit its (empty-text) row
     flagged = exploded.join(

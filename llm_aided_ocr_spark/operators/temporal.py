@@ -119,27 +119,19 @@ def session_stats(
     key: str = "user_id",
     ts_col: str = "ts",
     gap_seconds: int = 1800,
-    value_col: Optional[str] = "value",
 ) -> DataFrame:
     """Per-session rollup: ``(key, session_ix, n_events, session_start,
-    session_end, value_sum)``."""
+    session_end, value_sum_r)``."""
     tagged = sessionize(df, key=key, ts_col=ts_col, gap_seconds=gap_seconds)
-    aggs = [
+    return tagged.groupBy(key, "session_ix").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min(ts_col).alias("session_start"),
         F.max(ts_col).alias("session_end"),
-    ]
-    if value_col is not None:
-        aggs.append(F.round(F.sum(value_col), 6).alias("value_sum_r"))
-    return tagged.groupBy(key, "session_ix").agg(*aggs)
+        F.round(F.sum("value"), 6).alias("value_sum_r"),
+    )
 
 
-def host_fetch_stats(
-    df: DataFrame,
-    ts_col: str = "warc_ts",
-    url_col: str = "url",
-    host_col: Optional[str] = None,
-) -> DataFrame:
+def host_fetch_stats(df: DataFrame, host_col: Optional[str] = None) -> DataFrame:
     """``(host, n_fetches, span_s, min_gap_s, mean_gap_s)`` — per-host
     crawl-politeness profile over fetch timestamps: how often a crawl
     hit each host and how close together. The min/mean inter-fetch gap
@@ -148,7 +140,7 @@ def host_fetch_stats(
     is a crawler bug, a huge mean gap a refresh-scheduling one.
 
     ``host`` comes from ``host_col`` when given, else from the native
-    host extraction over ``url_col``. Gaps are consecutive differences
+    host extraction over ``url``. Gaps are consecutive differences
     within each host ordered by timestamp (epoch seconds, double);
     hosts with one fetch have NULL gaps. The multiset of consecutive
     gaps is invariant under tie order, so results are deterministic
@@ -163,10 +155,10 @@ def host_fetch_stats(
     """
     from llm_aided_ocr_spark.operators.textstats import domain_col
 
-    host = F.col(host_col) if host_col else domain_col(F.col(url_col))
+    host = F.col(host_col) if host_col else domain_col(F.col("url"))
     base = df.select(
         host.alias("host"),
-        F.col(ts_col).cast("timestamp").cast("double").alias("es"),
+        F.col("warc_ts").cast("timestamp").cast("double").alias("es"),
     ).filter((F.col("host") != "") & F.col("es").isNotNull())
     w = Window.partitionBy("host").orderBy("es")
     gaps = base.withColumn("gap", F.col("es") - F.lag("es").over(w))

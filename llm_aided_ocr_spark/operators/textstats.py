@@ -111,11 +111,11 @@ def detect_language(df: DataFrame, text_col: str = "text") -> DataFrame:
 # Quality scoring — length / punctuation / stopword / repetition ratios
 # ---------------------------------------------------------------------------
 
-def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Per-document quality features, all native:
     n_chars, n_words, mean_word_len, punct_ratio, upper_ratio,
     stopword_ratio, line_count, blank_line_ratio."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n_chars = F.length(t)
     n_words = word_count_col(t)
     n_punct = n_chars - F.length(F.regexp_replace(t, r"[^\w\s]", ""))
@@ -126,7 +126,7 @@ def quality_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     n_blank = F.size(F.filter(lines, lambda ln: F.trim(ln) == ""))
     safe = lambda num, den: F.when(den > 0, num.cast("double") / den).otherwise(F.lit(0.0))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars_calc"),
         n_words.alias("n_words"),
         safe(n_chars, n_words).alias("mean_word_len"),
@@ -342,9 +342,7 @@ def gopher_pass_col(text: Column) -> Column:
     )
 
 
-def gopher_quality_flags(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, §A1.1 —
     public heuristics), each as a boolean column plus the combined
     ``gopher_pass``, all native:
@@ -358,7 +356,7 @@ def gopher_quality_flags(
     """
     from llm_aided_ocr_spark.operators.util import let_
 
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     words_expr = _gopher_words_expr(t)
     lines_expr = _gopher_lines_expr(t)
 
@@ -381,12 +379,12 @@ def gopher_quality_flags(
     # selecting N fields straight off the let_ expression would inline
     # (and re-evaluate) the whole words/lines pass N times
     bound = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         let_(words_expr, _flags).alias("_w"),
         let_(lines_expr, _line_flags).alias("_l"),
     )
     out = bound.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col("_w")[c].alias(c) for c in flag_cols],
         *[F.col("_l")[c].alias(c) for c in line_cols],
     )
@@ -403,16 +401,16 @@ def gopher_quality_flags(
 _BPE_ISH = r"[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9\s]"
 
 
-def token_counts(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """``(id, ws_tokens, bpe_ish_tokens, approx_tokens)`` — whitespace
     count, a BPE-flavored regex segmentation count (letters runs / up to
     3-digit number groups / single symbols), and the reference T3
     approximation, all native."""
     from llm_aided_ocr_spark.functions.tokens import approx_tokens_col
 
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         word_count_col(t).alias("ws_tokens"),
         F.size(F.regexp_extract_all(t, F.lit(_BPE_ISH), 0)).alias("bpe_ish_tokens"),
         approx_tokens_col(t).alias("approx_tokens"),
@@ -434,13 +432,7 @@ _FP_BITS = 52
 _FP_MASK = (1 << _FP_BITS) - 1
 
 
-def fingerprints(
-    df: DataFrame,
-    window: int = 8,
-    winnow: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def fingerprints(df: DataFrame, window: int = 8, winnow: int = 4) -> DataFrame:
     """``(id, content_hash, n_grams, fps: array<bigint>)`` — per-document
     winnowing fingerprints (Schleimer/Wilkerson/Aiken MOSS scheme):
 
@@ -467,10 +459,10 @@ def fingerprints(
 
     df = ensure_min_parallelism(df)
     t = F.regexp_replace(
-        F.trim(F.lower(F.coalesce(F.col(text_col), F.lit("")))), r"\s+", " "
+        F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+", " "
     )
     prepared = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.conv(F.substring(F.md5(t), 1, 15), 16, 10)
         .cast("bigint")
         .alias("content_hash"),
@@ -498,28 +490,22 @@ def fingerprints(
             fps_out.append(np.unique(wins))
         return n_grams_out, fps_out
 
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(df.dtypes)["doc_id"]
     return map_arrow(
         prepared,
         _winnow,
-        f"{id_col} {id_type}, content_hash bigint, n_grams int, fps array<bigint>",
-        keep=(id_col, "content_hash"),
+        f"doc_id {id_type}, content_hash bigint, n_grams int, fps array<bigint>",
+        keep=("doc_id", "content_hash"),
     )
 
 
-def fingerprint_summary(
-    df: DataFrame,
-    window: int = 8,
-    winnow: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def fingerprint_summary(df: DataFrame, window: int = 8, winnow: int = 4) -> DataFrame:
     """Order-insensitive per-document digest of the fingerprint set —
     ``(id, content_hash, n_grams, n_fp, fp_min, fp_xor)`` — every column
     reproducible in portable SQL (the driver's DuckDB oracle)."""
-    fp = fingerprints(df, window=window, winnow=winnow, text_col=text_col, id_col=id_col)
+    fp = fingerprints(df, window=window, winnow=winnow)
     return fp.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "content_hash",
         "n_grams",
         F.size("fps").alias("n_fp"),
@@ -536,8 +522,6 @@ def fingerprint_matches(
     window: int = 8,
     winnow: int = 4,
     min_shared: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_fp_df: int | None = 1000,
 ) -> DataFrame:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprints —
@@ -545,11 +529,11 @@ def fingerprint_matches(
     fingerprint (same shape as the shingle join in dedup: bucket first,
     never all-pairs; ``max_fp_df`` drops corpus-hot fingerprints before
     the self-join)."""
-    fp = fingerprints(df, window=window, winnow=winnow, text_col=text_col, id_col=id_col)
+    fp = fingerprints(df, window=window, winnow=winnow)
     # cache: the exploded index is consumed by the DF-cap aggregation AND
     # both sides of the pair join — without it the winnowing expression
     # recomputes per consumer
-    e = persist(fp.select(F.col(id_col).alias("id"), F.explode("fps").alias("fp")))
+    e = persist(fp.select(F.col("doc_id").alias("id"), F.explode("fps").alias("fp")))
     if max_fp_df is not None:
         rare = (
             e.groupBy("fp")
@@ -610,7 +594,6 @@ def url_keep_col(
     url_col: Column,
     blocked_domains: tuple = (),
     blocked_keywords: tuple = (),
-    keyword_threshold: int = 2,
 ) -> Column:
     """Inline boolean form of :func:`url_filter`'s ``keep`` — a pure
     per-row expression, so pipelines filter with it directly
@@ -619,7 +602,7 @@ def url_keep_col(
     dom_blocked, hits = _url_gate_cols(
         url_col, blocked_domains, blocked_keywords
     )
-    return ~dom_blocked & (hits < F.lit(keyword_threshold))
+    return ~dom_blocked & (hits < F.lit(2))
 
 
 def url_filter(
@@ -627,8 +610,6 @@ def url_filter(
     blocked_domains: tuple = (),
     blocked_keywords: tuple = (),
     keyword_threshold: int = 2,
-    url_col: str = "url",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """``(id, domain_blocked, keyword_hits, keep)`` — RefinedWeb-style
     stage-1 URL filtering (Penedo et al. 2023 §3.1), the cheapest gate
@@ -651,11 +632,9 @@ def url_filter(
     practice (UT1-style category lists); for a corpus-scale blocklist
     RELATION, broadcast-join it on ``domain_col`` instead and reuse the
     same boolean algebra."""
-    dom_blocked, hits = _url_gate_cols(
-        F.col(url_col), blocked_domains, blocked_keywords
-    )
+    dom_blocked, hits = _url_gate_cols(F.col("url"), blocked_domains, blocked_keywords)
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         dom_blocked.alias("domain_blocked"),
         hits.cast("int").alias("keyword_hits"),
         (
@@ -664,15 +643,18 @@ def url_filter(
     )
 
 
+# crawler-trap thresholds shared by url_trap_flags and url_trap_keep_col
+TRAP_MAX_DEPTH = 8
+TRAP_MAX_PARAMS = 5
+TRAP_MAX_PATH_LEN = 256
+TRAP_SEG_REPEAT = 3
+TRAP_DIGIT_FRAC_MAX = 0.5
+
+
 def url_trap_flags(
     df: DataFrame,
     url_col: str = "url",
     id_col: str = "doc_id",
-    max_depth: int = 8,
-    max_params: int = 5,
-    max_path_len: int = 256,
-    seg_repeat: int = 3,
-    digit_frac_max: float = 0.5,
 ) -> DataFrame:
     """``(id, depth, n_params, path_len, digit_frac_r, repeated_seg,
     is_trap)`` — crawler-trap heuristics over the URL alone (IRLbot /
@@ -685,7 +667,7 @@ def url_trap_flags(
     * ``path_len`` — raw path length;
     * ``digit_frac_r`` — digit share of the path, rounded 6 (session
       ids and timestamps are digit-heavy);
-    * ``repeated_seg`` — some path segment occurs ≥ ``seg_repeat``
+    * ``repeated_seg`` — some path segment occurs ≥ ``TRAP_SEG_REPEAT``
       times (the classic ``/cal/2024/01/2024/01/...`` self-link loop);
     * ``is_trap`` — any threshold tripped.
 
@@ -704,7 +686,7 @@ def url_trap_flags(
         repeated = F.exists(
             segs,
             lambda s: F.size(F.filter(segs, lambda t: t == s))
-            >= F.lit(seg_repeat),
+            >= F.lit(TRAP_SEG_REPEAT),
         )
         path_len = F.length(p)
         digits = F.length(F.regexp_replace(p, r"[^0-9]", ""))
@@ -733,23 +715,16 @@ def url_trap_flags(
         F.col("_s.digit_frac_r").alias("digit_frac_r"),
         F.col("_s.repeated_seg").alias("repeated_seg"),
         (
-            (F.col("_s.depth") > F.lit(max_depth))
-            | (F.col("n_params") > F.lit(max_params))
-            | (F.col("_s.path_len") > F.lit(max_path_len))
+            (F.col("_s.depth") > F.lit(TRAP_MAX_DEPTH))
+            | (F.col("n_params") > F.lit(TRAP_MAX_PARAMS))
+            | (F.col("_s.path_len") > F.lit(TRAP_MAX_PATH_LEN))
             | F.col("_s.repeated_seg")
-            | (F.col("_s.digit_frac_r") > F.lit(digit_frac_max))
+            | (F.col("_s.digit_frac_r") > F.lit(TRAP_DIGIT_FRAC_MAX))
         ).alias("is_trap"),
     )
 
 
-def url_trap_keep_col(
-    url_col: Column,
-    max_depth: int = 8,
-    max_params: int = 5,
-    max_path_len: int = 256,
-    seg_repeat: int = 3,
-    digit_frac_max: float = 0.5,
-) -> Column:
+def url_trap_keep_col(url_col: Column) -> Column:
     """Inline boolean form of :func:`url_trap_flags`'s ``NOT is_trap`` —
     a pure per-row expression (same thresholds, same derivation), so
     pipelines shed trap urls with ``df.filter(url_trap_keep_col(...))``
@@ -766,7 +741,7 @@ def url_trap_keep_col(
         repeated = F.exists(
             segs,
             lambda s: F.size(F.filter(segs, lambda t: t == s))
-            >= F.lit(seg_repeat),
+            >= F.lit(TRAP_SEG_REPEAT),
         )
         path_len = F.length(p)
         digits = F.length(F.regexp_replace(p, r"[^0-9]", ""))
@@ -775,22 +750,17 @@ def url_trap_keep_col(
             6,
         )
         return ~(
-            (F.size(segs) > F.lit(max_depth))
-            | (n_params > F.lit(max_params))
-            | (path_len > F.lit(max_path_len))
+            (F.size(segs) > F.lit(TRAP_MAX_DEPTH))
+            | (n_params > F.lit(TRAP_MAX_PARAMS))
+            | (path_len > F.lit(TRAP_MAX_PATH_LEN))
             | repeated
-            | (digit_frac > F.lit(digit_frac_max))
+            | (digit_frac > F.lit(TRAP_DIGIT_FRAC_MAX))
         )
 
     return let_(path, _keep)
 
 
-def compression_ratio(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    level: int = 6,
-) -> DataFrame:
+def compression_ratio(df: DataFrame) -> DataFrame:
     """``(id, raw_bytes, deflate_bytes, compression_ratio_r)`` — the
     zlib-compressibility quality signal: machine-generated/spam pages
     (keyword stuffing, template farms, scraped listings) compress far
@@ -809,11 +779,11 @@ def compression_ratio(
 
     def _ratios(texts):
         raws = [(t or "").encode("utf-8") for t in texts]
-        return [len(b) for b in raws], [len(zlib.compress(b, level)) for b in raws]
+        return [len(b) for b in raws], [len(zlib.compress(b, 6)) for b in raws]
 
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(df.dtypes)["doc_id"]
     out = map_arrow(
-        df.select(F.col(id_col).alias("id"), text_col),
+        df.select(F.col("doc_id").alias("id"), "text"),
         _ratios,
         f"id {id_type}, raw_bytes bigint, deflate_bytes bigint",
         keep=("id",),
@@ -896,19 +866,14 @@ def top_ngrams(
     ).limit(k)
 
 
-def domain_stats(
-    df: DataFrame,
-    url_col: str = "url",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def domain_stats(df: DataFrame) -> DataFrame:
     """Per-domain corpus profile: document count, total/mean extracted
     chars, english share — the readout a crawl-curation pass ranks and
     thresholds on. One hash aggregation; domains are a low-cardinality
     key relative to pages, so the shuffle carries pre-combined partial
     aggregates (map-side combine is automatic for these aggregates)."""
-    d = domain_col(F.col(url_col)).alias("domain")
-    chars = F.length(F.coalesce(F.col(text_col), F.lit("")))
+    d = domain_col(F.col("url")).alias("domain")
+    chars = F.length(F.coalesce(F.col("text"), F.lit("")))
     return (
         df.select(
             d,
@@ -916,7 +881,7 @@ def domain_stats(
             # when/otherwise (not a bare cast): NULL lang must count as 0,
             # matching SQL's CASE WHEN — a null would silently drop out of
             # the average otherwise
-            F.when(F.col(lang_col) == "en", 1).otherwise(0).alias("_en"),
+            F.when(F.col("lang") == "en", 1).otherwise(0).alias("_en"),
         )
         .groupBy("domain")
         .agg(
@@ -928,34 +893,27 @@ def domain_stats(
     )
 
 
-def length_percentiles(
-    df: DataFrame,
-    by_col: str = "lang",
-    value_col: str = "n_chars",
-    percentiles: tuple = (0.25, 0.5, 0.75, 0.95),
-) -> DataFrame:
-    """Exact interpolated percentiles of a numeric column per group
-    (Spark's ``percentile`` — NOT percentile_approx — so the result is
+def length_percentiles(df: DataFrame) -> DataFrame:
+    """Exact interpolated percentiles (p25/p50/p75/p95) of ``n_chars``
+    per ``lang`` (Spark's ``percentile`` — NOT percentile_approx — so the result is
     deterministic and cross-engine checkable against quantile_cont).
     Exact percentiles shuffle the value column per group; for a 100 TB
     profile pass prefer sampled input or percentile_approx — this
     operator is the calibration tool that validates those sketches."""
     aggs = [
         F.round(
-            F.percentile(F.col(value_col), F.lit(float(p))), 6
+            F.percentile(F.col("n_chars"), F.lit(float(p))), 6
         ).alias(f"p{int(p * 100)}")
-        for p in percentiles
+        for p in (0.25, 0.5, 0.75, 0.95)
     ]
-    return df.groupBy(by_col).agg(F.count(F.lit(1)).alias("n"), *aggs)
+    return df.groupBy("lang").agg(F.count(F.lit(1)).alias("n"), *aggs)
 
 
 # ---------------------------------------------------------------------------
 # Repetition metrics (Gopher §A1.1 repetition rules)
 # ---------------------------------------------------------------------------
 
-def repetition_metrics(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_metrics(df: DataFrame) -> DataFrame:
     """Per-document repetition signals (Rae et al. 2021 §A1.1 family):
 
     * ``dup_line_frac``       — 1 − distinct/total over non-blank lines
@@ -983,7 +941,7 @@ def repetition_metrics(
         ))
 
     return _per_doc_doubles(
-        df, text_col, id_col, _metrics,
+        df, "text", "doc_id", _metrics,
         ["dup_line_frac", "dup_line_char_frac", "top_bigram_char_frac"],
     )
 
@@ -1007,9 +965,7 @@ GOPHER_REPETITION_THRESHOLDS = {
 }
 
 
-def paragraph_repetition_metrics(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def paragraph_repetition_metrics(df: DataFrame) -> DataFrame:
     """``(doc_id, dup_para_frac, dup_para_char_frac)`` — the paragraph
     rows of Gopher's repetition table (same Counter pass as the line
     metrics in :func:`repetition_metrics`, over ``\\n\\n``-separated
@@ -1023,7 +979,7 @@ def paragraph_repetition_metrics(
         return zip(*(_dup_fracs(_PARA_RE.split(t)) for t in texts))
 
     return _per_doc_doubles(
-        df, text_col, id_col, _metrics, ["dup_para_frac", "dup_para_char_frac"]
+        df, "text", "doc_id", _metrics, ["dup_para_frac", "dup_para_char_frac"]
     )
 
 
@@ -1364,8 +1320,6 @@ def _bucket_weight_col(bucket: Column, seed: int) -> Column:
 
 def quality_classifier_score(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     dim: int = CLASSIFIER_DIM,
     seed: int = 1,
     weights_df: DataFrame | None = None,
@@ -1401,7 +1355,7 @@ def quality_classifier_score(
     from llm_aided_ocr_spark.operators.dedup import _word_hash_col, _words_col
     from llm_aided_ocr_spark.operators.util import let_
 
-    words = F.filter(_words_col(text_col), lambda w: w != "")
+    words = F.filter(_words_col("text"), lambda w: w != "")
     bucket_of = lambda w: F.pmod(_word_hash_col(w, "md5_52"), F.lit(dim))  # noqa: E731
     if weights_df is None:
         logit = let_(
@@ -1417,13 +1371,13 @@ def quality_classifier_score(
             ),
         )
         return df.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.size(words).alias("n_words"),
             F.round(logit, 6).alias("logit_r"),
             F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6).alias("prob_r"),
         )
     # trained-weights shape: per-doc bucket counts x broadcast model
-    base = persist(df.select(F.col(id_col).alias("id"), words.alias("ws")))
+    base = persist(df.select(F.col("doc_id").alias("id"), words.alias("ws")))
     buckets = base.select(
         "id", F.explode(F.transform("ws", bucket_of)).alias("bucket")
     )
@@ -1452,11 +1406,7 @@ def quality_classifier_score(
     )
 
 
-def script_profile(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def script_profile(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """``(id, n_chars, latin_frac, cyrillic_frac, han_frac, greek_frac,
     digit_frac, main_script)`` — per-document Unicode-script histogram,
     the writing-system counterpart to :func:`lang_id_col`: language-ID
@@ -1477,7 +1427,7 @@ def script_profile(
     they keep agreeing."""
     from llm_aided_ocr_spark.operators.util import let_
 
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
 
     def _n(cls: str) -> Column:
         return F.length(F.regexp_replace(t, rf"[^\p{{Is{cls}}}]", ""))
@@ -1512,8 +1462,6 @@ def host_quality_rollup(
     df: DataFrame,
     url_col: str = "url",
     text_col: str = "text",
-    min_mean_score: float = 40.0,
-    min_pass_frac: float = 0.5,
 ) -> DataFrame:
     """``(host, n_docs, mean_qscore_r, gopher_pass_frac_r,
     low_quality_host)`` — the per-host curation rollup that drives
@@ -1521,8 +1469,8 @@ def host_quality_rollup(
     pages are consistently junk is cheaper to drop wholesale than to
     re-judge per page). Per host: document count, mean composite
     quality score, fraction passing the Gopher document gate, and the
-    ``low_quality_host`` verdict (mean score below ``min_mean_score``
-    OR pass fraction below ``min_pass_frac``).
+    ``low_quality_host`` verdict (mean score below 40 OR pass fraction
+    below 0.5).
 
     Scale shape: the per-document signals (:func:`quality_score_col`,
     the Gopher flag conjunction) are native expressions computed BEFORE
@@ -1548,18 +1496,13 @@ def host_quality_rollup(
     return agg.select(
         "host", "n_docs", "mean_qscore_r", "gopher_pass_frac_r",
         (
-            (F.col("mean_qscore_r") < F.lit(float(min_mean_score)))
-            | (F.col("gopher_pass_frac_r") < F.lit(float(min_pass_frac)))
+            (F.col("mean_qscore_r") < F.lit(40.0))
+            | (F.col("gopher_pass_frac_r") < F.lit(0.5))
         ).alias("low_quality_host"),
     )
 
 
-def zipf_fit(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    log_scale: int = 10_000,
-) -> DataFrame:
+def zipf_fit(df: DataFrame) -> DataFrame:
     """One-row least-squares fit of the corpus term-frequency
     distribution to Zipf's law: ``log10(freq) = intercept + slope *
     log10(rank)`` over every vocabulary term ranked by descending
@@ -1577,7 +1520,7 @@ def zipf_fit(
     closed-form slope/intercept/r² is one deterministic double
     expression over identical integers in both engines (a raw
     ``sum(double)`` would be summation-order-dependent and flake the
-    value hash). At the default scale the quantization perturbs each
+    value hash). At this scale the quantization perturbs each
     log by <1e-4, far below the fit's statistical noise. The 1e4 scale
     also bounds ``sum(ix*iy)`` under int64 to a 10^8-term vocabulary.
 
@@ -1586,10 +1529,11 @@ def zipf_fit(
     (:func:`~llm_aided_ocr_spark.operators.util.global_row_number` — no
     SinglePartition exchange; the ranked relation is vocabulary-sized),
     then a single scalar aggregation."""
+    log_scale = 10_000
     from llm_aided_ocr_spark.operators.dedup import _words_col
     from llm_aided_ocr_spark.operators.util import global_row_number
 
-    words = F.filter(_words_col(text_col), lambda w: w != "")
+    words = F.filter(_words_col("text"), lambda w: w != "")
     tf = (
         df.select(F.explode(words).alias("term"))
         .groupBy("term")
@@ -1634,13 +1578,7 @@ def zipf_fit(
     )
 
 
-def corpus_divergence(
-    df_p: DataFrame,
-    df_q: DataFrame,
-    text_col: str = "text",
-    alpha: float = 1.0,
-    quant: int = 10**12,
-) -> DataFrame:
+def corpus_divergence(df_p: DataFrame, df_q: DataFrame) -> DataFrame:
     """One-row unigram-distribution divergence between two corpora:
     ``KL(P‖Q)``, ``KL(Q‖P)`` and the Jensen–Shannon divergence (bits)
     over add-``alpha``-smoothed term distributions on the JOINT
@@ -1664,10 +1602,11 @@ def corpus_divergence(
     a full-outer join co-partitioned on term, corpus totals as ONE
     broadcast row (the repo's scalar pattern — no collect), then a
     single scalar aggregation. Text never crosses an exchange."""
+    alpha, quant = 1.0, 10**12
     from llm_aided_ocr_spark.operators.dedup import _words_col
 
     def _counts(df: DataFrame, out: str) -> DataFrame:
-        words = F.filter(_words_col(text_col), lambda w: w != "")
+        words = F.filter(_words_col("text"), lambda w: w != "")
         return (
             df.select(F.explode(words).alias("term"))
             .groupBy("term")
@@ -1725,13 +1664,7 @@ def corpus_divergence(
     )
 
 
-def quality_yield(
-    df: DataFrame,
-    score_col: str = "qscore",
-    mass_col: str = "mass",
-    step: int = 5,
-    max_score: int = 100,
-) -> DataFrame:
+def quality_yield(df: DataFrame, step: int = 5) -> DataFrame:
     """``(threshold, n_docs_kept, mass_kept, doc_frac, mass_frac)`` —
     the YIELD CURVE of a quality filter: for every candidate cutoff on
     the integer score grid (0..max_score by ``step``), how many
@@ -1750,8 +1683,9 @@ def quality_yield(
     divisions of exact integer sums. Scores outside [0, max_score] are
     clamped into the end buckets (a <0 score can never survive any
     threshold; a >max score survives all)."""
-    if step <= 0 or max_score < 0:
-        raise ValueError("need step > 0 and max_score >= 0")
+    if step <= 0:
+        raise ValueError("need step > 0")
+    max_score = 100
     from pyspark import StorageLevel
 
     spark = df.sparkSession
@@ -1764,9 +1698,9 @@ def quality_yield(
         df.select(
             F.greatest(
                 F.lit(0),
-                F.least(F.lit(int(max_score)), F.col(score_col)),
+                F.least(F.lit(max_score), F.col("qscore")),
             ).cast("int").alias("s"),
-            F.col(mass_col).cast("bigint").alias("m"),
+            F.col("mass").cast("bigint").alias("m"),
         )
         .groupBy("s")
         .agg(
@@ -1775,7 +1709,7 @@ def quality_yield(
         ),
         StorageLevel.MEMORY_AND_DISK,
     )
-    grid = spark.range(0, int(max_score) + 1, int(step)).select(
+    grid = spark.range(0, max_score + 1, int(step)).select(
         F.col("id").cast("bigint").alias("threshold")
     )
     tot = b.agg(
@@ -1809,11 +1743,7 @@ def quality_yield(
     )
 
 
-def url_path_templates(
-    df: DataFrame,
-    url_col: str = "url",
-    k: int = 5,
-) -> DataFrame:
+def url_path_templates(df: DataFrame, k: int = 5) -> DataFrame:
     """``(host, template, n_urls, rank)`` — the ``k`` most common URL
     PATH TEMPLATES per host, where a template is the path+query with
     every digit run collapsed to ``N`` and every long (>=8) lowercase
@@ -1842,7 +1772,7 @@ def url_path_templates(
     tmpl = F.regexp_replace(tmpl, r"[0-9]+", "N")
     tmpl = F.when(tmpl == "", F.lit("/")).otherwise(tmpl)
     base = (
-        df.select(F.col(url_col).alias("url"))
+        df.select(F.col("url"))
         .filter(F.col("url").isNotNull() & (F.col("url") != ""))
         .distinct()
         .select(domain_col(u).alias("host"), tmpl.alias("template"))

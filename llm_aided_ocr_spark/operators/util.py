@@ -85,8 +85,6 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     at scale they are many-partition anyway, and guessing wrong merely
     costs parallelism on a toy input, never a shuffle on a big one.
     """
-    if df.isStreaming:  # partitioning is per-micro-batch; no-op
-        return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if scan_partitions_below(df, max(1, target // 2)):
         return df.repartition(target)
@@ -100,7 +98,10 @@ def scan_partitions_below(df: DataFrame, threshold: int) -> bool:
     salted spread. Conservative on every uncertainty (shuffle-bearing
     plan, non-file or remote source, stat failure): returns False, i.e.
     "leave the partitioning alone" — guessing wrong merely costs
-    parallelism on a toy input, never a shuffle on a big one."""
+    parallelism on a toy input, never a shuffle on a big one. A streaming
+    frame is partitioned per micro-batch: False."""
+    if df.isStreaming:
+        return False
     spark = df.sparkSession
     try:
         # If the plan already contains a partitioning-defining operator
@@ -449,7 +450,7 @@ def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return out
 
 
-def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> None:
+def release_local_checkpoint(df: DataFrame) -> None:
     """Free a dead ``local_checkpoint`` mid-operator (an iterative loop's
     previous round) and drop it from the registry."""
     rdd = _checkpoint_rdd(df)
@@ -460,7 +461,7 @@ def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> None:
         reg = _registered(df.sparkSession)
         for k in [k for k, h in reg.items() if isinstance(h, int) and h == rid]:
             del reg[k]
-    rdd.unpersist(blocking)
+    rdd.unpersist(False)
 
 
 def cache_mark() -> int:

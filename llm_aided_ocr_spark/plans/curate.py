@@ -21,7 +21,7 @@ Stage order matters and is deliberate:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,12 +41,9 @@ class CurationConfig:
     use_gopher_gate: bool = False         # AND of the Gopher rules
     host_quality_gate: bool = False       # drop ALL docs of hosts whose
                                           # rollup falls below the bars
-    host_min_mean_score: float = 40.0
-    host_min_pass_frac: float = 0.5
     repetition_gate: bool = False         # full 13-threshold Gopher repetition gate
     url_blocked_domains: tuple = ()       # RefinedWeb stage-1 URL gate
     url_blocked_keywords: tuple = ()      # (both empty = off)
-    url_keyword_threshold: int = 2
     url_trap_gate: bool = False           # shed crawler-trap urls (depth/
                                           # params/digits/repeated segments)
     robots_rules: Optional[DataFrame] = None  # parse_robots output; pages
@@ -59,16 +56,12 @@ class CurationConfig:
     near_dedup: bool = True
     near_dup_threshold: float = 0.8
     max_per_domain: Optional[int] = None  # cap docs per registrable host
-    domain_cap_seed: int = 1
     domain_cap_registered: bool = False   # cap on PSL eTLD+1, not raw host
     mojibake_gate: bool = False           # shed encoding-damaged pages
     mojibake_max_per_kchar: float = 2.0
     min_flesch: Optional[int] = None      # Flesch floor (points, e.g. 10)
     blocklist: tuple = ()                 # C4 bad-words gate (empty = off)
-    split_weights: Dict[str, float] = field(
-        default_factory=lambda: {"train": 0.9, "val": 0.05, "test": 0.05}
-    )
-    split_seed: int = 1
+    split_seed: int = 1                   # train/val/test 0.9/0.05/0.05
 
 
 def curate(
@@ -100,10 +93,7 @@ def curate(
 
         pages_df = pages_df.filter(
             url_keep_col(
-                F.col("url"),
-                cfg.url_blocked_domains,
-                cfg.url_blocked_keywords,
-                cfg.url_keyword_threshold,
+                F.col("url"), cfg.url_blocked_domains, cfg.url_blocked_keywords
             )
         )
 
@@ -275,13 +265,7 @@ def curate(
         )
 
         low = (
-            host_quality_rollup(
-                docs,
-                url_col="url",
-                text_col="corrected_text",
-                min_mean_score=cfg.host_min_mean_score,
-                min_pass_frac=cfg.host_min_pass_frac,
-            )
+            host_quality_rollup(docs, url_col="url", text_col="corrected_text")
             .filter(F.col("low_quality_host"))
             .select("host")
         )
@@ -320,8 +304,7 @@ def curate(
             host = domain_col(F.col("url"))
             dom_expr = F.coalesce(registered_domain_col(host), host)
         docs = domain_cap(
-            docs, cfg.max_per_domain, url_col="url",
-            seed=cfg.domain_cap_seed, domain_expr=dom_expr,
+            docs, cfg.max_per_domain, url_col="url", domain_expr=dom_expr
         )
     if cfg.exact_dedup:
         docs = exact_dedup(docs, text_col="corrected_text", id_col="url")
@@ -346,9 +329,7 @@ def curate(
             id_col="url",
         )
 
-    return hash_split(
-        docs, dict(cfg.split_weights), id_col="url", seed=cfg.split_seed
-    )
+    return hash_split(docs, id_col="url", seed=cfg.split_seed)
 
 
 def annotate(

@@ -28,14 +28,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def write_attribute_table(
-    attrs_df: DataFrame, path: str, mode: str = "overwrite"
-) -> None:
+def write_attribute_table(attrs_df: DataFrame, path: str) -> None:
     """Persist an attribute table (e.g. ``annotate()`` output) as the
     parquet sidecar. Plain columnar parquet: every mixer reads ONLY the
     id column plus the attributes its predicate mentions (column
     pruning), and simple predicates push down to the footer stats."""
-    attrs_df.write.mode(mode).parquet(path)
+    attrs_df.write.mode("overwrite").parquet(path)
 
 
 def mixer_keep_ids(attrs_df: DataFrame, keep: Column, id_col: str = "id") -> DataFrame:

@@ -57,13 +57,14 @@ def salted_repartition(df: DataFrame, cfg: PipelineConfig, *extra_cols) -> DataF
     """Salted-hash repartition on url (north rule). ``xxhash64(url, salt)``
     decorrelates placement from any upstream layout; extra columns (e.g.
     chunk_ix) spread a single mega-document across tasks. The partition
-    count is the session's ``spark.sql.shuffle.partitions``."""
+    count is the session's ``spark.sql.shuffle.partitions``; ``cfg`` is
+    not read."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cols = [F.col("url"), F.lit(SALT), *[F.col(c) for c in extra_cols]]
     return df.repartition(n, F.xxhash64(*cols))
 
 
-def _spread_documents(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def _spread_documents(df: DataFrame) -> DataFrame:
     """Scale-adaptive document spread: the per-document correction
     stage is embarrassingly parallel, so the salted repartition buys
     exactly one thing — parallelism when the input is under-split (a toy
@@ -76,13 +77,13 @@ def _spread_documents(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     only below the :func:`scan_partitions_below` threshold — the same
     gate ensure_min_parallelism uses. The STAGED chunk path always
     salts on (url, chunk_ix): spreading a mega-document's chunks is the
-    whole point there."""
+    whole point there. A streaming frame is left as it is."""
     from llm_aided_ocr_spark.operators.util import scan_partitions_below
 
     target = df.sparkSession.sparkContext.defaultParallelism
     if not scan_partitions_below(df, max(1, target // 2)):
         return df
-    return salted_repartition(df, cfg)
+    return salted_repartition(df, None)  # its cfg is unread
 
 
 def _fused_correct(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -213,7 +214,7 @@ def run_pipeline(
             out = extract_text(branch, use_html=use_html)
         if cfg.apply_page_filter:
             out = apply_page_filter(out)
-        return _spread_documents(out, cfg)
+        return _spread_documents(out)
 
     if strategy == "fused":
         result = _fused_correct(_prepare(df), cfg)

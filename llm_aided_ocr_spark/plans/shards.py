@@ -52,7 +52,6 @@ def shard_assignments(
     num_shards: int,
     text_col: str = "corrected_text",
     id_col: str = "url",
-    split_col: str = "split",
     num_streams: int = 8,
     shard_seed: int = 7,
 ) -> DataFrame:
@@ -63,7 +62,7 @@ def shard_assignments(
 
     packed = pack_sequences(
         df, budget, text_col=text_col, id_col=id_col,
-        num_streams=num_streams, split_col=split_col,
+        num_streams=num_streams, split_col="split",
     )
     return packed.withColumn(
         "shard",
@@ -143,12 +142,7 @@ def write_training_shards(
     out_dir: str,
     budget: int = 2048,
     num_shards: int = 64,
-    text_col: str = "corrected_text",
-    id_col: str = "url",
-    split_col: str = "split",
     num_streams: int = 8,
-    shard_seed: int = 7,
-    compression: str = "zstd",
     output_format: str = "parquet",
 ) -> DataFrame:
     """Write the curated corpus as training shards and return the
@@ -171,26 +165,23 @@ def write_training_shards(
     """
     from llm_aided_ocr_spark.operators.util import corpus_scaled
 
-    asg = shard_assignments(
-        curated, budget, num_shards, text_col=text_col, id_col=id_col,
-        split_col=split_col, num_streams=num_streams, shard_seed=shard_seed,
-    )
-    routed = curated.drop(split_col).join(
-        corpus_scaled(asg), curated[id_col] == asg["doc_id"]
+    asg = shard_assignments(curated, budget, num_shards, num_streams=num_streams)
+    routed = curated.drop("split").join(
+        corpus_scaled(asg), curated["url"] == asg["doc_id"]
     )
     shard_out = routed.select(
-        F.col(id_col), "split", "shard", "stream", "bin_ix", "n_tokens",
-        F.col(text_col),
+        F.col("url"), "split", "shard", "stream", "bin_ix", "n_tokens",
+        F.col("corrected_text"),
     )
     if output_format not in ("parquet", "json"):
         raise ValueError(f"unknown output_format: {output_format!r}")
     writer = (
         shard_out.repartition("split", "shard")
-        .sortWithinPartitions("split", "shard", "stream", "bin_ix", id_col)
+        .sortWithinPartitions("split", "shard", "stream", "bin_ix", "url")
         .write.mode("overwrite")
         .option(
             "compression",
-            "gzip" if output_format == "json" else compression,
+            "gzip" if output_format == "json" else "zstd",
         )
         .partitionBy("split", "shard")
     )

@@ -15,42 +15,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_corrected_docs(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by_day: bool = True,
-    ts_col: str = "warc_ts",
-) -> None:
+def write_corrected_docs(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Write the corrected-docs table, hive-partitioned by crawl day when a
     timestamp column is available."""
-    if partition_by_day and ts_col in df.columns:
+    if "warc_ts" in df.columns:
         df.withColumn(
-            "warc_day", F.date_format(F.col(ts_col), "yyyy-MM-dd")
+            "warc_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd")
         ).write.mode(mode).partitionBy("warc_day").parquet(path)
     else:
         df.write.mode(mode).parquet(path)
 
 
-def write_raw_pages(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by_day: bool = True,
-    ts_col: str = "warc_ts",
-    raw_col: str = "raw_text",
-) -> None:
+def write_raw_pages(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Write the raw-OCR table — the reference's ``__raw_ocr_output.txt``
     per document (llm_aided_ocr.py:656,665-667: the ``"\\n"``-joined page
     texts, written BEFORE correction) as the first of the two-sink output
     contract; :func:`write_corrected_docs` is the second. Same day
     partitioning as the corrected table so the two line up for joins and
     both prune on date ranges."""
-    cols = ["url", F.col(raw_col).alias("raw_text")]
-    if partition_by_day and ts_col in df.columns:
+    cols = ["url", F.col("raw_text")]
+    if "warc_ts" in df.columns:
         (
-            df.select(*cols, F.col(ts_col))
-            .withColumn("warc_day", F.date_format(F.col(ts_col), "yyyy-MM-dd"))
+            df.select(*cols, F.col("warc_ts"))
+            .withColumn("warc_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd"))
             .write.mode(mode)
             .partitionBy("warc_day")
             .parquet(path)
@@ -62,10 +49,8 @@ def write_raw_pages(
 def write_bucketed_table(
     df: DataFrame,
     table_name: str,
-    bucket_col: str = "url",
     n_buckets: int = 64,
     sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist a table bucketed (and optionally sorted) on the join key —
     the co-located-join primitive: two tables bucketed on the same key
@@ -75,7 +60,7 @@ def write_bucketed_table(
     local zip per bucket. Requires a catalog table (``saveAsTable``) —
     Spark's bucketing metadata lives in the catalog, not in plain parquet
     paths; on Iceberg this is ``bucket(n, url)`` hidden partitioning."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, "url")
     if sort_col is not None:
         writer = writer.sortBy(sort_col)
     writer.format("parquet").saveAsTable(table_name)

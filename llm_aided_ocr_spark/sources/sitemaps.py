@@ -44,11 +44,7 @@ def _field(block: Column, tag: str) -> Column:
     return F.nullif(v, F.lit(""))
 
 
-def parse_sitemaps(
-    df: DataFrame,
-    xml_col: str = "sitemap_xml",
-    host_col: str = "host",
-) -> DataFrame:
+def parse_sitemaps(df: DataFrame) -> DataFrame:
     """``(host, loc, lastmod, changefreq, priority)`` — one row per
     ``<url>`` entry across all ``<urlset>`` sitemaps in ``df``.
 
@@ -57,7 +53,7 @@ def parse_sitemaps(
     ``changefreq`` stay as declared strings (scheduling policy owns
     interpretation), ``priority`` casts to double (NULL when absent or
     non-numeric, via try-semantics of the string cast)."""
-    blocks = F.regexp_extract_all(_decoded(F.col(xml_col)), F.lit(_URL_BLOCK), 1)
+    blocks = F.regexp_extract_all(_decoded(F.col("sitemap_xml")), F.lit(_URL_BLOCK), 1)
     entries = F.transform(
         blocks,
         lambda b: F.struct(
@@ -68,7 +64,7 @@ def parse_sitemaps(
         ),
     )
     return (
-        df.select(F.col(host_col).alias("host"), F.explode(entries).alias("_e"))
+        df.select(F.col("host"), F.explode(entries).alias("_e"))
         .select(
             "host",
             F.col("_e.loc").alias("loc"),
@@ -80,17 +76,13 @@ def parse_sitemaps(
     )
 
 
-def sitemap_index_entries(
-    df: DataFrame,
-    xml_col: str = "sitemap_xml",
-    host_col: str = "host",
-) -> DataFrame:
+def sitemap_index_entries(df: DataFrame) -> DataFrame:
     """``(host, child_loc, lastmod)`` — one row per ``<sitemap>`` entry
     of a ``<sitemapindex>`` document: the fan-out list a crawler walks
     to fetch child sitemaps. Same native shape as
     :func:`parse_sitemaps`."""
     blocks = F.regexp_extract_all(
-        _decoded(F.col(xml_col)), F.lit(_SITEMAP_BLOCK), 1
+        _decoded(F.col("sitemap_xml")), F.lit(_SITEMAP_BLOCK), 1
     )
     entries = F.transform(
         blocks,
@@ -100,7 +92,7 @@ def sitemap_index_entries(
         ),
     )
     return (
-        df.select(F.col(host_col).alias("host"), F.explode(entries).alias("_e"))
+        df.select(F.col("host"), F.explode(entries).alias("_e"))
         .select(
             "host",
             F.col("_e.child_loc").alias("child_loc"),
@@ -110,12 +102,7 @@ def sitemap_index_entries(
     )
 
 
-def crawl_coverage(
-    declared: DataFrame,
-    crawled: DataFrame,
-    declared_url_col: str = "loc",
-    crawled_url_col: str = "url",
-) -> DataFrame:
+def crawl_coverage(declared: DataFrame, crawled: DataFrame) -> DataFrame:
     """``(host, n_declared, n_crawled_declared, n_undeclared_crawled,
     coverage)`` — the per-host crawl-coverage audit between what a
     site's sitemaps DECLARE and what the crawl actually FETCHED:
@@ -145,14 +132,14 @@ def crawl_coverage(
     from llm_aided_ocr_spark.operators.textstats import domain_col
 
     dec = (
-        declared.select(F.col(declared_url_col).alias("url"))
+        declared.select(F.col("loc").alias("url"))
         .filter(F.col("url").isNotNull() & (F.col("url") != ""))
         .distinct()
         .select(domain_col(F.col("url")).alias("_dh"), "url")
         .filter(F.col("_dh") != "")
     )
     cra = (
-        crawled.select(F.col(crawled_url_col).alias("url"))
+        crawled.select(F.col("url"))
         .filter(F.col("url").isNotNull() & (F.col("url") != ""))
         .distinct()
         .select(domain_col(F.col("url")).alias("_ch"), "url")

@@ -204,23 +204,19 @@ def pages_dataframe_distributed(
     seed: int = 42,
     num_partitions: int = 64,
     mega_every: int = 10_000,
-    with_html: bool = False,
 ) -> DataFrame:
     """Bench-scale corpus generated ON THE EXECUTORS by one Arrow pass
     (``operators.util.map_arrow``) over ``spark.range`` — the driver never
     materializes the corpus, so generation scales with the cluster like a
     real source would. ``warc_ts`` is ``_EPOCH`` (UTC) + 37 s per id under
-    any session time zone."""
+    any session time zone; ``html`` is NULL (plain-text pages)."""
 
     def _gen(ids):
         texts = [_bench_text_for_id(i, seed, mega_every) for i in ids]
         return (
             [f"https://example-{i % 97}.test/doc/{i}" for i in ids],
             [_EPOCH + _dt.timedelta(seconds=37 * i) for i in ids],
-            [
-                _wrap_html(t, f"doc {i}") if with_html else None
-                for i, t in zip(ids, texts)
-            ],
+            [None] * len(ids),
             texts,
             [
                 "en"
@@ -243,12 +239,8 @@ def pages_dataframe(
     seed: int = 42,
     include_golden: bool = True,
     mega_doc: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     rows = generate_pages_rows(
         n_rows=n_rows, seed=seed, include_golden=include_golden, mega_doc=mega_doc
     )
-    df = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
-    if num_partitions:
-        df = df.repartition(num_partitions)
-    return df
+    return spark.createDataFrame(rows, schema=PAGES_SCHEMA)

@@ -131,7 +131,6 @@ def _http_body(payload: bytes) -> bytes:
 
 def _parse_records(
     segments: DataFrame,
-    content_col: str,
     segment_col: str | None,
     warc_type: str,
     body,
@@ -156,7 +155,7 @@ def _parse_records(
                 )
         return zip(*rows) if rows else ([],) * 5
 
-    cols = [content_col] + ([segment_col] if segment_col else [])
+    cols = ["content"] + ([segment_col] if segment_col else [])
     return map_arrow(
         segments.select(*cols),
         _parse,
@@ -165,27 +164,19 @@ def _parse_records(
     )
 
 
-def parse_warc(
-    segments: DataFrame,
-    content_col: str = "content",
-    segment_col: str | None = None,
-) -> DataFrame:
+def parse_warc(segments: DataFrame, segment_col: str | None = None) -> DataFrame:
     """``(segment, url, warc_date, warc_ts_unix, html)`` — one row per
     WARC *response* record across all segment blobs (warcinfo/request/
     metadata records are skipped, like every crawl reader). ``segment``
     carries ``segment_col``'s value (or a null string) so lineage
     counters can attribute pages to their source segment."""
     return _parse_records(
-        segments, content_col, segment_col, "response", _http_body,
+        segments, segment_col, "response", _http_body,
         "html binary",
     )
 
 
-def parse_wet(
-    segments: DataFrame,
-    content_col: str = "content",
-    segment_col: str | None = None,
-) -> DataFrame:
+def parse_wet(segments: DataFrame, segment_col: str | None = None) -> DataFrame:
     """``(segment, url, warc_date, warc_ts_unix, text)`` — one row per
     WET *conversion* record. WET is Common Crawl's derived
     extracted-text exchange format: the same WARC (ISO 28500) framing
@@ -200,7 +191,7 @@ def parse_wet(
     end the blob's iteration instead of failing the task. Payload bytes
     are decoded UTF-8 with replacement (WET is specified UTF-8)."""
     return _parse_records(
-        segments, content_col, segment_col, "conversion",
+        segments, segment_col, "conversion",
         lambda payload: payload.decode("utf-8", "replace"), "text string",
     )
 
@@ -220,20 +211,14 @@ def wet_record_col(url, date, text) -> "F.Column":
     )
 
 
-def pages_to_wet(
-    pages: DataFrame,
-    url_col: str = "url",
-    date_col: str = "warc_date",
-    text_col: str = "text",
-    seg_col: str = "seg",
-) -> DataFrame:
+def pages_to_wet(pages: DataFrame) -> DataFrame:
     """``(seg, content binary)`` — serialize extracted pages back into
     WET segment blobs (a warcinfo record followed by one conversion
     record per page), the exchange format for handing a curated corpus
     to a consumer that reads Common Crawl derivatives. The record
     strings are built natively (:func:`wet_record_col`, codegen) and
     each segment is ONE ``collect_list`` aggregation — text crosses a
-    single exchange, partitioned by ``seg_col``; size segments by
+    single exchange, partitioned by ``seg``; size segments by
     choosing that key (CC uses ~150 MB compressed). Record order within
     a segment follows aggregation arrival order — the format attaches
     no meaning to it; sort upstream if a consumer does. Write the
@@ -241,9 +226,9 @@ def pages_to_wet(
     info = (
         "WARC/1.0\r\nWARC-Type: warcinfo\r\nContent-Length: 4\r\n\r\ninfo\r\n\r\n"
     )
-    rec = wet_record_col(F.col(url_col), F.col(date_col), F.col(text_col))
+    rec = wet_record_col(F.col("url"), F.col("warc_date"), F.col("text"))
     return (
-        pages.select(F.col(seg_col).alias("seg"), rec.alias("_rec"))
+        pages.select(F.col("seg"), rec.alias("_rec"))
         .groupBy("seg")
         .agg(
             F.concat(F.lit(info), F.concat_ws("", F.collect_list("_rec")))

@@ -9,9 +9,10 @@ run" without rescanning. This module closes that gap Spark-first:
   the same pages layout the batch pipeline consumes; new parquet files
   are discovered incrementally, ``maxFilesPerTrigger`` bounds micro-batch
   size for backpressure.
-* ``correct_pages_stream`` — the SAME stateless kernels as the batch
-  fused path (extract → chunk → correct → reassemble inside one
-  Arrow pass), so streaming output is byte-identical to a batch run
+* ``correct_pages_stream`` — the batch fused path itself
+  (``run_pipeline(strategy="fused")``: extract → chunk → correct →
+  reassemble inside one Arrow pass, then the hallucination filter when
+  configured), so streaming output is byte-identical to a batch run
   over the same files; tested in ``tests/test_streaming.py``.
 * ``write_stream_parquet`` — checkpointed file sink (exactly-once per
   micro-batch via the sink's commit log); ``Trigger.AvailableNow`` makes
@@ -67,60 +68,42 @@ def read_pages_stream(
     return reader.parquet(input_dir)
 
 
-def read_events_stream(
-    spark: SparkSession,
-    input_dir: str,
-    max_files_per_trigger: Optional[int] = None,
-) -> DataFrame:
-    reader = spark.readStream.schema(EVENTS_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(input_dir)
+def read_events_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    return spark.readStream.schema(EVENTS_DDL).parquet(input_dir)
 
 
 def correct_pages_stream(
-    pages_stream: DataFrame,
-    cfg: PipelineConfig = PipelineConfig(),
-    use_html: bool = False,
+    pages_stream: DataFrame, cfg: PipelineConfig = PipelineConfig()
 ) -> DataFrame:
-    """The batch fused path applied to a streaming DataFrame: language
-    gate → extraction → chunk+correct+reassemble in one Arrow pass.
-    All stages are stateless and document-local, so each micro-batch is
-    byte-identical to a batch run over the same rows — no repartition
-    (the file source's split granularity is the parallelism; a shuffle
-    per micro-batch would only add latency)."""
-    from llm_aided_ocr_spark.operators.extract import extract_text
-    from llm_aided_ocr_spark.operators.filters import apply_page_filter, language_gate
-    from llm_aided_ocr_spark.plans.pipeline import _fused_correct
+    """The batch fused path applied to a streaming DataFrame:
+    ``run_pipeline(pages_stream, cfg, strategy="fused")`` — language gate
+    → extraction → page filter → chunk+correct+reassemble in one Arrow
+    pass → hallucination filter, each as ``cfg`` sets it. All stages are
+    stateless and document-local, so each micro-batch is byte-identical
+    to a batch run over the same rows — no repartition (the file
+    source's split granularity is the parallelism; a shuffle per
+    micro-batch would only add latency)."""
+    from llm_aided_ocr_spark.plans.pipeline import run_pipeline
 
-    df = pages_stream
-    if cfg.check_if_valid_english:
-        df = language_gate(df)
-    out = extract_text(df, use_html=use_html)
-    if cfg.apply_page_filter:
-        out = apply_page_filter(out)
-    return _fused_correct(out, cfg)
+    return run_pipeline(pages_stream, cfg, strategy="fused")
 
 
 def write_stream_parquet(
     df: DataFrame,
     path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    output_mode: str = "append",
 ):
-    """Checkpointed parquet sink. ``available_now=True`` processes the
-    current backlog then stops — the catch-up/cron form; ``False`` runs
-    continuously. Returns the started StreamingQuery (caller awaits)."""
-    writer = (
+    """Checkpointed parquet sink. The ``availableNow`` trigger processes
+    the current backlog then stops — the catch-up/cron form. Returns the
+    started StreamingQuery (caller awaits)."""
+    return (
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def write_stream_two_sinks(
@@ -128,7 +111,6 @@ def write_stream_two_sinks(
     raw_path: str,
     corrected_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
     """The CLI's two-sink output contract (reference llm_aided_ocr.py:656,
     665-667: raw OCR text AND corrected text are always written together)
@@ -150,14 +132,13 @@ def write_stream_two_sinks(
         write_raw_pages(batch_df, raw_path, mode="append")
         write_corrected_docs(batch_df, corrected_path, mode="append")
 
-    writer = (
+    return (
         corrected_stream.writeStream.foreachBatch(_emit)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def write_stream_near_dedup(
@@ -166,9 +147,6 @@ def write_stream_near_dedup(
     index_path: str,
     checkpoint_dir: str,
     threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "url",
-    available_now: bool = True,
     **minhash_kwargs,
 ):
     """Streaming corpus NEAR-dedup: every micro-batch runs
@@ -198,17 +176,16 @@ def write_stream_near_dedup(
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
         apply_incremental_dedup(
             batch_df, out_path, index_path, threshold=threshold,
-            text_col=text_col, id_col=id_col, **minhash_kwargs,
+            id_col="url", **minhash_kwargs,
         )
 
-    writer = (
+    return (
         pages_stream.writeStream.foreachBatch(_emit)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -264,8 +241,6 @@ def windowed_event_counts(
     events_stream: DataFrame,
     window_duration: str = "1 hour",
     watermark_delay: str = "10 minutes",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Streaming form of the batch ``events_counters`` query: per
     (event-time window, event_type) row counts and value sums. The
@@ -273,10 +248,10 @@ def windowed_event_counts(
     watermark passes its end, and events later than the delay are
     dropped deterministically instead of growing state forever."""
     return (
-        events_stream.withWatermark(ts_col, watermark_delay)
+        events_stream.withWatermark("ts", watermark_delay)
         .groupBy(
-            F.window(F.col(ts_col), window_duration).alias("w"),
-            F.col(type_col),
+            F.window(F.col("ts"), window_duration).alias("w"),
+            F.col("event_type"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -284,7 +259,7 @@ def windowed_event_counts(
         )
         .select(
             F.col("w.start").alias("window_start"),
-            F.col(type_col),
+            F.col("event_type"),
             "n_events",
             "value_sum_r",
         )

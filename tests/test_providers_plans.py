@@ -711,7 +711,6 @@ def test_salted_spread_gate(spark):
     shape."""
     from pyspark import StorageLevel
 
-    from llm_aided_ocr_spark.config import PipelineConfig
     from llm_aided_ocr_spark.plans.pipeline import _spread_documents
 
     from pyspark.sql import functions as F
@@ -719,15 +718,14 @@ def test_salted_spread_gate(spark):
     pages = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select(F.col("doc_id").cast("string").alias("url"), "text")
-    cfg = PipelineConfig()
 
     # toy parquet input: under-split -> the salted repartition applies
-    spread = _spread_documents(pages, cfg)
+    spread = _spread_documents(pages)
     assert "RepartitionByExpression" in spread._jdf.queryExecution().logical().toString()
 
     # a size-filtered branch of the scan (the auto strategy's branch
     # shape) is still judged on the scan
-    spread = _spread_documents(pages.where(F.length("text") > 0), cfg)
+    spread = _spread_documents(pages.where(F.length("text") > 0))
     assert "RepartitionByExpression" in spread._jdf.queryExecution().logical().toString()
 
     # persisted relation: inputFiles() is empty, the gate stays
@@ -735,6 +733,10 @@ def test_salted_spread_gate(spark):
     cached = pages.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         branch = cached.select("url", "text")
-        assert _spread_documents(branch, cfg) is branch
+        assert _spread_documents(branch) is branch
     finally:
         cached.unpersist()
+
+    # a streaming frame is partitioned per micro-batch: left alone
+    stream = spark.readStream.format("rate").load()
+    assert _spread_documents(stream) is stream

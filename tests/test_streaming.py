@@ -52,6 +52,32 @@ def test_streaming_correction_matches_batch(spark):
         assert got == want
 
 
+def test_streaming_correction_applies_hallucination_filter(spark, tmp_path):
+    """With the F3 filter on, the stream's rows equal the batch fused
+    pipeline's: same columns (the filter's verdict columns included) and
+    the same filtered text."""
+    from llm_aided_ocr_spark.plans.pipeline import run_pipeline
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    pages = pages_dataframe(spark, n_rows=10, include_golden=False)
+    pages.write.parquet(src)
+    cfg = PipelineConfig(
+        provider="heuristic",
+        apply_hallucination_filter=True,
+        hallucination_similarity_threshold=0.97,
+    )
+    stream = correct_pages_stream(read_pages_stream(spark, src), cfg)
+    _await(write_stream_parquet(stream, out, ckpt))
+
+    want = run_pipeline(pages, cfg, strategy="fused")
+    got = spark.read.parquet(out)
+    assert sorted(got.columns) == sorted(want.columns)
+    cols = sorted(want.columns)
+    rows = lambda df: sorted(tuple(r) for r in df.select(*cols).collect())  # noqa: E731
+    assert rows(got) == rows(want)
+    assert any(r["n_kept"] < r["n_sentences"] for r in want.collect())
+
+
 def test_streaming_dedup_state_survives_restart(spark):
     """First-arrival-wins dedup: keys seen in run 1 are dropped by run 2
     (keyed state lives in the checkpoint, the restart contract)."""
